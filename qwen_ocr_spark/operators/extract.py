@@ -154,7 +154,7 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
     (guide §4.1, applied to the output side of the boundary).  The same
     parse still runs per document; only the emitted columns change, so a
     consumer selecting exactly ``columns`` gets rows identical to the
-    full-schema path."""
+    full-schema path.  An empty list raises ``ValueError``."""
     import datetime as _dt
 
     from qwen_ocr_spark.sources.pages import (
@@ -176,6 +176,9 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
         out_columns = all_fields
         schema = OUT_SCHEMA
     else:
+        if not columns:
+            raise ValueError("columns=[] selects no output column; "
+                             "pass None for the full schema")
         unknown = set(columns) - set(all_fields)
         if unknown:
             raise ValueError(f"unknown output columns: {sorted(unknown)}")

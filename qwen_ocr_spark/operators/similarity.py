@@ -70,11 +70,15 @@ def _cosine_e6_udf(dims: int = 64):
     Bit-identical to ``_unrolled_cosine_e6`` / the DuckDB oracles' literal
     folds: the numpy accumulation adds one ``a_d * b_d`` term at a time,
     left to right, starting from 0.0 — the same IEEE float64 operation
-    sequence per row — and NULL/absent elements contribute exact ``+ 0.0``
-    terms (``coalesce(get(v, d), 0.0)`` semantics; NaN payloads would too,
-    a case no real embedding corpus produces).  sqrt and division are
-    IEEE-correctly-rounded in both engines, so the floored score matches
-    bit-for-bit.
+    sequence per row — and absent elements (a short array) contribute
+    exact ``+ 0.0`` terms.  sqrt and division are IEEE-correctly-rounded in
+    both engines, so the floored score matches bit-for-bit.
+
+    Non-finite input raises ``ValueError`` instead of being scored: a NaN
+    or ±Inf element has no meaningful cosine, and zeroing or clamping it
+    would rank a corrupt vector among real neighbours.  A NULL element
+    arrives from Arrow as NaN, indistinguishable from a NaN payload, so it
+    raises too; a NULL vector still scores NULL.
 
     WHY a Python UDF replaced whole-stage-codegen'd SQL (round 6, late):
     the unrolled form needs 2 x 64 pre-extracted element columns plus a
@@ -101,8 +105,11 @@ def _cosine_e6_udf(dims: int = 64):
                 if v is None:
                     continue
                 a = np.asarray(v, dtype=np.float64)[:dims]
-                if a.size:
-                    M[i, : a.size] = np.nan_to_num(a, nan=0.0)
+                M[i, : a.size] = a
+        bad = int((~np.isfinite(A)).sum() + (~np.isfinite(B)).sum())
+        if bad:
+            raise ValueError(f"{bad} non-finite embedding element(s) "
+                             "(NaN, ±Inf or NULL) in a cosine input")
         dot = np.zeros(n, dtype=np.float64)
         na2 = np.zeros(n, dtype=np.float64)
         nb2 = np.zeros(n, dtype=np.float64)

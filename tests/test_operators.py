@@ -283,6 +283,33 @@ def test_cosine_topk_exact(emb):
     assert all(r["score_e6"] <= 1_000_000 for r in res)
 
 
+@pytest.mark.parametrize("value", [float("nan"), float("inf")])
+def test_cosine_scorer_rejects_non_finite(spark, emb, value):
+    """One corrupt embedding fails the query loudly instead of being
+    zeroed (NaN) or clamped (±Inf) into a plausible-looking score."""
+    from pyspark.errors import PythonException
+
+    bad = spark.createDataFrame(pd.DataFrame(
+        [(500, [value] + [0.5] * 15)], columns=["vec_id", "embedding"]))
+    with pytest.raises(PythonException, match="non-finite embedding"):
+        similarity.cosine_topk(emb.unionByName(bad), [1], k=3).collect()
+
+
+def _scorer_nodes(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "ArrowEvalPython [score(")
+
+
+def test_ann_scorer_runs_once_per_row(emb):
+    """The ``score_e6 IS NOT NULL`` filter over the cosine scorer must not
+    be pushed below it with a copy of the UDF (two ArrowEvalPython nodes,
+    every row scored twice).  ``asNondeterministic()`` on the scorer is
+    what prevents that; dropping it fails this test."""
+    assert _scorer_nodes(similarity.cosine_topk(emb, [1, 2], k=3)) == 1
+    assert _scorer_nodes(similarity.lsh_bucketed_topk(
+        emb, [1, 2], k=3, persist=False)) == 1
+
+
 def test_lsh_topk_recall_on_near_dups(emb):
     res = similarity.lsh_bucketed_topk(emb, [1], k=3).collect()
     ids = {r["neighbor_id"] for r in res}

@@ -343,6 +343,17 @@ def test_extract_documents_narrowed_columns_identical(spark):
         extract_documents(docs, columns=["url", "nope"])
 
 
+def test_extract_documents_empty_columns_raises(spark):
+    """columns=[] would build a map node with an empty output schema;
+    it is a caller error, reported as such (None means all columns)."""
+    from qwen_ocr_spark.operators.extract import extract_documents
+
+    docs = spark.createDataFrame(pd.DataFrame([(1, "body")],
+                                              columns=["doc_id", "text"]))
+    with pytest.raises(ValueError, match="no output column"):
+        extract_documents(docs, columns=[])
+
+
 def test_gen_page_pure_function():
     a = gen_page(42, 7)
     b = gen_page(42, 7)
