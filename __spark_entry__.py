@@ -59,7 +59,8 @@ def q_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # fused bridge (round 6): generation + extraction in ONE Python pass —
     # the payload bytes never cross the JVM↔Python boundary (guide §4);
-    # row-identical to extract_pages(pages_from_documents(docs)).
+    # row-identical to extract_pages over the same bridge pages (pinned by
+    # test_pipeline.py::test_extract_documents_equals_extract_pages_over_bridge).
     # columns= narrows the UDF OUTPUT to what this query projects: a map
     # node is opaque, so without it every row ships its full markdown +
     # extracted_text + figures through Arrow just to be dropped here.

@@ -17,7 +17,7 @@ Package map
                 scoring, PDF tokenizer + XY-cut, figure bbox filters.
 ``operators/``  Spark DataFrame operators: the extraction pipeline
                 (mapInPandas), dedup family, similarity search, text stats.
-``sources/``    synthetic ``pages`` table generator + readers.
+``sources/``    synthetic ``pages`` table generator + the documents bridge.
 ``sinks/``      output writer + per-partition checkpoint manifest + resume.
 ``plans/``      SparkSession builder with scale-oriented conf (AQE etc.).
 """

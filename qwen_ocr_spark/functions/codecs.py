@@ -1,47 +1,23 @@
-"""Pure-stdlib media codecs: PNG, BMP, PGM images; WAV audio.
+"""Pure-stdlib media codecs: PNG, BMP, PGM images; WAV, AU, AIFF audio.
 
-This container ships no PIL/libav, but several real-world formats are
-decodable with nothing beyond ``zlib``/``wave``/``struct`` + numpy — so
-the multimodal operators decode them FOR REAL instead of stubbing:
+No production path decodes media: the pipeline takes text from HTML and
+PDF directly and never rasterizes.  These decoders remain as a tested
+stand-alone library for the formats that need nothing beyond
+``zlib``/``wave``/``struct`` + numpy:
 
-* PNG  — complete pixel-format coverage (round 4): 1/2/4/8/16-bit depth,
-         color types 0 (gray) / 2 (RGB) / 3 (palette, with tRNS alpha) /
-         4 (gray+alpha) / 6 (RGBA), all five scanline filters, sequential
-         or Adam7-interlaced; spec-invalid depth/type combinations raise
-         ``UnsupportedVariant`` into the row error channel.
-* JPEG — the complete DCT family (round 4): baseline sequential
-         (SOF0/1), progressive (SOF2: spectral-selection +
-         successive-approximation scans), AND arithmetic-coded
-         sequential + progressive (SOF9/SOF10: QM coder + Annex-F/G
-         conditioning, DAC segments): gray or YCbCr, any sampling
-         factors incl. 4:2:0, restart intervals, tables read from the
-         file, plus SOF3 LOSSLESS (round 5: predictive Huffman, all 7
-         predictors, 8/16-bit, exact) and 12-bit extended-sequential
-         SOF1 (16-bit DQT entries, uint16 output); hierarchical and
-         12-bit progressive raise ``UnsupportedVariant``.
-* GIF  — 87a/89a complete (round 5): LSB-first LZW with 12-bit cap and
-         deferred clear, global/local color tables, 4-pass interlacing,
-         transparency, multi-frame animation with disposal 2/3 — decode
-         validated against externally-produced files (ImageMagick-era
-         CPython assets) in tests/external_fixtures/.
-* WebP — lossless (VP8L) complete (round 5): LSB-first bit stream,
-         simple + code-length-coded canonical prefix codes, meta-prefix
-         images, color cache, LZ77 with the 2D distance map, and all
-         four transforms (predictor x14 modes, color, subtract-green,
-         color-indexing with sub-byte packing); ALPH alpha planes
-         (compression method 1) decode through the same entropy layer,
-         pinned by a libwebp-produced file.  Lossy VP8 raises
-         ``UnsupportedVariant``.
-* TIFF — round 5: II/MM, strips, none/PackBits/LZW/Deflate compression
-         (LZW shared with the PDF path), horizontal predictor, gray/
-         RGB/RGBA/palette; tiles/CCITT/JPEG-in-TIFF raise the seam.
+* PNG  — 1/2/4/8/16-bit depth, color types 0 (gray) / 2 (RGB) /
+         3 (palette, with tRNS alpha) / 4 (gray+alpha) / 6 (RGBA), all
+         five scanline filters, sequential or Adam7-interlaced;
+         spec-invalid depth/type combinations raise
+         ``UnsupportedVariant``.  The Paeth predictor is shared with the
+         PDF stream decoder (``pdfx._paeth``).
 * BMP  — uncompressed 24-bit BI_RGB, bottom-up or top-down.
 * PGM  — binary P5, maxval <= 255.
 * WAV  — PCM via the stdlib ``wave`` module (8/16/32-bit).
-* AU / AIFF / AIFC — round 5 (CPython removed sunau/aifc): PCM 8/16/24/
-  32-bit plus G.711 mu-law for AU; AIFF-C NONE/sowt.
+* AU / AIFF / AIFC — PCM 8/16/24/32-bit plus G.711 mu-law for AU;
+  AIFF-C NONE/sowt.
 
-Encoders exist for each (deterministic bytes) so synthetic corpora and
+Encoders exist for each image format and WAV (deterministic bytes) so
 tests can round-trip without external fixtures.
 
 Images decode to ``np.uint8`` arrays of shape (h, w) or (h, w, channels);
@@ -58,26 +34,21 @@ import zlib
 
 import numpy as np
 
+from qwen_ocr_spark.functions.pdfx import _paeth
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 class UnsupportedVariant(ValueError):
     """A format this module decodes in general, but a variant it doesn't
-    (progressive JPEG, interlaced/16-bit PNG, ...) — callers map this to
-    their stub seam rather than treating it as data corruption."""
+    (a spec-invalid PNG depth/type pair, a compressed AIFF-C, ...) —
+    callers map this to their stub seam rather than treating it as data
+    corruption."""
 
 
 # ---------------------------------------------------------------------------
 # PNG
 # ---------------------------------------------------------------------------
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
 
 # Adam7 pass grid: (x0, y0, dx, dy) per pass
 _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -407,2046 +378,8 @@ def encode_pgm(img: np.ndarray) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# JPEG (sequential + progressive + arithmetic DCT — ITU T.81)
-#
-# Decoder: SOF0/1 baseline, SOF2 PROGRESSIVE (spectral selection +
-# successive approximation, DC/AC first + refinement passes, EOB runs),
-# and SOF9/SOF10 ARITHMETIC sequential/progressive (QM coder section
-# further below), 1- or 3-component (YCbCr per JFIF), any sampling
-# factors <= 4 (incl. the dominant 4:2:0), restart intervals, FF00 byte
-# stuffing; huffman + quant tables are read FROM the file — the complete
-# DCT family.  Lossless, hierarchical and 12-bit raise UnsupportedVariant
-# into the row error channel — the remaining (narrowed) seam.
-# Encoders: deterministic baseline (encode_jpeg), progressive
-# (encode_jpeg_progressive), arithmetic (encode_jpeg_arith) and
-# progressive-arithmetic (encode_jpeg_progressive_arith) writing the
-# SAME quantized coefficients, so decode equality between all four is
-# exact — the progressive/arithmetic test oracle.
+# Audio: dispatch + WAV
 # ---------------------------------------------------------------------------
-
-_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-# T.81 Annex K.1 luminance quantization (quality ~50 reference)
-_JPEG_QL = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99,
-], dtype=np.int32)
-
-# T.81 Annex K.3 luminance DC huffman spec: (bits-per-length 1..16, values)
-_DC_L_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_L_VALS = list(range(12))
-# K.5 luminance AC
-_AC_L_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125]
-_AC_L_VALS = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41, 0x06,
-    0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-    0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72,
-    0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-    0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75,
-    0x76, 0x77, 0x78, 0x79, 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-    0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-    0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-
-def _dct_matrix() -> np.ndarray:
-    x = np.arange(8)
-    c = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16.0)
-    c[0, :] = 1.0
-    return c * np.where(x[:, None] == 0, np.sqrt(1 / 8.0), np.sqrt(2 / 8.0))
-
-
-_DCT = _dct_matrix()
-
-
-def _huff_canonical(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical (length, code) → value table from a T.81 DHT spec."""
-    table: dict[tuple[int, int], int] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """value → (code, length) for the encoder (inverse of _huff_canonical)."""
-    return {v: (c, l) for (l, c), v in _huff_canonical(bits, vals).items()}
-
-
-class _BitReader:
-    """MSB-first reader over entropy-coded JPEG data: unstuffs FF00, stops
-    at any other marker (the caller handles RSTn via ``restart``)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d, self.i, self.buf, self.n = data, pos, 0, 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.i >= len(self.d):
-                raise ValueError("JPEG scan truncated")
-            b = self.d[self.i]
-            self.i += 1
-            if b == 0xFF:
-                nxt = self.d[self.i] if self.i < len(self.d) else 0xD9
-                if nxt == 0x00:
-                    self.i += 1
-                else:
-                    raise ValueError("JPEG scan hit marker mid-entropy")
-            self.buf, self.n = b, 8
-        self.n -= 1
-        return (self.buf >> self.n) & 1
-
-    def receive(self, size: int) -> int:
-        v = 0
-        for _ in range(size):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume the expected RSTn marker."""
-        self.n = 0
-        if not (self.i + 1 < len(self.d) and self.d[self.i] == 0xFF
-                and 0xD0 <= self.d[self.i + 1] <= 0xD7):
-            raise ValueError("JPEG missing restart marker")
-        self.i += 2
-
-
-def _extend(v: int, size: int) -> int:
-    return v - (1 << size) + 1 if size and v < (1 << (size - 1)) else v
-
-
-def _huff_read(r: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | r.bit()
-        v = table.get((length, code))
-        if v is not None:
-            return v
-    raise ValueError("bad JPEG huffman code")
-
-
-def _decode_lossless_scan(data, pos, comps, smap, huff, w, h,
-                          precision, dri, pred_sel, pt) -> np.ndarray:
-    """T.81 Annex H lossless decoding (SOF3, round 5): per-sample Huffman
-    difference categories + predictive reconstruction.  Supported subset:
-    sampling 1x1 per component, Pt=0, no restart markers (the forms
-    encode_jpeg_lossless and the common single-scan writers emit)."""
-    if pt:
-        raise UnsupportedVariant("lossless point transform unsupported")
-    if dri:
-        raise UnsupportedVariant("lossless restart intervals unsupported")
-    if not 1 <= pred_sel <= 7:
-        raise ValueError(f"invalid lossless predictor {pred_sel}")
-    scomps = [c for c in comps if c["id"] in smap]
-    if any(c["h"] != 1 or c["v"] != 1 for c in scomps):
-        raise UnsupportedVariant("lossless subsampling unsupported")
-    nc = len(scomps)
-    tables = []
-    for c in scomps:
-        td = smap[c["id"]][0]
-        if (0, td) not in huff:
-            raise ValueError("lossless scan references missing DC table")
-        tables.append(huff[(0, td)])
-    out = np.zeros((h, w, nc), np.int32)
-    r = _BitReader(data, pos)
-    default = 1 << (precision - 1)
-    mask = 0xFFFF
-    for y in range(h):
-        for x in range(w):
-            for ci in range(nc):
-                s = _huff_read(r, tables[ci])
-                if s == 16:
-                    diff = 32768
-                elif s:
-                    diff = _extend(r.receive(s), s)
-                else:
-                    diff = 0
-                if y == 0:
-                    px = default if x == 0 else int(out[0, x - 1, ci])
-                elif x == 0:
-                    px = int(out[y - 1, 0, ci])
-                else:
-                    a = int(out[y, x - 1, ci])
-                    b = int(out[y - 1, x, ci])
-                    cc = int(out[y - 1, x - 1, ci])
-                    px = (a, b, cc, a + b - cc, a + ((b - cc) >> 1),
-                          b + ((a - cc) >> 1), (a + b) >> 1)[pred_sel - 1]
-                out[y, x, ci] = (px + diff) & mask
-    out &= (1 << precision) - 1
-    dt = np.uint8 if precision <= 8 else np.uint16
-    if nc == 1:
-        return out[:, :, 0].astype(dt)
-    return out.astype(dt)
-
-
-# fixed difference-category Huffman table for the lossless encoder:
-# categories 0..16, lengths chosen Kraft-incomplete so the all-ones code
-# is never assigned (T.81 requirement)
-_LL_BITS = [3, 3, 3, 3, 3, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14]
-
-
-def encode_jpeg_lossless(img: np.ndarray, predictor: int = 1) -> bytes:
-    """SOF3 lossless encoder (gray uint8/uint16 or RGB uint8), one scan,
-    predictors 1-7, fixed category table — decode_jpeg round-trips
-    EXACTLY (lossless)."""
-    if not 1 <= predictor <= 7:
-        raise ValueError(predictor)
-    precision = 16 if img.dtype == np.uint16 else 8
-    px = img[:, :, None].astype(np.int32) if img.ndim == 2 \
-        else img.astype(np.int32)
-    h, w, nc = px.shape
-    # Huffman from the fixed length table (canonical, symbol order)
-    lengths = {cat: _LL_BITS[cat] for cat in range(17)}
-    bits = [0] * 16
-    for l in lengths.values():
-        bits[l - 1] += 1
-    vals = [cat for _, cat in sorted((l, c) for c, l in lengths.items())]
-    codes = _huff_codes(bits, vals)
-    bw = _BitWriter()
-    default = 1 << (precision - 1)
-    for y in range(h):
-        for x in range(w):
-            for ci in range(nc):
-                if y == 0:
-                    p = default if x == 0 else int(px[0, x - 1, ci])
-                elif x == 0:
-                    p = int(px[y - 1, 0, ci])
-                else:
-                    a = int(px[y, x - 1, ci])
-                    b = int(px[y - 1, x, ci])
-                    cc = int(px[y - 1, x - 1, ci])
-                    p = (a, b, cc, a + b - cc, a + ((b - cc) >> 1),
-                         b + ((a - cc) >> 1), (a + b) >> 1)[predictor - 1]
-                diff = (int(px[y, x, ci]) - p) & 0xFFFF
-                if diff >= 0x8000:
-                    diff -= 0x10000  # signed mod-2^16 difference
-                if diff == 32768 or diff == -32768:
-                    code, n = codes[16]
-                    bw.write(code, n)
-                    continue
-                cat = _cat(abs(diff)) if diff else 0
-                code, n = codes[cat]
-                bw.write(code, n)
-                if cat:
-                    v = diff if diff >= 0 else diff + (1 << cat) - 1
-                    bw.write(v, cat)
-    bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    sof = bytes([precision]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([nc]) + b"".join(bytes([ci + 1, 0x11, 0]) for ci in range(nc))
-    dht = bytes([0x00]) + bytes(bits) + bytes(vals)
-    sos = bytes([nc]) + b"".join(bytes([ci + 1, 0x00]) for ci in range(nc)) \
-        + bytes([predictor, 0, 0])
-    return (b"\xff\xd8" + seg(0xC3, sof) + seg(0xC4, dht) + seg(0xDA, sos)
-            + bytes(bw.out) + b"\xff\xd9")
-
-
-def decode_jpeg(data: bytes) -> np.ndarray:
-    """Sequential (SOF0/1) or progressive (SOF2) JPEG → uint8 (h, w) gray
-    or (h, w, 3) RGB.  Progressive frames accumulate coefficients across
-    all scans (spectral selection + successive approximation, DC and AC
-    first/refinement passes, EOBRUN) and reconstruct at EOI."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}   # (class 0=DC/1=AC, id) → table
-    comps: list[dict] = []
-    w = h = 0
-    dri = 0
-    progressive = False
-    arith = False
-    lossless = False
-    precision = 8
-    cond_dc: dict[int, tuple[int, int]] = {}  # DAC: table id → (L, U)
-    cond_ac: dict[int, int] = {}              # DAC: table id → Kx
-    coefs: list[np.ndarray] | None = None    # per comp (bh, bw, 64) zigzag
-    geom: tuple[int, int, int, int] = (0, 0, 0, 0)  # hmax, vmax, mcux, mcuy
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        marker = data[i + 1]
-        if marker == 0xD9:  # EOI
-            break
-        seg_len = int.from_bytes(data[i + 2:i + 4], "big")
-        seg = data[i + 4:i + 2 + seg_len]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                prec, tid = seg[p] >> 4, seg[p] & 0xF
-                p += 1
-                if prec:  # 16-bit entries (12-bit frames, round 5)
-                    qt[tid] = np.frombuffer(seg[p:p + 128],
-                                            ">u2").astype(np.int32)
-                    p += 128
-                else:
-                    qt[tid] = np.frombuffer(seg[p:p + 64],
-                                            np.uint8).astype(np.int32)
-                    p += 64
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):
-            # SOF0/1 baseline, SOF2 progressive, SOF3 LOSSLESS (round 5),
-            # SOF9/10 arithmetic sequential/progressive
-            progressive = marker in (0xC2, 0xCA)
-            arith = marker in (0xC9, 0xCA)
-            lossless = marker == 0xC3
-            h, w = (int.from_bytes(seg[1:3], "big"),
-                    int.from_bytes(seg[3:5], "big"))
-            precision = seg[0]
-            if lossless:
-                if not 2 <= precision <= 16:
-                    raise UnsupportedVariant("lossless precision out of range")
-            elif precision == 12 and (progressive or arith):
-                raise UnsupportedVariant(
-                    "12-bit progressive/arithmetic JPEG unsupported")
-            elif precision not in (8, 12):
-                raise UnsupportedVariant("only 8/12-bit DCT JPEG supported")
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = seg[6 + 3 * c], seg[7 + 3 * c], seg[8 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0xF, "tq": tq})
-        elif marker in (0xC5, 0xC6, 0xC7,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise UnsupportedVariant(
-                "hierarchical JPEG unsupported")
-        elif marker == 0xCC:  # DAC — arithmetic conditioning
-            p = 0
-            while p + 1 < len(seg):
-                tc, tb, val = seg[p] >> 4, seg[p] & 0xF, seg[p + 1]
-                if tc == 0:
-                    cond_dc[tb] = (val & 0xF, val >> 4)
-                else:
-                    cond_ac[tb] = val
-                p += 2
-        elif marker == 0xC4:  # DHT
-            p = 0
-            while p < len(seg):
-                tc, tid = seg[p] >> 4, seg[p] & 0xF
-                bits = list(seg[p + 1:p + 17])
-                nv = sum(bits)
-                vals = list(seg[p + 17:p + 17 + nv])
-                huff[(tc, tid)] = _huff_canonical(bits, vals)
-                p += 17 + nv
-        elif marker == 0xDD:  # DRI
-            dri = int.from_bytes(seg[0:2], "big")
-        elif marker == 0xDA:  # SOS — entropy-coded data follows
-            ns = seg[0]
-            smap = {}
-            for c in range(ns):
-                smap[seg[1 + 2 * c]] = (seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 0xF)
-            if lossless:
-                pred_sel = seg[1 + 2 * ns]       # Ss = predictor 1-7
-                pt = seg[3 + 2 * ns] & 0xF       # Al = point transform
-                return _decode_lossless_scan(
-                    data, i + 2 + seg_len, comps, smap, huff, w, h,
-                    precision, dri, pred_sel, pt)
-            if arith and not progressive:
-                return _decode_scan_arith(data, i + 2 + seg_len, w, h,
-                                          comps, smap, qt, dri,
-                                          cond_dc, cond_ac)
-            if not progressive:
-                return _decode_scan(data, i + 2 + seg_len, w, h, comps, smap,
-                                    qt, huff, dri, precision)
-            if not comps or not w or not h:
-                raise ValueError("JPEG scan before frame header")
-            if coefs is None:
-                hmax = max(c["h"] for c in comps)
-                vmax = max(c["v"] for c in comps)
-                mcux = -(-w // (8 * hmax))
-                mcuy = -(-h // (8 * vmax))
-                geom = (hmax, vmax, mcux, mcuy)
-                coefs = [np.zeros((mcuy * c["v"], mcux * c["h"], 64),
-                                  np.int32) for c in comps]
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0xF
-            if arith:
-                i = _decode_prog_scan_arith(data, i + 2 + seg_len, comps,
-                                            smap, coefs, ss, se, ah, al,
-                                            dri, cond_dc, cond_ac,
-                                            w, h, *geom)
-            else:
-                i = _decode_prog_scan(data, i + 2 + seg_len, comps, smap,
-                                      coefs, ss, se, ah, al, huff, dri,
-                                      w, h, *geom)
-            continue
-        i += 2 + seg_len
-    if progressive and coefs is not None:
-        return _idct_assemble(coefs, comps, qt, w, h, geom[0], geom[1])
-    raise ValueError("JPEG has no scan")
-
-
-def _comp_block_dims(c: dict, w: int, h: int, hmax: int, vmax: int) -> tuple[int, int]:
-    """Non-interleaved (single-component) scans cover the component's REAL
-    data-unit grid — ceil(comp_dims / 8) — not the MCU-padded grid."""
-    cw = -(-w * c["h"] // hmax)
-    ch = -(-h * c["v"] // vmax)
-    return -(-cw // 8), -(-ch // 8)
-
-
-def _decode_prog_scan(data, pos, comps, smap, coefs, ss, se, ah, al,
-                      huff, dri, w, h, hmax, vmax, mcux, mcuy) -> int:
-    """One progressive SOS: update the coefficient store in place, return
-    the offset of the next marker.  Implements T.81 G.2: DC first/refine
-    (interleaved or single-component), AC first/refine (single-component
-    only, per spec) with EOB-run coding."""
-    r = _BitReader(data, pos)
-    p1, m1 = 1 << al, -1 << al
-    sel = [(ci, c) for ci, c in enumerate(comps) if c["id"] in smap]
-    # T.81 G.1.1.1.1: a DC scan has Se=0; an AC scan has exactly one
-    # component.  A baseline scan header inside a SOF2 frame (seen in
-    # corrupt/mislabeled crawl files) trips this instead of desyncing.
-    if (ss == 0 and se != 0) or (ss > 0 and (len(sel) != 1 or ss > se)) \
-            or not sel:
-        raise ValueError("malformed progressive scan header")
-
-    def refine_nonzero(block, k) -> None:
-        # correction bit for an already-nonzero coefficient: grow its
-        # magnitude by p1 when the bit says so and the bit isn't set yet
-        if r.bit() and (int(block[k]) & p1) == 0:
-            block[k] += p1 if block[k] >= 0 else m1
-
-    if ss == 0:  # DC scan (se must be 0)
-        preds = {ci: 0 for ci, _ in sel}
-        if len(sel) > 1:  # interleaved MCU order
-            for mcu in range(mcux * mcuy):
-                if dri and mcu and mcu % dri == 0:
-                    r.restart()
-                    preds = {ci: 0 for ci, _ in sel}
-                my, mx = divmod(mcu, mcux)
-                for ci, c in sel:
-                    dc_tab = huff.get((0, smap[c["id"]][0]), {})
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            block = coefs[ci][my * c["v"] + by,
-                                              mx * c["h"] + bx]
-                            if ah == 0:
-                                s = _huff_read(r, dc_tab)
-                                preds[ci] += _extend(r.receive(s), s)
-                                block[0] = preds[ci] << al
-                            elif r.bit():
-                                block[0] |= p1
-        else:
-            ci, c = sel[0]
-            dc_tab = huff.get((0, smap[c["id"]][0]), {})
-            bw_, bh_ = _comp_block_dims(c, w, h, hmax, vmax)
-            pred = n = 0
-            for by in range(bh_):
-                for bx in range(bw_):
-                    if dri and n and n % dri == 0:
-                        r.restart()
-                        pred = 0
-                    n += 1
-                    block = coefs[ci][by, bx]
-                    if ah == 0:
-                        s = _huff_read(r, dc_tab)
-                        pred += _extend(r.receive(s), s)
-                        block[0] = pred << al
-                    elif r.bit():
-                        block[0] |= p1
-    else:  # AC scan: exactly one component
-        ci, c = sel[0]
-        ac_tab = huff[(1, smap[c["id"]][1])]
-        bw_, bh_ = _comp_block_dims(c, w, h, hmax, vmax)
-        eobrun = 0
-        n = 0
-        for by in range(bh_):
-            for bx in range(bw_):
-                if dri and n and n % dri == 0:
-                    r.restart()
-                    eobrun = 0
-                n += 1
-                block = coefs[ci][by, bx]
-                if ah == 0:  # AC first pass
-                    if eobrun:
-                        eobrun -= 1
-                        continue
-                    k = ss
-                    while k <= se:
-                        rs = _huff_read(r, ac_tab)
-                        run, s = rs >> 4, rs & 0xF
-                        if s == 0:
-                            if run < 15:  # EOBn: this block + eobrun more
-                                eobrun = (1 << run) - 1
-                                if run:
-                                    eobrun += r.receive(run)
-                                break
-                            k += 16       # ZRL
-                            continue
-                        k += run
-                        if k > se:
-                            raise ValueError("JPEG AC overflow")
-                        block[k] = _extend(r.receive(s), s) << al
-                        k += 1
-                else:  # AC refinement pass (T.81 G.2 / libjpeg semantics)
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            rs = _huff_read(r, ac_tab)
-                            run, s = rs >> 4, rs & 0xF
-                            val = 0
-                            if s == 0:
-                                if run < 15:
-                                    eobrun = 1 << run
-                                    if run:
-                                        eobrun += r.receive(run)
-                                    break  # tail handled by EOB branch
-                                # run == 15: ZRL over 16 zero-history slots
-                            else:
-                                val = p1 if r.bit() else m1
-                            while k <= se:
-                                if block[k] != 0:
-                                    refine_nonzero(block, k)
-                                else:
-                                    if run == 0:
-                                        if val:
-                                            block[k] = val
-                                        k += 1
-                                        break
-                                    run -= 1
-                                k += 1
-                    if eobrun > 0:
-                        while k <= se:
-                            if block[k] != 0:
-                                refine_nonzero(block, k)
-                            k += 1
-                        eobrun -= 1
-    # byte-align and advance to the next marker (skipping pad bytes)
-    j = r.i
-    while j + 1 < len(data) and not (
-            data[j] == 0xFF and data[j + 1] != 0x00
-            and not 0xD0 <= data[j + 1] <= 0xD7):
-        j += 1
-    return j
-
-
-def _idct_assemble(coefs, comps, qt, w, h, hmax, vmax,
-                   precision: int = 8) -> np.ndarray:
-    """Dequantize + IDCT the accumulated coefficient store and assemble
-    the image (shared tail of the progressive path; the baseline path
-    fuses this per block in _decode_scan)."""
-    out = []
-    for ci, c in enumerate(comps):
-        arr = coefs[ci].astype(np.float64) * qt[c["tq"]][None, None, :]
-        nat = np.zeros_like(arr)
-        nat[:, :, _ZIGZAG] = arr
-        bh_, bw_ = arr.shape[:2]
-        blocks = nat.reshape(bh_, bw_, 8, 8)
-        px = np.einsum("ij,abjk,kl->abil", _DCT.T, blocks, _DCT) + 128.0
-        plane = px.transpose(0, 2, 1, 3).reshape(bh_ * 8, bw_ * 8)
-        plane = np.repeat(np.repeat(plane, vmax // c["v"], axis=0),
-                          hmax // c["h"], axis=1)
-        out.append(plane[:h, :w])
-    mx_val = (1 << precision) - 1
-    dt = np.uint8 if precision <= 8 else np.uint16
-    if len(out) == 1:
-        return np.clip(np.round(out[0]), 0, mx_val).astype(dt)
-    half = float(1 << (precision - 1))
-    y, cb, cr = out[0], out[1] - half, out[2] - half
-    rgb = np.stack([y + 1.402 * cr,
-                    y - 0.344136 * cb - 0.714136 * cr,
-                    y + 1.772 * cb], axis=2)
-    return np.clip(np.round(rgb), 0, mx_val).astype(dt)
-
-
-def _decode_scan(data, pos, w, h, comps, smap, qt, huff, dri,
-                 precision: int = 8) -> np.ndarray:
-    if not comps or not w or not h:
-        raise ValueError("JPEG scan before frame header")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = [np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]), np.float64)
-              for c in comps]
-    r = _BitReader(data, pos)
-    preds = [0] * len(comps)
-    for mcu in range(mcux * mcuy):
-        if dri and mcu and mcu % dri == 0:
-            r.restart()
-            preds = [0] * len(comps)
-        my, mx = divmod(mcu, mcux)
-        for ci, c in enumerate(comps):
-            dct, act = smap[c["id"]]
-            dc_tab, ac_tab = huff[(0, dct)], huff[(1, act)]
-            q = qt[c["tq"]]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    coefs = np.zeros(64, np.int32)
-                    size = _huff_read(r, dc_tab)
-                    preds[ci] += _extend(r.receive(size), size)
-                    coefs[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        rs = _huff_read(r, ac_tab)
-                        run, size = rs >> 4, rs & 0xF
-                        if size == 0:
-                            if run == 15:  # ZRL
-                                k += 16
-                                continue
-                            break          # EOB
-                        k += run
-                        if k > 63:
-                            raise ValueError("JPEG AC overflow")
-                        coefs[k] = _extend(r.receive(size), size)
-                        k += 1
-                    blk = np.zeros(64, np.float64)
-                    blk[_ZIGZAG] = coefs * q
-                    px = _DCT.T @ blk.reshape(8, 8) @ _DCT \
-                        + float(1 << (precision - 1))
-                    y0 = (my * c["v"] + by) * 8
-                    x0 = (mx * c["h"] + bx) * 8
-                    planes[ci][y0:y0 + 8, x0:x0 + 8] = px
-    out = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
-        out.append(p[:h, :w])
-    mx_val = (1 << precision) - 1
-    dt = np.uint8 if precision <= 8 else np.uint16
-    if len(out) == 1:
-        return np.clip(np.round(out[0]), 0, mx_val).astype(dt)
-    half = float(1 << (precision - 1))
-    y, cb, cr = out[0], out[1] - half, out[2] - half
-    rgb = np.stack([y + 1.402 * cr,
-                    y - 0.344136 * cb - 0.714136 * cr,
-                    y + 1.772 * cb], axis=2)
-    return np.clip(np.round(rgb), 0, mx_val).astype(dt)
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.buf, self.n = 0, 0
-
-    def write(self, code: int, length: int) -> None:
-        for k in range(length - 1, -1, -1):
-            self.buf = (self.buf << 1) | ((code >> k) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.buf)
-                if self.buf == 0xFF:
-                    self.out.append(0x00)
-                self.buf, self.n = 0, 0
-
-    def flush(self) -> None:
-        while self.n:
-            self.write(1, 1)
-
-
-def _cat(v: int) -> int:
-    return int(v).bit_length() if v > 0 else int(-v).bit_length()
-
-
-def _encode_block(bw: _BitWriter, px: np.ndarray, q: np.ndarray,
-                  pred: int, dc_codes: dict, ac_codes: dict) -> int:
-    """FDCT + quantize + entropy-code one 8x8 block; returns the new DC
-    predictor.  Coefficient vector and divisor are both in zigzag order."""
-    blk = _DCT @ px @ _DCT.T
-    zz = np.round(blk.reshape(64)[_ZIGZAG] / q[_ZIGZAG]).astype(int)
-    diff = int(zz[0]) - pred
-    s = _cat(diff)
-    code, ln = dc_codes[s]
-    bw.write(code, ln)
-    if s:
-        bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    run = 0
-    last_nz = max(np.nonzero(zz[1:])[0]) + 1 if np.any(zz[1:]) else 0
-    for k in range(1, last_nz + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]
-            bw.write(code, ln)
-            run -= 16
-        s = _cat(v)
-        code, ln = ac_codes[(run << 4) | s]
-        bw.write(code, ln)
-        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        code, ln = ac_codes[0x00]
-        bw.write(code, ln)
-    return int(zz[0])
-
-
-def encode_jpeg(img: np.ndarray, quality: int = 75,
-                restart_interval: int = 0) -> bytes:
-    """Deterministic baseline JPEG (Annex-K luminance tables for every
-    component, IJG quality scaling).  Grayscale input → single-component;
-    RGB input → YCbCr with 4:2:0 chroma subsampling (the dominant crawl
-    layout).  ``restart_interval`` emits DRI + RSTn markers every N MCUs."""
-    img = np.asarray(img)
-    color = img.ndim == 3 and img.shape[2] >= 3
-    if img.ndim == 3 and not color:
-        img = img[:, :, 0]
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    q = np.clip((_JPEG_QL * scale + 50) // 100, 1, 255).astype(np.int32)
-    dc_codes = _huff_codes(_DC_L_BITS, _DC_L_VALS)
-    ac_codes = _huff_codes(_AC_L_BITS, _AC_L_VALS)
-    bw = _BitWriter()
-
-    if color:
-        h, w = img.shape[:2]
-        r, g, b = (img[:, :, i].astype(np.float64) for i in range(3))
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        pad = lambda p: np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-        y = pad(y) - 128.0
-        # 2x2-mean chroma subsample (4:2:0)
-        sub = lambda p: pad(p).reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3)) - 128.0
-        cbs, crs = sub(cb), sub(cr)
-        preds = [0, 0, 0]
-        mcux, mcuy = pw // 16, ph // 16
-        for mcu in range(mcux * mcuy):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.flush()
-                bw.out += bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8])
-                preds = [0, 0, 0]
-            my, mx = divmod(mcu, mcux)
-            for by in range(2):
-                for bx in range(2):
-                    y0, x0 = my * 16 + by * 8, mx * 16 + bx * 8
-                    preds[0] = _encode_block(bw, y[y0:y0 + 8, x0:x0 + 8], q,
-                                             preds[0], dc_codes, ac_codes)
-            y0, x0 = my * 8, mx * 8
-            preds[1] = _encode_block(bw, cbs[y0:y0 + 8, x0:x0 + 8], q,
-                                     preds[1], dc_codes, ac_codes)
-            preds[2] = _encode_block(bw, crs[y0:y0 + 8, x0:x0 + 8], q,
-                                     preds[2], dc_codes, ac_codes)
-        comps = bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0])
-        smap = bytes([1, 0x00, 2, 0x00, 3, 0x00])
-        nc = 3
-    else:
-        pix = img.astype(np.float64)
-        h, w = pix.shape
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        padded = np.pad(pix, ((0, ph - h), (0, pw - w)), mode="edge") - 128.0
-        pred = 0
-        mcux = pw // 8
-        for mcu in range(mcux * (ph // 8)):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.flush()
-                bw.out += bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8])
-                pred = 0
-            my, mx = divmod(mcu, mcux)
-            pred = _encode_block(bw, padded[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8],
-                                 q, pred, dc_codes, ac_codes)
-        comps = bytes([1, 0x11, 0])
-        smap = bytes([1, 0x00])
-        nc = 1
-    bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
-
-    # DQT stores the table in zigzag order
-    dqt = seg(0xDB, b"\x00" + bytes(int(q[z]) for z in _ZIGZAG))
-    sof = seg(0xC0, b"\x08" + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([nc]) + comps)
-    dht = seg(0xC4, b"\x00" + bytes(_DC_L_BITS) + bytes(_DC_L_VALS)
-              + b"\x10" + bytes(_AC_L_BITS) + bytes(_AC_L_VALS))
-    # (two DHT specs in one segment is legal; the parser loops within it)
-    dri = seg(0xDD, restart_interval.to_bytes(2, "big")) if restart_interval else b""
-    sos = seg(0xDA, bytes([nc]) + smap + b"\x00\x3f\x00")
-    return (b"\xff\xd8" + dqt + sof + dht + dri + sos + bytes(bw.out) + b"\xff\xd9")
-
-
-# Progressive AC scans also emit EOBn run-length symbols (n<<4 for
-# EOBRUN up to 2^14) which the Annex-K baseline AC table has no codes
-# for, so the progressive encoder ships its own flat table: every symbol
-# it can emit at code length 9 (176 symbols < 2^9; compression ratio is
-# irrelevant for the synthetic corpus, validity + coverage are not).
-_AC_PROG_VALS = sorted({(r << 4) | s for r in range(16) for s in range(1, 11)}
-                       | {n << 4 for n in range(15)} | {0xF0})
-_AC_PROG_BITS = [0] * 16
-_AC_PROG_BITS[8] = len(_AC_PROG_VALS)
-
-
-def encode_jpeg_12bit(img: np.ndarray, quality: int = 75) -> bytes:
-    """Extended-sequential (SOF1) 12-bit grayscale encoder (round 5):
-    16-bit DQT entries, level shift 2048, histogram-built canonical
-    Huffman tables (coefficient categories exceed the Annex-K tables'
-    range at 12 bits, so fixed standard tables cannot be used).
-    decode_jpeg returns uint16 within quantization tolerance."""
-    img = np.asarray(img)
-    if img.ndim != 2 or img.dtype != np.uint16:
-        raise ValueError("12-bit encoder takes grayscale uint16")
-    if int(img.max()) > 4095:
-        raise ValueError("12-bit samples must be < 4096")
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    # the 8-bit Annex-K table scaled x16 into the 12-bit coefficient range
-    q = np.clip((_JPEG_QL * scale * 16 + 50) // 100, 1, 65535).astype(np.int32)
-    h, w = img.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(img.astype(np.float64),
-                    ((0, ph - h), (0, pw - w)), mode="edge") - 2048.0
-    pred = 0
-    tokens: list[tuple[str, int, int]] = []
-    dc_hist: dict[int, int] = {}
-    ac_hist: dict[int, int] = {}
-    for my in range(ph // 8):
-        for mx in range(pw // 8):
-            blk = _DCT @ padded[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] @ _DCT.T
-            zz = np.round(blk.reshape(64)[_ZIGZAG] / q[_ZIGZAG]).astype(int)
-            diff = int(zz[0]) - pred
-            pred = int(zz[0])
-            s = _cat(diff)
-            tokens.append(("dc", s, diff))
-            dc_hist[s] = dc_hist.get(s, 0) + 1
-            run = 0
-            last_nz = max(np.nonzero(zz[1:])[0]) + 1 if np.any(zz[1:]) else 0
-            for k in range(1, last_nz + 1):
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    tokens.append(("ac", 0xF0, 0))
-                    ac_hist[0xF0] = ac_hist.get(0xF0, 0) + 1
-                    run -= 16
-                s = _cat(v)
-                tokens.append(("ac", (run << 4) | s, v))
-                ac_hist[(run << 4) | s] = ac_hist.get((run << 4) | s, 0) + 1
-                run = 0
-            if last_nz < 63:
-                tokens.append(("ac", 0x00, 0))
-                ac_hist[0x00] = ac_hist.get(0x00, 0) + 1
-
-    def table(hist: dict[int, int]):
-        lengths = _huff_lengths(hist, 16)
-        bits = [0] * 16
-        for l in lengths.values():
-            bits[l - 1] += 1
-        vals = [s for _, s in sorted((l, s) for s, l in lengths.items())]
-        return bits, vals, _huff_codes(bits, vals)
-
-    dc_bits, dc_vals, dc_codes = table(dc_hist)
-    ac_bits, ac_vals, ac_codes = table(ac_hist)
-    bw = _BitWriter()
-    for kind, sym, v in tokens:
-        code, ln = (dc_codes if kind == "dc" else ac_codes)[sym]
-        bw.write(code, ln)
-        s = sym if kind == "dc" else sym & 0xF
-        if s:
-            bw.write(v if v > 0 else v + (1 << s) - 1, s)
-    bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = bytes([0x10]) + b"".join(
-        int(x).to_bytes(2, "big") for x in q)
-    sof = bytes([12]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([1, 1, 0x11, 0])
-    dht = (bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals)
-           + bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    return (b"\xff\xd8" + seg(0xDB, dqt) + seg(0xC1, sof) + seg(0xC4, dht)
-            + seg(0xDA, sos) + bytes(bw.out) + b"\xff\xd9")
-
-
-def encode_jpeg_progressive(img: np.ndarray, quality: int = 75) -> bytes:
-    """Deterministic PROGRESSIVE JPEG (SOF2) with the same quantized
-    coefficients as ``encode_jpeg`` at the same quality — so
-    ``decode_jpeg`` of both yields IDENTICAL pixels (progressive is a
-    lossless reordering of the same data; the tests assert exact
-    equality).  Scan script exercises every decoder path: interleaved DC
-    first at Al=1, DC refinement, per-component AC first (spectral 1-63
-    at Al=1, EOB-run coded) and AC refinement (correction bits,
-    ZRL-over-history, buffered bits attached to EOB runs)."""
-    img = np.asarray(img)
-    color = img.ndim == 3 and img.shape[2] >= 3
-    if img.ndim == 3 and not color:
-        img = img[:, :, 0]
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    q = np.clip((_JPEG_QL * scale + 50) // 100, 1, 255).astype(np.int32)
-    dcc = _huff_codes(_DC_L_BITS, _DC_L_VALS)
-    acc = _huff_codes(_AC_PROG_BITS, _AC_PROG_VALS)
-
-    if color:
-        h, w = img.shape[:2]
-        r_, g_, b_ = (img[:, :, i].astype(np.float64) for i in range(3))
-        y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cb = -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_ + 128.0
-        cr = 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_ + 128.0
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        pad = lambda p: np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-        sub = lambda p: pad(p).reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3)) - 128.0
-        planes = [pad(y) - 128.0, sub(cb), sub(cr)]
-        samp = [(2, 2), (1, 1), (1, 1)]
-        comps_hdr = bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0])
-        cids = [1, 2, 3]
-    else:
-        pix = img.astype(np.float64)
-        h, w = pix.shape
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        planes = [np.pad(pix, ((0, ph - h), (0, pw - w)), mode="edge") - 128.0]
-        samp = [(1, 1)]
-        comps_hdr = bytes([1, 0x11, 0])
-        cids = [1]
-    nc = len(planes)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    coef: list[np.ndarray] = []
-    for p_ in planes:
-        bh_, bw_ = p_.shape[0] // 8, p_.shape[1] // 8
-        zz = np.zeros((bh_, bw_, 64), np.int32)
-        for by in range(bh_):
-            for bx in range(bw_):
-                blk = _DCT @ p_[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] @ _DCT.T
-                zz[by, bx] = np.round(
-                    blk.reshape(64)[_ZIGZAG] / q[_ZIGZAG]).astype(np.int32)
-        coef.append(zz)
-    # non-interleaved AC scans cover only the REAL data-unit grid
-    real = [(-(-(-(-w * hh // hmax)) // 8), -(-(-(-h * vv // vmax)) // 8))
-            for hh, vv in samp]
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
-
-    def sos(comp_specs: list[int], ss: int, se: int, ah: int, al: int,
-            body: bytes) -> bytes:
-        hdr = bytes([len(comp_specs)]) + b"".join(
-            bytes([cid, 0x00]) for cid in comp_specs) + bytes([ss, se,
-                                                              (ah << 4) | al])
-        return seg(0xDA, hdr) + body
-
-    scans: list[bytes] = []
-
-    # scan 1: DC first, interleaved, Al=1 (arithmetic shift, diff-coded)
-    bw = _BitWriter()
-    preds = [0] * nc
-    for mcu in range(mcux * mcuy):
-        my, mx = divmod(mcu, mcux)
-        for ci in range(nc):
-            hh, vv = samp[ci]
-            for by in range(vv):
-                for bx in range(hh):
-                    dc = int(coef[ci][my * vv + by, mx * hh + bx][0]) >> 1
-                    diff = dc - preds[ci]
-                    preds[ci] = dc
-                    s = _cat(diff)
-                    code, ln = dcc[s]
-                    bw.write(code, ln)
-                    if s:
-                        bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    bw.flush()
-    scans.append(sos(cids, 0, 0, 0, 1, bytes(bw.out)))
-
-    # scan 2: DC refinement — one raw bit per block, MCU order
-    bw = _BitWriter()
-    for mcu in range(mcux * mcuy):
-        my, mx = divmod(mcu, mcux)
-        for ci in range(nc):
-            hh, vv = samp[ci]
-            for by in range(vv):
-                for bx in range(hh):
-                    bw.write(int(coef[ci][my * vv + by, mx * hh + bx][0]) & 1, 1)
-    bw.flush()
-    scans.append(sos(cids, 0, 0, 1, 0, bytes(bw.out)))
-
-    # per-component AC first: spectral 1-63 at Al=1 with EOB-run coding
-    for ci in range(nc):
-        bw = _BitWriter()
-        eobrun = 0
-
-        def flush_eob() -> None:
-            nonlocal eobrun
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                code, ln = acc[nb << 4]
-                bw.write(code, ln)
-                if nb:
-                    bw.write(eobrun - (1 << nb), nb)
-                eobrun = 0
-
-        rw_, rh_ = real[ci]
-        for by in range(rh_):
-            for bx in range(rw_):
-                zz = coef[ci][by, bx]
-                vals = [0] * 64
-                last = 0
-                for k in range(1, 64):
-                    v = int(zz[k])
-                    mag = abs(v) >> 1  # Al=1: magnitude shift
-                    if mag:
-                        vals[k] = mag if v > 0 else -mag
-                        last = k
-                if last == 0:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-                    continue
-                flush_eob()
-                run = 0
-                for k in range(1, last + 1):
-                    v = vals[k]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, ln = acc[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                    s = _cat(v)
-                    code, ln = acc[(run << 4) | s]
-                    bw.write(code, ln)
-                    bw.write(v if v > 0 else v + (1 << s) - 1, s)
-                    run = 0
-                if last < 63:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        bw.flush()
-        scans.append(sos([cids[ci]], 1, 63, 0, 1, bytes(bw.out)))
-
-    # per-component AC refinement: Ah=1 → Al=0 (libjpeg G.1.2.3 algorithm)
-    for ci in range(nc):
-        bw = _BitWriter()
-        eobrun = 0
-        pend: list[int] = []  # correction bits riding with the EOB run
-
-        def flush_eob2() -> None:
-            nonlocal eobrun, pend
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                code, ln = acc[nb << 4]
-                bw.write(code, ln)
-                if nb:
-                    bw.write(eobrun - (1 << nb), nb)
-            for b in pend:
-                bw.write(b, 1)
-            eobrun = 0
-            pend = []
-
-        rw_, rh_ = real[ci]
-        for by in range(rh_):
-            for bx in range(rw_):
-                zz = coef[ci][by, bx]
-                absv = [abs(int(zz[k])) for k in range(64)]
-                eob = 0
-                for k in range(1, 64):
-                    if absv[k] == 1:
-                        eob = k
-                run = 0
-                br: list[int] = []
-                for k in range(1, 64):
-                    t = absv[k]
-                    if t == 0:
-                        run += 1
-                        continue
-                    # ZRLs fire at EVERY nonzero position once the
-                    # zero-history run exceeds 15 (libjpeg schedule) — the
-                    # buffered correction bits must ride with THIS ZRL,
-                    # not a later code, or the decoder desyncs; runs past
-                    # the last newly-significant coef fold into the EOB
-                    while run > 15 and k <= eob:
-                        flush_eob2()
-                        code, ln = acc[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                        for b in br:
-                            bw.write(b, 1)
-                        br = []
-                    if t > 1:  # already significant: buffer its next bit
-                        br.append(t & 1)
-                        continue
-                    # newly significant (t == 1)
-                    flush_eob2()
-                    code, ln = acc[(run << 4) | 1]
-                    bw.write(code, ln)
-                    bw.write(1 if int(zz[k]) > 0 else 0, 1)
-                    for b in br:
-                        bw.write(b, 1)
-                    br = []
-                    run = 0
-                if run > 0 or br:
-                    eobrun += 1
-                    pend.extend(br)
-                    if eobrun == 0x7FFF:
-                        flush_eob2()
-        flush_eob2()
-        bw.flush()
-        scans.append(sos([cids[ci]], 1, 63, 1, 0, bytes(bw.out)))
-
-    dqt = seg(0xDB, b"\x00" + bytes(int(q[z]) for z in _ZIGZAG))
-    sof = seg(0xC2, b"\x08" + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([nc]) + comps_hdr)
-    dht = seg(0xC4, b"\x00" + bytes(_DC_L_BITS) + bytes(_DC_L_VALS)
-              + b"\x10" + bytes(_AC_PROG_BITS) + bytes(_AC_PROG_VALS))
-    return (b"\xff\xd8" + dqt + sof + dht + b"".join(scans) + b"\xff\xd9")
-
-
-# ---------------------------------------------------------------------------
-# Arithmetic-coded JPEG (T.81 Annex D QM coder + Annex F statistics model)
-#
-# Sequential (SOF9) and progressive (SOF10) DCT with arithmetic entropy
-# coding: the QM binary arithmetic coder (probability-state machine of
-# Table D.3, carry resolution via 0xFF-stacking, FF00 marker-guard
-# stuffing) driving the Annex-F/G conditioning model — per-component DC
-# contexts classified by the previous diff's magnitude (L/U conditioning
-# bounds), per-position AC EOB/run/magnitude contexts with the Kx
-# low/high-frequency split, the fixed ~equiprobable state for AC signs
-# and DC refinement bits, and progressive AC refinement decisions keyed
-# to the previous stage's end-of-block index.  Decoder and encoder are
-# exact mutual inverses (round-trip-tested per state path); conditioning
-# bounds come from the DAC segment with the spec defaults (L=0, U=1,
-# Kx=5).  Lossless/hierarchical/12-bit remain the UnsupportedCodec seam.
-# ---------------------------------------------------------------------------
-
-# Table D.3: (Qe, NMPS, NLPS, switch) per probability-estimation state;
-# index 113 is the non-adapting ~equiprobable state used for AC signs.
-_QM = [
-    (0x5A1D, 1, 1, 1), (0x2586, 2, 14, 0), (0x1114, 3, 16, 0),
-    (0x080B, 4, 18, 0), (0x03D8, 5, 20, 0), (0x01DA, 6, 23, 0),
-    (0x00E5, 7, 25, 0), (0x006F, 8, 28, 0), (0x0036, 9, 30, 0),
-    (0x001A, 10, 33, 0), (0x000D, 11, 35, 0), (0x0006, 12, 9, 0),
-    (0x0003, 13, 10, 0), (0x0001, 13, 12, 0), (0x5A7F, 15, 15, 1),
-    (0x3F25, 16, 36, 0), (0x2CF2, 17, 38, 0), (0x207C, 18, 39, 0),
-    (0x17B9, 19, 40, 0), (0x1182, 20, 42, 0), (0x0CEF, 21, 43, 0),
-    (0x09A1, 22, 45, 0), (0x072F, 23, 46, 0), (0x055C, 24, 48, 0),
-    (0x0406, 25, 49, 0), (0x0303, 26, 51, 0), (0x0240, 27, 52, 0),
-    (0x01B1, 28, 54, 0), (0x0144, 29, 56, 0), (0x00F5, 30, 57, 0),
-    (0x00B7, 31, 59, 0), (0x008A, 32, 60, 0), (0x0068, 33, 62, 0),
-    (0x004E, 34, 63, 0), (0x003B, 35, 32, 0), (0x002C, 9, 33, 0),
-    (0x5AE1, 37, 37, 1), (0x484C, 38, 64, 0), (0x3A0D, 39, 65, 0),
-    (0x2EF1, 40, 67, 0), (0x261F, 41, 68, 0), (0x1F33, 42, 69, 0),
-    (0x19A8, 43, 70, 0), (0x1518, 44, 72, 0), (0x1177, 45, 73, 0),
-    (0x0E74, 46, 74, 0), (0x0BFB, 47, 75, 0), (0x09F8, 48, 77, 0),
-    (0x0861, 49, 78, 0), (0x0706, 50, 79, 0), (0x05CD, 51, 48, 0),
-    (0x04DE, 52, 50, 0), (0x040F, 53, 50, 0), (0x0363, 54, 51, 0),
-    (0x02D4, 55, 52, 0), (0x025C, 56, 53, 0), (0x01F8, 57, 54, 0),
-    (0x01A4, 58, 55, 0), (0x0160, 59, 56, 0), (0x0125, 60, 57, 0),
-    (0x00F6, 61, 58, 0), (0x00CB, 62, 59, 0), (0x00AB, 63, 61, 0),
-    (0x008F, 32, 61, 0), (0x5B12, 65, 65, 1), (0x4D04, 66, 80, 0),
-    (0x412C, 67, 81, 0), (0x37D8, 68, 82, 0), (0x2FE8, 69, 83, 0),
-    (0x293C, 70, 84, 0), (0x2379, 71, 86, 0), (0x1EDF, 72, 87, 0),
-    (0x1AA9, 73, 87, 0), (0x174E, 74, 72, 0), (0x1424, 75, 72, 0),
-    (0x119C, 76, 74, 0), (0x0F6B, 77, 74, 0), (0x0D51, 78, 75, 0),
-    (0x0BB6, 79, 77, 0), (0x0A40, 48, 77, 0), (0x5832, 81, 80, 1),
-    (0x4D1C, 82, 88, 0), (0x438E, 83, 89, 0), (0x3BDD, 84, 90, 0),
-    (0x34EE, 85, 91, 0), (0x2EAE, 86, 92, 0), (0x299A, 87, 93, 0),
-    (0x2516, 71, 86, 0), (0x5570, 89, 88, 1), (0x4CA9, 90, 95, 0),
-    (0x44D9, 91, 96, 0), (0x3E22, 92, 97, 0), (0x3824, 93, 99, 0),
-    (0x32B4, 94, 99, 0), (0x2E17, 86, 93, 0), (0x56A8, 96, 95, 1),
-    (0x4F46, 97, 101, 0), (0x47E5, 98, 102, 0), (0x41CF, 99, 103, 0),
-    (0x3C3D, 100, 104, 0), (0x375E, 101, 99, 0), (0x5231, 102, 105, 0),
-    (0x4C0F, 103, 106, 0), (0x4639, 104, 107, 0), (0x415E, 105, 103, 0),
-    (0x5627, 106, 105, 1), (0x50E7, 107, 108, 0), (0x4B85, 103, 109, 0),
-    (0x5597, 109, 110, 0), (0x504F, 110, 111, 0), (0x5A10, 111, 110, 1),
-    (0x5522, 112, 112, 0), (0x59EB, 112, 111, 1), (0x5A1D, 113, 113, 0),
-]
-_QM_FIXED = 113  # state for equiprobable decisions (never adapts)
-
-
-class _ArithDecoder:
-    """QM arithmetic decoder (T.81 D.2).  Statistic bins are single bytes:
-    bit 7 = current MPS sense, bits 0-6 = Table D.3 state index.  The code
-    register C holds raw stream bytes; CT tracks the bit offset between C
-    and the interval register A (the decision compares C against A << CT),
-    so renormalization never shifts C — only refills it bytewise with
-    FF00 un-stuffing, and feeds zero bytes once a marker is reached."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d, self.bp = data, pos
-        self.a = 0x10000
-        self.marker_pos: int | None = None
-        self.c = (self._byte() << 8) | self._byte()
-        self.ct = 0
-
-    def _byte(self) -> int:
-        if self.marker_pos is not None:
-            return 0
-        if self.bp >= len(self.d):
-            self.marker_pos = self.bp
-            return 0
-        b = self.d[self.bp]
-        if b == 0xFF:
-            nxt = self.d[self.bp + 1] if self.bp + 1 < len(self.d) else 0xD9
-            if nxt != 0x00:      # a real marker terminates the scan
-                self.marker_pos = self.bp
-                return 0
-            self.bp += 2         # FF00 → data byte 0xFF
-            return 0xFF
-        self.bp += 1
-        return b
-
-    def decode(self, st: bytearray, k: int) -> int:
-        sv = st[k]
-        mps = sv >> 7
-        qe, nm, nl, sw = _QM[sv & 0x7F]
-        self.a -= qe
-        if self.c < (self.a << self.ct):
-            if self.a & 0x8000:
-                return mps
-            if self.a < qe:      # conditional exchange: bottom is LPS
-                d = 1 - mps
-                if sw:
-                    mps ^= 1
-                st[k] = (mps << 7) | nl
-            else:
-                d = mps
-                st[k] = (mps << 7) | nm
-        else:
-            self.c -= self.a << self.ct
-            if self.a < qe:      # conditional exchange: top is MPS
-                d = mps
-                st[k] = (mps << 7) | nm
-            else:
-                d = 1 - mps
-                if sw:
-                    mps ^= 1
-                st[k] = (mps << 7) | nl
-            self.a = qe
-        while self.a < 0x8000:
-            self.a <<= 1
-            self.ct -= 1
-            if self.ct < 0:
-                self.c = (self.c << 8) | self._byte()
-                self.ct += 8
-        return d
-
-
-class _ArithEncoder:
-    """QM arithmetic encoder (T.81 D.1), the exact inverse of
-    ``_ArithDecoder``: MPS sub-interval at the interval base, carry
-    resolved by stacking pending 0xFF bytes, FF00 stuffing on output so
-    the entropy segment can never alias a marker."""
-
-    def __init__(self):
-        self.a, self.c, self.ct = 0x10000, 0, 11
-        self.buffer = -1      # pending byte (carry may still reach it)
-        self.sc = 0           # count of stacked pending 0xFF bytes
-        self.out = bytearray()
-
-    def _emit(self, b: int) -> None:
-        self.out.append(b)
-        if b == 0xFF:
-            self.out.append(0x00)
-
-    def _byteout(self) -> None:
-        t = self.c >> 19
-        self.c &= 0x7FFFF
-        if t > 0xFF:
-            # carry: +1 into the pending byte, stacked FFs roll to 00
-            self._emit(self.buffer + 1 if self.buffer >= 0 else 1)
-            self.out += b"\x00" * self.sc
-            self.sc = 0
-            self.buffer = t & 0xFF
-        elif t == 0xFF:
-            self.sc += 1      # may still overflow to 0x00 via carry
-        else:
-            if self.buffer >= 0:
-                self._emit(self.buffer)
-            for _ in range(self.sc):
-                self._emit(0xFF)
-            self.sc = 0
-            self.buffer = t
-
-    def encode(self, st: bytearray, k: int, bit: int) -> None:
-        sv = st[k]
-        mps = sv >> 7
-        qe, nm, nl, sw = _QM[sv & 0x7F]
-        self.a -= qe
-        if bit != mps:
-            if self.a >= qe:      # normal: LPS at the top
-                self.c += self.a
-                self.a = qe
-            if sw:
-                mps ^= 1
-            st[k] = (mps << 7) | nl
-        else:
-            if self.a & 0x8000:
-                return
-            if self.a < qe:       # conditional exchange: MPS at the top
-                self.c += self.a
-                self.a = qe
-            st[k] = (mps << 7) | nm
-        while self.a < 0x8000:
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-                self.ct = 8
-
-    def flush(self) -> bytes:
-        # D.1.9: choose the in-interval code value with the most trailing
-        # zero bits, then push the remaining significant bytes out
-        t = (self.c + self.a - 1) & 0xFFFF0000
-        self.c = t + 0x8000 if t < self.c else t
-        self.c <<= self.ct
-        for _ in range(4):        # drain bits 19.. through the carry logic
-            self._byteout()
-            self.c = (self.c << 8) & 0xFFFFFFF
-        if self.buffer >= 0:
-            self._emit(self.buffer)
-        for _ in range(self.sc):
-            self._emit(0xFF)
-        while self.out and self.out[-1] == 0x00:
-            self.out.pop()        # trailing zeros carry no information
-        if self.out and self.out[-1] == 0xFF:
-            self.out.append(0x00)
-        return bytes(self.out)
-
-
-def _arith_stats(comps: list[dict], smap: dict) -> tuple[dict, dict, bytearray]:
-    """Fresh Annex-F statistics areas: 64 DC bins + 256 AC bins per table
-    id, plus the fixed bin pinned to the non-adapting state."""
-    dc = {smap[c["id"]][0]: bytearray(64)
-          for c in comps if c["id"] in smap}
-    ac = {smap[c["id"]][1]: bytearray(256)
-          for c in comps if c["id"] in smap}
-    return dc, ac, bytearray([_QM_FIXED])
-
-
-def _arith_decode_block(dec, dc_st, ac_st, fixed, dc_ctx, ci, last_dc,
-                        cond_dc, cond_ac) -> np.ndarray:
-    """One 8x8 block of zigzag coefficients via the Annex-F model."""
-    lo, up = cond_dc
-    kx = cond_ac
-    zz = np.zeros(64, np.int32)
-    # F.1.4.4.1: DC difference
-    st = dc_ctx[ci]
-    if dec.decode(dc_st, st) == 0:
-        dc_ctx[ci] = 0
-    else:
-        sign = dec.decode(dc_st, st + 1)
-        m = dec.decode(dc_st, st + 2 + sign)
-        if m:
-            k = 20                      # X1
-            while dec.decode(dc_st, k):
-                m <<= 1
-                if m == 0x8000:
-                    raise ValueError("arith DC magnitude overflow")
-                k += 1
-        else:
-            k = st + 2 + sign
-        if m < (1 << lo) >> 1:
-            dc_ctx[ci] = 0
-        elif m > (1 << up) >> 1:
-            dc_ctx[ci] = 12 + sign * 4
-        else:
-            dc_ctx[ci] = 4 + sign * 4
-        v, bit = m, m
-        k += 14
-        while bit > 1:
-            bit >>= 1
-            if dec.decode(dc_st, k):
-                v |= bit
-        v += 1
-        last_dc[ci] += -v if sign else v
-    zz[0] = last_dc[ci]
-    # F.1.4.4.2: AC coefficients
-    k = 1
-    while k <= 63:
-        st = 3 * (k - 1)
-        if dec.decode(ac_st, st):       # EOB
-            break
-        while dec.decode(ac_st, st + 1) == 0:
-            st += 3
-            k += 1
-            if k > 63:
-                raise ValueError("arith AC run overflow")
-        sign = dec.decode(fixed, 0)
-        st += 2
-        m = dec.decode(ac_st, st)
-        if m and dec.decode(ac_st, st):
-            m = 2
-            st = 189 if k <= kx else 217
-            while dec.decode(ac_st, st):
-                m <<= 1
-                if m == 0x8000:
-                    raise ValueError("arith AC magnitude overflow")
-                st += 1
-        v, bit = m, m
-        st += 14
-        while bit > 1:
-            bit >>= 1
-            if dec.decode(ac_st, st):
-                v |= bit
-        v += 1
-        zz[k] = -v if sign else v
-        k += 1
-    return zz
-
-
-def _arith_encode_block(enc, dc_st, ac_st, fixed, dc_ctx, ci, last_dc,
-                        cond_dc, cond_ac, zz) -> None:
-    """Exact inverse of ``_arith_decode_block``."""
-    lo, up = cond_dc
-    kx = cond_ac
-    st = dc_ctx[ci]
-    diff = int(zz[0]) - last_dc[ci]
-    last_dc[ci] = int(zz[0])
-    if diff == 0:
-        enc.encode(dc_st, st, 0)
-        dc_ctx[ci] = 0
-    else:
-        enc.encode(dc_st, st, 1)
-        sign = 1 if diff < 0 else 0
-        enc.encode(dc_st, st + 1, sign)
-        v = (-diff if sign else diff) - 1
-        if v == 0:
-            enc.encode(dc_st, st + 2 + sign, 0)
-            m, k = 0, st + 2 + sign
-        else:
-            enc.encode(dc_st, st + 2 + sign, 1)
-            m, k = 1, 20
-            while (m << 1) <= v:
-                enc.encode(dc_st, k, 1)
-                m <<= 1
-                k += 1
-            enc.encode(dc_st, k, 0)
-        if m < (1 << lo) >> 1:
-            dc_ctx[ci] = 0
-        elif m > (1 << up) >> 1:
-            dc_ctx[ci] = 12 + sign * 4
-        else:
-            dc_ctx[ci] = 4 + sign * 4
-        k += 14
-        bit = m
-        while bit > 1:
-            bit >>= 1
-            enc.encode(dc_st, k, 1 if v & bit else 0)
-    ke = int(np.nonzero(zz[1:])[0].max()) + 1 if np.any(zz[1:]) else 0
-    k = 1
-    while k <= ke:
-        st = 3 * (k - 1)
-        enc.encode(ac_st, st, 0)        # not EOB
-        while int(zz[k]) == 0:
-            enc.encode(ac_st, st + 1, 0)
-            st += 3
-            k += 1
-        enc.encode(ac_st, st + 1, 1)
-        val = int(zz[k])
-        sign = 1 if val < 0 else 0
-        enc.encode(fixed, 0, sign)
-        st += 2
-        v = (-val if sign else val) - 1
-        if v == 0:
-            enc.encode(ac_st, st, 0)
-            m = 0
-        else:
-            enc.encode(ac_st, st, 1)
-            if v == 1:
-                enc.encode(ac_st, st, 0)
-                m = 1
-            else:
-                enc.encode(ac_st, st, 1)
-                m = 2
-                st = 189 if k <= kx else 217
-                while (m << 1) <= v:
-                    enc.encode(ac_st, st, 1)
-                    m <<= 1
-                    st += 1
-                enc.encode(ac_st, st, 0)
-        st += 14
-        bit = m
-        while bit > 1:
-            bit >>= 1
-            enc.encode(ac_st, st, 1 if v & bit else 0)
-        k += 1
-    if ke < 63:
-        enc.encode(ac_st, 3 * k - 3, 1)  # EOB
-
-
-def _next_marker(data: bytes, pos: int) -> int:
-    """Offset of the next real marker at/after ``pos`` (entropy data is
-    FF00-stuffed, so the first 0xFF not followed by 0x00 is a marker)."""
-    p = data.find(b"\xff", pos)
-    while p != -1 and p + 1 < len(data) and data[p + 1] == 0x00:
-        p = data.find(b"\xff", p + 2)
-    return p if p != -1 else len(data)
-
-
-def _decode_prog_scan_arith(data, pos, comps, smap, coefs, ss, se, ah, al,
-                            dri, cond_dc, cond_ac, w, h,
-                            hmax, vmax, mcux, mcuy) -> int:
-    """One progressive ARITHMETIC scan (SOF10): update the coefficient
-    store in place, return the offset of the next marker.  T.81 G.1.3.3 /
-    Annex F model: DC first = the sequential DC model on Al-scaled diffs,
-    DC refinement = one fixed-probability bit per block, AC first = the
-    sequential AC model over [Ss,Se] with Al scaling, AC refinement =
-    per-position correction/newly-significant decisions against the
-    previous stage's end-of-block index."""
-    sel = [(ci, c) for ci, c in enumerate(comps) if c["id"] in smap]
-    if (ss == 0 and se != 0) or (ss > 0 and (len(sel) != 1 or ss > se)) \
-            or not sel:
-        raise ValueError("malformed progressive scan header")
-    p1 = 1 << al
-
-    def fresh(p):
-        dc_st, ac_st, fixed = _arith_stats(comps, smap)
-        return (_ArithDecoder(data, p), dc_st, ac_st, fixed,
-                [0] * len(comps), [0] * len(comps))
-
-    def restart_pos(dec):
-        p = _next_marker(data, dec.bp if dec.marker_pos is None
-                         else dec.marker_pos)
-        if not (p + 1 < len(data) and 0xD0 <= data[p + 1] <= 0xD7):
-            raise ValueError("JPEG missing restart marker")
-        return p + 2
-
-    dec, dc_st, ac_st, fixed, dc_ctx, last_dc = fresh(pos)
-
-    if ss == 0 and ah == 0:       # DC first
-        units = (range(mcux * mcuy) if len(sel) > 1
-                 else range(np.prod(_comp_block_dims(sel[0][1], w, h,
-                                                     hmax, vmax))))
-        for n in units:
-            if dri and n and n % dri == 0:
-                dec, dc_st, ac_st, fixed, dc_ctx, last_dc = \
-                    fresh(restart_pos(dec))
-            for ci, c in (sel if len(sel) > 1 else sel):
-                tid = smap[c["id"]][0]
-                lo, up = cond_dc.get(tid, (0, 1))
-                if len(sel) > 1:
-                    my, mx = divmod(n, mcux)
-                    blocks = [coefs[ci][my * c["v"] + by, mx * c["h"] + bx]
-                              for by in range(c["v"]) for bx in range(c["h"])]
-                else:
-                    bw_, _bh = _comp_block_dims(c, w, h, hmax, vmax)
-                    blocks = [coefs[ci][n // bw_, n % bw_]]
-                for block in blocks:
-                    st = dc_ctx[ci]
-                    if dec.decode(dc_st[tid], st) == 0:
-                        dc_ctx[ci] = 0
-                    else:
-                        sign = dec.decode(dc_st[tid], st + 1)
-                        m = dec.decode(dc_st[tid], st + 2 + sign)
-                        if m:
-                            k = 20
-                            while dec.decode(dc_st[tid], k):
-                                m <<= 1
-                                if m == 0x8000:
-                                    raise ValueError("arith DC overflow")
-                                k += 1
-                        else:
-                            k = st + 2 + sign
-                        if m < (1 << lo) >> 1:
-                            dc_ctx[ci] = 0
-                        elif m > (1 << up) >> 1:
-                            dc_ctx[ci] = 12 + sign * 4
-                        else:
-                            dc_ctx[ci] = 4 + sign * 4
-                        v, bit = m, m
-                        k += 14
-                        while bit > 1:
-                            bit >>= 1
-                            if dec.decode(dc_st[tid], k):
-                                v |= bit
-                        v += 1
-                        last_dc[ci] += -v if sign else v
-                    block[0] = last_dc[ci] << al
-    elif ss == 0:                 # DC refinement: one fixed bit per block
-        for n in range(mcux * mcuy):
-            if dri and n and n % dri == 0:
-                dec, dc_st, ac_st, fixed, dc_ctx, last_dc = \
-                    fresh(restart_pos(dec))
-            my, mx = divmod(n, mcux)
-            for ci, c in sel:
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        if dec.decode(fixed, 0):
-                            coefs[ci][my * c["v"] + by,
-                                      mx * c["h"] + bx][0] |= p1
-    else:
-        ci, c = sel[0]
-        tid = smap[c["id"]][1]
-        kx = cond_ac.get(tid, 5)
-        bw_, bh_ = _comp_block_dims(c, w, h, hmax, vmax)
-        n = 0
-        for by in range(bh_):
-            for bx in range(bw_):
-                if dri and n and n % dri == 0:
-                    dec, dc_st, ac_st, fixed, dc_ctx, last_dc = \
-                        fresh(restart_pos(dec))
-                n += 1
-                block = coefs[ci][by, bx]
-                if ah == 0:       # AC first
-                    k = ss
-                    while k <= se:
-                        st = 3 * (k - 1)
-                        if dec.decode(ac_st[tid], st):
-                            break
-                        while dec.decode(ac_st[tid], st + 1) == 0:
-                            st += 3
-                            k += 1
-                            if k > se:
-                                raise ValueError("arith AC run overflow")
-                        sign = dec.decode(fixed, 0)
-                        st += 2
-                        m = dec.decode(ac_st[tid], st)
-                        if m and dec.decode(ac_st[tid], st):
-                            m = 2
-                            st = 189 if k <= kx else 217
-                            while dec.decode(ac_st[tid], st):
-                                m <<= 1
-                                if m == 0x8000:
-                                    raise ValueError("arith AC overflow")
-                                st += 1
-                        v, bit = m, m
-                        st += 14
-                        while bit > 1:
-                            bit >>= 1
-                            if dec.decode(ac_st[tid], st):
-                                v |= bit
-                        v += 1
-                        block[k] = (-v if sign else v) << al
-                        k += 1
-                else:             # AC refinement
-                    kex = 0
-                    for kk in range(se, 0, -1):
-                        if block[kk]:
-                            kex = kk
-                            break
-                    k = ss
-                    while k <= se:
-                        st = 3 * (k - 1)
-                        if k > kex and dec.decode(ac_st[tid], st):
-                            break
-                        while True:
-                            cur = int(block[k])
-                            if cur:
-                                if dec.decode(ac_st[tid], st + 2):
-                                    block[k] = cur + (p1 if cur > 0 else -p1)
-                                break
-                            if dec.decode(ac_st[tid], st + 1):
-                                block[k] = -p1 if dec.decode(fixed, 0) else p1
-                                break
-                            st += 3
-                            k += 1
-                            if k > se:
-                                raise ValueError("arith AC refine overflow")
-                        k += 1
-    return _next_marker(data, dec.bp if dec.marker_pos is None
-                        else dec.marker_pos)
-
-
-def _decode_scan_arith(data, pos, w, h, comps, smap, qt, dri,
-                       cond_dc, cond_ac) -> np.ndarray:
-    """Sequential arithmetic-coded scan (SOF9) → assembled image, the
-    arithmetic twin of ``_decode_scan``.  Restart intervals re-initialize
-    the coder, every statistics area, the DC predictors and contexts —
-    each RSTn segment is an independent arithmetic stream."""
-    if not comps or not w or not h:
-        raise ValueError("JPEG scan before frame header")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = [np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]), np.float64)
-              for c in comps]
-
-    def fresh(p):
-        dc_st, ac_st, fixed = _arith_stats(comps, smap)
-        return (_ArithDecoder(data, p), dc_st, ac_st, fixed,
-                [0] * len(comps), [0] * len(comps))
-
-    dec, dc_st, ac_st, fixed, dc_ctx, last_dc = fresh(pos)
-    for mcu in range(mcux * mcuy):
-        if dri and mcu and mcu % dri == 0:
-            p = dec.marker_pos
-            if p is None:
-                p = data.find(b"\xff", dec.bp)
-            while p != -1 and not (p + 1 < len(data)
-                                   and 0xD0 <= data[p + 1] <= 0xD7):
-                p = data.find(b"\xff", p + 1)
-            if p == -1:
-                raise ValueError("JPEG missing restart marker")
-            dec, dc_st, ac_st, fixed, dc_ctx, last_dc = fresh(p + 2)
-        my, mx = divmod(mcu, mcux)
-        for ci, c in enumerate(comps):
-            dct_id, act_id = smap[c["id"]]
-            q = qt[c["tq"]]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    zz = _arith_decode_block(
-                        dec, dc_st[dct_id], ac_st[act_id], fixed, dc_ctx,
-                        ci, last_dc, cond_dc.get(dct_id, (0, 1)),
-                        cond_ac.get(act_id, 5))
-                    blk = np.zeros(64, np.float64)
-                    blk[_ZIGZAG] = zz * q
-                    px = _DCT.T @ blk.reshape(8, 8) @ _DCT + 128.0
-                    y0 = (my * c["v"] + by) * 8
-                    x0 = (mx * c["h"] + bx) * 8
-                    planes[ci][y0:y0 + 8, x0:x0 + 8] = px
-    out = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        p = np.repeat(np.repeat(p, vmax // c["v"], axis=0),
-                      hmax // c["h"], axis=1)
-        out.append(p[:h, :w])
-    if len(out) == 1:
-        return np.clip(np.round(out[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = out[0], out[1] - 128.0, out[2] - 128.0
-    rgb = np.stack([y + 1.402 * cr,
-                    y - 0.344136 * cb - 0.714136 * cr,
-                    y + 1.772 * cb], axis=2)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def encode_jpeg_arith(img: np.ndarray, quality: int = 75,
-                      restart_interval: int = 0) -> bytes:
-    """Deterministic sequential arithmetic-coded JPEG (SOF9): the same
-    quantized coefficients as ``encode_jpeg``, entropy-coded by the QM
-    coder under the Annex-F model, so baseline/arithmetic decode equality
-    is exact — the arithmetic test oracle.  Emits an explicit DAC segment
-    carrying the default conditioning (L=0, U=1, Kx=5)."""
-    img = np.asarray(img)
-    color = img.ndim == 3 and img.shape[2] >= 3
-    if img.ndim == 3 and not color:
-        img = img[:, :, 0]
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    q = np.clip((_JPEG_QL * scale + 50) // 100, 1, 255).astype(np.int32)
-    cond_dc, cond_ac = (0, 1), 5
-
-    def quant(px):
-        blk = _DCT @ px @ _DCT.T
-        return np.round(blk.reshape(64)[_ZIGZAG] / q[_ZIGZAG]).astype(np.int32)
-
-    if color:
-        h, w = img.shape[:2]
-        r, g, b = (img[:, :, i].astype(np.float64) for i in range(3))
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        pad = lambda p: np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-        y = pad(y) - 128.0
-        sub = lambda p: pad(p).reshape(ph // 2, 2, pw // 2, 2) \
-            .mean(axis=(1, 3)) - 128.0
-        cbs, crs = sub(cb), sub(cr)
-        comps = [{"id": 1, "h": 2, "v": 2, "tq": 0},
-                 {"id": 2, "h": 1, "v": 1, "tq": 0},
-                 {"id": 3, "h": 1, "v": 1, "tq": 0}]
-        comps_hdr = bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0])
-        smap_hdr = bytes([1, 0x00, 2, 0x00, 3, 0x00])
-        mcux, mcuy = pw // 16, ph // 16
-        nc = 3
-
-        def mcu_blocks(mcu):
-            my, mx = divmod(mcu, mcux)
-            for by in range(2):
-                for bx in range(2):
-                    y0, x0 = my * 16 + by * 8, mx * 16 + bx * 8
-                    yield 0, quant(y[y0:y0 + 8, x0:x0 + 8])
-            y0, x0 = my * 8, mx * 8
-            yield 1, quant(cbs[y0:y0 + 8, x0:x0 + 8])
-            yield 2, quant(crs[y0:y0 + 8, x0:x0 + 8])
-    else:
-        pix = img.astype(np.float64)
-        h, w = pix.shape
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        padded = np.pad(pix, ((0, ph - h), (0, pw - w)), mode="edge") - 128.0
-        comps = [{"id": 1, "h": 1, "v": 1, "tq": 0}]
-        comps_hdr = bytes([1, 0x11, 0])
-        smap_hdr = bytes([1, 0x00])
-        mcux, mcuy = pw // 8, ph // 8
-        nc = 1
-
-        def mcu_blocks(mcu):
-            my, mx = divmod(mcu, mcux)
-            yield 0, quant(padded[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8])
-
-    smap = {c["id"]: (0, 0) for c in comps}
-    body = bytearray()
-
-    def fresh():
-        dc_st, ac_st, fixed = _arith_stats(comps, smap)
-        return (_ArithEncoder(), dc_st, ac_st, fixed,
-                [0] * len(comps), [0] * len(comps))
-
-    enc, dc_st, ac_st, fixed, dc_ctx, last_dc = fresh()
-    for mcu in range(mcux * mcuy):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            body += enc.flush()
-            body += bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8])
-            enc, dc_st, ac_st, fixed, dc_ctx, last_dc = fresh()
-        for ci, zz in mcu_blocks(mcu):
-            _arith_encode_block(enc, dc_st[0], ac_st[0], fixed, dc_ctx,
-                                ci, last_dc, cond_dc, cond_ac, zz)
-    body += enc.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) \
-            + (len(payload) + 2).to_bytes(2, "big") + payload
-
-    dqt = seg(0xDB, b"\x00" + bytes(int(q[z]) for z in _ZIGZAG))
-    sof = seg(0xC9, b"\x08" + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([nc]) + comps_hdr)
-    dac = seg(0xCC, bytes([0x00, (cond_dc[1] << 4) | cond_dc[0],
-                           0x10, cond_ac]))
-    dri = seg(0xDD, restart_interval.to_bytes(2, "big")) \
-        if restart_interval else b""
-    sos = seg(0xDA, bytes([nc]) + smap_hdr + b"\x00\x3f\x00")
-    return (b"\xff\xd8" + dqt + sof + dac + dri + sos + bytes(body)
-            + b"\xff\xd9")
-
-
-def encode_jpeg_progressive_arith(img: np.ndarray,
-                                  quality: int = 75) -> bytes:
-    """Deterministic PROGRESSIVE ARITHMETIC JPEG (SOF10): the same
-    quantized coefficients as ``encode_jpeg`` at the same quality,
-    reordered into the same scan script as ``encode_jpeg_progressive``
-    (interleaved DC first at Al=1, DC refinement, per-component AC first
-    and AC refinement) but entropy-coded by the QM coder under the
-    Annex-F/G model — so ``decode_jpeg`` of all four encodings yields
-    IDENTICAL pixels (the test oracle)."""
-    img = np.asarray(img)
-    color = img.ndim == 3 and img.shape[2] >= 3
-    if img.ndim == 3 and not color:
-        img = img[:, :, 0]
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    q = np.clip((_JPEG_QL * scale + 50) // 100, 1, 255).astype(np.int32)
-    cond_dc, cond_ac = (0, 1), 5
-
-    if color:
-        h, w = img.shape[:2]
-        r_, g_, b_ = (img[:, :, i].astype(np.float64) for i in range(3))
-        y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cb = -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_ + 128.0
-        cr = 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_ + 128.0
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        pad = lambda p: np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-        sub = lambda p: pad(p).reshape(ph // 2, 2, pw // 2, 2) \
-            .mean(axis=(1, 3)) - 128.0
-        planes = [pad(y) - 128.0, sub(cb), sub(cr)]
-        samp = [(2, 2), (1, 1), (1, 1)]
-        comps_hdr = bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0])
-        cids = [1, 2, 3]
-    else:
-        pix = img.astype(np.float64)
-        h, w = pix.shape
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        planes = [np.pad(pix, ((0, ph - h), (0, pw - w)),
-                         mode="edge") - 128.0]
-        samp = [(1, 1)]
-        comps_hdr = bytes([1, 0x11, 0])
-        cids = [1]
-    nc = len(planes)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    coef: list[np.ndarray] = []
-    for p_ in planes:
-        bh_, bw_ = p_.shape[0] // 8, p_.shape[1] // 8
-        zz = np.zeros((bh_, bw_, 64), np.int32)
-        for by in range(bh_):
-            for bx in range(bw_):
-                blk = _DCT @ p_[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] @ _DCT.T
-                zz[by, bx] = np.round(
-                    blk.reshape(64)[_ZIGZAG] / q[_ZIGZAG]).astype(np.int32)
-        coef.append(zz)
-    comps = [{"id": cids[ci], "h": samp[ci][0], "v": samp[ci][1], "tq": 0}
-             for ci in range(nc)]
-    real = [_comp_block_dims(comps[ci], w, h, hmax, vmax)
-            for ci in range(nc)]
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) \
-            + (len(payload) + 2).to_bytes(2, "big") + payload
-
-    def sos(comp_specs: list[int], ss: int, se: int, ah: int,
-            al: int, body: bytes) -> bytes:
-        hdr = bytes([len(comp_specs)]) + b"".join(
-            bytes([cid, 0x00]) for cid in comp_specs) \
-            + bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, hdr) + body
-
-    smap_all = {cids[ci]: (0, 0) for ci in range(nc)}
-    scans: list[bytes] = []
-
-    def enc_dc_value(enc, dc_st, dc_ctx, last_dc, ci, diff):
-        lo, up = cond_dc
-        st = dc_ctx[ci]
-        if diff == 0:
-            enc.encode(dc_st, st, 0)
-            dc_ctx[ci] = 0
-            return
-        enc.encode(dc_st, st, 1)
-        sign = 1 if diff < 0 else 0
-        enc.encode(dc_st, st + 1, sign)
-        v = (-diff if sign else diff) - 1
-        if v == 0:
-            enc.encode(dc_st, st + 2 + sign, 0)
-            m, k = 0, st + 2 + sign
-        else:
-            enc.encode(dc_st, st + 2 + sign, 1)
-            m, k = 1, 20
-            while (m << 1) <= v:
-                enc.encode(dc_st, k, 1)
-                m <<= 1
-                k += 1
-            enc.encode(dc_st, k, 0)
-        if m < (1 << lo) >> 1:
-            dc_ctx[ci] = 0
-        elif m > (1 << up) >> 1:
-            dc_ctx[ci] = 12 + sign * 4
-        else:
-            dc_ctx[ci] = 4 + sign * 4
-        k += 14
-        bit = m
-        while bit > 1:
-            bit >>= 1
-            enc.encode(dc_st, k, 1 if v & bit else 0)
-
-    # scan 1: DC first, interleaved, Al=1
-    enc = _ArithEncoder()
-    dc_st, _ac, fixed = _arith_stats(comps, smap_all)
-    dc_ctx, last_dc = [0] * nc, [0] * nc
-    al = 1
-    for mcu in range(mcux * mcuy):
-        my, mx = divmod(mcu, mcux)
-        for ci in range(nc):
-            hh, vv = samp[ci]
-            for by in range(vv):
-                for bx in range(hh):
-                    dc = int(coef[ci][my * vv + by, mx * hh + bx][0]) >> al
-                    enc_dc_value(enc, dc_st[0], dc_ctx, last_dc, ci,
-                                 dc - last_dc[ci])
-                    # enc_dc_value leaves last_dc untouched; track here
-                    last_dc[ci] = dc
-    scans.append(sos(cids, 0, 0, 0, 1, enc.flush()))
-
-    # scan 2: DC refinement (Ah=1, Al=0) — one fixed bit per block
-    enc = _ArithEncoder()
-    _dc2, _ac2, fixed = _arith_stats(comps, smap_all)
-    for mcu in range(mcux * mcuy):
-        my, mx = divmod(mcu, mcux)
-        for ci in range(nc):
-            hh, vv = samp[ci]
-            for by in range(vv):
-                for bx in range(hh):
-                    enc.encode(fixed, 0,
-                               int(coef[ci][my * vv + by, mx * hh + bx][0]) & 1)
-    scans.append(sos(cids, 0, 0, 1, 0, enc.flush()))
-
-    # per-component AC first (Ss=1..63, Al=1) then AC refinement (Al=0)
-    for ci in range(nc):
-        bw_, bh_ = real[ci]
-        al = 1
-        enc = _ArithEncoder()
-        _dc3, ac_st, fixed = _arith_stats(comps, smap_all)
-        for by in range(bh_):
-            for bx in range(bw_):
-                zz = coef[ci][by, bx]
-                sv = [0] * 64
-                for k in range(1, 64):
-                    t = abs(int(zz[k])) >> al
-                    sv[k] = -t if zz[k] < 0 else t
-                ke = max((k for k in range(1, 64) if sv[k]), default=0)
-                k = 1
-                while k <= ke:
-                    st = 3 * (k - 1)
-                    enc.encode(ac_st[0], st, 0)
-                    while sv[k] == 0:
-                        enc.encode(ac_st[0], st + 1, 0)
-                        st += 3
-                        k += 1
-                    enc.encode(ac_st[0], st + 1, 1)
-                    val = sv[k]
-                    sign = 1 if val < 0 else 0
-                    enc.encode(fixed, 0, sign)
-                    st += 2
-                    v = (-val if sign else val) - 1
-                    if v == 0:
-                        enc.encode(ac_st[0], st, 0)
-                        m = 0
-                    else:
-                        enc.encode(ac_st[0], st, 1)
-                        if v == 1:
-                            enc.encode(ac_st[0], st, 0)
-                            m = 1
-                        else:
-                            enc.encode(ac_st[0], st, 1)
-                            m = 2
-                            st = 189 if k <= cond_ac else 217
-                            while (m << 1) <= v:
-                                enc.encode(ac_st[0], st, 1)
-                                m <<= 1
-                                st += 1
-                            enc.encode(ac_st[0], st, 0)
-                    st += 14
-                    bit = m
-                    while bit > 1:
-                        bit >>= 1
-                        enc.encode(ac_st[0], st, 1 if v & bit else 0)
-                    k += 1
-                if ke < 63:
-                    enc.encode(ac_st[0], 3 * k - 3, 1)
-        scans.append(sos([cids[ci]], 1, 63, 0, 1, enc.flush()))
-
-        enc = _ArithEncoder()
-        _dc4, ac_st, fixed = _arith_stats(comps, smap_all)
-        for by in range(bh_):
-            for bx in range(bw_):
-                zz = coef[ci][by, bx]
-                t_of = lambda k: abs(int(zz[k]))     # Al = 0
-                kex = max((k for k in range(1, 64)
-                           if t_of(k) >> 1), default=0)
-                ke = max((k for k in range(1, 64) if t_of(k)), default=0)
-                k = 1
-                while k <= 63:
-                    st = 3 * (k - 1)
-                    if k > kex:
-                        eob = k > ke
-                        enc.encode(ac_st[0], st, 1 if eob else 0)
-                        if eob:
-                            break
-                    while True:
-                        t = t_of(k)
-                        if t > 1:            # previously significant
-                            enc.encode(ac_st[0], st + 2, t & 1)
-                            break
-                        if t == 1:           # newly significant
-                            enc.encode(ac_st[0], st + 1, 1)
-                            enc.encode(fixed, 0, 1 if zz[k] < 0 else 0)
-                            break
-                        enc.encode(ac_st[0], st + 1, 0)
-                        st += 3
-                        k += 1
-                    k += 1
-        scans.append(sos([cids[ci]], 1, 63, 1, 0, enc.flush()))
-
-    dqt = seg(0xDB, b"\x00" + bytes(int(q[z]) for z in _ZIGZAG))
-    sof = seg(0xCA, b"\x08" + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([nc]) + comps_hdr)
-    dac = seg(0xCC, bytes([0x00, (cond_dc[1] << 4) | cond_dc[0],
-                           0x10, cond_ac]))
-    return (b"\xff\xd8" + dqt + sof + dac + b"".join(scans) + b"\xff\xd9")
-
 
 def decode_audio(codec: str, payload: bytes) -> tuple[np.ndarray, int]:
     """Dispatch: WAV / AU (PCM + mu-law) / AIFF / AIFC → (samples, rate)."""
@@ -2489,1296 +422,7 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# GIF (87a/89a) — round 5.  A real crawl's image mix is heavily GIF
-# (VERDICT r4 missing #1): LZW-compressed indexed color, optional
-# interlacing, local color tables, transparency, multi-frame animation
-# with disposal methods.  GIF's LZW differs from the PDF/TIFF LZWDecode
-# in functions/pdfx.py in bit order (LSB-first, not MSB) and has no
-# EarlyChange, so it gets its own 30-line core here.
-# Reference behavior: /root/reference/src/pdf_handler.py accepted every
-# format via PIL; this is the from-scratch replacement for the dominant
-# one.
-# ---------------------------------------------------------------------------
-
-def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
-    """GIF-variant LZW: LSB-first variable-width codes, clear/EOI,
-    12-bit cap with deferred-clear tolerance."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = 0
-    pos = 0
-    while True:
-        while nbits < width and pos < len(data):
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        if nbits < width:
-            break
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = list(base)
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise UnsupportedVariant("GIF LZW first code out of range")
-            entry = table[code]
-        else:
-            if code < len(table):
-                entry = table[code]
-            elif code == len(table):
-                entry = prev + prev[:1]
-            else:
-                raise UnsupportedVariant("GIF LZW code out of range")
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-        out += entry
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-    return bytes(out)
-
-
-def _gif_lzw_encode(data: bytes, min_code_size: int) -> bytes:
-    """Mirror encoder (tests + synthetic corpora): emits an initial clear,
-    resets the table at the 12-bit cap."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear)
-    s = b""
-    for byte in data:
-        c = bytes([byte])
-        if s + c in table:
-            s += c
-            continue
-        emit(table[s])
-        if next_code < 4096:
-            table[s + c] = next_code
-            next_code += 1
-            # the decoder appends its mirror entry one code LATER, so the
-            # encoder grows width one entry after crossing the boundary
-            # (validated against ImageMagick-produced GIFs: the decoder's
-            # len==2^w rule decodes them; this is its exact mirror)
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        # else: deferred clear — emit from the full table; the decoder
-        # stops appending at 4096 in lockstep
-        s = c
-    if s:
-        emit(table[s])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _gif_interlace_order(h: int) -> list[int]:
-    return [r for start, step in _GIF_INTERLACE_PASSES
-            for r in range(start, h, step)]
-
-
-def _gif_subblocks(data: bytes, pos: int) -> tuple[bytes, int]:
-    """Concatenate the 255-byte-max sub-block chain starting at pos."""
-    chunks = []
-    while pos < len(data):
-        n = data[pos]
-        pos += 1
-        if n == 0:
-            return b"".join(chunks), pos
-        chunks.append(data[pos:pos + n])
-        pos += n
-    raise UnsupportedVariant("GIF sub-block chain unterminated")
-
-
-def decode_gif_frames(data: bytes) -> list[np.ndarray]:
-    """All frames as composited (h, w, 3) RGB canvases, honoring frame
-    placement rectangles, transparency, and disposal methods 2 (restore
-    background) and 3 (restore previous)."""
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise UnsupportedVariant("not a GIF signature")
-    if len(data) < 13:
-        raise UnsupportedVariant("GIF header truncated")
-    w, h, flags, bg, _ar = struct.unpack("<HHBBB", data[6:13])
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(data[pos:pos + 3 * n],
-                            np.uint8).reshape(n, 3).copy()
-        pos += 3 * n
-    canvas = np.zeros((h, w, 3), np.uint8)
-    if gct is not None and bg < len(gct):
-        canvas[:] = gct[bg]
-    frames: list[np.ndarray] = []
-    transparent: int | None = None
-    disposal = 0
-    while pos < len(data):
-        b0 = data[pos]
-        pos += 1
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            label = data[pos]
-            pos += 1
-            blk, pos = _gif_subblocks(data, pos)
-            if label == 0xF9 and len(blk) >= 4:  # graphic control
-                gflags = blk[0]
-                transparent = blk[3] if gflags & 1 else None
-                disposal = (gflags >> 2) & 7
-            continue
-        if b0 != 0x2C:
-            raise UnsupportedVariant(f"unknown GIF block 0x{b0:02x}")
-        ix, iy, iw, ih, iflags = struct.unpack("<HHHHB", data[pos:pos + 9])
-        pos += 9
-        ct = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            ct = np.frombuffer(data[pos:pos + 3 * n],
-                               np.uint8).reshape(n, 3).copy()
-            pos += 3 * n
-        if ct is None:
-            raise UnsupportedVariant("GIF image with no color table")
-        mcs = data[pos]
-        pos += 1
-        lzw, pos = _gif_subblocks(data, pos)
-        idx = np.frombuffer(_gif_lzw_decode(lzw, mcs), np.uint8)
-        if idx.size < iw * ih:
-            raise UnsupportedVariant("GIF pixel data truncated")
-        idx = idx[:iw * ih].reshape(ih, iw)
-        if iflags & 0x40:  # interlaced: data rows arrive in pass order
-            disp = np.empty_like(idx)
-            disp[_gif_interlace_order(ih)] = idx
-            idx = disp
-        prev_canvas = canvas.copy()
-        region = canvas[iy:iy + ih, ix:ix + iw]
-        colors = ct[np.minimum(idx, len(ct) - 1)]
-        if transparent is not None:
-            mask = idx != transparent
-            region[mask] = colors[mask]
-        else:
-            region[:, :] = colors
-        frames.append(canvas.copy())
-        if disposal == 2:
-            canvas[iy:iy + ih, ix:ix + iw] = (
-                gct[bg] if gct is not None and bg < len(gct) else 0)
-        elif disposal == 3:
-            canvas = prev_canvas
-        transparent = None
-        disposal = 0
-    if not frames:
-        raise UnsupportedVariant("GIF contains no image data")
-    return frames
-
-
-def decode_gif(data: bytes) -> np.ndarray:
-    """First composited frame (the still-image view of any GIF)."""
-    return decode_gif_frames(data)[0]
-
-
-_GIF_GRAY_PALETTE = bytes(v for g in range(256) for v in (g, g, g))
-
-
-def encode_gif(frames, interlace: bool = False,
-               transparent: int | None = None) -> bytes:
-    """Deterministic GIF89a encoder over 2-D uint8 gray frames (identity
-    gray palette), single- or multi-frame; exercises interlacing and
-    transparency for the decoder tests."""
-    if isinstance(frames, np.ndarray):
-        frames = [frames]
-    h, w = frames[0].shape
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | 0x07, 0, 0)  # 256-entry GCT
-    out += _GIF_GRAY_PALETTE
-    if len(frames) > 1:
-        out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"  # loop forever
-    for fr in frames:
-        if fr.shape != (h, w):
-            raise ValueError("all frames must share the canvas size")
-        gflags = 0x04  # disposal 1 (keep)
-        tindex = 0
-        if transparent is not None:
-            gflags |= 0x01
-            tindex = transparent
-        out += struct.pack("<BBBBHBB", 0x21, 0xF9, 4, gflags, 4, tindex, 0)
-        out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h,
-                           0x40 if interlace else 0)
-        idx = fr[_gif_interlace_order(h)] if interlace else fr
-        lzw = _gif_lzw_encode(idx.tobytes(), 8)
-        out.append(8)  # min code size
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i:i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out.append(0x3B)
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# WebP lossless (VP8L) — round 5.  The other dominant web image format
-# (VERDICT r4 missing #1).  Full decoder: LSB-first bit stream, canonical
-# prefix codes (simple + code-length-coded), meta-prefix images, color
-# cache, LZ77 with the 2D distance map, and all four transforms
-# (predictor, color, subtract-green, color-indexing incl. sub-byte pixel
-# packing).  Lossy VP8 stays a documented seam; ALPH alpha planes with
-# compression method 1 decode through the same entropy layer (and the
-# libwebp-produced python.webp alpha plane is the external conformance
-# pin — tests/test_external_fixtures.py).
-# ---------------------------------------------------------------------------
-
-class _LsbReader:
-    """LSB-first bit reader (VP8L convention)."""
-
-    __slots__ = ("d", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.d = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            if self.pos >= len(self.d):
-                raise UnsupportedVariant("VP8L bitstream truncated")
-            v |= ((self.d[self.pos] >> self.bit) & 1) << i
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-
-class _Prefix:
-    """Canonical prefix decoder from code lengths (DEFLATE-style
-    assignment; codes are read MSB-first, bit by bit)."""
-
-    __slots__ = ("map", "single")
-
-    def __init__(self, lengths: list[int]):
-        self.single = None
-        syms = [(l, s) for s, l in enumerate(lengths) if l > 0]
-        if not syms:
-            raise UnsupportedVariant("VP8L empty prefix code")
-        if len(syms) == 1:
-            self.single = syms[0][1]
-            self.map = {}
-            return
-        syms.sort()
-        self.map = {}
-        code = 0
-        prev_len = syms[0][0]
-        for l, s in syms:
-            code <<= (l - prev_len)
-            prev_len = l
-            self.map[(l, code)] = s
-            code += 1
-
-    def read(self, r: _LsbReader) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        length = 0
-        for _ in range(16):
-            code = (code << 1) | r.read(1)
-            length += 1
-            s = self.map.get((length, code))
-            if s is not None:
-                return s
-        raise UnsupportedVariant("VP8L invalid prefix code")
-
-
-_VP8L_CL_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10,
-                  11, 12, 13, 14, 15]
-
-
-def _vp8l_read_code(r: _LsbReader, alphabet: int) -> _Prefix:
-    """One prefix code: simple (1-2 symbols) or code-length-coded."""
-    if r.read(1):  # simple
-        n_sym = r.read(1) + 1
-        first8 = r.read(1)
-        s0 = r.read(8 if first8 else 1)
-        lengths = [0] * alphabet
-        if n_sym == 2:
-            s1 = r.read(8)
-            if s0 >= alphabet or s1 >= alphabet:
-                raise UnsupportedVariant("VP8L simple code symbol range")
-            lengths[s0] = lengths[s1] = 1
-        else:
-            if s0 >= alphabet:
-                raise UnsupportedVariant("VP8L simple code symbol range")
-            lengths[s0] = 1
-        return _Prefix(lengths)
-    n_codes = 4 + r.read(4)
-    cl_lengths = [0] * 19
-    for i in range(n_codes):
-        cl_lengths[_VP8L_CL_ORDER[i]] = r.read(3)
-    cl = _Prefix(cl_lengths)
-    max_symbol = alphabet
-    if r.read(1):  # use max_symbol cap
-        nbits = 2 + 2 * r.read(3)
-        max_symbol = 2 + r.read(nbits)
-    lengths = [0] * alphabet
-    prev = 8
-    i = 0
-    while i < alphabet and max_symbol > 0:
-        max_symbol -= 1
-        s = cl.read(r)
-        if s < 16:
-            lengths[i] = s
-            i += 1
-            if s:
-                prev = s
-        elif s == 16:
-            for _ in range(3 + r.read(2)):
-                if i < alphabet:
-                    lengths[i] = prev
-                    i += 1
-        elif s == 17:
-            i += 3 + r.read(3)
-        else:
-            i += 11 + r.read(7)
-    return _Prefix(lengths)
-
-
-def _vp8l_dist_map() -> list[tuple[int, int]]:
-    cands = []
-    for y in range(0, 9):
-        for x in range(-8, 9):
-            if (x, y) == (0, 0) or (y == 0 and x <= 0):
-                continue
-            cands.append((x, y))
-    cands.sort(key=lambda p: (p[0] ** 2 + p[1] ** 2, -p[1], p[0] < 0))
-    return cands[:120]
-
-
-_VP8L_DIST = _vp8l_dist_map()
-
-
-def _vp8l_extra(code: int, r: _LsbReader) -> int:
-    """Length/distance prefix symbol → value (1-based)."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + r.read(extra) + 1
-
-
-def _vp8l_decode_image(r: _LsbReader, w: int, h: int,
-                       is_level0: bool) -> "np.ndarray":
-    """Decode one VP8L (sub-)image → uint32 ARGB array of shape (h, w).
-    is_level0 enables transform reading; sub-images (transform data,
-    entropy image) never carry transforms."""
-    orig_w = w
-    transforms = []
-    if is_level0:
-        while r.read(1):
-            t = r.read(2)
-            if any(t == tt for tt, *_ in transforms):
-                raise UnsupportedVariant("VP8L duplicate transform")
-            if t == 0:  # predictor
-                bits = r.read(3) + 2
-                sw, sh = (w + (1 << bits) - 1) >> bits, (h + (1 << bits) - 1) >> bits
-                sub = _vp8l_decode_image(r, sw, sh, False)
-                transforms.append((0, bits, sub))
-            elif t == 1:  # color transform
-                bits = r.read(3) + 2
-                sw, sh = (w + (1 << bits) - 1) >> bits, (h + (1 << bits) - 1) >> bits
-                sub = _vp8l_decode_image(r, sw, sh, False)
-                transforms.append((1, bits, sub))
-            elif t == 2:  # subtract green
-                transforms.append((2,))
-            else:  # color indexing
-                n_colors = r.read(8) + 1
-                pal = _vp8l_decode_image(r, n_colors, 1, False)[0]
-                # palette entries are delta-coded component-wise
-                out = pal.copy()
-                for i in range(1, n_colors):
-                    a0 = (int(out[i - 1]) >> 24) & 0xFF
-                    r0 = (int(out[i - 1]) >> 16) & 0xFF
-                    g0 = (int(out[i - 1]) >> 8) & 0xFF
-                    b0 = int(out[i - 1]) & 0xFF
-                    ad = (int(pal[i]) >> 24) & 0xFF
-                    rd = (int(pal[i]) >> 16) & 0xFF
-                    gd = (int(pal[i]) >> 8) & 0xFF
-                    bd = int(pal[i]) & 0xFF
-                    out[i] = (((a0 + ad) & 0xFF) << 24) | \
-                             (((r0 + rd) & 0xFF) << 16) | \
-                             (((g0 + gd) & 0xFF) << 8) | ((b0 + bd) & 0xFF)
-                if n_colors <= 2:
-                    pbits = 3
-                elif n_colors <= 4:
-                    pbits = 2
-                elif n_colors <= 16:
-                    pbits = 1
-                else:
-                    pbits = 0
-                transforms.append((3, pbits, out))
-                if pbits:
-                    w = (w + (1 << pbits) - 1) >> pbits
-    # color cache
-    cache_bits = 0
-    if r.read(1):
-        cache_bits = r.read(4)
-        if not 1 <= cache_bits <= 11:
-            raise UnsupportedVariant("VP8L cache bits out of range")
-    cache = [0] * (1 << cache_bits) if cache_bits else None
-    # meta prefix image
-    meta = None
-    meta_bits = 0
-    n_groups = 1
-    if is_level0 and r.read(1):
-        meta_bits = r.read(3) + 2
-        mw = (w + (1 << meta_bits) - 1) >> meta_bits
-        mh = (h + (1 << meta_bits) - 1) >> meta_bits
-        meta = _vp8l_decode_image(r, mw, mh, False)
-        n_groups = int(((meta >> 8) & 0xFFFF).max()) + 1
-    green_alpha = 256 + 24 + (1 << cache_bits if cache_bits else 0)
-    groups = []
-    for _ in range(n_groups):
-        g = _vp8l_read_code(r, green_alpha)
-        red = _vp8l_read_code(r, 256)
-        blue = _vp8l_read_code(r, 256)
-        alpha = _vp8l_read_code(r, 256)
-        dist = _vp8l_read_code(r, 40)
-        groups.append((g, red, blue, alpha, dist))
-    px = np.zeros(w * h, dtype=np.uint32)
-    pos = 0
-    n = w * h
-
-    def cache_insert(v: int) -> None:
-        if cache is not None:
-            cache[(0x1E35A7BD * v & 0xFFFFFFFF) >> (32 - cache_bits)] = v
-
-    while pos < n:
-        x, y = pos % w, pos // w
-        if meta is not None:
-            m = int(meta[y >> meta_bits, x >> meta_bits])
-            gcode, rcode, bcode, acode, dcode = groups[(m >> 8) & 0xFFFF]
-        else:
-            gcode, rcode, bcode, acode, dcode = groups[0]
-        s = gcode.read(r)
-        if s < 256:  # literal
-            g = s
-            red = rcode.read(r)
-            blue = bcode.read(r)
-            a = acode.read(r)
-            v = (a << 24) | (red << 16) | (g << 8) | blue
-            px[pos] = v
-            cache_insert(v)
-            pos += 1
-        elif s < 256 + 24:  # LZ77 backward reference
-            length = _vp8l_extra(s - 256, r)
-            dist_code = _vp8l_extra(dcode.read(r), r)
-            if dist_code > 120:
-                dist = dist_code - 120
-            else:
-                dx, dy = _VP8L_DIST[dist_code - 1]
-                dist = dy * w + dx
-                if dist < 1:
-                    dist = 1
-            if dist > pos or pos + length > n:
-                raise UnsupportedVariant("VP8L backward reference range")
-            for k in range(length):
-                v = int(px[pos - dist + k])
-                px[pos + k] = v
-                cache_insert(v)
-            pos += length
-        else:  # color cache hit
-            if cache is None:
-                raise UnsupportedVariant("VP8L cache symbol without cache")
-            px[pos] = cache[s - 256 - 24]
-            pos += 1
-    img = px.reshape(h, w)
-    # inverse transforms, most recent first
-    for t in reversed(transforms):
-        if t[0] == 2:  # add green
-            g = (img >> 8) & 0xFF
-            red = (((img >> 16) & 0xFF) + g) & 0xFF
-            blue = ((img & 0xFF) + g) & 0xFF
-            img = (img & np.uint32(0xFF00FF00)) | (red << np.uint32(16)) | blue
-        elif t[0] == 1:  # color transform (inverse)
-            _, bits, sub = t
-            img = _vp8l_inv_color(img, bits, sub)
-        elif t[0] == 0:  # predictor
-            _, bits, sub = t
-            img = _vp8l_inv_predict(img, bits, sub)
-        else:  # color indexing
-            _, pbits, pal = t
-            img = _vp8l_apply_palette(img, pbits, pal)[:, :orig_w]
-    return img
-
-
-def _vp8l_apply_palette(img: "np.ndarray", pbits: int,
-                        pal: "np.ndarray") -> "np.ndarray":
-    h, w = img.shape
-    idx = (img >> 8) & 0xFF  # indices live in the green channel
-    if pbits:
-        per = 1 << pbits
-        ibits = 8 >> pbits
-        cols = []
-        for sub in range(per):
-            cols.append((idx >> (sub * ibits)) & ((1 << ibits) - 1))
-        wide = np.stack(cols, axis=2).reshape(h, w * per)
-        idx = wide
-    idx = np.minimum(idx, len(pal) - 1)
-    return pal[idx.astype(np.int64)].astype(np.uint32)
-
-
-def _vp8l_inv_color(img: "np.ndarray", bits: int,
-                    sub: "np.ndarray") -> "np.ndarray":
-    h, w = img.shape
-    out = img.copy()
-    for y in range(h):
-        srow = sub[y >> bits]
-        for x in range(w):
-            tfm = int(srow[x >> bits])
-            g2r = (tfm >> 8) & 0xFF
-            g2b = (tfm >> 16) & 0xFF
-            r2b = int(tfm) & 0xFF
-            v = int(out[y, x])
-            a = (v >> 24) & 0xFF
-            red = (v >> 16) & 0xFF
-            g = (v >> 8) & 0xFF
-            blue = v & 0xFF
-            red = (red + _cte(g2r, g)) & 0xFF
-            blue = (blue + _cte(g2b, g) + _cte(r2b, red)) & 0xFF
-            out[y, x] = (a << 24) | (red << 16) | (g << 8) | blue
-    return out
-
-
-def _cte(t: int, c: int) -> int:
-    """VP8L color-transform element: signed(t) * signed(c) >> 5."""
-    ts = t - 256 if t >= 128 else t
-    cs = c - 256 if c >= 128 else c
-    return (ts * cs) >> 5
-
-
-def _vp8l_inv_predict(img: "np.ndarray", bits: int,
-                      sub: "np.ndarray") -> "np.ndarray":
-    """Inverse predictor transform: out[y,x] = residual + predict(out
-    neighborhood), with the same mode arithmetic the encoder uses
-    (_vp8l_predict_one — single source of truth)."""
-    h, w = img.shape
-    out = img.astype(np.uint32).copy()
-
-    def comp_add(a: int, b: int) -> int:
-        return ((((a >> 24) + (b >> 24)) & 0xFF) << 24 |
-                ((((a >> 16) & 0xFF) + ((b >> 16) & 0xFF)) & 0xFF) << 16 |
-                ((((a >> 8) & 0xFF) + ((b >> 8) & 0xFF)) & 0xFF) << 8 |
-                (((a & 0xFF) + (b & 0xFF)) & 0xFF))
-
-    for y in range(h):
-        srow = sub[y >> bits]
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = 0xFF000000
-            elif y == 0:
-                pred = int(out[0, x - 1])
-            elif x == 0:
-                pred = int(out[y - 1, 0])
-            else:
-                mode = (int(srow[x >> bits]) >> 8) & 0xFF
-                try:
-                    pred = _vp8l_predict_one(out, x, y, w, mode)
-                except ValueError:
-                    raise UnsupportedVariant("VP8L predictor mode") from None
-            out[y, x] = comp_add(int(out[y, x]), pred)
-    return out
-
-
-def _argb_to_array(img: "np.ndarray") -> "np.ndarray":
-    """uint32 ARGB (h, w) → uint8 (h, w, 4) RGBA."""
-    h, w = img.shape
-    out = np.empty((h, w, 4), np.uint8)
-    out[:, :, 0] = (img >> 16) & 0xFF
-    out[:, :, 1] = (img >> 8) & 0xFF
-    out[:, :, 2] = img & 0xFF
-    out[:, :, 3] = (img >> 24) & 0xFF
-    return out
-
-
-class _LsbWriter:
-    """LSB-first bit writer (VP8L convention)."""
-
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc |= (v & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        """Prefix codes are packed MSB-first."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
-
-
-def _huff_lengths(hist: dict[int, int], max_len: int) -> dict[int, int]:
-    """Code lengths from a histogram (heapq Huffman); falls back to a
-    fixed-width code if any length exceeds max_len (test-grade encoder —
-    my decoder accepts the resulting canonical, possibly incomplete,
-    code)."""
-    import heapq
-    syms = sorted(hist)
-    if len(syms) == 1:
-        return {syms[0]: 1}
-    heap = [(c, i, (s,)) for i, (s, c) in enumerate(sorted(hist.items()))]
-    heapq.heapify(heap)
-    depth: dict[int, int] = {s: 0 for s in syms}
-    i = len(heap)
-    while len(heap) > 1:
-        c1, _, s1 = heapq.heappop(heap)
-        c2, _, s2 = heapq.heappop(heap)
-        for s in s1 + s2:
-            depth[s] += 1
-        heapq.heappush(heap, (c1 + c2, i, s1 + s2))
-        i += 1
-    if max(depth.values()) > max_len:
-        fixed = max(1, (len(syms) - 1).bit_length())
-        if fixed > max_len:
-            raise UnsupportedVariant("alphabet too large for fixed code")
-        return {s: fixed for s in syms}
-    return depth
-
-
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """{symbol: (code, length)} with DEFLATE/VP8L canonical assignment."""
-    out = {}
-    code = 0
-    prev = None
-    for l, s in sorted((l, s) for s, l in lengths.items()):
-        if prev is not None:
-            code <<= (l - prev)
-        prev = l
-        out[s] = (code, l)
-        code += 1
-    return out
-
-
-def _vp8l_write_code(w: _LsbWriter, lengths: dict[int, int],
-                     alphabet: int) -> dict[int, tuple[int, int]]:
-    """Emit one prefix code (simple when <=2 symbols, else normal with a
-    full 19-entry code-length code, no run-length ops, no max-symbol
-    cap); returns the canonical symbol->(code,len) table for payload
-    writing."""
-    syms = sorted(lengths)
-    if len(syms) <= 2 and all(s < 256 for s in syms):
-        w.write(1, 1)  # simple
-        w.write(len(syms) - 1, 1)
-        s0 = syms[0]
-        if s0 > 1:
-            w.write(1, 1)
-            w.write(s0, 8)
-        else:
-            w.write(0, 1)
-            w.write(s0, 1)
-        if len(syms) == 2:
-            w.write(syms[1], 8)
-            return {syms[0]: (0, 1), syms[1]: (1, 1)}
-        return {syms[0]: (0, 0)}
-    w.write(0, 1)  # normal
-    full = [lengths.get(s, 0) for s in range(alphabet)]
-    cl_hist: dict[int, int] = {}
-    for l in full:
-        cl_hist[l] = cl_hist.get(l, 0) + 1
-    cl_lengths = _huff_lengths(cl_hist, 7)
-    cl_codes = _canonical_codes(cl_lengths)
-    w.write(19 - 4, 4)  # num_code_lengths = 19
-    for s in _VP8L_CL_ORDER:
-        w.write(cl_lengths.get(s, 0), 3)
-    w.write(0, 1)  # no max_symbol cap
-    for l in full:
-        c, n = cl_codes[l]
-        w.write_code(c, n)
-    return _canonical_codes(lengths)
-
-
-def encode_vp8l(img: "np.ndarray", subtract_green: bool = False,
-                predictor: bool = False, palette: bool = False) -> bytes:
-    """Test-grade VP8L encoder over uint8 (h,w) gray / (h,w,3) RGB /
-    (h,w,4) RGBA: literal-only entropy coding (one prefix group, no
-    LZ77/cache) with optional subtract-green, predictor (per-block mode
-    rotation — exercises all 14 inverse predictors), or color-indexing
-    (with sub-byte packing) transforms.  Deterministic bytes; decode_webp
-    round-trips losslessly."""
-    if img.ndim == 2:
-        a = np.full(img.shape, 255, np.uint8)
-        argb = (a.astype(np.uint32) << 24) | (img.astype(np.uint32) << 16) \
-            | (img.astype(np.uint32) << 8) | img.astype(np.uint32)
-    elif img.shape[2] == 3:
-        argb = (np.uint32(255) << 24) | (img[:, :, 0].astype(np.uint32) << 16) \
-            | (img[:, :, 1].astype(np.uint32) << 8) | img[:, :, 2].astype(np.uint32)
-    else:
-        argb = (img[:, :, 3].astype(np.uint32) << 24) \
-            | (img[:, :, 0].astype(np.uint32) << 16) \
-            | (img[:, :, 1].astype(np.uint32) << 8) \
-            | img[:, :, 2].astype(np.uint32)
-    h, w = argb.shape
-    wr = _LsbWriter()
-    wr.write(w - 1, 14)
-    wr.write(h - 1, 14)
-    wr.write(1 if (img.ndim == 3 and img.shape[2] == 4) else 0, 1)
-    wr.write(0, 3)  # version
-
-    data = argb.copy()
-    pal_arr = None
-    if palette:
-        colors = np.unique(data)
-        if len(colors) > 256:
-            raise ValueError("palette=True needs <= 256 distinct colors")
-        pal_arr = colors.astype(np.uint32)
-        lut = {int(c): i for i, c in enumerate(pal_arr)}
-        idx = np.vectorize(lambda v: lut[int(v)])(data).astype(np.uint32)
-        n_colors = len(pal_arr)
-        if n_colors <= 2:
-            pbits = 3
-        elif n_colors <= 4:
-            pbits = 2
-        elif n_colors <= 16:
-            pbits = 1
-        else:
-            pbits = 0
-        wr.write(1, 1)
-        wr.write(3, 2)  # color-indexing transform
-        wr.write(n_colors - 1, 8)
-        # palette rows are delta-coded per component
-        deltas = []
-        prev = 0
-        for c in pal_arr:
-            c = int(c)
-            d = 0
-            for shift in (24, 16, 8, 0):
-                d |= (((c >> shift) - (prev >> shift)) & 0xFF) << shift
-            deltas.append(d)
-            prev = c
-        _vp8l_write_subimage(wr, np.array([deltas], dtype=np.uint32))
-        if pbits:
-            per = 1 << pbits
-            ibits = 8 >> pbits
-            pw = (w + per - 1) // per
-            packed = np.zeros((h, pw), np.uint32)
-            for sub in range(per):
-                cols = idx[:, sub::per]
-                packed[:, :cols.shape[1]] |= cols << (sub * ibits)
-            data = (packed & 0xFF) << 8 | np.uint32(0xFF000000)
-            w = pw
-        else:
-            data = (idx & 0xFF) << 8 | np.uint32(0xFF000000)
-    if subtract_green:
-        wr.write(1, 1)
-        wr.write(2, 2)
-        g = (data >> 8) & 0xFF
-        red = (((data >> 16) & 0xFF) - g) & 0xFF
-        blue = ((data & 0xFF) - g) & 0xFF
-        data = (data & np.uint32(0xFF00FF00)) | (red << np.uint32(16)) | blue
-    if predictor:
-        bits = 4
-        bw = (w + 15) >> 4
-        bh = (h + 15) >> 4
-        modes = np.zeros((bh, bw), np.uint32)
-        for by in range(bh):
-            for bx in range(bw):
-                modes[by, bx] = np.uint32(0xFF000000) | (((bx + by) % 14) << 8)
-        wr.write(1, 1)
-        wr.write(0, 2)
-        wr.write(bits - 2, 3)
-        _vp8l_write_subimage(wr, modes)
-        data = _vp8l_forward_predict(data, bits, modes)
-    wr.write(0, 1)  # no more transforms
-    _vp8l_write_entropy(wr, data)
-    payload = wr.bytes()
-    vp8l = b"\x2f" + payload
-    chunk = b"VP8L" + len(vp8l).to_bytes(4, "little") + vp8l
-    if len(vp8l) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + (len(chunk) + 4).to_bytes(4, "little") + b"WEBP" + chunk
-
-
-def _vp8l_write_entropy(wr: _LsbWriter, data: "np.ndarray") -> None:
-    """Literal-only entropy image: no cache, no meta codes, one group."""
-    wr.write(0, 1)  # no color cache
-    wr.write(0, 1)  # no meta prefix image
-    flat = data.reshape(-1)
-    g = ((flat >> 8) & 0xFF).astype(np.int64)
-    red = ((flat >> 16) & 0xFF).astype(np.int64)
-    blue = (flat & 0xFF).astype(np.int64)
-    a = ((flat >> 24) & 0xFF).astype(np.int64)
-
-    def hist(vals) -> dict[int, int]:
-        u, c = np.unique(vals, return_counts=True)
-        return {int(s): int(n) for s, n in zip(u, c)}
-
-    tables = []
-    for vals, alphabet in ((g, 256 + 24), (red, 256), (blue, 256),
-                           (a, 256)):
-        lengths = _huff_lengths(hist(vals), 15)
-        tables.append(_vp8l_write_code(wr, lengths, alphabet))
-    # distance code: unused — a 1-symbol simple code costs 0 payload bits
-    _vp8l_write_code(wr, {0: 1}, 40)
-    gt, rt, bt, at = tables
-    for i in range(len(flat)):
-        c, n = gt[int(g[i])]
-        wr.write_code(c, n)
-        c, n = rt[int(red[i])]
-        wr.write_code(c, n)
-        c, n = bt[int(blue[i])]
-        wr.write_code(c, n)
-        c, n = at[int(a[i])]
-        wr.write_code(c, n)
-
-
-def _vp8l_write_subimage(wr: _LsbWriter, sub: "np.ndarray") -> None:
-    """Sub-images (palette, predictor modes) use the same entropy layer
-    without the meta-image bit."""
-    wr.write(0, 1)  # no color cache
-    flat = sub.reshape(-1)
-    g = ((flat >> 8) & 0xFF).astype(np.int64)
-    red = ((flat >> 16) & 0xFF).astype(np.int64)
-    blue = (flat & 0xFF).astype(np.int64)
-    a = ((flat >> 24) & 0xFF).astype(np.int64)
-
-    def hist(vals) -> dict[int, int]:
-        u, c = np.unique(vals, return_counts=True)
-        return {int(s): int(n) for s, n in zip(u, c)}
-
-    tables = []
-    for vals, alphabet in ((g, 256 + 24), (red, 256), (blue, 256),
-                           (a, 256)):
-        lengths = _huff_lengths(hist(vals), 15)
-        tables.append(_vp8l_write_code(wr, lengths, alphabet))
-    _vp8l_write_code(wr, {0: 1}, 40)
-    gt, rt, bt, at = tables
-    for i in range(len(flat)):
-        for t, vals in ((gt, g), (rt, red), (bt, blue), (at, a)):
-            c, n = t[int(vals[i])]
-            wr.write_code(c, n)
-
-
-def _vp8l_forward_predict(data: "np.ndarray", bits: int,
-                          modes: "np.ndarray") -> "np.ndarray":
-    """Residuals whose inverse is _vp8l_inv_predict (verified by
-    round-trip): runs the inverse's prediction rules on the
-    progressively-reconstructed original."""
-    h, w = data.shape
-    out = np.zeros_like(data)
-
-    def comp_sub(a: int, b: int) -> int:
-        return ((((a >> 24) - (b >> 24)) & 0xFF) << 24 |
-                ((((a >> 16) & 0xFF) - ((b >> 16) & 0xFF)) & 0xFF) << 16 |
-                ((((a >> 8) & 0xFF) - ((b >> 8) & 0xFF)) & 0xFF) << 8 |
-                (((a & 0xFF) - (b & 0xFF)) & 0xFF))
-
-    preds = _vp8l_predictions(data, bits, modes)
-    for y in range(h):
-        for x in range(w):
-            out[y, x] = comp_sub(int(data[y, x]), int(preds[y, x]))
-    return out
-
-
-def _vp8l_predictions(data: "np.ndarray", bits: int,
-                      modes: "np.ndarray") -> "np.ndarray":
-    """Per-pixel predictor values over the ORIGINAL image (encoder side;
-    the decoder's reconstructed neighborhood equals the original)."""
-    h, w = data.shape
-    preds = np.zeros_like(data)
-    for y in range(h):
-        srow = modes[y >> bits]
-        for x in range(w):
-            if x == 0 and y == 0:
-                preds[y, x] = 0xFF000000
-            elif y == 0:
-                preds[y, x] = data[0, x - 1]
-            elif x == 0:
-                preds[y, x] = data[y - 1, 0]
-            else:
-                mode = (int(srow[x >> bits]) >> 8) & 0xFF
-                preds[y, x] = _vp8l_predict_one(data, x, y, w, mode)
-    return preds
-
-
-def _vp8l_predict_one(img: "np.ndarray", x: int, y: int, w: int,
-                      mode: int) -> int:
-    left = int(img[y, x - 1])
-    top = int(img[y - 1, x])
-    tl = int(img[y - 1, x - 1])
-    tr = int(img[y - 1, x + 1]) if x + 1 < w else int(img[y - 1, x])
-
-    def avg2(a: int, b: int) -> int:
-        return ((((a >> 24) + (b >> 24)) >> 1) << 24 |
-                ((((a >> 16) & 0xFF) + ((b >> 16) & 0xFF)) >> 1) << 16 |
-                ((((a >> 8) & 0xFF) + ((b >> 8) & 0xFF)) >> 1) << 8 |
-                (((a & 0xFF) + (b & 0xFF)) >> 1))
-
-    def clamp(v: int) -> int:
-        return 0 if v < 0 else (255 if v > 255 else v)
-
-    if mode == 0:
-        return 0xFF000000
-    if mode == 1:
-        return left
-    if mode == 2:
-        return top
-    if mode == 3:
-        return tr
-    if mode == 4:
-        return tl
-    if mode == 5:
-        return avg2(avg2(left, tr), top)
-    if mode == 6:
-        return avg2(left, tl)
-    if mode == 7:
-        return avg2(left, top)
-    if mode == 8:
-        return avg2(tl, top)
-    if mode == 9:
-        return avg2(top, tr)
-    if mode == 10:
-        return avg2(avg2(left, tl), avg2(top, tr))
-    if mode == 11:
-        p_a = (left >> 24) + (top >> 24) - (tl >> 24)
-        p_r = ((left >> 16) & 0xFF) + ((top >> 16) & 0xFF) - ((tl >> 16) & 0xFF)
-        p_g = ((left >> 8) & 0xFF) + ((top >> 8) & 0xFF) - ((tl >> 8) & 0xFF)
-        p_b = (left & 0xFF) + (top & 0xFF) - (tl & 0xFF)
-        pl = (abs(p_a - (left >> 24)) + abs(p_r - ((left >> 16) & 0xFF))
-              + abs(p_g - ((left >> 8) & 0xFF)) + abs(p_b - (left & 0xFF)))
-        pt = (abs(p_a - (top >> 24)) + abs(p_r - ((top >> 16) & 0xFF))
-              + abs(p_g - ((top >> 8) & 0xFF)) + abs(p_b - (top & 0xFF)))
-        return left if pl <= pt else top
-    if mode == 12:
-        return (clamp((left >> 24) + (top >> 24) - (tl >> 24)) << 24 |
-                clamp(((left >> 16) & 0xFF) + ((top >> 16) & 0xFF)
-                      - ((tl >> 16) & 0xFF)) << 16 |
-                clamp(((left >> 8) & 0xFF) + ((top >> 8) & 0xFF)
-                      - ((tl >> 8) & 0xFF)) << 8 |
-                clamp((left & 0xFF) + (top & 0xFF) - (tl & 0xFF)))
-    if mode == 13:
-        def comp(cl, ct, ctl):
-            s = (cl + ct) >> 1
-            return clamp(s + (s - ctl) // 2)
-        return (comp(left >> 24, top >> 24, tl >> 24) << 24 |
-                comp((left >> 16) & 0xFF, (top >> 16) & 0xFF,
-                     (tl >> 16) & 0xFF) << 16 |
-                comp((left >> 8) & 0xFF, (top >> 8) & 0xFF,
-                     (tl >> 8) & 0xFF) << 8 |
-                comp(left & 0xFF, top & 0xFF, tl & 0xFF))
-    raise ValueError(mode)
-
-
-def decode_vp8l(data: bytes) -> "np.ndarray":
-    """Raw VP8L chunk payload → uint8 (h, w, 4) RGBA."""
-    if not data or data[0] != 0x2F:
-        raise UnsupportedVariant("bad VP8L signature")
-    r = _LsbReader(data, 1)
-    w = r.read(14) + 1
-    h = r.read(14) + 1
-    r.read(1)  # alpha hint
-    if r.read(3) != 0:
-        raise UnsupportedVariant("VP8L version != 0")
-    return _argb_to_array(_vp8l_decode_image(r, w, h, True))
-
-
-def decode_webp(data: bytes) -> "np.ndarray":
-    """WebP container → pixels: VP8L (lossless) decodes fully (plain or
-    inside VP8X); lossy VP8 raises UnsupportedVariant."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise UnsupportedVariant("not a WebP container")
-    pos = 12
-    while pos + 8 <= len(data):
-        fourcc = data[pos:pos + 4]
-        size = int.from_bytes(data[pos + 4:pos + 8], "little")
-        payload = data[pos + 8:pos + 8 + size]
-        if fourcc == b"VP8L":
-            return decode_vp8l(payload)
-        if fourcc == b"VP8 ":
-            raise UnsupportedVariant("WebP lossy VP8 decode not implemented")
-        pos += 8 + size + (size & 1)
-    raise UnsupportedVariant("WebP container has no image chunk")
-
-
-def decode_webp_alpha(data: bytes) -> "np.ndarray":
-    """The ALPH chunk's alpha plane (uint8 (h, w)) from a VP8X container
-    whose alpha uses lossless compression (method 1) — alpha values are
-    coded in the green channel of a header-less VP8L stream at canvas
-    size.  Used as the external VP8L conformance pin (python.webp)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise UnsupportedVariant("not a WebP container")
-    pos = 12
-    w = h = None
-    while pos + 8 <= len(data):
-        fourcc = data[pos:pos + 4]
-        size = int.from_bytes(data[pos + 4:pos + 8], "little")
-        payload = data[pos + 8:pos + 8 + size]
-        if fourcc == b"VP8X":
-            w = int.from_bytes(payload[4:7], "little") + 1
-            h = int.from_bytes(payload[7:10], "little") + 1
-        elif fourcc == b"ALPH":
-            if w is None:
-                raise UnsupportedVariant("ALPH before VP8X")
-            head = payload[0]
-            if head & 3 != 1:
-                raise UnsupportedVariant("ALPH compression != lossless")
-            if (head >> 2) & 3:
-                raise UnsupportedVariant("ALPH filtering not implemented")
-            try:
-                r = _LsbReader(payload, 1)
-                img = _vp8l_decode_image(r, w, h, True)
-            except UnsupportedVariant:
-                r = _LsbReader(payload, 1)
-                img = _vp8l_decode_image(r, w, h, False)
-            return ((img >> 8) & 0xFF).astype(np.uint8)
-        pos += 8 + size + (size & 1)
-    raise UnsupportedVariant("no ALPH chunk")
-
-
-# ---------------------------------------------------------------------------
-# TIFF (round 5) — baseline crawl coverage: II/MM byte order, strip
-# organization, compression none/PackBits/LZW/Deflate (the LZW core is
-# the SAME MSB-first EarlyChange code TIFF shares with PDF's LZWDecode —
-# functions/pdfx.py), horizontal-differencing predictor, photometric
-# gray (incl. white-is-zero), RGB/RGBA, and palette.  Tiles, CCITT fax,
-# JPEG-in-TIFF and sub-8-bit depths raise UnsupportedVariant.
-# External pin: CPython's python.tiff (tests/external_fixtures/).
-# ---------------------------------------------------------------------------
-
-def _tiff_unpackbits(data: bytes, expected: int) -> bytes:
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expected:
-        n = data[i]
-        i += 1
-        if n < 128:
-            out += data[i:i + n + 1]
-            i += n + 1
-        elif n > 128:
-            out += bytes([data[i]]) * (257 - n)
-            i += 1
-        # n == 128: no-op
-    return bytes(out)
-
-
-def decode_tiff(data: bytes) -> np.ndarray:
-    """First IFD → uint8 array (h, w[, channels])."""
-    if data[:2] not in (b"II", b"MM") or len(data) < 8:
-        raise UnsupportedVariant("not a TIFF header")
-    bo = "<" if data[:2] == b"II" else ">"
-    if struct.unpack(bo + "H", data[2:4])[0] != 42:
-        raise UnsupportedVariant("not a classic TIFF (42)")
-    off = struct.unpack(bo + "I", data[4:8])[0]
-    n = struct.unpack(bo + "H", data[off:off + 2])[0]
-    sizes = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}
-    tags: dict[int, list[int]] = {}
-    for i in range(n):
-        e = data[off + 2 + i * 12: off + 14 + i * 12]
-        tag, typ, cnt = struct.unpack(bo + "HHI", e[:8])
-        if typ not in sizes:
-            continue
-        total = sizes[typ] * cnt
-        raw = e[8:12] if total <= 4 else data[
-            struct.unpack(bo + "I", e[8:12])[0]:][:total]
-        if typ == 3:
-            vals = list(struct.unpack(bo + f"{cnt}H", raw[:2 * cnt]))
-        elif typ == 4:
-            vals = list(struct.unpack(bo + f"{cnt}I", raw[:4 * cnt]))
-        elif typ == 1:
-            vals = list(raw[:cnt])
-        elif typ == 5:
-            vals = [struct.unpack(bo + "II", raw[j * 8:j * 8 + 8])[0]
-                    for j in range(cnt)]
-        else:
-            vals = []
-        tags[tag] = vals
-
-    def one(tag: int, default: int | None = None) -> int:
-        v = tags.get(tag)
-        if not v:
-            if default is None:
-                raise UnsupportedVariant(f"TIFF tag {tag} missing")
-            return default
-        return v[0]
-
-    w, h = one(256), one(257)
-    comp = one(259, 1)
-    photometric = one(262, 1)
-    spp = one(277, 1)
-    bits = tags.get(258, [8] * spp)
-    predictor = one(317, 1)
-    if 322 in tags:
-        raise UnsupportedVariant("tiled TIFF not supported")
-    if any(b != 8 for b in bits[:spp]):
-        raise UnsupportedVariant(f"TIFF bit depth {bits} (only 8-bit)")
-    offsets = tags.get(273)
-    counts = tags.get(279)
-    if not offsets or not counts:
-        raise UnsupportedVariant("TIFF without strip offsets")
-    rows_per_strip = one(278, h)
-    raw = bytearray()
-    for so, sc in zip(offsets, counts):
-        chunk = bytes(data[so:so + sc])
-        if comp == 1:
-            pass
-        elif comp == 5:
-            from qwen_ocr_spark.functions.pdfx import _lzw_decode
-            chunk = _lzw_decode(chunk)
-        elif comp in (8, 32946):
-            chunk = zlib.decompress(chunk)
-        elif comp == 32773:
-            n_rows = min(rows_per_strip, h - len(raw) // (w * spp))
-            chunk = _tiff_unpackbits(chunk, n_rows * w * spp)
-        else:
-            raise UnsupportedVariant(f"TIFF compression {comp}")
-        raw += chunk
-    if len(raw) < w * h * spp:
-        raise UnsupportedVariant("TIFF pixel data truncated")
-    img = np.frombuffer(bytes(raw[:w * h * spp]),
-                        np.uint8).reshape(h, w, spp)
-    if predictor == 2:
-        img = np.cumsum(img.astype(np.uint16), axis=1).astype(np.uint8)
-    elif predictor != 1:
-        raise UnsupportedVariant(f"TIFF predictor {predictor}")
-    if photometric == 3:  # palette via ColorMap (16-bit entries)
-        cmap = tags.get(320)
-        if not cmap or len(cmap) < 3 * 256:
-            raise UnsupportedVariant("palette TIFF without ColorMap")
-        lut = (np.array(cmap[:3 * 256], np.uint32)
-               .reshape(3, 256).T >> 8).astype(np.uint8)
-        return lut[img[:, :, 0]]
-    if photometric == 0:  # white is zero
-        img = 255 - img
-    if spp == 1:
-        return img[:, :, 0]
-    return img
-
-
-def encode_tiff(img: np.ndarray, compression: int = 1,
-                predictor: bool = False) -> bytes:
-    """Little-endian single-strip writer (gray / RGB / RGBA), compression
-    1 (none), 5 (LZW), 8 (deflate), 32773 (PackBits naive literal runs),
-    optional horizontal-differencing predictor — round-trip fixtures."""
-    if img.ndim == 2:
-        spp, flat = 1, img[:, :, None]
-    else:
-        spp, flat = img.shape[2], img
-    h, w = img.shape[:2]
-    px = flat
-    if predictor:
-        d = px.astype(np.int16)
-        d[:, 1:] = d[:, 1:] - d[:, :-1]
-        px = (d % 256).astype(np.uint8)
-    payload = px.tobytes()
-    if compression == 5:
-        from qwen_ocr_spark.functions.pdfx import _lzw_encode
-        payload = _lzw_encode(payload)
-    elif compression == 8:
-        payload = zlib.compress(payload)
-    elif compression == 32773:
-        out = bytearray()
-        for i in range(0, len(payload), 127):
-            chunk = payload[i:i + 127]
-            out.append(len(chunk) - 1)
-            out += chunk
-        payload = bytes(out)
-    elif compression != 1:
-        raise ValueError(compression)
-    entries = []
-
-    def entry(tag: int, typ: int, vals: list[int]) -> None:
-        entries.append((tag, typ, vals))
-
-    photometric = 1 if spp == 1 else 2
-    entry(256, 3, [w])
-    entry(257, 3, [h])
-    entry(258, 3, [8] * spp)
-    entry(259, 3, [compression])
-    entry(262, 3, [photometric])
-    entry(273, 4, [0])   # patched below
-    entry(277, 3, [spp])
-    entry(278, 3, [h])
-    entry(279, 4, [len(payload)])
-    if predictor:
-        entry(317, 3, [2])
-    if spp == 4:
-        entry(338, 3, [2])
-    entries.sort()
-    n = len(entries)
-    ifd_off = 8
-    extra_off = ifd_off + 2 + n * 12 + 4
-    extra = bytearray()
-    body = bytearray()
-    body += struct.pack("<H", n)
-    sizes = {3: 2, 4: 4}
-    for tag, typ, vals in entries:
-        total = sizes[typ] * len(vals)
-        fmt = "H" if typ == 3 else "I"
-        packed = struct.pack(f"<{len(vals)}{fmt}", *vals)
-        if tag == 273:
-            packed = b"\x00" * 4  # patched after layout
-        if total <= 4:
-            body += struct.pack("<HHI", tag, typ, len(vals))
-            body += packed + b"\x00" * (4 - total)
-        else:
-            body += struct.pack("<HHII", tag, typ, len(vals),
-                                extra_off + len(extra))
-            extra += packed
-    body += struct.pack("<I", 0)  # next IFD
-    data_off = extra_off + len(extra)
-    out = (b"II*\x00" + struct.pack("<I", ifd_off) + bytes(body)
-           + bytes(extra) + payload)
-    # patch strip offset (tag 273)
-    pos = 8 + 2
-    buf = bytearray(out)
-    for tag, typ, vals in entries:
-        if tag == 273:
-            buf[pos + 8:pos + 12] = struct.pack("<I", data_off)
-        pos += 12
-    return bytes(buf)
-
-
-# ---------------------------------------------------------------------------
-# AU / AIFF audio (round 5) — the other PCM containers a crawl carries
+# AU / AIFF audio — the other PCM containers a crawl carries
 # (CPython 3.13 removed sunau/aifc; these are from-scratch).  Both decode
 # to the decode_wav contract: (int32 samples (n, ch), rate).
 # ---------------------------------------------------------------------------
@@ -3894,31 +538,3 @@ def to_gray(img: np.ndarray) -> np.ndarray:
     if img.ndim == 2:
         return img
     return (img[:, :, :3].astype(np.uint32).sum(axis=2) // 3).astype(np.uint8)
-
-
-def decode_image(codec: str, payload: bytes, width: int = 0,
-                 height: int = 0) -> np.ndarray:
-    """Dispatch: RAWGRAY (needs width/height from metadata) or a
-    self-describing container format."""
-    if codec == "RAWGRAY":
-        a = np.frombuffer(payload, dtype=np.uint8)
-        if a.size < width * height:
-            raise ValueError(f"payload {a.size}B < {width}x{height}")
-        return a[: width * height].reshape(height, width)
-    if codec == "PNG":
-        return decode_png(payload)
-    if codec == "BMP":
-        return decode_bmp(payload)
-    if codec == "PGM":
-        return decode_pgm(payload)
-    if codec == "JPEG":
-        return decode_jpeg(payload)
-    if codec == "GIF":
-        return decode_gif(payload)
-    if codec == "TIFF":
-        return decode_tiff(payload)
-    if codec == "WEBP":
-        # VP8L (lossless) decodes fully (round 5); lossy VP8 raises a
-        # precise UnsupportedVariant from decode_webp
-        return decode_webp(payload)
-    raise KeyError(codec)

@@ -815,14 +815,20 @@ def _lzw_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    return b if pb <= pc else c
+
+
 def _png_unpredict(data: bytes, columns: int, colors: int = 1,
                    bpc: int = 8) -> bytes:
     """Reverse PNG row predictors (/Predictor >= 10): each row is a filter
     tag byte + ``columns*colors*bpc/8`` filtered bytes; filters 0-4
     (None/Sub/Up/Average/Paeth) are reversed against the prior row.  Used
     post-inflate on FlateDecode/LZWDecode streams carrying /DecodeParms."""
-    from qwen_ocr_spark.functions.codecs import _paeth
-
     rowlen = max(1, (columns * colors * bpc + 7) // 8)
     bpp = max(1, colors * bpc // 8)
     out = bytearray()

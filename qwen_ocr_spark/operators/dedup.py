@@ -168,14 +168,6 @@ def _shingle_array_udf(n: int = SHINGLE_N, distinct: bool = False):
     return shingle
 
 
-def _shingle_array(text_col: str, n: int = SHINGLE_N):
-    """Column expression: the document's word n-gram array (with
-    duplicates, in text order) — the vectorized Python pass (see
-    ``_shingle_array_udf``; kept as the single shared implementation
-    seam for word_shingles and doc_shingle_sets)."""
-    return _shingle_array_udf(n, distinct=False)(F.col(text_col))
-
-
 def doc_shingle_sets(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text", n: int = SHINGLE_N) -> DataFrame:
     """Per-document distinct-shingle ARRAY — ``(id_col, _set)`` — built

@@ -99,6 +99,17 @@ def _extract_one(url: str, payload: bytes) -> dict:
     }
 
 
+def _error_record(exc: Exception) -> dict:
+    """The row fields for a document whose extraction raised: null text,
+    zero counts, and ``error`` = ``"<ExceptionClass>: <message>"``."""
+    return {
+        "doc_kind": "unknown", "markdown": None, "extracted_text": None,
+        "digest": None, "n_pages": 0, "n_headers": 0, "n_blocks_kept": 0,
+        "n_blocks_dropped": 0, "image_tokens": 0, "breadcrumb": None,
+        "figures": [], "error": f"{type(exc).__name__}: {exc}",
+    }
+
+
 def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for b in batches:
         rows = []
@@ -106,13 +117,7 @@ def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             try:
                 rec = _extract_one(url, bytes(payload))
             except Exception as e:  # error channel, never fail the task
-                rec = {
-                    "doc_kind": "unknown", "markdown": None,
-                    "extracted_text": None, "digest": None, "n_pages": 0,
-                    "n_headers": 0, "n_blocks_kept": 0, "n_blocks_dropped": 0,
-                    "image_tokens": 0, "breadcrumb": None, "figures": [],
-                    "error": f"{type(e).__name__}: {e}",
-                }
+                rec = _error_record(e)
             rec["url"] = url
             rec["warc_ts"] = ts
             rows.append(rec)
@@ -131,10 +136,11 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
     synthesized and extracted inside the same ``mapInPandas`` task, so the
     payload bytes never cross the JVM↔Python boundary at all (round 6).
 
-    Row-identical to ``extract_pages(pages_from_documents(docs))`` — same
-    urls, timestamps, payload recipes and extraction records, same error
-    channel — but the old composition shipped every generated payload
-    Python→JVM (Arrow), projected it, and shipped it JVM→Python again for
+    Row-identical to ``extract_pages`` over pages built from the same
+    bridge payloads, urls and timestamps (pinned by
+    ``tests/test_pipeline.py::test_extract_documents_equals_extract_pages_over_bridge``),
+    same error channel — but that composition ships every generated payload
+    Python→JVM (Arrow), projects it, and ships it JVM→Python again for
     extraction: two full serializations of the corpus bytes plus an extra
     pandas materialization, for zero computational benefit (guide §4 —
     eliminate boundary crossings; the noop-isolated generation pass alone
@@ -203,14 +209,7 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
                 try:
                     rec = _extract_one(url, payload)
                 except Exception as e:  # error channel, never fail the task
-                    rec = {
-                        "doc_kind": "unknown", "markdown": None,
-                        "extracted_text": None, "digest": None, "n_pages": 0,
-                        "n_headers": 0, "n_blocks_kept": 0,
-                        "n_blocks_dropped": 0, "image_tokens": 0,
-                        "breadcrumb": None, "figures": [],
-                        "error": f"{type(e).__name__}: {e}",
-                    }
+                    rec = _error_record(e)
                 rec["url"] = url
                 rec["warc_ts"] = EPOCH + _dt.timedelta(seconds=doc_id)
                 for c in out_columns:

@@ -186,50 +186,6 @@ def _plane(plane: int, dims: int) -> list[float]:
     ]
 
 
-def _element_cols(vec_col: str, dims: int) -> list:
-    """Extract vector elements ONCE per row (``F.get`` is NULL-safe past
-    the end even under ANSI; coalesce-to-0.0 trims long plane sets to short
-    vectors exactly like a slice would — adding 0.0 is float-exact)."""
-    v = F.col(vec_col)
-    return [
-        F.coalesce(F.get(v, d), F.lit(0.0)).alias(f"_e{d}") for d in range(dims)
-    ]
-
-
-def _band_keys_from_elements(bands: int, rows: int, dims: int) -> list:
-    """One bucket-key Column per band over pre-extracted ``_e{d}`` columns:
-    ``"{b}|{r sign bits}"``.  Plane p of band b is global index b*rows+r so
-    bands use disjoint hyperplanes; plane components are plan-time literals.
-
-    UNROLLED dot products: higher-order functions (zip_with + aggregate)
-    are interpreted per element in Spark — measured ~1.5 ms/row for 32
-    planes — while a flat product-sum over scalar columns whole-stage-
-    codegens.  Left-to-right addition keeps the float result bit-identical
-    to the sequential fold the DuckDB oracle computes.
-
-    Each band key is ONE ``F.expr`` SQL string, not thousands of Column
-    objects: building the same tree node-by-node in Python costs one py4j
-    round trip per node (~14 s of driver time for 32 planes x 64 dims,
-    measured); a string parses JVM-side in milliseconds.  Plane literals
-    ride as D-suffixed double literals (``<repr>D`` — repr round-trips
-    doubles exactly, verified bit-for-bit), which halves the tree size vs
-    the round-2 CAST('<repr>' AS DOUBLE) form: the driver re-walks these
-    trees on every action (optimize + canonicalize), and that walk — not
-    executor time — is what a 2,000-row bench run actually measures."""
-    keys = []
-    for b in range(bands):
-        bits = []
-        for rw in range(rows):
-            w = _plane(b * rows + rw, dims)
-            terms = " + ".join(f"_e{d} * {w[d]!r}D" for d in range(dims))
-            bits.append(
-                f"(CASE WHEN (CAST(0.0 AS DOUBLE) + {terms}) >= 0"
-                " THEN '1' ELSE '0' END)"
-            )
-        keys.append(F.expr(f"concat('{b}|', " + ", ".join(bits) + ")"))
-    return keys
-
-
 def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", bands: int = LSH_BANDS,
                    rows: int = LSH_ROWS, dims: int = 64,

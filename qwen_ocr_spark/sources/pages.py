@@ -254,10 +254,6 @@ def write_pages(spark, path: str, n_docs: int, seed: int = 42,
         .write.mode("overwrite").parquet(path)
 
 
-def read_pages(spark, path: str):
-    return spark.read.parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # documents → pages bridge (driver-testdata adapter)
 # ---------------------------------------------------------------------------
@@ -342,55 +338,3 @@ def _bridge_html_figured(doc_id: int, text: str) -> bytes:
         '<footer><p>Copyright 2026 <a href="/t">Terms</a></p></footer>'
         "</body></html>"
     ).encode("utf-8")
-
-
-def pages_from_documents_figured(docs_df):
-    """documents → all-HTML pages, one closed-form figure per document.
-
-    Used by the extract_figures driver query: because bbox/type/caption are
-    pure arithmetic over doc_id, the figures side-output of the REAL
-    extraction pipeline (parse → area filter → numbering) has an exact SQL
-    oracle instead of a rows-only check."""
-    n = docs_df.sparkSession.sparkContext.defaultParallelism
-    docs_df = docs_df.repartition(n)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                doc_id = int(doc_id)
-                payload = _bridge_html_figured(doc_id, text)
-                url = f"https://docs.example.com/fig/{doc_id}"
-                ts = EPOCH + dt.timedelta(seconds=doc_id)
-                rows.append((url, ts, payload, text, lang))
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return docs_df.select("doc_id", "text", "lang").mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def pages_from_documents(docs_df, pdf_every: int = 7):
-    """documents(doc_id, text, lang, ...) → pages rows, deterministically:
-    doc_id % pdf_every == 0 becomes a PDF payload, the rest HTML.
-
-    The input is repartitioned to the session's parallelism first: the
-    documents parquet is often a single file (one partition), and payload
-    generation is CPU-bound — without the explicit spread it would run on
-    one core."""
-    n = docs_df.sparkSession.sparkContext.defaultParallelism
-    docs_df = docs_df.repartition(n)
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                doc_id = int(doc_id)
-                if doc_id % pdf_every == 0:
-                    payload = _bridge_pdf(doc_id, text)
-                    url = f"https://docs.example.com/{doc_id}.pdf"
-                else:
-                    payload = _bridge_html(doc_id, text)
-                    url = f"https://docs.example.com/{doc_id}"
-                ts = EPOCH + dt.timedelta(seconds=doc_id)
-                rows.append((url, ts, payload, text, lang))
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return docs_df.select("doc_id", "text", "lang").mapInPandas(gen, schema=PAGES_SCHEMA)

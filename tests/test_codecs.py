@@ -150,20 +150,6 @@ def test_wav_roundtrip():
     assert np.array_equal(out[:, 0], samples.astype(np.int32))
 
 
-def test_decode_image_dispatch():
-    img = _img(8, 8)
-    assert np.array_equal(codecs.decode_image("RAWGRAY", img.tobytes(), 8, 8), img)
-    assert np.array_equal(codecs.decode_image("PNG", codecs.encode_png(img)), img)
-    with pytest.raises(KeyError):
-        codecs.decode_image("JXL", b"\xff\x0a")  # genuinely no decoder
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_image("TIFF", b"II+\x00")  # BigTIFF: decoder exists (r5)
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_image("GIF", b"GIF89a")  # decoder exists (r5); truncated
-    with pytest.raises(ValueError):
-        codecs.decode_image("JPEG", b"\xff\xd8")  # decoder exists; truncated file
-
-
 def test_pgm_crlf_after_maxval():
     """Windows writers end the header with \\r\\n — must count as ONE
     separator, not shift the raster by a byte."""
@@ -197,280 +183,6 @@ def test_pgm_crlf_with_trailing_newline():
     assert np.array_equal(codecs.decode_pgm(data), img)
 
 
-# ---------------------------------------------------------------------------
-# JPEG (baseline sequential)
-# ---------------------------------------------------------------------------
-
-def _smooth(h, w):
-    return (np.add.outer(np.arange(h) * 3, np.arange(w) * 2) % 256).astype(np.uint8)
-
-
-def test_jpeg_gray_roundtrip_tolerance():
-    img = _smooth(24, 40)
-    dec = codecs.decode_jpeg(codecs.encode_jpeg(img))
-    assert dec.shape == img.shape and dec.dtype == np.uint8
-    assert np.abs(dec.astype(int) - img.astype(int)).max() <= 4  # lossy, q75
-    # flat blocks survive exactly
-    flat = np.full((16, 16), 130, np.uint8)
-    assert np.array_equal(codecs.decode_jpeg(codecs.encode_jpeg(flat)), flat)
-
-
-def test_jpeg_color_420_roundtrip():
-    """3-component YCbCr with 4:2:0 subsampling (the dominant crawl layout)
-    decodes through the interleaved-MCU + upsample path."""
-    h, w = 21, 35  # deliberately not multiples of 16: exercises crop
-    rgb = np.stack([_smooth(h, w), _smooth(h, w)[::-1], _smooth(h, w).T[:h, :w]
-                    if False else np.full((h, w), 90, np.uint8)], axis=2)
-    dec = codecs.decode_jpeg(codecs.encode_jpeg(rgb))
-    assert dec.shape == (h, w, 3)
-    err = np.abs(dec.astype(int) - rgb.astype(int))
-    assert err.mean() < 6 and err.max() <= 40  # chroma subsample smears edges
-
-
-def test_jpeg_restart_intervals():
-    img = _smooth(40, 72)  # enough MCUs for several restarts
-    enc = codecs.encode_jpeg(img, restart_interval=3)
-    assert b"\xff\xdd" in enc                  # DRI segment present
-    assert any(bytes([0xFF, 0xD0 + m]) in enc for m in range(8))
-    dec = codecs.decode_jpeg(enc)
-    base = codecs.decode_jpeg(codecs.encode_jpeg(img))
-    assert np.array_equal(dec, base)           # restarts are layout-neutral
-
-
-def test_jpeg_deterministic_and_dispatch():
-    img = _img(13, 19)
-    enc = codecs.encode_jpeg(img)
-    assert enc == codecs.encode_jpeg(img)
-    assert np.array_equal(codecs.decode_image("JPEG", enc), codecs.decode_jpeg(enc))
-
-
-def test_jpeg_hierarchical_is_unsupported_variant():
-    """SOF3 lossless now really decodes (round 5,
-    test_jpeg_lossless_roundtrip_exact); hierarchical is the remaining
-    typed seam."""
-    enc = bytearray(codecs.encode_jpeg(_img(8, 8)))
-    i = enc.find(b"\xff\xc0")
-    enc[i + 1] = 0xC5  # SOF5: hierarchical — the remaining seam
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_jpeg(bytes(enc))
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(b"not a jpeg at all")
-
-
-def test_qm_coder_roundtrip_fuzz():
-    """The QM arithmetic coder (T.81 Annex D) must invert itself exactly
-    across adaptive contexts and the fixed ~equiprobable state, for
-    skewed and balanced bit sources (exercises carry resolution, 0xFF
-    stacking/stuffing, conditional exchange, and flush)."""
-    rng = np.random.default_rng(0)
-    for trial in range(60):
-        n_ctx = int(rng.integers(1, 8))
-        n_bits = int(rng.integers(1, 300))
-        bits = (rng.random(n_bits) < rng.random()).astype(int).tolist()
-        ctxs = rng.integers(0, n_ctx, n_bits).tolist()
-        use_fixed = rng.random() < 0.3
-        enc = codecs._ArithEncoder()
-        st_e, fx_e = bytearray(n_ctx), bytearray([codecs._QM_FIXED])
-        for b, cx in zip(bits, ctxs):
-            enc.encode(fx_e if use_fixed and cx == 0 else st_e,
-                       0 if use_fixed and cx == 0 else cx, b)
-        stream = enc.flush()
-        assert b"\xff\xd9" not in stream  # no marker aliasing, ever
-        dec = codecs._ArithDecoder(stream, 0)
-        st_d, fx_d = bytearray(n_ctx), bytearray([codecs._QM_FIXED])
-        got = [dec.decode(fx_d if use_fixed and cx == 0 else st_d,
-                          0 if use_fixed and cx == 0 else cx)
-               for cx in ctxs]
-        assert got == bits, trial
-
-
-def test_jpeg_arithmetic_decodes_exactly_as_baseline():
-    """SOF9 arithmetic and SOF0 baseline encodings of the SAME quantized
-    coefficients must decode to identical pixels — gray and 4:2:0 color,
-    non-multiple-of-8 sizes, and restart intervals (each RSTn segment an
-    independent arithmetic stream)."""
-    rng = np.random.default_rng(5)
-    yy, xx = np.mgrid[0:32, 0:40]
-    cases = [rng.integers(0, 256, (24, 17), dtype=np.uint8),
-             rng.integers(0, 256, (9, 13), dtype=np.uint8),
-             ((yy * 3 + xx * 2) % 256).astype(np.uint8),
-             rng.integers(0, 256, (24, 20, 3), dtype=np.uint8)]
-    for img in cases:
-        arj = codecs.encode_jpeg_arith(img)
-        assert b"\xff\xc9" in arj and b"\xff\xcc" in arj  # SOF9 + DAC
-        assert np.array_equal(codecs.decode_jpeg(arj),
-                              codecs.decode_jpeg(codecs.encode_jpeg(img)))
-    img = rng.integers(0, 256, (40, 33), dtype=np.uint8)
-    assert np.array_equal(
-        codecs.decode_jpeg(codecs.encode_jpeg_arith(img, restart_interval=3)),
-        codecs.decode_jpeg(codecs.encode_jpeg(img, restart_interval=3)))
-
-
-def test_jpeg_progressive_arithmetic_decodes_exactly_as_baseline():
-    """SOF10 (progressive-arithmetic — the same scan script as the
-    huffman progressive encoder, QM-coded) decodes to pixels identical to
-    the baseline encoding of the same coefficients: DC first/refine via
-    the Annex-F/G model, AC first/refine against the previous stage's
-    end-of-block index.  Gray, 4:2:0 color, flat and extreme images."""
-    rng = np.random.default_rng(5)
-    cases = [rng.integers(0, 256, (24, 17), dtype=np.uint8),
-             rng.integers(0, 256, (9, 13), dtype=np.uint8),
-             rng.integers(0, 256, (33, 41, 3), dtype=np.uint8),
-             np.zeros((16, 16), np.uint8),
-             np.full((10, 10), 255, np.uint8)]
-    for img in cases:
-        pa = codecs.encode_jpeg_progressive_arith(img)
-        assert b"\xff\xca" in pa  # SOF10
-        assert np.array_equal(codecs.decode_jpeg(pa),
-                              codecs.decode_jpeg(codecs.encode_jpeg(img)))
-
-
-def test_jpeg_mislabeled_progressive_header_fails_cleanly():
-    """A baseline file whose SOF0 was flipped to SOF2 (corrupt/mislabeled
-    crawl bytes) carries a baseline scan header inside a progressive
-    frame — the scan validator raises instead of desyncing silently."""
-    enc = bytearray(codecs.encode_jpeg(_img(8, 8)))
-    i = enc.find(b"\xff\xc0")
-    enc[i + 1] = 0xC2
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(bytes(enc))
-
-
-def test_jpeg_progressive_decodes_exactly_as_baseline():
-    """Progressive is a lossless reordering of the same quantized
-    coefficients: decode(progressive(img)) == decode(baseline(img))
-    EXACTLY, gray and color, across qualities and odd sizes (this drives
-    every scan type: DC first/refine, AC first/refine, EOB runs, ZRL
-    over nonzero history)."""
-    rng = np.random.default_rng(5)
-    for shape in [(8, 8), (20, 13), (33, 77), (24, 40, 3), (37, 21, 3)]:
-        img = rng.integers(0, 256, shape, dtype=np.uint8)
-        for q in (30, 75, 95):
-            b = codecs.decode_jpeg(codecs.encode_jpeg(img, q))
-            p = codecs.decode_jpeg(codecs.encode_jpeg_progressive(img, q))
-            assert b.shape == p.shape
-            assert np.array_equal(b, p), (shape, q)
-
-
-def test_gif_roundtrip_static_and_interlaced():
-    """GIF (round 5): gray-palette round-trips through the LSB-first LZW,
-    sequential and 4-pass interlaced; large images cross the 9->10->11->12
-    bit width growth and the deferred-clear full-table regime (the width
-    rule itself is pinned by externally-produced GIFs in
-    test_external_fixtures.py)."""
-    rng = np.random.RandomState(5)
-    for shape in [(1, 1), (9, 11), (23, 17), (200, 300)]:
-        img = rng.randint(0, 256, shape, dtype=np.uint8)
-        for inter in (False, True):
-            dec = codecs.to_gray(codecs.decode_gif(
-                codecs.encode_gif(img, interlace=inter)))
-            assert np.array_equal(dec, img), (shape, inter)
-    grad = np.tile(np.arange(600) % 251, (400, 1)).astype(np.uint8)
-    assert np.array_equal(
-        codecs.to_gray(codecs.decode_gif(codecs.encode_gif(grad))), grad)
-
-
-def test_gif_animation_frames_and_transparency():
-    rng = np.random.RandomState(11)
-    frames = [rng.randint(0, 256, (9, 11), dtype=np.uint8) for _ in range(5)]
-    got = codecs.decode_gif_frames(codecs.encode_gif(frames))
-    assert len(got) == 5
-    for f, g in zip(frames, got):
-        assert np.array_equal(codecs.to_gray(g), f)
-    # transparent pixels keep the prior frame's content
-    f1 = np.full((4, 4), 200, np.uint8)
-    f2 = np.zeros((4, 4), np.uint8)
-    f2[0, 0] = 7
-    got = codecs.decode_gif_frames(codecs.encode_gif([f1, f2], transparent=0))
-    assert got[1][0, 0, 0] == 7 and got[1][1, 1, 0] == 200
-
-
-def test_gif_error_paths_and_dispatch():
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_gif(b"NOTGIF" + b"\x00" * 20)
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_gif(b"GIF89a" + b"\x00" * 4)  # truncated header
-    img = _img(6, 5)
-    assert np.array_equal(
-        codecs.to_gray(codecs.decode_image("GIF", codecs.encode_gif(img))),
-        img)
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_image("WEBP", b"RIFF....WEBPVP8 ")
-
-
-def test_vp8l_roundtrip_all_transforms():
-    """WebP-lossless (round 5): encode/decode round-trips across gray,
-    RGB and RGBA inputs under every transform combination the encoder
-    emits — subtract-green, the predictor transform with all 14 modes
-    rotating per block, and color-indexing at every sub-byte packing
-    width (8/4/2/1 bits per index)."""
-    rng = np.random.RandomState(9)
-
-    def rt(img, **kw):
-        dec = codecs.decode_webp(codecs.encode_vp8l(img, **kw))
-        if img.ndim == 2:
-            assert np.array_equal(dec[:, :, 0], img)
-            assert np.array_equal(dec[:, :, 0], dec[:, :, 1])
-        elif img.shape[2] == 3:
-            assert np.array_equal(dec[:, :, :3], img)
-            assert (dec[:, :, 3] == 255).all()
-        else:
-            assert np.array_equal(dec, img)
-
-    g = rng.randint(0, 256, (23, 17), np.uint8)
-    rgb = rng.randint(0, 256, (11, 13, 3), np.uint8)
-    rgba = rng.randint(0, 256, (9, 31, 4), np.uint8)
-    for kw in ({}, {"subtract_green": True}, {"predictor": True},
-               {"subtract_green": True, "predictor": True}):
-        for img in (g, rgb, rgba):
-            rt(img, **kw)
-    for ncol in (2, 4, 16, 200):
-        pal = (rng.randint(0, ncol, (19, 21))
-               * (255 // max(1, ncol - 1))).astype(np.uint8)
-        rt(pal, palette=True)
-    big = rng.randint(0, 256, (70, 90), np.uint8)
-    rt(big, predictor=True)  # multiple predictor blocks in both axes
-
-
-def test_vp8l_predictor_actually_compresses():
-    """Sanity that the predictor transform produces concentrated
-    residuals, not just a parseable stream: a smooth gradient shrinks
-    several-fold vs literal coding."""
-    grad = np.add.outer(np.arange(64), np.arange(64)).astype(np.uint8)
-    n_lit = len(codecs.encode_vp8l(grad))
-    n_pred = len(codecs.encode_vp8l(grad, predictor=True,
-                                    subtract_green=True))
-    assert n_pred * 3 < n_lit, (n_lit, n_pred)
-
-
-def test_webp_container_errors():
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_webp(b"RIFF\x04\x00\x00\x00WAVE")
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_vp8l(b"\x00notvp8l")
-    # lossy VP8 names its seam precisely
-    lossy = (b"RIFF\x14\x00\x00\x00WEBPVP8 \x04\x00\x00\x00aaaa")
-    with pytest.raises(codecs.UnsupportedVariant, match="lossy"):
-        codecs.decode_webp(lossy)
-
-
-def test_tiff_roundtrip_all_compressions():
-    """TIFF (round 5): gray/RGB/RGBA round-trip through none, LZW (the
-    shared MSB-first EarlyChange core from the PDF path), deflate and
-    PackBits, with and without the horizontal-differencing predictor."""
-    rng = np.random.RandomState(3)
-    for shape in [(9, 11), (16, 16, 3), (7, 5, 4)]:
-        img = rng.randint(0, 256, shape, np.uint8)
-        for comp in (1, 5, 8, 32773):
-            for pred in (False, True):
-                got = codecs.decode_tiff(codecs.encode_tiff(img, comp, pred))
-                assert np.array_equal(got, img), (shape, comp, pred)
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_tiff(b"MM\x00\x2b")  # BigTIFF
-    with pytest.raises(codecs.UnsupportedVariant):
-        codecs.decode_tiff(b"PNG?")
-
-
 def test_au_aiff_decode_contracts():
     """AU (PCM + G.711 mu-law) and AIFF/AIFC (NONE/sowt) decode to the
     decode_wav contract; unsupported compressions raise the typed seam."""
@@ -496,59 +208,3 @@ def test_au_aiff_decode_contracts():
     assert r2 == 8000 and np.array_equal(s2, s)
     with pytest.raises(KeyError):
         codecs.decode_audio("MP3", b"ID3")
-
-
-def test_jpeg_lossless_roundtrip_exact():
-    """SOF3 lossless JPEG (round 5): predictive Huffman coding decodes
-    EXACTLY — all 7 predictors, gray and RGB, 8-bit and 16-bit
-    precision; mislabeled or malformed lossless scans fail cleanly."""
-    rng = np.random.RandomState(4)
-    for shape, dt in [((13, 9), np.uint8), ((8, 21, 3), np.uint8),
-                      ((11, 7), np.uint16)]:
-        hi = 256 if dt == np.uint8 else 65536
-        img = rng.randint(0, hi, shape, dtype=dt)
-        for pred in range(1, 8):
-            got = codecs.decode_jpeg(
-                codecs.encode_jpeg_lossless(img, predictor=pred))
-            assert got.dtype == img.dtype and got.shape == img.shape
-            assert np.array_equal(got, img), (shape, dt, pred)
-    # a smooth image genuinely compresses under predictive coding
-    grad = np.add.outer(np.arange(64), np.arange(64)).astype(np.uint8)
-    assert len(codecs.encode_jpeg_lossless(grad)) < grad.size
-    # a baseline file relabeled SOF3 must error, not mis-decode: its scan
-    # header's Ss=0 is an invalid predictor
-    base = bytearray(codecs.encode_jpeg(_img(8, 8)))
-    base[base.index(b"\xff\xc0") + 1] = 0xC3
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(bytes(base))
-    # hierarchical stays the typed seam
-    hier = bytearray(codecs.encode_jpeg(_img(8, 8)))
-    hier[hier.index(b"\xff\xc0") + 1] = 0xC5
-    with pytest.raises(codecs.UnsupportedVariant, match="hierarchical"):
-        codecs.decode_jpeg(bytes(hier))
-
-
-def test_jpeg_12bit_extended_sequential():
-    """12-bit DCT JPEG (SOF1 + 16-bit DQT entries, round 5): decodes to
-    uint16 within quantization tolerance; relative error comparable to
-    the 8-bit path at the same quality; 12-bit progressive stays the
-    typed seam."""
-    rng = np.random.RandomState(6)
-    base = np.add.outer(np.linspace(0, 4095, 40), np.linspace(0, 300, 56))
-    img = np.clip(base + rng.normal(0, 30, base.shape), 0,
-                  4095).astype(np.uint16)
-    for qual in (50, 75, 95):
-        dec = codecs.decode_jpeg(codecs.encode_jpeg_12bit(img, qual))
-        assert dec.dtype == np.uint16 and dec.shape == img.shape
-        err = np.abs(dec.astype(np.int32) - img.astype(np.int32))
-        # scaled equivalent of the 8-bit path's lossy tolerance
-        assert err.mean() < 16 * 4 and err.max() < 16 * 16, (qual, err.max())
-    # deterministic bytes
-    assert codecs.encode_jpeg_12bit(img) == codecs.encode_jpeg_12bit(img)
-    # 12-bit progressive is rejected with a precise reason
-    enc = bytearray(codecs.encode_jpeg_12bit(img))
-    enc[enc.index(b"\xff\xc1") + 1] = 0xC2
-    with pytest.raises(codecs.UnsupportedVariant, match="12-bit"):
-        codecs.decode_jpeg(bytes(enc))
-    with pytest.raises(ValueError):
-        codecs.encode_jpeg_12bit(np.zeros((4, 4), np.uint8))

@@ -794,3 +794,53 @@ def test_aes_core_matches_fips197():
     data = b"stream content of non-block-multiple length.."
     assert _aes_cbc_decrypt(key, _aes_cbc_encrypt(key, bytes(16), data)) == data
     assert _aes_cbc_decrypt(key, b"short") == b""  # malformed, not fatal
+
+
+def _png_filter(rows: list[bytes], tag: int, bpp: int) -> bytes:
+    """Forward PNG row filter (PNG spec §9.2), one ``tag`` for every row:
+    the encoder side of ``pdfx._png_unpredict``."""
+    out = bytearray()
+    prev = bytes(len(rows[0]))
+    for row in rows:
+        out.append(tag)
+        for i, x in enumerate(row):
+            a = row[i - bpp] if i >= bpp else 0
+            b = prev[i]
+            c = prev[i - bpp] if i >= bpp else 0
+            if tag == 0:
+                pred = 0
+            elif tag == 1:
+                pred = a
+            elif tag == 2:
+                pred = b
+            elif tag == 3:
+                pred = (a + b) // 2
+            else:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else b if pb <= pc else c
+            out.append((x - pred) & 0xFF)
+        prev = row
+    return bytes(out)
+
+
+@pytest.mark.parametrize("colors", [1, 3])
+@pytest.mark.parametrize("tag", [0, 1, 2, 3, 4])
+def test_png_unpredict_reverses_every_filter(tag, colors):
+    """``make_pdf`` only emits the Up filter, so the None/Sub/Average/Paeth
+    branches of the /DecodeParms predictor are pinned here: random rows
+    encoded with each filter tag decode back to the input exactly.  Two
+    rows in three draw from 0-3 only, which makes Paeth's tie cases
+    common: the predictor must prefer a over b over c, as the encoder
+    does."""
+    import random
+
+    from qwen_ocr_spark.functions.pdfx import _png_unpredict
+
+    rng = random.Random(tag * 10 + colors)
+    columns = 24
+    rows = [bytes(rng.randrange(256 if y % 3 == 0 else 4)
+                  for _ in range(columns * colors))
+            for y in range(12)]
+    encoded = _png_filter(rows, tag, bpp=colors)
+    assert _png_unpredict(encoded, columns, colors=colors) == b"".join(rows)

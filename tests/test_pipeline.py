@@ -343,6 +343,56 @@ def test_extract_documents_narrowed_columns_identical(spark):
         extract_documents(docs, columns=["url", "nope"])
 
 
+@pytest.mark.parametrize("figured", [False, True])
+def test_extract_documents_equals_extract_pages_over_bridge(spark, figured):
+    """The fused bridge is row-identical to synthesizing the bridge pages
+    first and running the production operator over them: every
+    ``OUT_SCHEMA`` column (both sides emit the full schema), figures and
+    error included.  The doc ids cover
+    the plain html route and the pdf route's encoding variants."""
+    import datetime as dt
+
+    from qwen_ocr_spark.operators.extract import extract_documents
+    from qwen_ocr_spark.sources.pages import (
+        EPOCH,
+        PAGES_SCHEMA,
+        _bridge_html,
+        _bridge_html_figured,
+        _bridge_pdf,
+    )
+
+    ids = list(range(1, 16)) + [35, 42, 70, 105, 154, 182, 231, 266, 322, 406]
+    docs = [(i, f"body <text> & words for doc {i} " * (1 + i % 9))
+            for i in ids]
+    pages = []
+    for doc_id, text in docs:
+        if figured:
+            payload = _bridge_html_figured(doc_id, text)
+            url = f"https://docs.example.com/fig/{doc_id}"
+        elif doc_id % 7 == 0:
+            payload = _bridge_pdf(doc_id, text)
+            url = f"https://docs.example.com/{doc_id}.pdf"
+        else:
+            payload = _bridge_html(doc_id, text)
+            url = f"https://docs.example.com/{doc_id}"
+        ts = EPOCH + dt.timedelta(seconds=doc_id)
+        pages.append((url, ts, payload, text, "en"))
+    pages_df = spark.createDataFrame(pages, schema=PAGES_SCHEMA)
+    docs_df = spark.createDataFrame(docs, schema="doc_id bigint, text string")
+
+    via_pages = extract_pages(pages_df, repartition=False)
+    fused = extract_documents(docs_df, figured=figured)
+    assert fused.schema == via_pages.schema
+    a = {r["url"]: r for r in via_pages.collect()}
+    b = {r["url"]: r for r in fused.collect()}
+    assert len(a) == len(ids)
+    assert a == b
+    kinds = {r["doc_kind"] for r in a.values()}
+    assert kinds == ({"html"} if figured else {"html", "pdf"})
+    if figured:
+        assert all(len(r["figures"]) == 1 for r in a.values())
+
+
 def test_extract_documents_empty_columns_raises(spark):
     """columns=[] would build a map node with an empty output schema;
     it is a caller error, reported as such (None means all columns)."""
