@@ -41,15 +41,17 @@ from qwen_ocr_spark.functions import htmlx, pdfx
 from qwen_ocr_spark.functions.figures import image_tokens
 from qwen_ocr_spark.functions.markdown import build_context
 
+# one figure: an element of the ``figures`` column, a row of the figures table
+FIGURE_FIELDS = ("page_number int, fig_number int, bbox array<int>, "
+                 "caption string, element_type string, img_format string, "
+                 "png binary")
 _OUT_FIELDS = [
     ("url", "string"), ("warc_ts", "timestamp"), ("doc_kind", "string"),
     ("markdown", "string"), ("extracted_text", "string"),
     ("digest", "string"), ("n_pages", "int"), ("n_headers", "int"),
     ("n_blocks_kept", "int"), ("n_blocks_dropped", "int"),
     ("image_tokens", "bigint"), ("breadcrumb", "string"),
-    ("figures", "array<struct<page_number int, fig_number int, "
-     "bbox array<int>, caption string, element_type string, "
-     "img_format string, png binary>>"),
+    ("figures", f"array<struct<{FIGURE_FIELDS}>>"),
     ("error", "string"),
 ]
 OUT_SCHEMA = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS)

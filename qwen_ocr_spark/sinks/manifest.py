@@ -33,9 +33,28 @@ leaves whole committed files, which is exactly what resume filters on).
 
 from __future__ import annotations
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
+
+from qwen_ocr_spark.operators.extract import (
+    FIGURE_FIELDS,
+    OUT_SCHEMA,
+    figures_table,
+)
+
+# Every table this module reads is one it writes, so its schema is declared
+# here, never inferred: a schema-less ``spark.read.parquet`` launches a job
+# that reads a Parquet footer before any action runs.  With a declared
+# schema the ``run_id`` partition column is also a string whatever its
+# value looks like (inference types ``run_id=20261017`` as int).
+RUN_DIR_SCHEMA = f"{OUT_SCHEMA}, partition_id int"
+OUTPUT_SCHEMA = f"{RUN_DIR_SCHEMA}, run_id string"
+MANIFEST_SCHEMA = ("partition_id int, row_count bigint, content_digest string, "
+                   "run_id string, committed_at timestamp")
+FIGURES_SCHEMA = f"url string, {FIGURE_FIELDS}, run_id string"
 
 
 def write_output(out_df: DataFrame, out_path: str, manifest_path: str,
@@ -98,7 +117,7 @@ def write_output(out_df: DataFrame, out_path: str, manifest_path: str,
 def _manifest_has_run(spark: SparkSession, manifest_path: str, run_id: str) -> bool:
     try:
         return (
-            spark.read.parquet(manifest_path)
+            spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
             .where(F.col("run_id") == run_id)
             .limit(1).count() > 0
         )
@@ -110,8 +129,11 @@ def _append_manifest_rows(spark: SparkSession, out_path: str,
                           manifest_path: str, run_id: str) -> int:
     """Aggregate manifest rows from a read-back of ONLY ``run_id``'s output
     directory and append them; returns the row count now under lineage."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils.escapePathName
     try:
-        written = spark.read.parquet(f"{out_path}/run_id={run_id}")
+        written = spark.read.schema(RUN_DIR_SCHEMA).parquet(
+            f"{out_path}/run_id={escape(run_id)}")
     except AnalysisException:
         return 0  # empty batch: the partitioned write created no run dir
     manifest_rows = (
@@ -129,11 +151,8 @@ def _append_manifest_rows(spark: SparkSession, out_path: str,
     )
     n_rows = sum(r["row_count"] for r in manifest_rows)
     if manifest_rows:
-        spark.createDataFrame(
-            manifest_rows,
-            "partition_id int, row_count bigint, content_digest string, "
-            "run_id string, committed_at timestamp",
-        ).write.mode("append").parquet(manifest_path)
+        spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA) \
+            .write.mode("append").parquet(manifest_path)
     return n_rows
 
 
@@ -146,28 +165,52 @@ def reconcile_manifest(spark: SparkSession, out_path: str,
     Batch runs mint fresh uuids, so without this the orphaned run would
     undercount manifest totals FOREVER; streaming self-heals on replay
     (same run_id, see write_output) but batch needs this startup pass.
-    Cost: one distinct over the output's run_id partition column (metadata-
-    scale, same class as the resume anti-join the north_rule itself
-    designs for) + a read-back of only the orphaned runs' directories."""
-    try:
-        run_ids = {
-            r["run_id"]
-            for r in spark.read.parquet(out_path).select("run_id").distinct().collect()
-        }
-    except AnalysisException:
+    Cost: one listing of the output's ``run_id=`` directories (no data
+    file is opened), one distinct over the tiny manifest, and a read-back
+    of only the orphaned runs' directories.  A run directory without data
+    files (nothing committed) backfills zero rows and no manifest row."""
+    run_ids = _run_dirs(spark, out_path).keys()
+    if not run_ids:
         return 0  # no output yet — nothing to reconcile
-    try:
-        have = {
-            r["run_id"]
-            for r in spark.read.parquet(manifest_path)
-                          .select("run_id").distinct().collect()
-        }
-    except AnalysisException:
-        have = set()
     return sum(
         _append_manifest_rows(spark, out_path, manifest_path, rid)
-        for rid in sorted(run_ids - have)
+        for rid in sorted(run_ids - _manifest_run_ids(spark, manifest_path))
     )
+
+
+def _manifest_run_ids(spark: SparkSession, manifest_path: str) -> set[str]:
+    """The run_ids with manifest lineage (empty before the first commit)."""
+    try:
+        return {r["run_id"] for r in
+                spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+                .select("run_id").distinct().collect()}
+    except AnalysisException:
+        return set()
+
+
+def _run_dirs(spark: SparkSession, table_path: str) -> dict:
+    """``{run_id: Hadoop FileStatus}`` of a run_id-partitioned table's
+    ``run_id=`` directories, from one ``FileSystem.listStatus`` — the
+    directory names, unescaped as Spark's partition discovery does, with no
+    data file opened.  Empty when the table does not exist yet."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(table_path)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        statuses = fs.listStatus(path)
+    except Py4JJavaError as e:
+        if is_instance_of(spark.sparkContext._gateway, e.java_exception,
+                          "java.io.FileNotFoundException"):
+            return {}
+        raise
+    unescape = jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils.unescapePathName
+    dirs = {}
+    for st in statuses:
+        name = st.getPath().getName()
+        if name.startswith("run_id=") and st.isDirectory():
+            dirs[unescape(name[len("run_id="):])] = st
+    return dirs
 
 
 def write_figures(out_df: DataFrame, figures_path: str, run_id: str) -> None:
@@ -201,7 +244,6 @@ def write_figures(out_df: DataFrame, figures_path: str, run_id: str) -> None:
     copy.  Orphaned batch directories are physical garbage only; a janitor
     can delete figure run dirs absent from the manifest once they age past
     any in-flight run."""
-    from qwen_ocr_spark.operators.extract import figures_table
     (
         figures_table(out_df)
         .withColumn("run_id", F.lit(run_id))
@@ -219,11 +261,12 @@ def read_figures(spark: SparkSession, figures_path: str,
     exactly once.  The manifest side is tiny — the semi join broadcasts
     and prunes figure partitions dynamically."""
     try:
-        figs = spark.read.parquet(figures_path)
+        figs = spark.read.schema(FIGURES_SCHEMA).parquet(figures_path)
     except AnalysisException:
         return None
     try:
-        committed = spark.read.parquet(manifest_path).select("run_id").distinct()
+        committed = (spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+                     .select("run_id").distinct())
     except AnalysisException:
         return figs.limit(0).drop("run_id")
     return (
@@ -244,35 +287,21 @@ def clean_orphan_figures(spark: SparkSession, figures_path: str,
     (orphans were already invisible to readers).  Returns the deleted
     run_ids.
 
-    Driver-side filesystem metadata work only — one listing of the
-    partition directories plus the (tiny) manifest run_id set; no data
-    scan.  Local filesystem here; a deployment would route the listing
-    and delete through the Hadoop FileSystem API (or Iceberg's own
-    expire-snapshots maintenance) with identical logic."""
-    import os
-    import shutil
+    Driver-side filesystem metadata work only — the same Hadoop
+    FileSystem listing of the partition directories ``reconcile_manifest``
+    uses, plus the (tiny) manifest run_id set; no data scan."""
     import time
 
-    try:
-        committed = {r["run_id"] for r in
-                     spark.read.parquet(manifest_path)
-                     .select("run_id").distinct().collect()}
-    except AnalysisException:
-        committed = set()
+    committed = _manifest_run_ids(spark, manifest_path)
     deleted: list[str] = []
-    if not os.path.isdir(figures_path):
-        return deleted
-    now = time.time()
-    for entry in sorted(os.listdir(figures_path)):
-        if not entry.startswith("run_id="):
-            continue
-        run_id = entry[len("run_id="):]
+    now_ms = time.time() * 1000
+    for run_id, st in sorted(_run_dirs(spark, figures_path).items()):
         if run_id in committed:
             continue
-        full = os.path.join(figures_path, entry)
-        if now - os.path.getmtime(full) < min_age_sec:
+        if now_ms - st.getModificationTime() < min_age_sec * 1000:
             continue
-        shutil.rmtree(full)
+        path = st.getPath()
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
         deleted.append(run_id)
     return deleted
 
@@ -294,7 +323,7 @@ def read_output(spark: SparkSession, out_path: str,
     url-keyed window over the table — keep the single-writer discipline
     and the cheap default in production."""
     try:
-        df = spark.read.parquet(out_path)
+        df = spark.read.schema(OUTPUT_SCHEMA).parquet(out_path)
     except AnalysisException:
         return None
     if not dedup:
@@ -307,7 +336,7 @@ def read_output(spark: SparkSession, out_path: str,
 
 def committed_urls(spark: SparkSession, out_path: str) -> DataFrame | None:
     try:
-        return spark.read.parquet(out_path).select("url")
+        return spark.read.schema(OUTPUT_SCHEMA).parquet(out_path).select("url")
     except AnalysisException:
         return None
 

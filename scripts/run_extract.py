@@ -18,8 +18,10 @@ def _manifest_total(spark, manifest_path: str) -> int:
     yet (a genuinely empty first run) — other read failures propagate."""
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
+
+    from qwen_ocr_spark.sinks.manifest import MANIFEST_SCHEMA
     try:
-        man = spark.read.parquet(manifest_path)
+        man = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     except AnalysisException:
         return 0
     return man.agg(F.sum("row_count")).collect()[0][0] or 0

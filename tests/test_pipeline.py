@@ -321,6 +321,114 @@ def test_reconcile_manifest_backfills_crash_window(spark, pages, tmp_path):
     assert reconcile_manifest(spark, str(tmp_path / "missing"), man_path) == 0
 
 
+def _count_jobs(spark, fn):
+    """(fn's result, the number of Spark jobs fn launched): a fresh job
+    group per call, counted once the listener bus has caught up."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reconcile_all_digit_run_id_backfilled_once(spark, tmp_path):
+    """Partition inference types a ``run_id=20261017`` directory as int
+    while the manifest stores the run_id as a string: the run must still
+    count as recorded (reconcile backfills nothing, however often it runs)
+    and readers see the run_id as a string."""
+    from qwen_ocr_spark.sinks.manifest import read_output, reconcile_manifest
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    pages16 = synth_pages(spark, 16, seed=5, partitions=2)
+    assert write_output(extract_pages(pages16, partitions=2),
+                        out_path, man_path, "20261017") == 16
+    assert reconcile_manifest(spark, out_path, man_path) == 0
+    assert reconcile_manifest(spark, out_path, man_path) == 0
+    man = spark.read.parquet(man_path)
+    assert man.agg(F.sum("row_count")).collect()[0][0] == 16
+    assert dict(read_output(spark, out_path).dtypes)["run_id"] == "string"
+
+
+def test_commit_path_launches_no_metadata_jobs(spark, pages, tmp_path):
+    """The commit path reads only tables it writes itself, with declared
+    schemas, and lists run directories instead of scanning them: building
+    the resume anti-join launches no job, and reconciling a consistent
+    table costs only the manifest's run_id distinct, however many runs the
+    output holds (a schema-less read is one footer-inference job)."""
+    from qwen_ocr_spark.sinks.manifest import reconcile_manifest
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    for k in range(4):
+        quarter = pages.filter(F.crc32(F.col("url")) % 4 == k)
+        write_output(extract_pages(quarter, partitions=2),
+                     out_path, man_path, f"run{k}")
+        if k in (0, 3):  # one committed run, then four
+            assert _count_jobs(
+                spark, lambda: resume_filter(pages, out_path))[1] == 0
+            backfilled, jobs = _count_jobs(
+                spark, lambda: reconcile_manifest(spark, out_path, man_path))
+            assert backfilled == 0 and jobs <= 2, (k, jobs)
+
+
+def test_declared_schemas_match_written_tables(spark, out, tmp_path):
+    """The schemas the sinks declare for reading their own tables equal, in
+    names, types and order, what Parquet inference finds in tables they
+    just wrote, so a column added to the output cannot silently drop out
+    of a read."""
+    from qwen_ocr_spark.sinks.manifest import (FIGURES_SCHEMA,
+                                               MANIFEST_SCHEMA,
+                                               OUTPUT_SCHEMA, RUN_DIR_SCHEMA,
+                                               write_figures)
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    figs_path = str(tmp_path / "figs")
+    write_figures(out, figs_path, "run1")
+    write_output(out, out_path, man_path, "run1")
+    for declared, path in [(OUTPUT_SCHEMA, out_path),
+                           (RUN_DIR_SCHEMA, f"{out_path}/run_id=run1"),
+                           (MANIFEST_SCHEMA, man_path),
+                           (FIGURES_SCHEMA, figs_path)]:
+        inferred = spark.read.parquet(path).schema
+        assert spark.read.schema(declared).parquet(path).schema.simpleString() \
+            == inferred.simpleString(), path
+
+
+def test_reconcile_lists_only_run_directories(spark, pages, tmp_path):
+    """Reconcile finds the output's runs from a directory listing: only
+    ``run_id=`` directories count (Spark's bookkeeping, hidden files and
+    stray directories do not), their names are unescaped as partition
+    discovery does, and a run directory without data files backfills no
+    manifest row."""
+    import os
+    import shutil
+    from qwen_ocr_spark.sinks.manifest import reconcile_manifest
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    half = pages.filter(F.crc32(F.col("url")) % 2 == 0)
+    rest = pages.filter(F.crc32(F.col("url")) % 2 != 0)
+    n1 = write_output(extract_pages(half, partitions=2), out_path, man_path, "runA")
+    # a run_id the partitioned write escapes on disk (run_id=run%3AB)
+    n2 = write_output(extract_pages(rest, partitions=2), out_path, man_path, "run:B")
+    assert os.path.isdir(os.path.join(out_path, "run_id=run%3AB"))
+    shutil.rmtree(man_path)  # the crash window: both runs lose lineage
+    os.makedirs(os.path.join(out_path, "_temporary", "0"))
+    open(os.path.join(out_path, "_temporary", "0", "part-0.parquet"), "w").close()
+    open(os.path.join(out_path, ".hidden"), "w").close()
+    assert os.path.exists(os.path.join(out_path, "_SUCCESS"))
+    os.makedirs(os.path.join(out_path, "not_a_run"))
+    os.makedirs(os.path.join(out_path, "run_id=ghost"))
+    assert reconcile_manifest(spark, out_path, man_path) == n1 + n2
+    per_run = {r["run_id"]: r["s"] for r in spark.read.parquet(man_path)
+               .groupBy("run_id").agg(F.sum("row_count").alias("s")).collect()}
+    assert per_run == {"runA": n1, "run:B": n2}
+    assert reconcile_manifest(spark, out_path, man_path) == 0
+
+
 def test_extract_documents_narrowed_columns_identical(spark):
     """columns= must change only which fields cross the Arrow boundary:
     the emitted rows equal the full-schema output projected to the same
