@@ -927,8 +927,9 @@ def _banded_sql(bands: int, rows: int) -> str:
 
 
 def _cos_sql(x: str, y: str) -> str:
-    """Zero-norm-safe cosine over DOUBLE[] exprs — mirrors similarity.cosine
-    term-for-term (same dot arg order, same den product order)."""
+    """Zero-norm-safe cosine over DOUBLE[] exprs — mirrors the fold of
+    similarity._cosine_e6_udf term-for-term (same dot arg order, same den
+    product order)."""
     return (f"CASE WHEN sqrt(list_dot_product({x}, {x}))"
             f" * sqrt(list_dot_product({y}, {y})) = 0 THEN NULL"
             f" ELSE list_dot_product({x}, {y})"

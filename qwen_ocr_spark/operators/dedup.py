@@ -83,10 +83,15 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
     the survivors are re-derived from a read-back of ONLY that partition
     (the write_output pattern — appending to ``digest_path`` invalidates
     any plan that anti-joins against it, so returning the pre-append
-    ``fresh`` plan would silently re-evaluate to zero rows).  Single
-    committer per digest table at a time, like the url resume anti-join."""
+    ``fresh`` plan would silently re-evaluate to zero rows).  Both reads
+    declare their schema (no footer-inference job), and the partition is
+    read at its escaped directory name, as ``sinks/manifest.py`` reads its
+    run directories.  Single committer per digest table at a time, like
+    the url resume anti-join."""
     import uuid
     from pyspark.sql.utils import AnalysisException
+
+    from qwen_ocr_spark.sinks.manifest import run_dir_path
     spark = new_df.sparkSession
     batch = new_df.withColumn(
         "text_md5", F.md5(F.col(text_col).cast("binary")))
@@ -94,7 +99,8 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
     batch = (batch.withColumn("_rn", F.row_number().over(w))
              .where(F.col("_rn") == 1).drop("_rn"))
     try:
-        seen = spark.read.parquet(digest_path).select("text_md5")
+        seen = spark.read.schema("text_md5 string, run_id string") \
+            .parquet(digest_path).select("text_md5")
         fresh = batch.join(seen, on="text_md5", how="left_anti")
     except AnalysisException:
         fresh = batch  # first batch: nothing committed yet
@@ -106,7 +112,8 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
         .write.mode("append").partitionBy("run_id").parquet(digest_path)
     )
     try:
-        mine = spark.read.parquet(f"{digest_path}/run_id={rid}")
+        mine = spark.read.schema("text_md5 string").parquet(
+            run_dir_path(spark, digest_path, rid))
     except AnalysisException:
         return batch.limit(0).drop("text_md5")  # nothing was fresh
     return batch.join(mine, on="text_md5", how="left_semi").drop("text_md5")
@@ -322,7 +329,6 @@ def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
                          n: int = SHINGLE_N, threshold: float = 0.8,
                          persist: bool = True,
                          storage: list | None = None,
-                         shingles: DataFrame | None = None,
                          doc_sets: DataFrame | None = None) -> DataFrame:
     """Exact n-gram Jaccard computed ONLY on candidate pairs — the
     production near-dup composition at corpus scale (round 5): a
@@ -345,8 +351,7 @@ def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
 
     Round-6 shape: one ``collect_set`` aggregate builds each doc's
     distinct-shingle set (so the explode needs no separate distinct
-    shuffle, and callers may pass a NON-distinct ``shingles`` relation),
-    and the verify is ``size(array_intersect)`` per candidate pair — two
+    shuffle), and the verify is ``size(array_intersect)`` per candidate pair — two
     joins that move |candidates| rows instead of re-shuffling the full
     shingle relation twice.  ``inter >= 1`` preserves the old inner-join
     semantics (zero-overlap candidates drop out even at threshold 0).
@@ -356,10 +361,7 @@ def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
     because collect aggregates are flagged non-deterministic; see
     doc_shingle_sets).  Pass ``doc_sets`` (an ``(id_col, _set)``
     relation, ideally already persisted) to share one set relation
-    across a larger composition.  ``shingles`` is accepted for backward
-    compatibility and ignored — the sets no longer need an exploded
-    relation."""
-    del shingles  # legacy parameter; sets are built from the text column
+    across a larger composition."""
     if doc_sets is not None:
         arr = doc_sets
     else:

@@ -30,7 +30,7 @@ Design notes for the 10^12-row target:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -55,6 +55,7 @@ _OUT_FIELDS = [
     ("error", "string"),
 ]
 OUT_SCHEMA = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS)
+_ALL_COLUMNS = [c for c, _ in _OUT_FIELDS]
 
 FIGURES_COLUMNS = ["url", "page_number", "fig_number", "bbox", "caption",
                    "element_type", "img_format", "png"]
@@ -112,23 +113,27 @@ def _error_record(exc: Exception) -> dict:
     }
 
 
+def _extract_rows(rows: Iterable[tuple], columns: list[str]) -> pd.DataFrame:
+    """Extract each ``(url, warc_ts, payload)`` row into a frame of the
+    named ``OUT_SCHEMA`` fields; a row whose extraction raises becomes an
+    error record (never fails the task)."""
+    cols: dict[str, list] = {c: [] for c in columns}
+    for url, ts, payload in rows:
+        try:
+            rec = _extract_one(url, bytes(payload))
+        except Exception as e:  # error channel, never fail the task
+            rec = _error_record(e)
+        rec["url"] = url
+        rec["warc_ts"] = ts
+        for c in columns:
+            cols[c].append(rec[c])
+    return pd.DataFrame(cols, columns=columns)
+
+
 def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for b in batches:
-        rows = []
-        for url, ts, payload in zip(b["url"], b["warc_ts"], b["html"]):
-            try:
-                rec = _extract_one(url, bytes(payload))
-            except Exception as e:  # error channel, never fail the task
-                rec = _error_record(e)
-            rec["url"] = url
-            rec["warc_ts"] = ts
-            rows.append(rec)
-        yield pd.DataFrame(rows, columns=[
-            "url", "warc_ts", "doc_kind", "markdown", "extracted_text",
-            "digest", "n_pages", "n_headers", "n_blocks_kept",
-            "n_blocks_dropped", "image_tokens", "breadcrumb", "figures",
-            "error",
-        ])
+        yield _extract_rows(zip(b["url"], b["warc_ts"], b["html"]),
+                            _ALL_COLUMNS)
 
 
 def extract_documents(docs_df: DataFrame, *, figured: bool = False,
@@ -179,44 +184,37 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
     # guide §2.4: don't pay an exchange the layout already provides
     if df.rdd.getNumPartitions() < n:
         df = df.repartition(n)
-    all_fields = [c for c, _ in _OUT_FIELDS]
     if columns is None:
-        out_columns = all_fields
+        out_columns = _ALL_COLUMNS
         schema = OUT_SCHEMA
     else:
         if not columns:
             raise ValueError("columns=[] selects no output column; "
                              "pass None for the full schema")
-        unknown = set(columns) - set(all_fields)
+        unknown = set(columns) - set(_ALL_COLUMNS)
         if unknown:
             raise ValueError(f"unknown output columns: {sorted(unknown)}")
         keep = set(columns)
-        out_columns = [c for c in all_fields if c in keep]
+        out_columns = [c for c in _ALL_COLUMNS if c in keep]
         schema = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS if c in keep)
+
+    def bridge_rows(b: pd.DataFrame) -> Iterator[tuple]:
+        for doc_id, text in zip(b["doc_id"], b["text"]):
+            doc_id = int(doc_id)
+            ts = EPOCH + _dt.timedelta(seconds=doc_id)
+            if figured:
+                yield (f"https://docs.example.com/fig/{doc_id}", ts,
+                       _bridge_html_figured(doc_id, text))
+            elif doc_id % pdf_every == 0:
+                yield (f"https://docs.example.com/{doc_id}.pdf", ts,
+                       _bridge_pdf(doc_id, text))
+            else:
+                yield (f"https://docs.example.com/{doc_id}", ts,
+                       _bridge_html(doc_id, text))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            cols: dict[str, list] = {c: [] for c in out_columns}
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                doc_id = int(doc_id)
-                if figured:
-                    payload = _bridge_html_figured(doc_id, text)
-                    url = f"https://docs.example.com/fig/{doc_id}"
-                elif doc_id % pdf_every == 0:
-                    payload = _bridge_pdf(doc_id, text)
-                    url = f"https://docs.example.com/{doc_id}.pdf"
-                else:
-                    payload = _bridge_html(doc_id, text)
-                    url = f"https://docs.example.com/{doc_id}"
-                try:
-                    rec = _extract_one(url, payload)
-                except Exception as e:  # error channel, never fail the task
-                    rec = _error_record(e)
-                rec["url"] = url
-                rec["warc_ts"] = EPOCH + _dt.timedelta(seconds=doc_id)
-                for c in out_columns:
-                    cols[c].append(rec[c])
-            yield pd.DataFrame(cols, columns=out_columns)
+            yield _extract_rows(bridge_rows(b), out_columns)
 
     return df.mapInPandas(gen, schema=schema)
 

@@ -1,10 +1,8 @@
 """Similarity search over an embedding column (array<float>).
 
 * ``cosine_topk``   — brute-force exact top-k: the correctness baseline.
-  Dot products via ``zip_with``/``aggregate`` higher-order functions —
-  JVM-side, no Python.  Scores are floored at 1e6 scale before ranking so
-  rank order is engine-reproducible (the DuckDB oracle uses the same
-  flooring).
+  Scores are floored at 1e6 scale before ranking so rank order is
+  engine-reproducible (the DuckDB oracle uses the same flooring).
 * ``lsh_bucketed_topk`` — the scale path: random-hyperplane (sign) LSH,
   **banded** (b bands x r planes each, candidates unioned over bands).
   Hyperplane components are derived deterministically from md5 of
@@ -15,6 +13,9 @@
 
 Near-dup detection by embedding (``embedding_near_dups``) = pairs above a
 cosine threshold among band-bucket collisions.
+
+Every consumer (the two above, ``ivf_topk`` and ``embedding_near_dups``)
+scores through one vectorized scorer, ``_cosine_e6_udf``.
 
 Banding math (why b x r, not one flat signature — VERDICT r1 item 3):
 with r planes per band there are 2^r buckets per band, so the expected
@@ -43,42 +44,23 @@ ANN_ROWS = 8       # generic neighbors sit at wide angles, so near-dup-tight
                    # percent of the corpus per query (IVF-probe analog)
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine(a, b):
-    """Zero-norm-safe cosine: NULL when either vector has zero norm
-    (ANSI mode makes a bare division throw on zero divisors; a zero vector
-    has no direction, so NULL — which every consumer filters — is correct)."""
-    den = _norm(a) * _norm(b)
-    return F.when(den == 0.0, F.lit(None)).otherwise(_dot(a, b) / den)
-
-
 def _cosine_e6_udf(dims: int = 64):
     """Vectorized pandas_udf: (vec_a, vec_b) → floor(cosine * 1e6) bigint,
     NULL when either norm is zero.
 
-    Bit-identical to ``_unrolled_cosine_e6`` / the DuckDB oracles' literal
-    folds: the numpy accumulation adds one ``a_d * b_d`` term at a time,
-    left to right, starting from 0.0 — the same IEEE float64 operation
-    sequence per row — and absent elements (a short array) contribute
-    exact ``+ 0.0`` terms.  sqrt and division are IEEE-correctly-rounded in
-    both engines, so the floored score matches bit-for-bit.
+    Bit-identical to the DuckDB oracles' ``list_dot_product`` folds: the
+    numpy accumulation adds one ``a_d * b_d`` term at a time, left to
+    right, starting from 0.0 — the same IEEE float64 operation sequence
+    per row — and absent elements (a short array) contribute exact
+    ``+ 0.0`` terms.  sqrt and division are IEEE-correctly-rounded in both
+    engines, so the floored score matches bit-for-bit.
 
     Non-finite input raises ``ValueError`` instead of being scored: a NaN
     or ±Inf element has no meaningful cosine, and zeroing or clamping it
     would rank a corrupt vector among real neighbours.  A NULL element
     arrives from Arrow as NaN, indistinguishable from a NaN payload, so it
-    raises too; a NULL vector still scores NULL.
+    raises too; a NULL vector still scores NULL.  A vector longer than
+    ``dims`` raises ``ValueError`` rather than being scored on a prefix.
 
     WHY a Python UDF replaced whole-stage-codegen'd SQL (round 6, late):
     the unrolled form needs 2 x 64 pre-extracted element columns plus a
@@ -89,8 +71,7 @@ def _cosine_e6_udf(dims: int = 64):
     count() 0.56 s at sf0.001 vs 0.04 s executing the same physical plan
     without replanning).  The array-in/score-out UDF keeps the logical
     plan a handful of nodes; execution cost is equal-or-better (numpy
-    column folds).  Deterministic by default, so persisted consumers stay
-    cache-reusable under joins (the banded_buckets finding)."""
+    column folds)."""
     import pandas as pd
 
     @F.pandas_udf("long")
@@ -104,7 +85,10 @@ def _cosine_e6_udf(dims: int = 64):
             for i, v in enumerate(col):
                 if v is None:
                     continue
-                a = np.asarray(v, dtype=np.float64)[:dims]
+                a = np.asarray(v, dtype=np.float64)
+                if a.size > dims:
+                    raise ValueError(f"a {a.size}-element embedding in a "
+                                     f"cosine input exceeds dims={dims}")
                 M[i, : a.size] = a
         bad = int((~np.isfinite(A)).sum() + (~np.isfinite(B)).sum())
         if bad:
@@ -128,10 +112,9 @@ def _cosine_e6_udf(dims: int = 64):
     # asNondeterministic: the ``score_e6 IS NOT NULL`` consumer filter
     # otherwise gets pushed below the projection with the UDF COPIED under
     # it — two ArrowEvalPython nodes, every row scored twice (guide §4.4;
-    # verified in this plan).  The scored relation is never persisted or
-    # joined downstream (it feeds a window directly in every consumer), so
-    # the cache-reuse concern that keeps banded_buckets deterministic does
-    # not apply; revisit if a consumer ever caches the scored relation.
+    # verified in this plan).  ivf_topk persists its scored assignment
+    # anyway: both of its consumers derive from that one DataFrame, so the
+    # cache lookup still matches and each reads the InMemoryTableScan.
     return score.asNondeterministic()
 
 
@@ -144,12 +127,8 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     is floor(cosine * 1e6) so value-hash comparison against the SQL oracle
     is exact.
 
-    Round 6 (final form): scores come from the vectorized
-    ``_cosine_e6_udf`` (bit-identical fold; see its docstring for why the
-    codegen'd unrolled expression lost — per-action DRIVER replanning of
-    the 128-extracted-column tree dominated the recorded time).  The
-    broadcast crossJoin carries the two embedding ARRAYS instead of 128
-    scalar columns."""
+    Scores come from ``_cosine_e6_udf``; the broadcast crossJoin carries
+    the two embedding arrays."""
     q = emb.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     nb = emb.select(
@@ -294,27 +273,6 @@ def lsh_candidate_pairs(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
-def _unrolled_cosine_e6(a_pref: str, b_pref: str, dims: int):
-    """floor(cosine * 1e6) over pre-extracted scalar element columns
-    ``{a_pref}{d}`` / ``{b_pref}{d}`` as ONE SQL expression.
-
-    Unrolled left-to-right product-sums reproduce the sequential float fold
-    of ``cosine`` (and DuckDB's ``list_dot_product``) bit-for-bit while
-    staying inside whole-stage codegen — the interpreted higher-order
-    version costs ~0.3 ms per candidate pair.  Zero-norm guarded (ANSI
-    division throws on /0): NULL, as in ``cosine``."""
-    dot = "CAST(0.0 AS DOUBLE) + " + " + ".join(
-        f"{a_pref}{d} * {b_pref}{d}" for d in range(dims))
-    na = "SQRT(CAST(0.0 AS DOUBLE) + " + " + ".join(
-        f"{a_pref}{d} * {a_pref}{d}" for d in range(dims)) + ")"
-    nb = "SQRT(CAST(0.0 AS DOUBLE) + " + " + ".join(
-        f"{b_pref}{d} * {b_pref}{d}" for d in range(dims)) + ")"
-    return F.expr(
-        f"CASE WHEN ({na}) * ({nb}) = 0.0 THEN NULL "
-        f"ELSE CAST(FLOOR((({dot}) / (({na}) * ({nb}))) * 1e6) AS BIGINT) END"
-    )
-
-
 def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       bands: int = ANN_BANDS, rows: int = ANN_ROWS,
@@ -330,9 +288,8 @@ def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     corpus signature is computed once, as a real ANN index would be — the
     candidate distinct shuffles bare int pairs (round 2 carried two
     64-double arrays per row through that exchange), and the exact re-rank
-    joins the small pair set back to pre-extracted element columns scored
-    by an unrolled codegen'd product-sum instead of an interpreted array
-    fold."""
+    joins the small pair set back to the embedding arrays and scores them
+    with ``_cosine_e6_udf``."""
     keys = banded_buckets(emb, id_col, vec_col, bands, rows, dims,
                           persist=persist, storage=storage)
     qk = keys.where(F.col(id_col).isin(query_ids)).select(
@@ -343,13 +300,6 @@ def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
         .select("query_id", F.col(id_col).alias("neighbor_id"))
         .distinct()  # union over bands — int pairs only, no payload
     )
-    # re-rank via the vectorized array-in/score-out UDF (round 6, final):
-    # the earlier unrolled-codegen form pre-extracted 2 x 64 element
-    # columns before the joins (extracting AFTER the join triggered a
-    # CollapseProject re-canonicalization hang on the inlined tree), and
-    # that 128-column, ~200-term logical plan cost ~0.4 s of per-action
-    # DRIVER replanning under the frozen bench's count() protocol — see
-    # _cosine_e6_udf.  The joins now carry the embedding arrays.
     nb = emb.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv"))
     qb = emb.where(F.col(id_col).isin(query_ids)).select(
@@ -407,25 +357,15 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     a query then scans ~ nprobe/n_cells of the corpus.  Scale n_cells ~
     sqrt(N) and the probed fraction shrinks as the corpus grows — the
     standard IVF trade.  Ties (equal scores) break on cell id, so
-    assignment is total and engine-reproducible.  All scoring runs through
-    the unrolled codegen'd product-sum (bit-identical to the sequential
-    fold the oracle computes), not interpreted array lambdas."""
-    cent = F.broadcast(
-        ivf_centroids(emb, n_cells, id_col, vec_col).select(
-            "cell_id",
-            *[F.coalesce(F.get(F.col("cvec"), d), F.lit(0.0)).alias(f"_c{d}")
-              for d in range(dims)])
-    )
-    base = emb.select(
-        F.col(id_col),
-        *[F.coalesce(F.get(F.col(vec_col), d), F.lit(0.0)).alias(f"_v{d}")
-          for d in range(dims)])
+    assignment is total and engine-reproducible.  Both the assignment and
+    the re-rank score through ``_cosine_e6_udf``."""
+    score = _cosine_e6_udf(dims)
+    cent = F.broadcast(ivf_centroids(emb, n_cells, id_col, vec_col))
     scored = (
-        base.crossJoin(cent)
-        .select(
-            id_col, "cell_id", *[f"_v{d}" for d in range(dims)],
-            _unrolled_cosine_e6("_v", "_c", dims).alias("cscore_e6"),
-        )
+        emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
+        .crossJoin(cent)
+        .select(id_col, "cell_id", "_v",
+                score(F.col("_v"), F.col("cvec")).alias("cscore_e6"))
         .where(F.col("cscore_e6").isNotNull())
     )
     w_assign = Window.partitionBy(id_col).orderBy(
@@ -438,17 +378,15 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
         # the IVF index once" step a production ANN system persists
         ranked = track_cached(ranked.persist(), storage)
     assign = ranked.where(F.col("crank") == 1).select(
-        F.col(id_col).alias("neighbor_id"), "cell_id",
-        *[F.col(f"_v{d}").alias(f"_n{d}") for d in range(dims)])
+        F.col(id_col).alias("neighbor_id"), "cell_id", F.col("_v").alias("_nv"))
     qcells = ranked.where(F.col(id_col).isin(query_ids)
                           & (F.col("crank") <= nprobe)).select(
-        F.col(id_col).alias("query_id"), "cell_id",
-        *[F.col(f"_v{d}").alias(f"_q{d}") for d in range(dims)])
+        F.col(id_col).alias("query_id"), "cell_id", F.col("_v").alias("_qv"))
     joined = (
         F.broadcast(qcells).join(assign, on="cell_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id",
-                _unrolled_cosine_e6("_q", "_n", dims).alias("score_e6"))
+                score(F.col("_qv"), F.col("_nv")).alias("score_e6"))
         .where(F.col("score_e6").isNotNull())
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score_e6"),
@@ -471,18 +409,13 @@ def embedding_near_dups(emb: DataFrame, threshold_e6: int = 999_000,
     are candidates with ~0.93 probability at the defaults (module math)."""
     pairs = lsh_candidate_pairs(emb, id_col, vec_col, bands, rows, dims,
                                 persist=persist, storage=storage)
-    # the verify keeps the interpreted array-fold cosine ON PURPOSE
-    # (round-6 A/B): candidates here are a few thousand pairs, so the
-    # ~0.3 ms/pair interpreted fold is noise, while pre-extracting 2x64
-    # element columns for every corpus row (the cosine_topk trick, right
-    # when every row is scored) measured 0.96 s -> 1.21 s end-to-end
     va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
         pairs.join(va, "id_a").join(vb, "id_b")
         .select(
             "id_a", "id_b",
-            F.floor(cosine(F.col("va"), F.col("vb")) * 1e6).cast("bigint").alias("score_e6"),
+            _cosine_e6_udf(dims)(F.col("va"), F.col("vb")).alias("score_e6"),
         )
-        .where(F.col("score_e6").isNotNull() & (F.col("score_e6") >= threshold_e6))
+        .where(F.col("score_e6") >= threshold_e6)
     )

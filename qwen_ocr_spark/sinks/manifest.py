@@ -129,11 +129,9 @@ def _append_manifest_rows(spark: SparkSession, out_path: str,
                           manifest_path: str, run_id: str) -> int:
     """Aggregate manifest rows from a read-back of ONLY ``run_id``'s output
     directory and append them; returns the row count now under lineage."""
-    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
-        .ExternalCatalogUtils.escapePathName
     try:
         written = spark.read.schema(RUN_DIR_SCHEMA).parquet(
-            f"{out_path}/run_id={escape(run_id)}")
+            run_dir_path(spark, out_path, run_id))
     except AnalysisException:
         return 0  # empty batch: the partitioned write created no run dir
     manifest_rows = (
@@ -186,6 +184,15 @@ def _manifest_run_ids(spark: SparkSession, manifest_path: str) -> set[str]:
                 .select("run_id").distinct().collect()}
     except AnalysisException:
         return set()
+
+
+def run_dir_path(spark: SparkSession, table_path: str, run_id: str) -> str:
+    """The directory ``partitionBy("run_id")`` writes ``run_id``'s rows to:
+    the value escaped as Spark escapes partition values
+    (``run:A`` -> ``run_id=run%3AA``)."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils.escapePathName
+    return f"{table_path}/run_id={escape(run_id)}"
 
 
 def _run_dirs(spark: SparkSession, table_path: str) -> dict:

@@ -283,31 +283,68 @@ def test_cosine_topk_exact(emb):
     assert all(r["score_e6"] <= 1_000_000 for r in res)
 
 
-@pytest.mark.parametrize("value", [float("nan"), float("inf")])
+# every consumer of the one cosine scorer, each built so the bad vector
+# (ids 500 and 501, identical, so LSH always pairs them) is scored
+_SCORER_CONSUMERS = {
+    "cosine_topk": lambda e: similarity.cosine_topk(e, [500], k=3),
+    "lsh_bucketed_topk": lambda e: similarity.lsh_bucketed_topk(
+        e, [500], k=3, persist=False),
+    "ivf_topk": lambda e: similarity.ivf_topk(
+        e, [500], k=3, n_cells=8, dims=16, persist=False),
+    "embedding_near_dups": lambda e: similarity.embedding_near_dups(
+        e, persist=False),
+}
+
+
+@pytest.mark.parametrize("value", [float("nan"), float("inf"),
+                                   float("-inf"), None],
+                         ids=["nan", "inf", "-inf", "null"])
 def test_cosine_scorer_rejects_non_finite(spark, emb, value):
     """One corrupt embedding fails the query loudly instead of being
-    zeroed (NaN) or clamped (±Inf) into a plausible-looking score."""
+    zeroed (NaN, NULL) or clamped (±Inf) into a plausible-looking score,
+    in every consumer of the scorer."""
     from pyspark.errors import PythonException
 
     bad = spark.createDataFrame(pd.DataFrame(
-        [(500, [value] + [0.5] * 15)], columns=["vec_id", "embedding"]))
-    with pytest.raises(PythonException, match="non-finite embedding"):
-        similarity.cosine_topk(emb.unionByName(bad), [1], k=3).collect()
+        [(i, [value] + [0.5] * 15) for i in (500, 501)],
+        columns=["vec_id", "embedding"]), "vec_id long, embedding array<double>")
+    for name, query in _SCORER_CONSUMERS.items():
+        with pytest.raises(PythonException, match="non-finite embedding"):
+            query(emb.unionByName(bad)).collect()
+            pytest.fail(f"{name} scored a non-finite embedding")
 
 
-def _scorer_nodes(df) -> int:
+def test_cosine_scorer_rejects_over_long_vector(spark, emb):
+    """A vector longer than ``dims`` fails instead of being scored on its
+    first ``dims`` elements."""
+    from pyspark.errors import PythonException
+
+    long_vec = spark.createDataFrame(pd.DataFrame(
+        [(500, [0.5] * 17)], columns=["vec_id", "embedding"]))
+    with pytest.raises(PythonException, match="17-element embedding"):
+        similarity.cosine_topk(emb.unionByName(long_vec), [1], k=3,
+                               dims=16).collect()
+
+
+def _scorer_nodes(df, args: str = "") -> int:
     return df._jdf.queryExecution().executedPlan().toString().count(
-        "ArrowEvalPython [score(")
+        f"ArrowEvalPython [score({args}")
 
 
 def test_ann_scorer_runs_once_per_row(emb):
-    """The ``score_e6 IS NOT NULL`` filter over the cosine scorer must not
-    be pushed below it with a copy of the UDF (two ArrowEvalPython nodes,
-    every row scored twice).  ``asNondeterministic()`` on the scorer is
-    what prevents that; dropping it fails this test."""
+    """The ``score_e6`` filter over the cosine scorer must not be pushed
+    below it with a copy of the UDF (two ArrowEvalPython nodes, every row
+    scored twice).  ``asNondeterministic()`` on the scorer is what
+    prevents that; dropping it fails this test."""
     assert _scorer_nodes(similarity.cosine_topk(emb, [1, 2], k=3)) == 1
     assert _scorer_nodes(similarity.lsh_bucketed_topk(
         emb, [1, 2], k=3, persist=False)) == 1
+    assert _scorer_nodes(similarity.embedding_near_dups(
+        emb, persist=False)) == 1
+    # IVF's re-rank; its centroid assignment sits under the cached index,
+    # which the plan string prints once per scan of it
+    assert _scorer_nodes(similarity.ivf_topk(
+        emb, [1, 2], k=3, n_cells=8, dims=16), "_qv") == 1
 
 
 def test_lsh_topk_recall_on_near_dups(emb):
@@ -502,6 +539,23 @@ def test_incremental_dedup_across_runs(spark, tmp_path):
         [(20, "unique text three")], columns=["doc_id", "text"]))
     assert dedup.incremental_dedup(b3, digest_path, commit=False).count() == 1
     assert dedup.incremental_dedup(b3, digest_path, commit=False).count() == 1
+
+
+def test_incremental_dedup_escaped_run_id(spark, tmp_path):
+    """A run_id that Spark escapes in its partition directory name
+    (``run:A`` is written as ``run_id=run%3AA``) still returns the batch's
+    survivors, so its texts are not recorded as seen and then lost."""
+    digest_path = str(tmp_path / "digests")
+    b1 = spark.createDataFrame(pd.DataFrame(
+        [(1, "alpha text"), (2, "beta text")], columns=["doc_id", "text"]))
+    got = {r["doc_id"] for r in
+           dedup.incremental_dedup(b1, digest_path, run_id="run:A").collect()}
+    assert got == {1, 2}
+    b2 = spark.createDataFrame(pd.DataFrame(
+        [(3, "alpha text"), (4, "gamma text")], columns=["doc_id", "text"]))
+    got = {r["doc_id"] for r in
+           dedup.incremental_dedup(b2, digest_path, run_id="run/B").collect()}
+    assert got == {4}
 
 
 def test_ngram_jaccard_storage_handle(spark):

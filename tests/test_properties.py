@@ -87,43 +87,3 @@ def test_extract_html_total_and_deterministic(payload):
     assert a.markdown == b.markdown
     assert a.extracted_text == b.extracted_text
     assert "\n\n\n" not in a.markdown
-
-
-# --- codec roundtrips hold for ALL images/signals, not just fixtures -----
-
-import numpy as np
-from hypothesis.extra.numpy import arrays
-
-from qwen_ocr_spark.functions import codecs
-
-_gray = arrays(np.uint8, st.tuples(st.integers(1, 24), st.integers(1, 24)))
-_rgb = arrays(np.uint8, st.tuples(st.integers(1, 16), st.integers(1, 16),
-                                  st.just(3)))
-
-
-@given(_gray)
-@settings(max_examples=60, deadline=None)
-def test_png_gray_roundtrip_property(img):
-    assert np.array_equal(codecs.decode_png(codecs.encode_png(img)), img)
-
-
-@given(_rgb)
-@settings(max_examples=40, deadline=None)
-def test_png_rgb_and_bmp_roundtrip_property(img):
-    assert np.array_equal(codecs.decode_png(codecs.encode_png(img)), img)
-    assert np.array_equal(codecs.decode_bmp(codecs.encode_bmp(img)), img)
-
-
-@given(_gray)
-@settings(max_examples=60, deadline=None)
-def test_pgm_roundtrip_property(img):
-    assert np.array_equal(codecs.decode_pgm(codecs.encode_pgm(img)), img)
-
-
-@given(arrays(np.int16, st.integers(1, 500)),
-       st.sampled_from([8000, 16000, 44100]))
-@settings(max_examples=40, deadline=None)
-def test_wav_roundtrip_property(samples, rate):
-    out, got_rate = codecs.decode_wav(codecs.encode_wav(samples, rate))
-    assert got_rate == rate
-    assert np.array_equal(out[:, 0], samples.astype(np.int32))
