@@ -511,18 +511,7 @@ def q_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12 documents; the all-pairs ngram_jaccard query above is the
     exact bounded-relation baseline (and showed the expected quadratic
     df-densification regime at the sf1 scale check)."""
-    from qwen_ocr_spark.plans.session import track_cached
-    docs = _docs2(spark, sf_dir)
-    # deterministic-only persisted intermediates (round 6): min()-slot
-    # signatures for the band self-join, expression-built per-doc sets
-    # for the verify — collect_set is flagged non-deterministic and a
-    # cached plan containing it is re-run by every join consumer
-    sigs = track_cached(dedup.minhash_signatures(
-        dedup.word_shingles(docs, distinct=False)).persist())
-    cands = dedup.lsh_candidate_pairs(sigs)
-    sets = track_cached(dedup.doc_shingle_sets(docs).persist())
-    return dedup.jaccard_verify_pairs(docs, cands, threshold=0.8,
-                                      doc_sets=sets)
+    return dedup.lsh_jaccard_pairs(_docs2(spark, sf_dir), threshold=0.8)
 
 
 def q_dedup_groups_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:

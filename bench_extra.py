@@ -15,15 +15,23 @@ Usage::
 ``noop`` times a full-materialization noop write instead of count()
 (count() is what bench.py measures; noop shows whether column pruning
 was hiding work).
-``plan`` writes ``<out_dir>/<query>_<suffix>.txt`` per query.
+``plan`` writes ``<out_dir>/<query>_<suffix>.txt`` per query, with every
+expression id and exchange plan id stripped of its number
+(``doc_id#123L`` -> ``doc_id#``, ``[plan_id=4351]`` -> ``[plan_id=]``):
+both are session-wide counters that depend on what the session planned
+and ran before, so two trees' plans of the same query can be compared
+with a plain ``diff``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
+
+_SESSION_IDS = re.compile(r"(#|plan_id=)\d+L?")
 
 
 def _get(queries, name):
@@ -48,8 +56,8 @@ def main() -> None:
             df = _get(queries, name)(spark, sf_dir)
             path = os.path.join(out_dir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
+                f.write(_SESSION_IDS.sub(r"\1", df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")))
             print(f"wrote {path}")
             spark.catalog.clearCache()
         spark.stop()

@@ -1053,59 +1053,6 @@ def _aes_expand_key(key: bytes) -> list[list[int]]:
             for r in range(11)]
 
 
-def _aes_block(block: bytes, rk: list[list[int]], decrypt: bool) -> bytes:
-    """One 16-byte AES-128 block (FIPS-197 cipher / inverse cipher).
-    State is column-major: state[r][c] = input[4c + r]."""
-    s = [[block[4 * c + r] for c in range(4)] for r in range(4)]
-
-    def add_rk(k):
-        for c in range(4):
-            for r in range(4):
-                s[r][c] ^= rk[k][4 * c + r]
-
-    def sub(box):
-        for r in range(4):
-            for c in range(4):
-                s[r][c] = box[s[r][c]]
-
-    def shift(inv):
-        for r in range(1, 4):
-            off = -r if inv else r
-            s[r] = s[r][off:] + s[r][:off]
-
-    def mix(inv):
-        m = ((0x0E, 0x0B, 0x0D, 0x09) if inv else (2, 3, 1, 1))
-        for c in range(4):
-            col = [s[r][c] for r in range(4)]
-            for r in range(4):
-                s[r][c] = (_gmul(col[0], m[(0 - r) % 4])
-                           ^ _gmul(col[1], m[(1 - r) % 4])
-                           ^ _gmul(col[2], m[(2 - r) % 4])
-                           ^ _gmul(col[3], m[(3 - r) % 4]))
-
-    if not decrypt:
-        add_rk(0)
-        for rnd in range(1, 10):
-            sub(_AES_SBOX)
-            shift(False)
-            mix(False)
-            add_rk(rnd)
-        sub(_AES_SBOX)
-        shift(False)
-        add_rk(10)
-    else:
-        add_rk(10)
-        for rnd in range(9, 0, -1):
-            shift(True)
-            sub(_AES_INV_SBOX)
-            add_rk(rnd)
-            mix(True)
-        shift(True)
-        sub(_AES_INV_SBOX)
-        add_rk(0)
-    return bytes(s[r][c] for c in range(4) for r in range(4))
-
-
 def _aes_fast_tables():
     """Lookup tables for the fast paths: GF mul tables for the vectorized
     inverse cipher, and 32-bit encryption T-tables (the classic software

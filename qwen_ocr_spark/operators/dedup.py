@@ -25,6 +25,13 @@ Scale-first shapes (the 100 TB rationale, per operator):
                shingle sets on both sides (sizes and intersections), so
                the DuckDB oracle mirrors it exactly.
 
+Input schema: every operator reads a document relation with columns
+``doc_id`` (bigint) and ``text`` (string); pair relations are ``(id_a,
+id_b, ...)`` with ``id_a < id_b``, which is also what
+``connected_components`` reads.  Every relation an operator persists is
+registered with ``plans.session.track_cached`` and released by
+``release_cached()``.
+
 Everything is built-in-function SQL (md5/least/greatest/window) — no Python
 UDFs — and every operator has an exact DuckDB oracle in __spark_entry__.py
 because md5 is engine-independent.
@@ -35,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from qwen_ocr_spark.operators.similarity import band_pairs, cache_by_band_key
 from qwen_ocr_spark.plans.session import track_cached
 
 MINHASH_SLOTS = 8
@@ -57,17 +65,16 @@ _BITMAP_WORDS = 4     # 4 x 64 = 256-bit hashed doc bitmaps (jaccard
                       # correctness.
 
 
-def exact_dups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dups(df: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one representative (min id) per distinct text."""
     return (
-        df.select(F.md5(F.col(text_col).cast("binary")).alias("text_md5"), F.col(id_col))
+        df.select(F.md5(F.col("text").cast("binary")).alias("text_md5"), F.col("doc_id"))
           .groupBy("text_md5")
-          .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
+          .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
     )
 
 
 def incremental_dedup(new_df: DataFrame, digest_path: str,
-                      id_col: str = "doc_id", text_col: str = "text",
                       commit: bool = True, run_id: str | None = None) -> DataFrame:
     """Cross-run exact dedup: drop rows whose text digest is already in the
     committed digest table, then (``commit=True``) append the survivors'
@@ -94,8 +101,8 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
     from qwen_ocr_spark.sinks.manifest import run_dir_path
     spark = new_df.sparkSession
     batch = new_df.withColumn(
-        "text_md5", F.md5(F.col(text_col).cast("binary")))
-    w = Window.partitionBy("text_md5").orderBy(F.asc(id_col))
+        "text_md5", F.md5(F.col("text").cast("binary")))
+    w = Window.partitionBy("text_md5").orderBy(F.asc("doc_id"))
     batch = (batch.withColumn("_rn", F.row_number().over(w))
              .where(F.col("_rn") == 1).drop("_rn"))
     try:
@@ -119,8 +126,8 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
     return batch.join(mine, on="text_md5", how="left_semi").drop("text_md5")
 
 
-def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                  n: int = SHINGLE_N, distinct: bool = True) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = SHINGLE_N,
+                  distinct: bool = True) -> DataFrame:
     """Word n-gram shingles per document (one vectorized Python pass).
 
     ``distinct=True`` (the default) dedups (doc, shingle) — required by
@@ -141,8 +148,8 @@ def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     (Java's default), trailing empty tokens survive (Spark split keeps
     them at limit -1), and NULL text yields a NULL array."""
     return df.select(
-        F.col(id_col),
-        F.explode(_shingle_array_udf(n, distinct)(F.col(text_col))).alias("shingle"),
+        F.col("doc_id"),
+        F.explode(_shingle_array_udf(n, distinct)(F.col("text"))).alias("shingle"),
     )
 
 
@@ -175,9 +182,8 @@ def _shingle_array_udf(n: int = SHINGLE_N, distinct: bool = False):
     return shingle
 
 
-def doc_shingle_sets(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", n: int = SHINGLE_N) -> DataFrame:
-    """Per-document distinct-shingle ARRAY — ``(id_col, _set)`` — built
+def doc_shingle_sets(df: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """Per-document distinct-shingle ARRAY — ``(doc_id, _set)`` — built
     entirely from deterministic row-local expressions (split → transform →
     array_distinct): no explode, no shuffle, no aggregate.
 
@@ -191,11 +197,11 @@ def doc_shingle_sets(df: DataFrame, id_col: str = "doc_id",
     action, despite 32/32 cached partitions).  An expression-only set
     relation caches and reuses cleanly."""
     return df.select(
-        F.col(id_col),
-        _shingle_array_udf(n, distinct=True)(F.col(text_col)).alias("_set"))
+        F.col("doc_id"),
+        _shingle_array_udf(n, distinct=True)(F.col("text")).alias("_set"))
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id",
+def minhash_signatures(shingles: DataFrame,
                        slots: int = MINHASH_SLOTS) -> DataFrame:
     """k-slot MinHash: slot_i = min(md5(i || '|' || shingle)) per document.
 
@@ -205,22 +211,18 @@ def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id",
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")).cast("binary"))).alias(f"mh{i}")
         for i in range(slots)
     ]
-    return shingles.groupBy(id_col).agg(*aggs)
+    return shingles.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
-                        slots: int = MINHASH_SLOTS,
-                        bands: int = MINHASH_BANDS,
-                        persist: bool = True,
-                        storage: list | None = None) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, slots: int = MINHASH_SLOTS,
+                        bands: int = MINHASH_BANDS) -> DataFrame:
     """Band the signature, self-join per band, emit distinct (a < b) pairs.
 
-    The stacked (id, band_key) relation feeds BOTH sides of the self-join;
-    ``persist=True`` caches it (``bands`` rows per document — tiny next to
-    the text) so the upstream scan → shingle explode → min-agg runs once
-    instead of twice — the same one-relation-both-sides shape the banded
-    ANN join uses (similarity.banded_buckets).  Pass a list as ``storage``
-    to receive the persisted intermediate for explicit ``unpersist()``.
+    The stacked (doc_id, band_key) relation feeds BOTH sides of the
+    self-join, so it is cached (``bands`` rows per document — tiny next to
+    the text) and the upstream scan → shingle explode → min-agg runs once
+    instead of twice — the same relation and join the banded ANN uses
+    (``similarity.cache_by_band_key`` / ``band_pairs``).
 
     Band keys are BINARY — one band-index byte plus ``unhex`` of each
     md5-hex slot (fixed 1+16n bytes) — instead of the round-5 pipe-joined
@@ -235,35 +237,12 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
         parts = [F.unhex(F.col(f"mh{i}"))
                  for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
         band_cols.append(F.concat(F.lit(bytes([b])), *parts).alias(f"band{b}"))
-    banded = sigs.select(F.col(id_col), *band_cols)
+    banded = sigs.select(F.col("doc_id"), *band_cols)
     stacked = banded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias("band_key"),
     )
-    if persist:
-        # Round 6: persist the relation ALREADY hash-partitioned by the
-        # join key.  An InMemoryTableScan reports the cached plan's output
-        # partitioning, so both SMJ sides of the self-join read
-        # co-partitioned cache and the join plans ZERO exchanges (guide
-        # §2.4 — the in-session analog of a bucketed table; also two fewer
-        # AQE stage rounds per action).  The one repartition happens at
-        # cache build.  Trade-off, documented: a cached side has no
-        # exchange for AQE skew-splitting to rewrite — bounded band-bucket
-        # multiplicity is already this operator's own contract (banding
-        # math in similarity.py).
-        stacked = track_cached(
-            stacked.repartition("band_key").persist(), storage)
-    left = stacked.alias("l")
-    right = stacked.alias("r")
-    return (
-        left.join(right, on="band_key")
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    return band_pairs(cache_by_band_key(stacked))
 
 
 def _cc_star(e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
@@ -324,15 +303,10 @@ def _cc_star(e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
     return labels, converged
 
 
-def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         n: int = SHINGLE_N, threshold: float = 0.8,
-                         persist: bool = True,
-                         storage: list | None = None,
-                         doc_sets: DataFrame | None = None) -> DataFrame:
-    """Exact n-gram Jaccard computed ONLY on candidate pairs — the
-    production near-dup composition at corpus scale (round 5): a
-    sub-quadratic candidate generator (MinHash-LSH / SimHash) proposes
+def lsh_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Exact n-gram Jaccard computed ONLY on MinHash-LSH candidate pairs —
+    the production near-dup composition at corpus scale (round 5): the
+    sub-quadratic candidate generator (``lsh_candidate_pairs``) proposes
     (id_a, id_b) pairs and the exact measure verifies them.
 
     Cost: two equi-joins + one pair-key aggregate — linear in
@@ -343,33 +317,30 @@ def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
     runtime for 10x rows on the synthetic corpus at sf1 — the round-5
     scale check; BENCH/BASELINE.md).  At 10^12 documents only this
     verified-candidates shape survives; the all-pairs operator remains
-    the exact baseline for bounded relations.
+    the exact baseline for bounded relations.  Jaccard here is UNCAPPED
+    (no df cap: LSH already bounds the join) and the pair set is subject
+    to MinHash-LSH candidate recall.
 
     Candidates with zero shared shingles simply drop out (they cannot
     reach any positive threshold).  Output: (id_a, id_b, jaccard_e4) for
     pairs at/above threshold — same contract as ngram_jaccard_pairs.
 
-    Round-6 shape: one ``collect_set`` aggregate builds each doc's
-    distinct-shingle set (so the explode needs no separate distinct
-    shuffle), and the verify is ``size(array_intersect)`` per candidate pair — two
-    joins that move |candidates| rows instead of re-shuffling the full
-    shingle relation twice.  ``inter >= 1`` preserves the old inner-join
-    semantics (zero-overlap candidates drop out even at threshold 0).
-    The per-doc sets come from :func:`doc_shingle_sets` — row-local
-    deterministic expressions, NO collect_set aggregate (round 6: a
+    Two deterministic-only relations are cached (round 6): the MinHash
+    signature aggregate (min() slots) feeding the band self-join, and the
+    per-doc distinct-shingle sets from :func:`doc_shingle_sets` feeding
+    both verify joins — row-local expressions, NO collect_set aggregate (a
     persisted collect_set plan is silently re-run by every join consumer
-    because collect aggregates are flagged non-deterministic; see
-    doc_shingle_sets).  Pass ``doc_sets`` (an ``(id_col, _set)``
-    relation, ideally already persisted) to share one set relation
-    across a larger composition."""
-    if doc_sets is not None:
-        arr = doc_sets
-    else:
-        arr = doc_shingle_sets(df, id_col, text_col, n)
-        if persist:
-            arr = track_cached(arr.persist(), storage)
-    aa = arr.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_seta"))
-    ab = arr.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_setb"))
+    because collect aggregates are flagged non-deterministic).  The verify
+    is ``size(array_intersect)`` per candidate pair — two joins that move
+    |candidates| rows instead of re-shuffling the full shingle relation
+    twice.  ``inter >= 1`` preserves the old inner-join semantics
+    (zero-overlap candidates drop out even at threshold 0)."""
+    sigs = track_cached(minhash_signatures(
+        word_shingles(df, distinct=False)).persist())
+    pairs = lsh_candidate_pairs(sigs)
+    arr = track_cached(doc_shingle_sets(df).persist())
+    aa = arr.select(F.col("doc_id").alias("id_a"), F.col("_set").alias("_seta"))
+    ab = arr.select(F.col("doc_id").alias("id_b"), F.col("_set").alias("_setb"))
     # broadcast the CANDIDATE side and stream the per-doc set relation:
     # candidates are the small relation by construction (that is the point
     # of LSH), and the set relation carries the wide arrays — joining the
@@ -398,8 +369,7 @@ def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
     )
 
 
-def connected_components(pairs: DataFrame, a_col: str = "id_a",
-                         b_col: str = "id_b", max_iter: int = 25,
+def connected_components(pairs: DataFrame, max_iter: int = 25,
                          algorithm: str = "label") -> DataFrame:
     """Duplicate-group clustering: connected components over a near-dup
     pair relation → ``(node, group_id)`` with group_id = the component's
@@ -437,10 +407,11 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     truncates lineage to one level per round; the pinned label RDDs are
     tiny (two ints per node) and freed by GC + ContextCleaner after the
     call (the streaming-accumulation caveat in sinks/manifest.py does
-    not apply to a bounded batch loop)."""
+    not apply to a bounded batch loop).  The symmetric edge relation every
+    round joins is cached through ``track_cached``."""
     import warnings
 
-    e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+    e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     if algorithm == "star":
         labels, converged = _cc_star(e, max_iter)
         if not converged:
@@ -452,7 +423,8 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r} "
                          "(expected 'label' or 'star')")
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
+    edges = track_cached(
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist())
     labels = (edges.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint(eager=True))
@@ -481,7 +453,6 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
         if n_changed == 0:
             converged = True
             break
-    edges.unpersist()
     if not converged:
         warnings.warn(
             f"connected_components hit max_iter={max_iter} before the "
@@ -492,26 +463,22 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     return labels.select(F.col("node"), F.col("label").alias("group_id"))
 
 
-def duplicate_groups(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", threshold: float = 0.8,
+def duplicate_groups(df: DataFrame, threshold: float = 0.8,
                      max_df: int | None = MAX_SHINGLE_DF,
-                     candidates: str = "all-pairs",
-                     storage: list | None = None) -> DataFrame:
+                     candidates: str = "all-pairs") -> DataFrame:
     """End-to-end near-dup clustering: n-gram Jaccard pairs above
     ``threshold`` → connected components → one row per clustered document
     ``(doc_id, group_id, is_keep)`` with the min-id representative marked.
     Documents with no near-dup partner don't appear (they are all keeps).
-    ``storage`` receives the persisted shingle intermediate (see
-    ``ngram_jaccard_pairs``).
 
     ``candidates="lsh"`` (round 5) swaps the all-pairs co-shingle join
-    for the corpus-scale composition: MinHash-LSH proposes candidate
-    pairs sub-quadratically, exact Jaccard verifies only those
-    (``jaccard_verify_pairs`` — linear in candidates, independent of
-    shingle document frequencies; the sf1 scale check measured the
-    all-pairs join's quadratic df-densification regime).  On the bench
-    corpus both modes return the identical pair set and therefore the
-    identical clustering.
+    (``ngram_jaccard_pairs``) for the corpus-scale composition
+    ``lsh_jaccard_pairs``: MinHash-LSH proposes candidate pairs
+    sub-quadratically, exact Jaccard verifies only those (linear in
+    candidates, independent of shingle document frequencies; the sf1
+    scale check measured the all-pairs join's quadratic df-densification
+    regime).  On the bench corpus both modes return the identical pair set
+    and therefore the identical clustering.
 
     Mode caveats (ADVICE r5): the lsh mode computes UNCAPPED exact
     Jaccard (``max_df`` is ignored — LSH already bounds the join, so no
@@ -520,45 +487,28 @@ def duplicate_groups(df: DataFrame, id_col: str = "doc_id",
     never binds and recall is 1 — true on the bench corpus, not a
     general identity."""
     if candidates == "lsh":
-        # deterministic-only persisted intermediates (round 6): the
-        # MinHash signature aggregate (min() slots) for candidate
-        # generation, and an expression-built per-doc set relation for
-        # the verify — no collect_set anywhere, so both caches are
-        # actually REUSED by their join consumers (see doc_shingle_sets)
-        sigs = track_cached(
-            minhash_signatures(
-                word_shingles(df, id_col, text_col, distinct=False),
-                id_col=id_col).persist(),
-            storage)
-        cands = lsh_candidate_pairs(sigs, id_col=id_col, storage=storage)
-        sets = track_cached(
-            doc_shingle_sets(df, id_col, text_col).persist(), storage)
-        pairs = jaccard_verify_pairs(df, cands, id_col, text_col,
-                                     threshold=threshold, storage=storage,
-                                     doc_sets=sets)
+        pairs = lsh_jaccard_pairs(df, threshold=threshold)
     elif candidates == "all-pairs":
-        pairs = ngram_jaccard_pairs(df, id_col, text_col,
-                                    threshold=threshold, max_df=max_df,
-                                    storage=storage)
+        pairs = ngram_jaccard_pairs(df, threshold=threshold, max_df=max_df)
     else:
         raise ValueError(f"unknown candidates mode {candidates!r}")
     cc = connected_components(pairs)
     return cc.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("doc_id"),
         "group_id",
         (F.col("node") == F.col("group_id")).alias("is_keep"),
     )
 
 
-def simhash32(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash32(df: DataFrame) -> DataFrame:
     """32-bit SimHash as a '0'/'1' string (MSB first).
 
     Bit j of a token = high bit of hex digit j of md5(token) (a hex digit
     >= '8' lexicographically).  Signature bit j = majority vote weighted by
     token frequency.  String-domain trick keeps it engine-portable."""
     toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
+        F.col("doc_id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
     ).where(F.col("tok") != "")
     h = F.md5(F.col("tok").cast("binary"))
     votes = [
@@ -567,11 +517,11 @@ def simhash32(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         ).alias(f"v{j}")
         for j in range(32)
     ]
-    agg = toks.groupBy(id_col).agg(*votes)
+    agg = toks.groupBy("doc_id").agg(*votes)
     bits = F.concat(*[
         F.when(F.col(f"v{j}") > 0, F.lit("1")).otherwise(F.lit("0")) for j in range(32)
     ])
-    return agg.select(F.col(id_col), bits.alias("simhash"))
+    return agg.select(F.col("doc_id"), bits.alias("simhash"))
 
 
 def simhash_chunk_bounds(radius: int, sig_bits: int = 32) -> list[tuple[int, int]]:
@@ -589,11 +539,8 @@ def simhash_chunk_bounds(radius: int, sig_bits: int = 32) -> list[tuple[int, int
     return bounds
 
 
-def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       radius: int = SIMHASH_RADIUS,
-                       persist: bool = True,
-                       storage: list | None = None) -> DataFrame:
+def simhash_near_pairs(df: DataFrame,
+                       radius: int = SIMHASH_RADIUS) -> DataFrame:
     """SimHash neighbor search: (id_a < id_b, hamming) pairs within radius.
 
     Round-6 shape (identical output, measured 70.9 s → seconds at sf1):
@@ -628,19 +575,14 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     signature (64/128-bit) and the same construction gives 2^32+ buckets;
     the knob is signature width, not this plan shape.
 
-    ``persist=True`` caches the (id, sig_int) relation (feeds the two
-    recovery joins + the intra self-join) and the distinct-sig relation
-    (feeds both candidate sides).  Pass a list as ``storage`` to receive
-    the handles for ``unpersist()``."""
-    sig = simhash32(df, id_col, text_col).select(
-        F.col(id_col),
+    Two relations are cached: (doc_id, sig_int) (feeds the two recovery
+    joins + the intra self-join) and the distinct-sig relation (feeds both
+    candidate sides)."""
+    sig = track_cached(simhash32(df).select(
+        F.col("doc_id"),
         F.conv(F.col("simhash"), 2, 10).cast("bigint").alias("sig_int"),
-    )
-    if persist:
-        sig = track_cached(sig.persist(), storage)
-    D = sig.select("sig_int").distinct()
-    if persist:
-        D = track_cached(D.persist(), storage)
+    ).persist())
+    D = track_cached(sig.select("sig_int").distinct().persist())
 
     # c = ceil((radius+1)/2) chunks covering all 32 bits; chunk i of the
     # STRING bounds (1-based, MSB first) maps to shift = 32 - start+1 - width
@@ -672,8 +614,8 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
             F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int"))
         .where(F.col("hamming") <= radius)
     )
-    ia = sig.select(F.col(id_col).alias("_ida"), F.col("sig_int").alias("sig_a"))
-    ib = sig.select(F.col(id_col).alias("_idb"), F.col("sig_int").alias("sig_b"))
+    ia = sig.select(F.col("doc_id").alias("_ida"), F.col("sig_int").alias("sig_a"))
+    ib = sig.select(F.col("doc_id").alias("_idb"), F.col("sig_int").alias("sig_b"))
     inter = (
         cand.join(ia, on="sig_a").join(ib, on="sig_b")
         .select(F.least("_ida", "_idb").alias("id_a"),
@@ -682,21 +624,17 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     )
     intra = (
         sig.alias("a").join(sig.alias("b"), on="sig_int")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"),
                 F.lit(0).cast("int").alias("hamming"))
     )
     return inter.unionAll(intra)
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = SHINGLE_N,
+def ngram_jaccard_pairs(df: DataFrame, n: int = SHINGLE_N,
                         threshold: float = 0.8,
-                        max_df: int | None = MAX_SHINGLE_DF,
-                        persist: bool = True,
-                        storage: list | None = None,
-                        _index_prefix: bool = True) -> DataFrame:
+                        max_df: int | None = MAX_SHINGLE_DF) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs above threshold.
 
     Round-6 shape: prefix filtering (AllPairs/PPJoin, Bayardo et al. 2007;
@@ -728,10 +666,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     element after the first aggregate is an int, not a 3-word string.
 
     ``max_df`` cap semantics are unchanged: shingles above the cap drop
-    from intersections AND sizes (the oracle mirrors this).  The ranked
-    shingle relation feeds two consumers (prefix + arrays);
-    ``persist=True`` caches it.  Pass a list as ``storage`` to receive
-    persisted handles for explicit ``unpersist()``.
+    from intersections AND sizes (the oracle mirrors this).  Two
+    relations are cached: the ranked shingle relation (feeds the prefix
+    join and the arrays) and the per-doc array/bitmap aggregate.
 
     Scale notes (100 TB): the shingle-id window runs over the distinct-
     shingle relation (vocabulary-sized, not corpus-sized); the per-doc
@@ -741,7 +678,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     relation is already int pairs, so either side of that join is
     cheap)."""
     t_e4 = int(threshold * 10000)
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, n)
     dft = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
     if max_df is not None:
         dft = dft.where(F.col("_df") <= max_df)
@@ -752,23 +689,21 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         "shingle", "_df",
         F.row_number().over(Window.orderBy("shingle")).alias("_sid"),
     )
-    shk = sh.join(sids, on="shingle").select(id_col, "_sid", "_df")
-    w_doc = Window.partitionBy(id_col)
+    shk = sh.join(sids, on="shingle").select("doc_id", "_sid", "_df")
+    w_doc = Window.partitionBy("doc_id")
     shr = shk.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_sid"),
         F.row_number().over(w_doc.orderBy("_df", "_sid")).alias("_rn"),
         F.count("*").over(w_doc).alias("_sz"),
     )
-    if persist:
-        # NOT co-partitioned by _sid on purpose (unlike the band-key
-        # caches): the window above leaves shr partitioned by doc_id, which
-        # the arr groupBy(id) below reuses exchange-free, and a round-6 A/B
-        # of repartition("_sid") before persist measured WORSE steady-state
-        # (0.68 → 0.81 s in the clean rep) — the prefix join's two
-        # exchanges are AQE-coalesced and cheaper than 32 fixed cache-side
-        # sorts here.
-        shr = track_cached(shr.persist(), storage)
+    # NOT co-partitioned by _sid on purpose (unlike the band-key caches):
+    # the window above leaves shr partitioned by doc_id, which the arr
+    # groupBy(id) below reuses exchange-free, and a round-6 A/B of
+    # repartition("_sid") before persist measured WORSE steady-state
+    # (0.68 → 0.81 s in the clean rep) — the prefix join's two exchanges
+    # are AQE-coalesced and cheaper than 32 fixed cache-side sorts here.
+    shr = track_cached(shr.persist())
     # per-doc verify structures from ONE aggregate over shr:
     # * _set  — the shingle-id array (exact verify via array_intersect);
     # * _bm0.._bm{W-1} — a 64*W-bit hashed bitmap of the id set (codegen'd
@@ -787,25 +722,23 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         for k in range(nwords)
     ]
     popc = sum(F.bit_count(F.col(f"_bm{k}")) for k in range(nwords))
-    arr = (
-        shr.groupBy(id_col)
+    # arr feeds THREE broadcast consumers (bmr + both verify sides);
+    # without its own persist each broadcast job re-runs the
+    # collect_list/bit_or aggregate over the full shingle relation —
+    # measured as three concurrent ~1.5 s jobs at sf1 (round 6)
+    arr = track_cached(
+        shr.groupBy("doc_id")
         .agg(F.collect_list("_sid").alias("_set"), *bm_aggs)
         .withColumn("_coll", (F.size("_set") - popc).cast("bigint"))
-    )
-    if persist:
-        # arr feeds THREE broadcast consumers (bmr + both verify sides);
-        # without its own persist each broadcast job re-runs the
-        # collect_list/bit_or aggregate over the full shingle relation —
-        # measured as three concurrent ~1.5 s jobs at sf1 (round 6)
-        arr = track_cached(arr.persist(), storage)
+        .persist())
     bm_cols = [f"_bm{k}" for k in range(nwords)] + ["_coll"]
-    bmr = arr.select(F.col(id_col), *bm_cols)
+    bmr = arr.select(F.col("doc_id"), *bm_cols)
 
     # prefix length: sz - ceil(t*sz) + 1, exact integer ceil on t_e4
     pfx = shr.where(
         F.col("_rn") <= F.col("_sz")
         - F.expr(f"(_sz * {t_e4} + 9999) div 10000") + 1
-    ).join(F.broadcast(bmr), on=id_col)
+    ).join(F.broadcast(bmr), on="doc_id")
     # Index-prefix asymmetry (Xiao et al. 2008): orient every pair so the
     # LARGER-size element (ties: larger id) is the probe side l and the
     # smaller one the indexed side r.  For the indexed element y, any
@@ -818,16 +751,13 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     # the size filter sy >= t*sx, implied by J >= t).  The join therefore
     # compares probe-prefix x index-prefix rows instead of full-prefix
     # squared — strictly fewer joined rows, still a lossless superset.
-    if _index_prefix:
-        idx = pfx.where(
-            F.col("_rn") <= F.col("_sz")
-            - F.expr(f"(_sz * {2 * t_e4} + {10000 + t_e4 - 1}) "
-                     f"div {10000 + t_e4}") + 1
-        )
-    else:  # symmetric full-prefix self-join (round-start shape, for A/B)
-        idx = pfx
+    idx = pfx.where(
+        F.col("_rn") <= F.col("_sz")
+        - F.expr(f"(_sz * {2 * t_e4} + {10000 + t_e4 - 1}) "
+                 f"div {10000 + t_e4}") + 1
+    )
     l, r = pfx.alias("l"), idx.alias("r")
-    la, ra = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    la, ra = F.col("l.doc_id"), F.col("r.doc_id")
     lsz, rsz = F.col("l._sz"), F.col("r._sz")
     # overlap upper bound at this matching position (PPJoin positional
     # filter); alpha = ceil(t/(1+t) * (sa+sb)) -> cross-multiplied
@@ -843,19 +773,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         for k in range(nwords)
     )
     bm_bound = hash_inter + F.least(F.col("l._coll"), F.col("r._coll"))
-    if _index_prefix:
-        # (sz, id) is a strict total order, so each unordered pair is
-        # emitted by exactly one orientation; ids/sizes are normalized
-        # back to id_a < id_b below.
-        orient = (lsz > rsz) | ((lsz == rsz) & (la > ra))
-        sel = [F.least(la, ra).alias("id_a"),
-               F.greatest(la, ra).alias("id_b"),
-               F.when(la < ra, lsz).otherwise(rsz).alias("_sa"),
-               F.when(la < ra, rsz).otherwise(lsz).alias("_sb")]
-    else:
-        orient = la < ra
-        sel = [la.alias("id_a"), ra.alias("id_b"),
-               lsz.alias("_sa"), rsz.alias("_sb")]
+    # (sz, id) is a strict total order, so each unordered pair is emitted
+    # by exactly one orientation; ids/sizes are normalized back to
+    # id_a < id_b below.
+    orient = (lsz > rsz) | ((lsz == rsz) & (la > ra))
+    sel = [F.least(la, ra).alias("id_a"),
+           F.greatest(la, ra).alias("id_b"),
+           F.when(la < ra, lsz).otherwise(rsz).alias("_sa"),
+           F.when(la < ra, rsz).otherwise(lsz).alias("_sb")]
     cands = (
         l.join(r, on="_sid")
         .where(
@@ -867,15 +792,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         .select(*sel)
         .distinct()
     )
-    aa = arr.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_seta"))
-    ab = arr.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_setb"))
+    aa = arr.select(F.col("doc_id").alias("id_a"), F.col("_set").alias("_seta"))
+    ab = arr.select(F.col("doc_id").alias("id_b"), F.col("_set").alias("_setb"))
     inter = F.size(F.array_intersect("_seta", "_setb")).cast("bigint")
     # candidates share >= 1 shingle by construction, so the denominator is
     # always positive (no ANSI /0).  Broadcast the CANDIDATE side (small
     # by construction after the prefix/size/positional/bitmap filters) and
     # stream the cached array relation — broadcasting aa/ab shipped the
     # wide shingle-id arrays instead (round 6; same shape as the verify
-    # join in jaccard_verify_pairs).
+    # join in lsh_jaccard_pairs).
     j1 = aa.join(F.broadcast(cands), "id_a")
     return (
         ab.join(F.broadcast(j1), "id_b")

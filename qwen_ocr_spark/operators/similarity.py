@@ -1,4 +1,10 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embedding relation.
+
+Input schema: every operator reads ``vec_id`` (bigint) and ``embedding``
+(array<double>, at most ``dims`` elements, all finite); pair relations are
+``(id_a, id_b, ...)`` with ``id_a < id_b``.  Every relation an operator
+persists is registered with ``plans.session.track_cached`` and released by
+``release_cached()``.
 
 * ``cosine_topk``   — brute-force exact top-k: the correctness baseline.
   Scores are floored at 1e6 scale before ranking so rank order is
@@ -15,7 +21,9 @@ Near-dup detection by embedding (``embedding_near_dups``) = pairs above a
 cosine threshold among band-bucket collisions.
 
 Every consumer (the two above, ``ivf_topk`` and ``embedding_near_dups``)
-scores through one vectorized scorer, ``_cosine_e6_udf``.
+scores through one vectorized scorer, ``_cosine_e6_udf``.  The scorer and
+the band-key projector read vectors through one check,
+``_embedding_matrix``, so an input one rejects the other rejects too.
 
 Banding math (why b x r, not one flat signature — VERDICT r1 item 3):
 with r planes per band there are 2^r buckets per band, so the expected
@@ -44,6 +52,35 @@ ANN_ROWS = 8       # generic neighbors sit at wide angles, so near-dup-tight
                    # percent of the corpus per query (IVF-probe analog)
 
 
+def _embedding_matrix(vectors, dims: int):
+    """Zero-padded float64 ``(rows, dims)`` matrix of an embedding column
+    as a pandas_udf receives it (one numpy array or None per row).  A NULL
+    vector becomes a zero row.
+
+    Raises ``ValueError`` on a vector longer than ``dims`` and on any NaN,
+    ±Inf or NULL element: a non-finite element has no meaningful cosine
+    or hyperplane side, and zeroing or clamping it would rank or bucket a
+    corrupt vector among real neighbours.  A NULL element arrives from
+    Arrow as NaN, indistinguishable from a NaN payload, so it raises too.
+    """
+    import numpy as np
+
+    M = np.zeros((len(vectors), dims), dtype=np.float64)
+    for i, v in enumerate(vectors):
+        if v is None:
+            continue
+        a = np.asarray(v, dtype=np.float64)
+        if a.size > dims:
+            raise ValueError(f"a {a.size}-element embedding exceeds "
+                             f"dims={dims}")
+        M[i, : a.size] = a
+    bad = int((~np.isfinite(M)).sum())
+    if bad:
+        raise ValueError(f"{bad} non-finite embedding element(s) "
+                         "(NaN, ±Inf or NULL)")
+    return M
+
+
 def _cosine_e6_udf(dims: int = 64):
     """Vectorized pandas_udf: (vec_a, vec_b) → floor(cosine * 1e6) bigint,
     NULL when either norm is zero.
@@ -55,12 +92,8 @@ def _cosine_e6_udf(dims: int = 64):
     ``+ 0.0`` terms.  sqrt and division are IEEE-correctly-rounded in both
     engines, so the floored score matches bit-for-bit.
 
-    Non-finite input raises ``ValueError`` instead of being scored: a NaN
-    or ±Inf element has no meaningful cosine, and zeroing or clamping it
-    would rank a corrupt vector among real neighbours.  A NULL element
-    arrives from Arrow as NaN, indistinguishable from a NaN payload, so it
-    raises too; a NULL vector still scores NULL.  A vector longer than
-    ``dims`` raises ``ValueError`` rather than being scored on a prefix.
+    A NULL vector scores NULL; a non-finite element or a vector longer
+    than ``dims`` raises ``ValueError`` (``_embedding_matrix``).
 
     WHY a Python UDF replaced whole-stage-codegen'd SQL (round 6, late):
     the unrolled form needs 2 x 64 pre-extracted element columns plus a
@@ -79,21 +112,8 @@ def _cosine_e6_udf(dims: int = 64):
         import numpy as np
 
         n = len(va)
-        A = np.zeros((n, dims), dtype=np.float64)
-        B = np.zeros((n, dims), dtype=np.float64)
-        for M, col in ((A, va), (B, vb)):
-            for i, v in enumerate(col):
-                if v is None:
-                    continue
-                a = np.asarray(v, dtype=np.float64)
-                if a.size > dims:
-                    raise ValueError(f"a {a.size}-element embedding in a "
-                                     f"cosine input exceeds dims={dims}")
-                M[i, : a.size] = a
-        bad = int((~np.isfinite(A)).sum() + (~np.isfinite(B)).sum())
-        if bad:
-            raise ValueError(f"{bad} non-finite embedding element(s) "
-                             "(NaN, ±Inf or NULL) in a cosine input")
+        A = _embedding_matrix(va, dims)
+        B = _embedding_matrix(vb, dims)
         dot = np.zeros(n, dtype=np.float64)
         na2 = np.zeros(n, dtype=np.float64)
         nb2 = np.zeros(n, dtype=np.float64)
@@ -119,7 +139,6 @@ def _cosine_e6_udf(dims: int = 64):
 
 
 def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
                 dims: int = 64) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (excluding self).
 
@@ -129,10 +148,10 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
 
     Scores come from ``_cosine_e6_udf``; the broadcast crossJoin carries
     the two embedding arrays."""
-    q = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    q = emb.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
     nb = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv"))
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nv"))
     joined = (
         F.broadcast(q)  # queries are a handful of rows — broadcast always
         .crossJoin(nb)
@@ -165,19 +184,44 @@ def _plane(plane: int, dims: int) -> list[float]:
     ]
 
 
-def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", bands: int = LSH_BANDS,
-                   rows: int = LSH_ROWS, dims: int = 64,
-                   persist: bool = False,
-                   storage: list | None = None) -> DataFrame:
-    """Stacked (id, band_key) relation — one row per (vector, band).
+def cache_by_band_key(buckets: DataFrame) -> DataFrame:
+    """Persist an ``(id, band_key)`` relation hash-partitioned by
+    ``band_key``, registered with ``track_cached``.
 
-    ``persist=True`` materializes the relation (MEMORY_AND_DISK): the
-    signature of a corpus is computed once and served to every consumer —
-    both sides of a candidate join, or many queries against one corpus —
-    exactly how a production ANN index is built (signatures land in a table,
-    not recomputed per query).  Pass a list as ``storage`` to receive the
-    persisted handle for explicit ``unpersist()`` in long-lived sessions.
+    Every consumer joins it on band_key (candidate self-join, query-probe
+    join), and an InMemoryTableScan reports the cached plan's output
+    partitioning, so both sides of those joins read co-partitioned cache
+    and plan ZERO exchanges on this side (guide §2.4 — the in-session
+    analog of a bucketed table; also two fewer AQE stage rounds per
+    action).  The one repartition happens at cache build.  Trade-off,
+    documented: a cached side has no exchange for AQE skew-splitting to
+    rewrite — bounded band-bucket multiplicity is the banding's own
+    contract (module math)."""
+    return track_cached(buckets.repartition("band_key").persist())
+
+
+def band_pairs(buckets: DataFrame) -> DataFrame:
+    """Distinct ``(id_a < id_b)`` pairs sharing at least one band_key, by
+    a self-join of an ``(id, band_key)`` relation (id column first) that
+    ``cache_by_band_key`` built.  The banded-LSH candidate step of both
+    MinHash (``dedup.lsh_candidate_pairs``) and the embedding LSH."""
+    id_col = buckets.columns[0]
+    ida, idb = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    return (
+        buckets.alias("l").join(buckets.alias("r"), on="band_key")
+        .where(ida < idb)
+        .select(ida.alias("id_a"), idb.alias("id_b"))
+        .distinct()
+    )
+
+
+def banded_buckets(emb: DataFrame, bands: int = LSH_BANDS,
+                   rows: int = LSH_ROWS, dims: int = 64) -> DataFrame:
+    """Stacked (vec_id, band_key) relation — one row per (vector, band),
+    cached by ``cache_by_band_key``: the signature of a corpus is computed
+    once and served to every consumer — both sides of a candidate join,
+    or many queries against one corpus — exactly how a production ANN
+    index is built (signatures land in a table, not recomputed per query).
 
     Round 6 (final form): the band keys are computed by ONE vectorized
     **scalar pandas_udf** returning all ``bands`` packed int64 keys as an
@@ -201,9 +245,10 @@ def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
     int64 (band index in the high bits, the band's sign bits below,
     MSB-first) — bijective with the round-5 "b|0101…" string, so bucket
     equality and every candidate pair set are identical while joins
-    compare 8 bytes instead of a 19-char string.  Null vectors and null
-    elements hash as 0.0 — the ``coalesce(get(v, d), 0.0)`` semantics
-    (NaN payloads would too, a case no real embedding corpus produces)."""
+    compare 8 bytes instead of a 19-char string.  A NULL vector hashes as
+    the zero vector; a non-finite element or a vector longer than ``dims``
+    raises ``ValueError``, exactly as in the cosine scorer
+    (``_embedding_matrix``)."""
     planes = [_plane(p, dims) for p in range(bands * rows)]
 
     import pandas as pd  # noqa: F401 (pandas_udf signature)
@@ -216,13 +261,7 @@ def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
     def _band_keys(vs):
         W = np.asarray(W_rows, dtype=np.float64)      # (P, dims)
         n = len(vs)
-        E = np.zeros((n, dims), dtype=np.float64)
-        for i, v in enumerate(vs):
-            if v is None:
-                continue
-            a = np.asarray(v, dtype=np.float64)[:dims]
-            if a.size:
-                E[i, : a.size] = np.nan_to_num(a, nan=0.0)  # nulls -> 0.0
+        E = _embedding_matrix(vs, dims)
         # left-to-right fold, one term at a time, vectorized ACROSS
         # planes: bit-identical accumulation order per (row, plane)
         acc = np.zeros((n, n_planes), dtype=np.float64)
@@ -237,73 +276,48 @@ def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
             out[:, b] = val | (b << rows)
         return pd.Series(list(out))
 
-    out = emb.select(
-        F.col(id_col),
-        F.explode(_band_keys(F.col(vec_col))).alias("band_key"),
-    )
-    if persist:
-        # cache hash-partitioned by the join key (guide §2.4): every
-        # consumer joins this relation on band_key (candidate self-join,
-        # query-probe join), so a co-partitioned cache lets those joins
-        # plan zero exchanges on this side; the one repartition runs at
-        # cache build.  Same pattern + skew note as
-        # dedup.lsh_candidate_pairs.
-        out = track_cached(out.repartition("band_key").persist(), storage)
-    return out
+    return cache_by_band_key(emb.select(
+        F.col("vec_id"),
+        F.explode(_band_keys(F.col("embedding"))).alias("band_key"),
+    ))
 
 
-def lsh_candidate_pairs(emb: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding", bands: int = LSH_BANDS,
-                        rows: int = LSH_ROWS, dims: int = 64,
-                        persist: bool = True,
-                        storage: list | None = None) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing at least one band bucket.
-
-    The bucket relation feeds both sides of the self-join; it is persisted
-    by default (see ``banded_buckets``) so signatures are computed once."""
-    stacked = banded_buckets(emb, id_col, vec_col, bands, rows, dims,
-                             persist=persist, storage=storage)
-    l, r = stacked.alias("l"), stacked.alias("r")
-    return (
-        l.join(r, on="band_key")
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
+def lsh_candidate_pairs(emb: DataFrame, bands: int = LSH_BANDS,
+                        rows: int = LSH_ROWS, dims: int = 64) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing at least one band bucket; the
+    cached bucket relation (``banded_buckets``) feeds both join sides, so
+    signatures are computed once."""
+    return band_pairs(banded_buckets(emb, bands, rows, dims))
 
 
 def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
                       bands: int = ANN_BANDS, rows: int = ANN_ROWS,
-                      dims: int = 64, persist: bool = True,
-                      storage: list | None = None) -> DataFrame:
+                      dims: int = 64) -> DataFrame:
     """ANN: candidates share any band bucket with the query; exact re-rank.
 
     Recall < 1 by design (bucket misses; see module banding math); the
     bench compares speed and recall against cosine_topk.
 
     Plan shape (the round-3 constant-factor fix — VERDICT r2 item 3):
-    ONE persisted (id, band_key) relation serves both join sides — the
+    ONE cached (vec_id, band_key) relation serves both join sides — the
     corpus signature is computed once, as a real ANN index would be — the
     candidate distinct shuffles bare int pairs (round 2 carried two
     64-double arrays per row through that exchange), and the exact re-rank
     joins the small pair set back to the embedding arrays and scores them
     with ``_cosine_e6_udf``."""
-    keys = banded_buckets(emb, id_col, vec_col, bands, rows, dims,
-                          persist=persist, storage=storage)
-    qk = keys.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), "band_key")
+    keys = banded_buckets(emb, bands, rows, dims)
+    qk = keys.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), "band_key")
     pairs = (
         F.broadcast(qk).join(keys, on="band_key")  # queries: a handful of rows
-        .where(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
+        .where(F.col("query_id") != F.col("vec_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()  # union over bands — int pairs only, no payload
     )
     nb = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv"))
-    qb = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nv"))
+    qb = emb.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
     scored = (
         pairs.join(nb, on="neighbor_id")      # pairs are small: AQE broadcasts
         .join(F.broadcast(qb), on="query_id")
@@ -322,8 +336,7 @@ def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
 IVF_SEED = "ivf"
 
 
-def ivf_centroids(emb: DataFrame, n_cells: int = 16,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def ivf_centroids(emb: DataFrame, n_cells: int = 16) -> DataFrame:
     """Deterministic hash-sampled centroids: the ``n_cells`` vectors with
     the smallest md5('ivf|' || id) — a content-addressed uniform sample of
     the corpus (the ``sampling.hash_sample`` trick), engine-reproducible so
@@ -332,10 +345,10 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16,
     with insertion order, which is what a seeded k-means init (k-means++
     over a hash sample) would start from at scale.  Distributed top-k
     (orderBy + limit), never a global sort."""
-    h = F.md5(F.concat(F.lit(f"{IVF_SEED}|"), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit(f"{IVF_SEED}|"), F.col("vec_id").cast("string")))
     return (
-        emb.select(F.col(id_col).alias("cell_id"),
-                   F.col(vec_col).alias("cvec"), h.alias("_h"))
+        emb.select(F.col("vec_id").alias("cell_id"),
+                   F.col("embedding").alias("cvec"), h.alias("_h"))
         .orderBy("_h", "cell_id")
         .limit(n_cells)
         .drop("_h")
@@ -344,9 +357,7 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16,
 
 def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
              n_cells: int = 16, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             dims: int = 64, persist: bool = True,
-             storage: list | None = None) -> DataFrame:
+             dims: int = 64) -> DataFrame:
     """IVF (inverted-file) ANN: the other classic scale path beside LSH.
 
     Coarse-quantize every vector to its nearest centroid cell (centroids =
@@ -360,28 +371,27 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     assignment is total and engine-reproducible.  Both the assignment and
     the re-rank score through ``_cosine_e6_udf``."""
     score = _cosine_e6_udf(dims)
-    cent = F.broadcast(ivf_centroids(emb, n_cells, id_col, vec_col))
+    cent = F.broadcast(ivf_centroids(emb, n_cells))
     scored = (
-        emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id"), F.col("embedding").alias("_v"))
         .crossJoin(cent)
-        .select(id_col, "cell_id", "_v",
+        .select("vec_id", "cell_id", "_v",
                 score(F.col("_v"), F.col("cvec")).alias("cscore_e6"))
         .where(F.col("cscore_e6").isNotNull())
     )
-    w_assign = Window.partitionBy(id_col).orderBy(
+    w_assign = Window.partitionBy("vec_id").orderBy(
         F.desc("cscore_e6"), F.asc("cell_id"))
-    ranked = scored.withColumn("crank", F.row_number().over(w_assign))
-    if persist:
-        # the ranked assignment feeds BOTH the inverted file (crank == 1)
-        # and the query probes (crank <= nprobe); without materialization
-        # the N x n_cells centroid scoring runs twice — this IS the "build
-        # the IVF index once" step a production ANN system persists
-        ranked = track_cached(ranked.persist(), storage)
+    # the ranked assignment feeds BOTH the inverted file (crank == 1) and
+    # the query probes (crank <= nprobe); without materialization the
+    # N x n_cells centroid scoring runs twice — this IS the "build the IVF
+    # index once" step a production ANN system persists
+    ranked = track_cached(
+        scored.withColumn("crank", F.row_number().over(w_assign)).persist())
     assign = ranked.where(F.col("crank") == 1).select(
-        F.col(id_col).alias("neighbor_id"), "cell_id", F.col("_v").alias("_nv"))
-    qcells = ranked.where(F.col(id_col).isin(query_ids)
+        F.col("vec_id").alias("neighbor_id"), "cell_id", F.col("_v").alias("_nv"))
+    qcells = ranked.where(F.col("vec_id").isin(query_ids)
                           & (F.col("crank") <= nprobe)).select(
-        F.col(id_col).alias("query_id"), "cell_id", F.col("_v").alias("_qv"))
+        F.col("vec_id").alias("query_id"), "cell_id", F.col("_v").alias("_qv"))
     joined = (
         F.broadcast(qcells).join(assign, on="cell_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -399,18 +409,15 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
 
 
 def embedding_near_dups(emb: DataFrame, threshold_e6: int = 999_000,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
                         bands: int = LSH_BANDS, rows: int = LSH_ROWS,
-                        dims: int = 64, persist: bool = True,
-                        storage: list | None = None) -> DataFrame:
+                        dims: int = 64) -> DataFrame:
     """Near-duplicate pairs by embedding cosine over banded LSH candidates.
 
     Exact duplicates always collide in every band; pairs at cosine >= 0.99
     are candidates with ~0.93 probability at the defaults (module math)."""
-    pairs = lsh_candidate_pairs(emb, id_col, vec_col, bands, rows, dims,
-                                persist=persist, storage=storage)
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    pairs = lsh_candidate_pairs(emb, bands, rows, dims)
+    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
         pairs.join(va, "id_a").join(vb, "id_b")
         .select(

@@ -9,6 +9,10 @@ Python in the hot path.  Each has an exact ANSI-SQL oracle in
 These extend the reference's scope (it processes one PDF at a time); they
 are the operations the same engine needs when the corpus is 10^12 rows of
 crawl text (BASELINE.json category: extraction / webtext).
+
+Input schema: every operator reads the document relation's ``text``
+(string) column; the per-document ones (``repetition_stats``,
+``gopher_signals``) also key their output by ``doc_id`` (bigint).
 """
 
 from __future__ import annotations
@@ -148,11 +152,15 @@ def _count_occurrences(col: Column, needle: str) -> Column:
     ).cast("int")
 
 
-def lang_pred_expr(text_col: str = "text") -> Column:
-    """The language-ID prediction as a single Column expression — the body
-    of with_lang_id, exposed so other operators (quality scoring) can
-    compute pred_lang in their own projection step."""
-    padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+def with_lang_id(df: DataFrame) -> DataFrame:
+    """Two-stage language ID, all pure column expressions (whole-stage
+    codegen'd): script-range short-circuits first (SCRIPT_LANGS order —
+    kana→ja before ideographs→zh, hangul→ko, cyrillic→ru, arabic→ar,
+    hebrew→he, greek→el, devanagari→hi, thai→th), then the char-trigram
+    argmax over ' '||lower(text)||' ' splits Latin-script languages;
+    'und' (undetermined) when every score is zero.  Trigram ties break by
+    fixed language order (LANG_TRIGRAMS dict order, en first)."""
+    padded = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
     scores = [
         F.struct(
             sum((_count_occurrences(padded, t) for t in trigrams),
@@ -168,26 +176,15 @@ def lang_pred_expr(text_col: str = "text") -> Column:
     pred = F.when(best.getField("score") <= 0, F.lit("und")) \
             .otherwise(best.getField("lang"))
     for lang, pattern in reversed(SCRIPT_LANGS):
-        pred = F.when(F.col(text_col).rlike(pattern), F.lit(lang)) \
+        pred = F.when(F.col("text").rlike(pattern), F.lit(lang)) \
                 .otherwise(pred)
-    return pred
+    return df.withColumn("pred_lang", pred)
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Two-stage language ID, all pure column expressions (whole-stage
-    codegen'd): script-range short-circuits first (SCRIPT_LANGS order —
-    kana→ja before ideographs→zh, hangul→ko, cyrillic→ru, arabic→ar,
-    hebrew→he, greek→el, devanagari→hi, thai→th), then the char-trigram
-    argmax over ' '||lower(text)||' ' splits Latin-script languages;
-    'und' (undetermined) when every score is zero.  Trigram ties break by
-    fixed language order (LANG_TRIGRAMS dict order, en first)."""
-    return df.withColumn("pred_lang", lang_pred_expr(text_col))
-
-
-def with_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_count(df: DataFrame) -> DataFrame:
     """Whitespace token count plus a BPE-ish subword estimate
     (words + ceil(chars/4) averaged) — both pure column expressions."""
-    trimmed = F.trim(F.col(text_col))
+    trimmed = F.trim(F.col("text"))
     words = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))
     )
@@ -198,7 +195,7 @@ def with_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Deterministic, language-aware quality features + score in [0,1]:
 
     * length_score: min(1, chars/500)
@@ -219,7 +216,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     alias), and the per-language needle sums live in a when-chain on that
     column, so only the matched language's ~10 substring counts execute
     per row.  Everything stays whole-stage codegen'd; no Python."""
-    t = F.col(text_col)
+    t = F.col("text")
     chars = F.length(t)
     alpha = F.length(F.regexp_replace(t, r"[^\p{L} ]", ""))
     padded = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
@@ -227,7 +224,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     words = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))
     )
-    base = df if "pred_lang" in df.columns else with_lang_id(df, text_col)
+    base = df if "pred_lang" in df.columns else with_lang_id(df)
     pred = F.col("pred_lang")
 
     hits: Column = F.lit(0)
@@ -257,8 +254,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document — the standard webtext
     quality filters for boilerplate/spam (repeated nav lines, keyword
     stuffing):
@@ -273,12 +269,12 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     combining aggregations keyed by (doc, bigram) then doc — the same
     shuffle profile as word_shingles, linear in corpus size.  Documents
     with no non-blank lines / no bigram emit 0 (nothing to repeat)."""
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.filter(F.split(t, "\n"), lambda x: F.length(F.trim(x)) > 0)
     n_lines = F.size(lines)
     n_dist = F.size(F.array_distinct(lines))
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(n_lines == 0, F.lit(0)).otherwise(
             F.floor((n_lines - n_dist) * 10000.0 / n_lines)
         ).cast("bigint").alias("dup_line_frac_e4"),
@@ -290,15 +286,15 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     bigrams = F.transform(idx, lambda i: F.concat_ws(" ", F.get(toks, i),
                                                      F.get(toks, i + 1)))
     per_bigram = (
-        df.select(F.col(id_col), F.explode(bigrams).alias("bigram"))
-        .groupBy(id_col, "bigram").agg(F.count("*").alias("c"))
+        df.select(F.col("doc_id"), F.explode(bigrams).alias("bigram"))
+        .groupBy("doc_id", "bigram").agg(F.count("*").alias("c"))
     )
-    top = per_bigram.groupBy(id_col).agg(
+    top = per_bigram.groupBy("doc_id").agg(
         F.max("c").alias("max_c"), F.sum("c").alias("n_bigrams"))
     return (
-        base.join(top, on=id_col, how="left")
+        base.join(top, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             "dup_line_frac_e4",
             F.coalesce(
                 F.floor(F.col("max_c") * 10000.0 / F.col("n_bigrams"))
@@ -309,8 +305,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def gopher_signals(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def gopher_signals(df: DataFrame) -> DataFrame:
     """The remaining Gopher-style document-quality signals (round 5;
     complements repetition_stats and with_quality_score):
 
@@ -324,7 +319,7 @@ def gopher_signals(df: DataFrame, id_col: str = "doc_id",
     ratio < 0.1, bullet lines < 90%, ellipsis lines < 30%.  All pure
     column expressions, e4-floored for exact oracle hashing; empty
     documents emit zeros."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = F.when(F.length(F.trim(t)) == 0,
                   F.array().cast("array<string>")) \
             .otherwise(F.split(F.trim(t), r"\s+"))
@@ -349,7 +344,7 @@ def gopher_signals(df: DataFrame, id_col: str = "doc_id",
             F.floor(num * 10000.0 / den)).cast("bigint")
 
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         frac_e4(tok_chars, n_toks).alias("mean_word_len_e4"),
         frac_e4(sym, n_toks).alias("symbol_word_frac_e4"),
         frac_e4(bullet, n_lines).alias("bullet_line_frac_e4"),
@@ -357,8 +352,8 @@ def gopher_signals(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(df: DataFrame) -> DataFrame:
     """Normalization fingerprint: md5 of lower(collapse_ws(trim(text))) —
     the exact-dup key that survives whitespace/case jitter."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     return df.withColumn("fingerprint", F.md5(norm.cast("binary")))

@@ -99,31 +99,27 @@ def get_spark(
     return b.getOrCreate()
 
 
-# Persisted intermediates created by library operators when the caller did
-# not supply an explicit ``storage`` list (dedup.lsh_candidate_pairs,
-# simhash_near_pairs, ngram_jaccard_pairs, similarity.banded_buckets, …).
-# A one-shot job never needs to touch this — the process exit releases the
-# cache — but a long-lived driver (streaming micro-batches, a query
-# service) must call release_cached() between batches or cached relations
-# accumulate executor storage (the round-2 failure mode in CLAUDE.md).
+# Every relation a library operator persists (dedup.lsh_candidate_pairs,
+# simhash_near_pairs, ngram_jaccard_pairs, similarity.banded_buckets, …)
+# is registered here.  A one-shot job never needs to touch this — the
+# process exit releases the cache — but a long-lived driver (streaming
+# micro-batches, a query service) must call release_cached() between
+# units of work or cached relations accumulate executor storage (the
+# round-2 failure mode).
 _CACHED_HANDLES: list = []
 
 
-def track_cached(df, storage: list | None = None):
-    """Record a persisted DataFrame for later release.
-
-    Appends to the caller's ``storage`` list when given, else to the
-    module-level registry drained by release_cached().
+def track_cached(df):
+    """Record a persisted DataFrame for release by release_cached().
 
     The registry holds STRONG references on purpose (ADVICE r5
     adjudication): a Spark SQL cache lives in the JVM CacheManager and is
     NOT auto-unpersisted when the Python handle is garbage-collected, so a
     weak reference would only lose the one handle that can still release
-    it.  The contract stands: a long-lived driver that runs library
-    operators without passing ``storage`` must call ``release_cached()``
-    between units of work (streaming micro-batches do; see
-    sinks/manifest.py)."""
-    (_CACHED_HANDLES if storage is None else storage).append(df)
+    it.  A long-lived driver that runs library operators must call
+    ``release_cached()`` between units of work (streaming micro-batches
+    do; see streaming/extract_stream.py)."""
+    _CACHED_HANDLES.append(df)
     return df
 
 

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from qwen_ocr_spark.operators import dedup, similarity, textstats
+from qwen_ocr_spark.plans.session import release_cached
 
 
 @pytest.fixture(scope="module")
@@ -283,17 +284,30 @@ def test_cosine_topk_exact(emb):
     assert all(r["score_e6"] <= 1_000_000 for r in res)
 
 
-# every consumer of the one cosine scorer, each built so the bad vector
-# (ids 500 and 501, identical, so LSH always pairs them) is scored
+# every consumer of the one cosine scorer, and the scorer-less LSH
+# candidate generator, each built so the bad vector (ids 500 and 501,
+# identical, so LSH always pairs them) is scored or bucketed
 _SCORER_CONSUMERS = {
-    "cosine_topk": lambda e: similarity.cosine_topk(e, [500], k=3),
+    "cosine_topk": lambda e: similarity.cosine_topk(e, [500], k=3, dims=16),
     "lsh_bucketed_topk": lambda e: similarity.lsh_bucketed_topk(
-        e, [500], k=3, persist=False),
+        e, [500], k=3, dims=16),
     "ivf_topk": lambda e: similarity.ivf_topk(
-        e, [500], k=3, n_cells=8, dims=16, persist=False),
+        e, [500], k=3, n_cells=8, dims=16),
     "embedding_near_dups": lambda e: similarity.embedding_near_dups(
-        e, persist=False),
+        e, dims=16),
+    "lsh_candidate_pairs": lambda e: similarity.lsh_candidate_pairs(
+        e, dims=16),
 }
+
+
+def _assert_every_consumer_rejects(emb, bad, match: str) -> None:
+    from pyspark.errors import PythonException
+
+    for name, query in _SCORER_CONSUMERS.items():
+        with pytest.raises(PythonException, match=match):
+            query(emb.unionByName(bad)).collect()
+            pytest.fail(f"{name} accepted the bad embedding")
+        release_cached()  # the failed relations must not stay cached
 
 
 @pytest.mark.parametrize("value", [float("nan"), float("inf"),
@@ -301,29 +315,22 @@ _SCORER_CONSUMERS = {
                          ids=["nan", "inf", "-inf", "null"])
 def test_cosine_scorer_rejects_non_finite(spark, emb, value):
     """One corrupt embedding fails the query loudly instead of being
-    zeroed (NaN, NULL) or clamped (±Inf) into a plausible-looking score,
-    in every consumer of the scorer."""
-    from pyspark.errors import PythonException
-
+    zeroed (NaN, NULL) or clamped (±Inf) into a plausible-looking score or
+    bucket, in every consumer of the scorer and in LSH candidate
+    generation."""
     bad = spark.createDataFrame(pd.DataFrame(
         [(i, [value] + [0.5] * 15) for i in (500, 501)],
         columns=["vec_id", "embedding"]), "vec_id long, embedding array<double>")
-    for name, query in _SCORER_CONSUMERS.items():
-        with pytest.raises(PythonException, match="non-finite embedding"):
-            query(emb.unionByName(bad)).collect()
-            pytest.fail(f"{name} scored a non-finite embedding")
+    _assert_every_consumer_rejects(emb, bad, "non-finite embedding")
 
 
 def test_cosine_scorer_rejects_over_long_vector(spark, emb):
-    """A vector longer than ``dims`` fails instead of being scored on its
-    first ``dims`` elements."""
-    from pyspark.errors import PythonException
-
+    """A vector longer than ``dims`` fails instead of being scored or
+    bucketed on its first ``dims`` elements."""
     long_vec = spark.createDataFrame(pd.DataFrame(
-        [(500, [0.5] * 17)], columns=["vec_id", "embedding"]))
-    with pytest.raises(PythonException, match="17-element embedding"):
-        similarity.cosine_topk(emb.unionByName(long_vec), [1], k=3,
-                               dims=16).collect()
+        [(i, [0.5] * 17) for i in (500, 501)],
+        columns=["vec_id", "embedding"]))
+    _assert_every_consumer_rejects(emb, long_vec, "17-element embedding")
 
 
 def _scorer_nodes(df, args: str = "") -> int:
@@ -337,10 +344,8 @@ def test_ann_scorer_runs_once_per_row(emb):
     scored twice).  ``asNondeterministic()`` on the scorer is what
     prevents that; dropping it fails this test."""
     assert _scorer_nodes(similarity.cosine_topk(emb, [1, 2], k=3)) == 1
-    assert _scorer_nodes(similarity.lsh_bucketed_topk(
-        emb, [1, 2], k=3, persist=False)) == 1
-    assert _scorer_nodes(similarity.embedding_near_dups(
-        emb, persist=False)) == 1
+    assert _scorer_nodes(similarity.lsh_bucketed_topk(emb, [1, 2], k=3)) == 1
+    assert _scorer_nodes(similarity.embedding_near_dups(emb)) == 1
     # IVF's re-rank; its centroid assignment sits under the cached index,
     # which the plan string prints once per scan of it
     assert _scorer_nodes(similarity.ivf_topk(
@@ -381,17 +386,6 @@ def test_banded_lsh_recall_vs_exact(emb):
         k = (r["query_id"], r["neighbor_id"])
         if k in ex:
             assert r["score_e6"] == ex[k]
-
-
-def test_lsh_topk_storage_handle(emb):
-    """The persisted (id, band_key) signature relation is handed back for
-    explicit release, mirroring ngram_jaccard's contract."""
-    handles: list = []
-    res = similarity.lsh_bucketed_topk(emb, [1], k=3, storage=handles).collect()
-    assert res  # sanity: query still returns neighbors
-    assert len(handles) == 1 and handles[0].is_cached
-    handles[0].unpersist(blocking=True)
-    assert not handles[0].is_cached
 
 
 def test_banded_buckets_shrink(spark):
@@ -558,21 +552,37 @@ def test_incremental_dedup_escaped_run_id(spark, tmp_path):
     assert got == {4}
 
 
-def test_ngram_jaccard_storage_handle(spark):
-    """The persisted capped-shingle intermediate is handed back for explicit
-    release — a long-lived session must not rely on LRU eviction."""
-    df = spark.createDataFrame(pd.DataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
-        columns=["doc_id", "text"]))
-    handles: list = []
-    out = dedup.ngram_jaccard_pairs(df, threshold=0.5, storage=handles)
-    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 2)}
-    # round 6: ngram_jaccard_pairs persists TWO intermediates (the ranked
-    # shingle relation and the per-doc array/bitmap aggregate)
-    assert len(handles) == 2 and all(h.is_cached for h in handles)
-    for h in handles:
-        h.unpersist(blocking=True)
-    assert not any(h.is_cached for h in handles)
+def test_release_cached_empties_the_cache(spark, docs, emb):
+    """Every relation a corpus operator caches is registered with
+    ``track_cached``, so ``release_cached()`` alone leaves Spark's cache
+    empty after each of them."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # start clean whatever ran before
+    release_cached()
+    operators = {
+        "dedup.lsh_candidate_pairs": lambda: dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(dedup.word_shingles(docs))),
+        "simhash_near_pairs": lambda: dedup.simhash_near_pairs(docs),
+        "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(
+            docs, threshold=0.5),
+        "duplicate_groups": lambda: dedup.duplicate_groups(
+            docs, threshold=0.5),
+        "duplicate_groups(lsh)": lambda: dedup.duplicate_groups(
+            docs, threshold=0.5, candidates="lsh"),
+        "similarity.lsh_candidate_pairs": lambda:
+            similarity.lsh_candidate_pairs(emb, dims=16),
+        "lsh_bucketed_topk": lambda: similarity.lsh_bucketed_topk(
+            emb, [1], k=3, dims=16),
+        "ivf_topk": lambda: similarity.ivf_topk(
+            emb, [1], k=3, n_cells=8, dims=16),
+        "embedding_near_dups": lambda: similarity.embedding_near_dups(
+            emb, dims=16),
+    }
+    for name, op in operators.items():
+        op().collect()
+        assert not cache.isEmpty(), f"{name} cached nothing"
+        assert release_cached() > 0, name
+        assert cache.isEmpty(), f"{name} left a relation cached"
 
 
 def test_ngram_jaccard_df_cap_drops_stop_shingles(spark):
@@ -592,12 +602,19 @@ def test_ngram_jaccard_df_cap_drops_stop_shingles(spark):
     assert (1, 2) in out2
 
 
-def test_ngram_jaccard_index_prefix_equivalence(spark):
-    """The asymmetric index-prefix join (round 6) must return the exact
-    pair set of the symmetric full-prefix join on a corpus with varied
-    sizes (exercising both orientations, the size-tie id tie-break, and
-    threshold values whose ceil arithmetic differs between the probe and
-    index bounds)."""
+def test_ngram_jaccard_matches_exact_reference(spark):
+    """The prefix, size, positional and bitmap filters lose no pair: at
+    each threshold the operator returns exactly the capped Jaccard pairs
+    of a plain-Python reference (distinct word 3-grams, split on ASCII
+    ``\\s+``, ``floor(inter * 10000.0 / union)``).  Sizes vary, so both
+    orientations of the index-prefix join, the size-tie id tie-break, and
+    thresholds whose ceil arithmetic differs between the probe and index
+    bounds are exercised."""
+    import itertools
+    import math
+    import re
+    from collections import Counter
+
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lamda mu nu xi omicron pi rho sigma tau upsilon")
     words = base.split()
@@ -607,15 +624,28 @@ def test_ngram_jaccard_index_prefix_equivalence(spark):
         rows.append((i, " ".join(words[: 8 + (i % 12)])))
     rows += [(20, base), (21, base), (22, base + " phi chi psi")]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+
+    def grams(text):
+        toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+    sets = {i: grams(t) for i, t in rows}
+    df_count = Counter(g for s in sets.values() for g in s)
+    sets = {i: {g for g in s if df_count[g] <= dedup.MAX_SHINGLE_DF}
+            for i, s in sets.items()}
     for t in (0.5, 0.7, 0.8, 0.9):
-        new = {(r["id_a"], r["id_b"], r["jaccard_e4"]) for r in
-               dedup.ngram_jaccard_pairs(df, threshold=t, persist=False,
-                                         _index_prefix=True).collect()}
-        old = {(r["id_a"], r["id_b"], r["jaccard_e4"]) for r in
-               dedup.ngram_jaccard_pairs(df, threshold=t, persist=False,
-                                         _index_prefix=False).collect()}
-        assert new == old, f"pair set diverged at t={t}"
-    assert (20, 21) in {(a, b) for a, b, _ in new}
+        want = set()
+        for a, b in itertools.combinations(sorted(sets), 2):
+            inter = len(sets[a] & sets[b])
+            if inter:
+                j = math.floor(inter * 10000.0 / len(sets[a] | sets[b]))
+                if j >= int(t * 10000):
+                    want.add((a, b, j))
+        got = {(r["id_a"], r["id_b"], r["jaccard_e4"]) for r in
+               dedup.ngram_jaccard_pairs(df, threshold=t).collect()}
+        release_cached()
+        assert got == want, f"pair set diverged at t={t}"
+    assert (20, 21, 10000) in got
 
 
 def test_ivf_topk_finds_near_dups(emb):
@@ -670,11 +700,9 @@ def test_dedup_and_ann_plans_are_equi_joins(spark):
         ("lsh_pairs", dedup.lsh_candidate_pairs(
             dedup.minhash_signatures(dedup.word_shingles(docs)))),
         ("simhash_pairs", dedup.simhash_near_pairs(docs)),
-        ("ngram_jaccard", dedup.ngram_jaccard_pairs(docs, persist=False)),
-        ("ann_lsh_topk", similarity.lsh_bucketed_topk(emb, [0, 1], k=3,
-                                                      persist=False)),
-        ("embedding_near_dups", similarity.embedding_near_dups(
-            emb, persist=False)),
+        ("ngram_jaccard", dedup.ngram_jaccard_pairs(docs)),
+        ("ann_lsh_topk", similarity.lsh_bucketed_topk(emb, [0, 1], k=3)),
+        ("embedding_near_dups", similarity.embedding_near_dups(emb)),
     ]:
         p = _plan(df)
         assert "CartesianProduct" not in p, name
@@ -686,6 +714,7 @@ def test_dedup_and_ann_plans_are_equi_joins(spark):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p
     assert "InMemoryTableScan" in p  # the persisted IVF assignment
+    release_cached()
 
 
 def test_timeseries_plans_have_no_nested_loops(spark):
