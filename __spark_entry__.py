@@ -565,8 +565,12 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over banded LSH candidates — exact
-    oracle (same literal hyperplanes as ann_lsh_topk).  Mirrored copies
+    """Embedding-cosine near-dup pairs over banded LSH candidates, scored
+    inside their band bucket (one band_key shuffle, one mapInArrow kernel;
+    no join, distinct or cache) — exact oracle (same literal hyperplanes
+    as ann_lsh_topk; the oracle still self-joins the bands, takes the
+    distinct pairs and joins the vectors back, so it checks the kernel's
+    first-shared-band ownership against a plain union).  Mirrored copies
     (vec_id+1000000) guarantee positives (cosine = 1)."""
     e = _emb_double(spark, sf_dir)
     mirror = e.where(F.col("vec_id") % 10 == 0).select(

@@ -342,10 +342,19 @@ def test_ann_scorer_runs_once_per_row(emb):
     """The ``score_e6`` filter over the cosine scorer must not be pushed
     below it with a copy of the UDF (two ArrowEvalPython nodes, every row
     scored twice).  ``asNondeterministic()`` on the scorer is what
-    prevents that; dropping it fails this test."""
+    prevents that; dropping it fails this test.
+
+    ``embedding_near_dups`` scores in one ``mapInArrow`` kernel; its
+    band-key UDF must run once per row of its one input branch, which the
+    ``asNondeterministic()`` on that instance guarantees (without it
+    Catalyst copies the UDF under the ``size(keys) > 0`` filter it infers
+    for the explode)."""
     assert _scorer_nodes(similarity.cosine_topk(emb, [1, 2], k=3)) == 1
     assert _scorer_nodes(similarity.lsh_bucketed_topk(emb, [1, 2], k=3)) == 1
-    assert _scorer_nodes(similarity.embedding_near_dups(emb)) == 1
+    plan = similarity.embedding_near_dups(emb)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("ArrowEvalPython [_band_keys(") == 1
     # IVF's re-rank; its centroid assignment sits under the cached index,
     # which the plan string prints once per scan of it
     assert _scorer_nodes(similarity.ivf_topk(
@@ -363,6 +372,137 @@ def test_embedding_near_dups_finds_pair(emb):
     pairs = {(r["id_a"], r["id_b"]) for r in
              similarity.embedding_near_dups(emb, threshold_e6=999_000).collect()}
     assert (1, 101) in pairs and (1, 100) in pairs
+
+
+def _ref_band_keys(v, bands, rows, dims):
+    """Plain-Python band keys: one left-to-right dot per hyperplane."""
+    v = list(v) + [0.0] * (dims - len(v))
+    keys = []
+    for b in range(bands):
+        bits = ""
+        for r in range(b * rows, (b + 1) * rows):
+            acc = 0.0
+            for x, w in zip(v, similarity._plane(r, dims)):
+                acc += x * w
+            bits += "1" if acc >= 0.0 else "0"
+        keys.append(f"{b}|{bits}")
+    return keys
+
+
+def _ref_cosine_e6(a, b):
+    """Plain-Python ``floor(cosine * 1e6)``, None for a zero norm."""
+    import math
+    dot = na2 = nb2 = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na2 += x * x
+        nb2 += y * y
+    den = math.sqrt(na2) * math.sqrt(nb2)
+    return None if den == 0.0 else math.floor((dot / den) * 1e6)
+
+
+def test_embedding_near_dups_matches_brute_force(spark):
+    """The in-bucket kernel returns exactly the pairs of a brute-force
+    reference (share any band key, score with the same fold, keep
+    ``score_e6 >= threshold``) at several thresholds, with bucket runs
+    split across 7-row Arrow batches.  The inputs hold exact duplicates
+    (all 4 bands shared, emitted once), near-dups sharing 2 or 3 bands, a
+    short vector with its zero-padded twin, and a NULL vector."""
+    import itertools
+    import random
+
+    dims, bands, rows = 16, 4, 4  # 16 buckets per band: crowded runs
+    rnd = random.Random(11)
+    base = [rnd.uniform(-1, 1) for _ in range(dims)]
+    vecs = {i: [rnd.uniform(-1, 1) for _ in range(dims)] for i in range(40)}
+    vecs.update({100 + i: list(base) for i in range(10)})  # exact dups
+    shared = {}  # near-dups of ``base`` by number of bands shared
+    base_keys = _ref_band_keys(base, bands, rows, dims)
+    for k in range(400):
+        if len(shared.get(2, [])) >= 3 and len(shared.get(3, [])) >= 3:
+            break
+        eps = 0.05 + 0.002 * k
+        v = [x + rnd.uniform(-eps, eps) for x in base]
+        n = sum(a == b for a, b in
+                zip(base_keys, _ref_band_keys(v, bands, rows, dims)))
+        if n in (2, 3) and len(shared.setdefault(n, [])) < 3:
+            shared[n].append(v)
+            vecs[200 + k] = v
+    assert len(shared.get(2, [])) == 3 and len(shared.get(3, [])) == 3
+    vecs[300] = base[:12]                   # short: read as zero-padded
+    vecs[301] = base[:12] + [0.0] * 4
+    vecs[302] = None                        # NULL: never paired
+    emb = spark.createDataFrame(
+        pd.DataFrame(list(vecs.items()), columns=["vec_id", "embedding"]),
+        "vec_id long, embedding array<double>")
+
+    keys = {i: set(_ref_band_keys(v, bands, rows, dims))
+            for i, v in vecs.items() if v is not None}
+    padded = {i: v + [0.0] * (dims - len(v))
+              for i, v in vecs.items() if v is not None}
+    scores = {}
+    for a, b in itertools.combinations(sorted(keys), 2):
+        if keys[a] & keys[b]:
+            s = _ref_cosine_e6(padded[a], padded[b])
+            if s is not None:
+                scores[(a, b)] = s
+    assert scores[(300, 301)] >= 999_999
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for t in (-1_000_000, 0, 900_000, 999_000):
+            want = {(a, b, s) for (a, b), s in scores.items() if s >= t}
+            got = [(r["id_a"], r["id_b"], r["score_e6"]) for r in
+                   similarity.embedding_near_dups(
+                       emb, threshold_e6=t, bands=bands, rows=rows,
+                       dims=dims).collect()]
+            assert len(got) == len(set(got)), f"duplicate pairs at t={t}"
+            assert set(got) == want, f"pair set diverged at t={t}"
+    finally:
+        spark.conf.set(key, old)
+    found = {p[:2] for p in got}  # at t = 999_000
+    assert {(100 + a, 100 + b) for a, b in
+            itertools.combinations(range(10), 2)} <= found
+    assert not any(302 in p for p in found)
+
+
+def test_embedding_near_dups_bounded_on_duplicate_flood(spark):
+    """1,500 copies of one vector among random ones: every copy lands in
+    the same bucket of every band, and the kernel returns each of the
+    C(1500, 2) pairs once, at cosine 1, from a plan with one exchange (the
+    band_key repartition) and no join, broadcast or cache."""
+    import random
+    import time
+
+    rnd = random.Random(5)
+    n_dup = 1500
+    rows = [(i, [0.25] * 16) for i in range(n_dup)]  # norm exactly 1.0
+    rows += [(n_dup + i, [rnd.gauss(0, 1) for _ in range(16)])
+             for i in range(500)]
+    emb = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding"]),
+        "vec_id long, embedding array<double>")
+    out = similarity.embedding_near_dups(emb, dims=16)
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("Join", "BroadcastExchange", "InMemoryRelation"):
+        assert node not in plan, node
+    base = emb._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") - base.count("Exchange") == 1
+    assert "Exchange hashpartitioning(band_key" in plan
+
+    t0 = time.monotonic()
+    got = out.agg(F.count("*").alias("n"),
+                  F.count_distinct("id_a", "id_b").alias("distinct"),
+                  F.min("score_e6").alias("lo"), F.max("score_e6").alias("hi"),
+                  F.max("id_b").alias("top")).first()
+    elapsed = time.monotonic() - t0
+    assert got["n"] == got["distinct"] == n_dup * (n_dup - 1) // 2
+    assert got["lo"] == got["hi"] == 1_000_000
+    assert got["top"] == n_dup - 1  # no random vector paired
+    assert elapsed < 120, f"flood took {elapsed:.1f} s"
 
 
 def test_banded_lsh_recall_vs_exact(emb):
@@ -575,14 +715,16 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
             emb, [1], k=3, dims=16),
         "ivf_topk": lambda: similarity.ivf_topk(
             emb, [1], k=3, n_cells=8, dims=16),
-        "embedding_near_dups": lambda: similarity.embedding_near_dups(
-            emb, dims=16),
     }
     for name, op in operators.items():
         op().collect()
         assert not cache.isEmpty(), f"{name} cached nothing"
         assert release_cached() > 0, name
         assert cache.isEmpty(), f"{name} left a relation cached"
+    # scores inside its shuffle: nothing to cache, nothing to release
+    similarity.embedding_near_dups(emb, dims=16).collect()
+    assert cache.isEmpty(), "embedding_near_dups cached a relation"
+    assert release_cached() == 0
 
 
 def test_ngram_jaccard_df_cap_drops_stop_shingles(spark):
@@ -702,11 +844,13 @@ def test_dedup_and_ann_plans_are_equi_joins(spark):
         ("simhash_pairs", dedup.simhash_near_pairs(docs)),
         ("ngram_jaccard", dedup.ngram_jaccard_pairs(docs)),
         ("ann_lsh_topk", similarity.lsh_bucketed_topk(emb, [0, 1], k=3)),
-        ("embedding_near_dups", similarity.embedding_near_dups(emb)),
     ]:
         p = _plan(df)
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
+    # embedding near-dups score inside their band bucket: no join at all
+    p = _plan(similarity.embedding_near_dups(emb))
+    assert "Join" not in p and "BroadcastExchange" not in p
     # IVF: without the index persist, the N x n_cells broadcast assignment
     # would appear under BOTH consumers of `ranked`; with it the plan reads
     # the materialized assignment and the one nested loop is broadcast
