@@ -481,7 +481,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct=False (min-agg ignores duplicates) drops the widest shuffle;
-    # lsh_candidate_pairs persists the tiny band relation for its self-join
+    # lsh_candidate_pairs pairs each band bucket in one Arrow pass (one
+    # band_key exchange, no join, no cache)
     sh = dedup.word_shingles(_docs2(spark, sf_dir), distinct=False)
     return dedup.lsh_candidate_pairs(dedup.minhash_signatures(sh))
 

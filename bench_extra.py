@@ -10,8 +10,18 @@ Usage::
     python bench_extra.py time  <sf_dir> <query> [query ...]
     python bench_extra.py plan  <sf_dir> <out_dir> <suffix> <query> [...]
     python bench_extra.py noop  <sf_dir> <query> [query ...]
+    python bench_extra.py fresh <sf_dir> <query> [query ...]
 
 ``time`` prints one JSON line {"queries": {name: best_sec}, "sf": dir}.
+``fresh`` follows the per-pass protocol of ``perfbench``'s near-dup
+workload instead: every rep rebuilds the query's DataFrame, runs its
+``toArrow()`` and then calls ``release_cached()``, so no rep reads a
+relation an earlier rep persisted; the timed span is the build plus
+``toArrow()`` (building runs jobs for some queries, e.g. the eager
+label rounds of ``dedup_groups_scalable``).  It prints the median of 5
+reps after 1 warm-up rep in the same JSON shape.  ``time`` reuses one
+DataFrame for its warm and timed passes, so a query that persists an
+intermediate is timed reading that cache.
 ``noop`` times a full-materialization noop write instead of count()
 (count() is what bench.py measures; noop shows whether column pruning
 was hiding work).
@@ -28,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -44,7 +55,7 @@ def main() -> None:
     mode = sys.argv[1]
     sf_dir = sys.argv[2]
     import __spark_entry__ as entry_mod
-    from qwen_ocr_spark.plans.session import gc_hint, get_spark
+    from qwen_ocr_spark.plans.session import gc_hint, get_spark, release_cached
 
     spark = get_spark(app_name=f"bench-extra-{mode}")
     queries = entry_mod.queries()
@@ -66,6 +77,16 @@ def main() -> None:
     timings = {}
     for name in sys.argv[3:]:
         spark.sparkContext.setJobDescription(name)
+        if mode == "fresh":
+            query = _get(queries, name)
+            times = []
+            for _ in range(6):  # 1 warm-up + 5 timed reps
+                t0 = time.perf_counter()
+                query(spark, sf_dir).toArrow()
+                times.append(time.perf_counter() - t0)
+                release_cached()
+            timings[name] = round(statistics.median(times[1:]), 3)
+            continue
         df = _get(queries, name)(spark, sf_dir)
         gc_hint(spark)
 

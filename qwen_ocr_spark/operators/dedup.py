@@ -5,9 +5,10 @@ Scale-first shapes (the 100 TB rationale, per operator):
 * exact      — one hash-aggregate on md5(text): a single shuffle keyed by a
                16-byte digest, map-side partial agg; no text moves twice.
 * minhash    — shingle explode → per-doc min-aggregate per hash slot (k
-               independent permutations approximated by seeded md5) → LSH
-               band join.  Candidate pairs only: documents never pairwise
-               compare unless a band collides, which is what keeps it
+               independent permutations approximated by seeded md5) → one
+               LSH bucket pass (``similarity.band_bucket_pairs``).
+               Candidate pairs only: documents never pairwise compare
+               unless a band collides, which is what keeps it
                sub-quadratic at corpus scale.
 * simhash    — 32-bit signature from per-token md5 high bits;
                ``simhash_near_pairs`` finds pairs within hamming radius d
@@ -32,9 +33,12 @@ id_b, ...)`` with ``id_a < id_b``, which is also what
 registered with ``plans.session.track_cached`` and released by
 ``release_cached()``.
 
-Everything is built-in-function SQL (md5/least/greatest/window) — no Python
-UDFs — and every operator has an exact DuckDB oracle in __spark_entry__.py
-because md5 is engine-independent.
+Most of it is built-in-function SQL (md5/least/greatest/window).  Two
+steps are Python: the word shingles (one vectorized pandas_udf,
+``_shingle_array_udf``) and the LSH bucket kernel behind
+``lsh_candidate_pairs`` (one ``mapInArrow`` pass).  Every operator has
+an exact DuckDB oracle in __spark_entry__.py because md5 is
+engine-independent.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from qwen_ocr_spark.operators.similarity import band_pairs, cache_by_band_key
+from qwen_ocr_spark.operators.similarity import band_bucket_pairs
 from qwen_ocr_spark.plans.session import track_cached
 
 MINHASH_SLOTS = 8
@@ -50,6 +54,8 @@ MINHASH_BANDS = 4  # 2 slots per band
 SHINGLE_N = 3
 MAX_SHINGLE_DF = 256  # default document-frequency cap for the jaccard join
 SIMHASH_RADIUS = 3    # default hamming radius; 4 chunks of 8 bits
+_LABEL_ROUNDS = 25    # connected_components: label-propagation rounds
+                      # before a deeper component is finished by _cc_star
 _BITMAP_WORDS = 4     # 4 x 64 = 256-bit hashed doc bitmaps (jaccard
                       # pre-filter; exactness does not depend on the width,
                       # only pruning power does).  Round-6 A/B at sf1: the
@@ -201,51 +207,45 @@ def doc_shingle_sets(df: DataFrame, n: int = SHINGLE_N) -> DataFrame:
         _shingle_array_udf(n, distinct=True)(F.col("text")).alias("_set"))
 
 
-def minhash_signatures(shingles: DataFrame,
-                       slots: int = MINHASH_SLOTS) -> DataFrame:
-    """k-slot MinHash: slot_i = min(md5(i || '|' || shingle)) per document.
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """``MINHASH_SLOTS``-slot MinHash: slot_i = min(md5(i || '|' ||
+    shingle)) per document.
 
     Seeded md5 approximates k independent hash permutations and is
     bit-identical across engines (the oracle property)."""
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")).cast("binary"))).alias(f"mh{i}")
-        for i in range(slots)
+        for i in range(MINHASH_SLOTS)
     ]
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(sigs: DataFrame, slots: int = MINHASH_SLOTS,
-                        bands: int = MINHASH_BANDS) -> DataFrame:
-    """Band the signature, self-join per band, emit distinct (a < b) pairs.
-
-    The stacked (doc_id, band_key) relation feeds BOTH sides of the
-    self-join, so it is cached (``bands`` rows per document — tiny next to
-    the text) and the upstream scan → shingle explode → min-agg runs once
-    instead of twice — the same relation and join the banded ANN uses
-    (``similarity.cache_by_band_key`` / ``band_pairs``).
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """Band the signature (``MINHASH_BANDS`` bands of
+    ``MINHASH_SLOTS // MINHASH_BANDS`` slots) and emit the distinct
+    (a < b) pairs sharing a band, from one bucket pass
+    (``similarity.band_bucket_pairs``, the step the embedding LSH uses):
+    one band_key exchange, no join, no cache, no ``distinct``.
 
     Band keys are BINARY — one band-index byte plus ``unhex`` of each
-    md5-hex slot (fixed 1+16n bytes) — instead of the round-5 pipe-joined
-    hex string (~70 chars): hex↔binary is bijective and every part is
-    fixed-width, so key equality (and therefore the candidate pair set)
-    is IDENTICAL, while the sort-merge join sorts/compares half the bytes
-    — measured 0.94 s → 0.38 s on the 220k-row self-join at sf1 (guide
-    §2.3 "narrower types"; round 6)."""
-    rows_per_band = slots // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.unhex(F.col(f"mh{i}"))
-                 for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        band_cols.append(F.concat(F.lit(bytes([b])), *parts).alias(f"band{b}"))
-    banded = sigs.select(F.col("doc_id"), *band_cols)
-    stacked = banded.select(
-        F.col("doc_id"),
-        F.explode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias("band_key"),
-    )
-    return band_pairs(cache_by_band_key(stacked))
+    md5-hex slot (fixed 1+16n bytes; 33 at the constants) — instead of
+    the round-5 pipe-joined hex string (~70 chars): hex↔binary is
+    bijective and every part is fixed-width, so key equality (and
+    therefore the candidate pair set) is IDENTICAL while the sort
+    compares half the bytes (guide §2.3 "narrower types"; round 6), and
+    the kernel reads them as fixed-width numpy bytes."""
+    per_band = MINHASH_SLOTS // MINHASH_BANDS
+    keys = F.array(*[
+        F.concat(F.lit(bytes([b])),
+                 *[F.unhex(F.col(f"mh{i}"))
+                   for i in range(b * per_band, (b + 1) * per_band)])
+        for b in range(MINHASH_BANDS)])
+    return band_bucket_pairs(
+        sigs.select("doc_id", keys.alias("keys"))
+        .select("doc_id", F.explode("keys").alias("band_key"), "keys"))
 
 
-def _cc_star(e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
+def _cc_star(e: DataFrame) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond") — O(log n)
     rounds even on adversarially deep components, where min-label
@@ -262,9 +262,11 @@ def _cc_star(e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
 
     Convergence = the canonical edge set is stable (a star forest whose
     centers are component minima); checked with a set-difference count,
-    which cannot overflow under ANSI mode.  Each round localCheckpoints
-    (truncated lineage — the driver-tree growth fix measured in round 3).
-    Returns (labels(node, label), converged)."""
+    which cannot overflow under ANSI mode.  The rounds run until the edge
+    set is stable (the alternation always gets there), so no partially
+    merged labeling is returned.  Each round localCheckpoints (truncated
+    lineage — the driver-tree growth fix measured in round 3).  Returns
+    ``(node, group_id)`` over the nodes of ``e``'s ``(a, b)`` edges."""
     def canon(df: DataFrame) -> DataFrame:
         return (df.select(F.greatest("a", "b").alias("a"),
                           F.least("a", "b").alias("b"))
@@ -272,8 +274,7 @@ def _cc_star(e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
 
     E = canon(e).localCheckpoint(eager=True)
     n_edges = E.count()
-    converged = False
-    for _ in range(max_iter):
+    while True:
         sym = E.union(E.select(F.col("b").alias("a"), F.col("a").alias("b")))
         lm = (sym.groupBy("a").agg(F.min("b").alias("mn"))
                  .select("a", F.least("a", "mn").alias("m")))
@@ -291,16 +292,14 @@ def _cc_star(e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
         n2 = E2.count()
         if n2 == n_edges and E2.subtract(E).count() == 0:
             E = E2
-            converged = True
             break
         E, n_edges = E2, n2
     nodes = (e.select(F.col("a").alias("node"))
              .union(e.select(F.col("b").alias("node"))).distinct())
     mins = E.groupBy("a").agg(F.min("b").alias("m"))
-    labels = (nodes.join(mins, nodes["node"] == mins["a"], "left")
-              .select("node", F.coalesce(F.col("m"),
-                                         F.col("node")).alias("label")))
-    return labels, converged
+    return (nodes.join(mins, nodes["node"] == mins["a"], "left")
+            .select("node", F.coalesce(F.col("m"),
+                                       F.col("node")).alias("group_id")))
 
 
 def lsh_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
@@ -325,19 +324,18 @@ def lsh_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     reach any positive threshold).  Output: (id_a, id_b, jaccard_e4) for
     pairs at/above threshold — same contract as ngram_jaccard_pairs.
 
-    Two deterministic-only relations are cached (round 6): the MinHash
-    signature aggregate (min() slots) feeding the band self-join, and the
-    per-doc distinct-shingle sets from :func:`doc_shingle_sets` feeding
-    both verify joins — row-local expressions, NO collect_set aggregate (a
-    persisted collect_set plan is silently re-run by every join consumer
-    because collect aggregates are flagged non-deterministic).  The verify
-    is ``size(array_intersect)`` per candidate pair — two joins that move
-    |candidates| rows instead of re-shuffling the full shingle relation
-    twice.  ``inter >= 1`` preserves the old inner-join semantics
+    One relation is cached: the per-doc distinct-shingle sets from
+    :func:`doc_shingle_sets`, which both verify joins read — row-local
+    expressions, NO collect_set aggregate (a persisted collect_set plan is
+    silently re-run by every join consumer because collect aggregates are
+    flagged non-deterministic).  The MinHash signatures feed only the one
+    bucket pass of ``lsh_candidate_pairs``, so they are not cached.  The
+    verify is ``size(array_intersect)`` per candidate pair — two joins
+    that move |candidates| rows instead of re-shuffling the full shingle
+    relation twice.  ``inter >= 1`` preserves the old inner-join semantics
     (zero-overlap candidates drop out even at threshold 0)."""
-    sigs = track_cached(minhash_signatures(
-        word_shingles(df, distinct=False)).persist())
-    pairs = lsh_candidate_pairs(sigs)
+    pairs = lsh_candidate_pairs(minhash_signatures(
+        word_shingles(df, distinct=False)))
     arr = track_cached(doc_shingle_sets(df).persist())
     aa = arr.select(F.col("doc_id").alias("id_a"), F.col("_set").alias("_seta"))
     ab = arr.select(F.col("doc_id").alias("id_b"), F.col("_set").alias("_setb"))
@@ -369,8 +367,7 @@ def lsh_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25,
-                         algorithm: str = "label") -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-group clustering: connected components over a near-dup
     pair relation → ``(node, group_id)`` with group_id = the component's
     minimum id (the canonical "keep" representative).  The step every
@@ -386,18 +383,15 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     mode at large-id/corpus scale).  Near-dup clusters are shallow
     (dozens of docs, diameter ~ a few hops), so this beats the
     constant-factor overhead of the alternating large-star/small-star
-    construction that would be preferred if components could span
-    millions of rows.  Each round is one int-pair equi-join +
-    min-aggregate — the only state shuffled is (node, label).
+    construction.  Each round is one int-pair equi-join + min-aggregate —
+    the only state shuffled is (node, label).
 
-    If ``max_iter`` rounds pass without reaching the fixpoint (an
-    adversarially long chain — outside the documented shallow regime), a
-    ``RuntimeWarning`` fires rather than silently returning a
-    partially-merged labeling; callers can raise ``max_iter`` or pass
-    ``algorithm="star"`` — the alternating large-star/small-star
-    implementation (``_cc_star``, round 5) that converges in O(log n)
-    rounds regardless of component depth (a 1,000-node chain finishes in
-    a handful of rounds where label propagation needs 999).
+    A component deeper than ``_LABEL_ROUNDS`` hops (an adversarially long
+    chain) leaves labels still moving after the last round; then the
+    labeling is discarded and the graph is finished by ``_cc_star``
+    (alternating large-star/small-star, round 5), which converges in
+    O(log n) rounds whatever the depth.  A partially merged labeling is
+    never returned.
 
     Each round materializes via ``localCheckpoint(eager=True)``, not
     persist: the logical plan references the previous round's labels
@@ -408,34 +402,21 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     tiny (two ints per node) and freed by GC + ContextCleaner after the
     call (the streaming-accumulation caveat in sinks/manifest.py does
     not apply to a bounded batch loop).  The symmetric edge relation every
-    round joins is cached through ``track_cached``."""
-    import warnings
-
+    round (and the star fallback) reads is cached through
+    ``track_cached``."""
     e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    if algorithm == "star":
-        labels, converged = _cc_star(e, max_iter)
-        if not converged:
-            warnings.warn(
-                f"connected_components(star) hit max_iter={max_iter} "
-                "before the edge set stabilized; the grouping may be "
-                "partially merged.", RuntimeWarning, stacklevel=2)
-        return labels.select(F.col("node"), F.col("label").alias("group_id"))
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} "
-                         "(expected 'label' or 'star')")
     edges = track_cached(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist())
     labels = (edges.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint(eager=True))
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(_LABEL_ROUNDS):
         nbr = (
             edges.join(labels.select(F.col("node").alias("b"),
                                      F.col("label").alias("nlabel")), on="b")
             .groupBy("a").agg(F.min("nlabel").alias("min_nbr"))
         )
-        new_labels = (
+        labels = (
             labels.join(nbr, labels["node"] == nbr["a"], "left")
             .select(labels["node"],
                     F.least(labels["label"],
@@ -448,19 +429,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
         # one scalar per round: how many labels still moved (0 = fixpoint).
         # A row count cannot overflow — a sum over bigint labels could
         # THROW under this repo's default ANSI mode at large-id scale.
-        n_changed = new_labels.where("_changed").count()
-        labels = new_labels
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components hit max_iter={max_iter} before the "
-            "fixpoint: the returned grouping may be partially merged "
-            "(component diameter exceeds max_iter). Raise max_iter or use "
-            "a large-star/small-star variant for deep components.",
-            RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("node"), F.col("label").alias("group_id"))
+        if labels.where("_changed").count() == 0:
+            return labels.select(F.col("node"),
+                                 F.col("label").alias("group_id"))
+    return _cc_star(edges)
 
 
 def duplicate_groups(df: DataFrame, threshold: float = 0.8,

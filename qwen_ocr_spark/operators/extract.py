@@ -66,6 +66,10 @@ FIGURES_COLUMNS = ["url", "page_number", "fig_number", "bbox", "caption",
 _DPI = 130.0
 _PT_PER_IN = 72.0
 
+# extract_documents' bridge: every PDF_EVERY-th doc_id becomes a PDF page,
+# the others HTML (the extract_docs oracle assumes 7)
+PDF_EVERY = 7
+
 
 def _extract_one(url: str, payload: bytes) -> dict:
     if payload[:5] == b"%PDF-":
@@ -137,7 +141,6 @@ def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def extract_documents(docs_df: DataFrame, *, figured: bool = False,
-                      pdf_every: int = 7,
                       columns: list[str] | None = None) -> DataFrame:
     """documents → out in ONE Python pass: the bridge payload is
     synthesized and extracted inside the same ``mapInPandas`` task, so the
@@ -156,8 +159,10 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
     fused path for the synthesized documents bridge, where generation is
     itself Python and fusing is free.
 
-    ``figured=True`` uses the figured-HTML bridge (one closed-form figure
-    per document, all-HTML) — the extract_figures recipe.
+    Without ``figured`` a doc_id divisible by ``PDF_EVERY`` is bridged as
+    a PDF, every other one as HTML.  ``figured=True`` uses the
+    figured-HTML bridge (one closed-form figure per document, all-HTML) —
+    the extract_figures recipe.
 
     ``columns`` narrows the UDF's OUTPUT to the named ``OUT_SCHEMA``
     fields (any order; emitted in schema order).  A map node is opaque to
@@ -205,7 +210,7 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
             if figured:
                 yield (f"https://docs.example.com/fig/{doc_id}", ts,
                        _bridge_html_figured(doc_id, text))
-            elif doc_id % pdf_every == 0:
+            elif doc_id % PDF_EVERY == 0:
                 yield (f"https://docs.example.com/{doc_id}.pdf", ts,
                        _bridge_pdf(doc_id, text))
             else:

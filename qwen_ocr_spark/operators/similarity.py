@@ -17,14 +17,17 @@ persists is registered with ``plans.session.track_cached`` and released by
   Candidates = vectors sharing any band bucket with the query; exact
   cosine re-rank on candidates only.
 
-Near-dup detection by embedding (``embedding_near_dups``) = pairs above a
-cosine threshold among band-bucket collisions, scored where the buckets
-land: the (vector, band) rows are hash-partitioned by band key, sorted by
-(band key, id), and one ``mapInArrow`` kernel scores every pair of each
-bucket run.  A pair is emitted only in the first band its two vectors
-share, so the union over bands needs no ``distinct``; nothing is cached,
-joined or broadcast, and a kernel holds one Arrow batch, the bucket
-run still open and one pair block.
+Every banded-LSH candidate step (``lsh_candidate_pairs``,
+``embedding_near_dups`` and MinHash's ``dedup.lsh_candidate_pairs``) is
+one bucket pass, ``band_bucket_pairs``: the (id, band) rows are
+hash-partitioned by band key, sorted by (band key, id), and one
+``mapInArrow`` kernel walks each bucket run.  A pair is emitted only in
+the first band its two rows share, so the union over bands needs no
+``distinct``; nothing is cached, joined or broadcast, and a kernel holds
+one Arrow batch, the bucket run still open and one pair block.  Scoring
+is the only part a caller adds (``embedding_near_dups`` scores cosine in
+the kernel).  ``lsh_bucketed_topk`` probes the corpus band keys with the
+query rows' own keys in one broadcast equi-join.
 
 One scorer: ``_cosine_e6`` is the only cosine fold.  Its Arrow UDF
 ``_cosine_e6_udf`` serves ``cosine_topk``, ``lsh_bucketed_topk`` and
@@ -32,19 +35,21 @@ One scorer: ``_cosine_e6`` is the only cosine fold.  Its Arrow UDF
 The scorer, the kernel and the band-key projector (``_band_key_matrix``,
 one numpy helper behind every band-key UDF) all read vectors through one
 Arrow reader, ``_embedding_matrix``, so an input one rejects the others
-reject too.  No embedding UDF goes through pandas.
+reject too.  No embedding UDF goes through pandas.  ``vec_id`` is a key:
+the bucket pass does not deduplicate the pairs of an id that appears in
+two rows.
 
 Banding math (why b x r, not one flat signature — VERDICT r1 item 3):
 with r planes per band there are 2^r buckets per band, so the expected
-intra-band pair count on N uniform vectors (the band self-join's rows,
-or the pairs the near-dup kernel enumerates) is N^2 / 2^r per band —
-r=16 shrinks each band's pairs 256x vs the old flat 8-plane signature
-(N^2/256 was quadratic-with-a-constant at 10^9+ rows).  Recall for a pair
-at angle theta: p = 1 - theta/pi per plane, so P(candidate) =
-1 - (1 - p^r)^b.  At near-dup thresholds (cosine >= 0.99, p ~ 0.955) the
-defaults r=16, b=4 give ~0.93 recall; exact duplicates (cosine 1.0) are
-always candidates.  For looser thresholds lower ``rows`` and raise
-``bands`` — the knobs trade join cost against recall explicitly.
+intra-band pair count on N uniform vectors (the pairs the bucket kernel
+enumerates) is N^2 / 2^r per band — r=16 shrinks each band's pairs 256x
+vs the old flat 8-plane signature (N^2/256 was quadratic-with-a-constant
+at 10^9+ rows).  Recall for a pair at angle theta: p = 1 - theta/pi per
+plane, so P(candidate) = 1 - (1 - p^r)^b.  At near-dup thresholds
+(cosine >= 0.99, p ~ 0.955) the defaults r=16, b=4 give ~0.93 recall;
+exact duplicates (cosine 1.0) are always candidates.  For looser
+thresholds lower ``rows`` and raise ``bands`` — the knobs trade
+bucket-pair cost against recall explicitly.
 """
 
 from __future__ import annotations
@@ -58,11 +63,11 @@ from qwen_ocr_spark.plans.session import track_cached
 
 LSH_BANDS = 4      # near-dup defaults: 4 bands x 16 planes = 64 planes total
 LSH_ROWS = 16
-ANN_BANDS = 4      # top-k ANN defaults: looser buckets (2^8 per band) —
+ANN_BANDS = 4      # top-k ANN bands: looser buckets (2^8 per band) —
 ANN_ROWS = 8       # generic neighbors sit at wide angles, so near-dup-tight
                    # bands would return zero candidates; 4x8 probes a few
                    # percent of the corpus per query (IVF-probe analog)
-PAIR_BLOCK = 16_384  # near-dup kernel: candidate pairs scored per block,
+PAIR_BLOCK = 16_384  # bucket kernel: candidate pairs tested per block,
                      # and the most pairs one output RecordBatch carries
 
 
@@ -131,7 +136,7 @@ def _cosine_e6(A: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, ok
 
 
-def _cosine_e6_udf(dims: int = 64):
+def _cosine_e6_udf(dims: int):
     """Vectorized Arrow UDF: (vec_a, vec_b) → floor(cosine * 1e6) bigint,
     NULL when either norm is zero (``_cosine_e6``).
 
@@ -209,37 +214,6 @@ def _plane(plane: int, dims: int) -> list[float]:
     ]
 
 
-def cache_by_band_key(buckets: DataFrame) -> DataFrame:
-    """Persist an ``(id, band_key)`` relation hash-partitioned by
-    ``band_key``, registered with ``track_cached``.
-
-    Every consumer joins it on band_key (candidate self-join, query-probe
-    join), and an InMemoryTableScan reports the cached plan's output
-    partitioning, so both sides of those joins read co-partitioned cache
-    and plan ZERO exchanges on this side (guide §2.4 — the in-session
-    analog of a bucketed table; also two fewer AQE stage rounds per
-    action).  The one repartition happens at cache build.  Trade-off,
-    documented: a cached side has no exchange for AQE skew-splitting to
-    rewrite — bounded band-bucket multiplicity is the banding's own
-    contract (module math)."""
-    return track_cached(buckets.repartition("band_key").persist())
-
-
-def band_pairs(buckets: DataFrame) -> DataFrame:
-    """Distinct ``(id_a < id_b)`` pairs sharing at least one band_key, by
-    a self-join of an ``(id, band_key)`` relation (id column first) that
-    ``cache_by_band_key`` built.  The banded-LSH candidate step of both
-    MinHash (``dedup.lsh_candidate_pairs``) and the embedding LSH."""
-    id_col = buckets.columns[0]
-    ida, idb = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
-    return (
-        buckets.alias("l").join(buckets.alias("r"), on="band_key")
-        .where(ida < idb)
-        .select(ida.alias("id_a"), idb.alias("id_b"))
-        .distinct()
-    )
-
-
 def _band_key_matrix(E: np.ndarray, planes: np.ndarray,
                      rows: int) -> np.ndarray:
     """``(n, bands)`` packed int64 band keys of an ``(n, dims)`` embedding
@@ -284,64 +258,165 @@ def _band_keys_udf(bands: int, rows: int, dims: int):
     return F.arrow_udf(_band_keys, "array<long>")
 
 
-def banded_buckets(emb: DataFrame, bands: int = LSH_BANDS,
-                   rows: int = LSH_ROWS, dims: int = 64) -> DataFrame:
-    """Stacked (vec_id, band_key) relation — one row per (vector, band),
-    cached by ``cache_by_band_key``: the signature of a corpus is computed
-    once and served to every consumer — both sides of a candidate join,
-    or many queries against one corpus — exactly how a production ANN
-    index is built (signatures land in a table, not recomputed per query).
+def _key_numpy(keys: pa.Array) -> np.ndarray:
+    """numpy form of a flat band-key column: int64 keys as they are,
+    binary keys (all of one width, e.g. MinHash's 33 bytes) as ``S{width}``
+    after a ``fixed_size_binary`` cast, so run boundaries and shared-band
+    tests are plain numpy ``==`` for both."""
+    if pa.types.is_integer(keys.type):
+        return keys.to_numpy()
+    width = len(keys[0].as_py())
+    fixed = keys.cast(pa.binary(width))
+    return np.frombuffer(fixed.buffers()[1], dtype=f"S{width}",
+                         count=len(fixed), offset=fixed.offset * width)
 
-    The band keys are computed by ONE vectorized **scalar Arrow UDF**
-    (``_band_keys_udf``) returning all ``bands`` keys as an array,
-    exploded JVM-side.  Three accumulated findings led here:
 
-    * the round-3 unrolled SQL tree (32 planes x 64 literal terms, ~20k
-      nodes) cost the DRIVER ~0.3 s re-canonicalization per action even
-      fully cached (the tree lives on inside the InMemoryRelation plan);
-    * the first round-6 fix (``mapInArrow``) killed the tree but Python
-      MAP nodes are flagged non-deterministic, so a JOIN consumer
-      silently re-ran the Arrow pass instead of reading the persisted
-      cache — measured 0.44 s per action for a 2,111-row candidate join;
-    * a scalar UDF is deterministic by default, so the persisted
-      (id, band_key) relation is ACTUALLY reused by both self-join sides.
-      This instance must stay deterministic for that reason.  It is
-      exploded directly, not kept beside its explode, so no inferred
-      ``size(keys) > 0`` filter copies it (contrast
-      ``embedding_near_dups``)."""
-    return cache_by_band_key(emb.select(
-        F.col("vec_id"),
-        F.explode(_band_keys_udf(bands, rows, dims)(F.col("embedding")))
-        .alias("band_key"),
-    ))
+def _bucket_run_kernel(read, score):
+    """``mapInArrow`` kernel of ``band_bucket_pairs``: reads
+    ``(id, band_key, keys, ...)`` rows sorted by ``(band_key, id)`` within
+    the partition, where ``keys`` holds all of a row's band keys in band
+    order, and yields ``(id_a, id_b[, score_e6])`` batches of at most
+    ``PAIR_BLOCK`` pairs.
+
+    Rows of one band_key form a run.  A run may span Arrow batches, so the
+    rows after the last run boundary seen stay open until the next
+    boundary (or the end of the partition); everything before it is a
+    set of complete runs and is paired.  Every ``i < j`` pair of a run is
+    a candidate; it is emitted only in the FIRST band both rows share
+    (their ``keys`` differ in every earlier band; a row's band is the
+    position of its band_key in its own keys), which is the union over
+    bands without a ``distinct``.
+
+    Scoring is the caller's part: without ``score`` every candidate is
+    emitted; with it, ``read(batch)`` returns a row-aligned numpy payload
+    and ``score(P_i, P_j)`` returns ``(keep, score_e6)`` for a block of
+    candidate pairs."""
+
+    def pairs_of(ids, K, key, *payload):
+        n = len(key)
+        ends = np.append(np.flatnonzero(key[1:] != key[:-1]) + 1, n)
+        run_end = np.repeat(ends, np.diff(ends, prepend=0))
+        partners = run_end - np.arange(n) - 1   # j > i in i's run
+        last = np.cumsum(partners)              # row i's pair numbers end
+        band = (K == key[:, None]).argmax(axis=1)
+        earlier = np.arange(K.shape[1])[None, :]
+        for p0 in range(0, int(last[-1]), PAIR_BLOCK):
+            p = np.arange(p0, min(p0 + PAIR_BLOCK, int(last[-1])))
+            i = np.searchsorted(last, p, side="right")
+            j = i + 1 + p - (last[i] - partners[i])
+            shared_before = ((K[i] == K[j]) & (earlier < band[i][:, None]))
+            own = ~shared_before.any(axis=1) & (ids[i] < ids[j])
+            i, j = i[own], j[own]
+            cols = [ids[i], ids[j]]
+            if score is not None:
+                keep, e6 = score(payload[0][i], payload[0][j])
+                cols = [cols[0][keep], cols[1][keep], e6[keep]]
+            if len(cols[0]):
+                yield pa.RecordBatch.from_arrays(
+                    cols, names=["id_a", "id_b", "score_e6"][:len(cols)])
+
+    def concat(pieces):
+        return [np.concatenate(c) for c in zip(*pieces)]
+
+    def bucket_pairs(batches):
+        open_rows = []  # pieces of the run the last batch ended in
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            key = _key_numpy(batch.column("band_key"))
+            piece = (batch.column(0).to_numpy(),
+                     _key_numpy(batch.column("keys").flatten())
+                     .reshape(batch.num_rows, -1),
+                     key) + ((read(batch),) if read is not None else ())
+            cuts = np.flatnonzero(key[1:] != key[:-1]) + 1
+            if cuts.size:
+                cut = cuts[-1]
+            elif open_rows and open_rows[-1][2][-1] != key[0]:
+                cut = 0
+            else:
+                open_rows.append(piece)
+                continue
+            yield from pairs_of(*concat(
+                open_rows + [tuple(c[:cut] for c in piece)]))
+            open_rows = [tuple(c[cut:] for c in piece)]
+        if open_rows:
+            yield from pairs_of(*concat(open_rows))
+
+    return bucket_pairs
+
+
+def band_bucket_pairs(buckets: DataFrame, read=None,
+                      score=None) -> DataFrame:
+    """``(id_a < id_b)`` pairs of rows sharing at least one band key, each
+    once: the one banded-LSH candidate step.  ``buckets`` holds one row
+    per (id, band) — ``(id, band_key, keys, ...)`` with the id column
+    first and ``keys`` the row's keys of every band — and is
+    hash-partitioned by band_key (one exchange), sorted by
+    ``(band_key, id)`` and paired by ``_bucket_run_kernel``, which also
+    applies the caller's ``read``/``score`` (output gains ``score_e6``).
+
+    Nothing is cached, joined or broadcast.  A bucket lands whole in one
+    task (hash partitioning cannot split it): the banding bounds bucket
+    sizes for spread-out rows, and the kernel bounds memory by one
+    Arrow batch, the open run and one pair block whatever the run
+    length."""
+    schema = "id_a long, id_b long" + (", score_e6 long" if score else "")
+    return (
+        buckets.repartition("band_key")
+        .sortWithinPartitions("band_key", buckets.columns[0])
+        .mapInArrow(_bucket_run_kernel(read, score), schema)
+    )
+
+
+def _band_rows(emb: DataFrame, bands: int, rows: int, dims: int,
+               *carry: str) -> DataFrame:
+    """``(vec_id, band_key, keys, *carry)`` rows — one per (vector, band)
+    — from ONE band-key UDF call per vector returning all ``bands`` keys.
+
+    The UDF instance is non-deterministic on purpose: the explode keeps
+    ``keys`` beside ``band_key``, and for a deterministic UDF Catalyst
+    infers ``size(keys) > 0 AND isnotnull(keys)`` under the Generate and
+    copies the UDF beneath that filter (two band-key passes per input
+    branch).  Nothing downstream caches this relation, so the flag costs
+    no cache reuse."""
+    band_keys = _band_keys_udf(bands, rows, dims).asNondeterministic()
+    return (
+        emb.select("vec_id", band_keys(F.col("embedding")).alias("keys"),
+                   *carry)
+        .select("vec_id", F.explode("keys").alias("band_key"), "keys",
+                *carry)
+    )
 
 
 def lsh_candidate_pairs(emb: DataFrame, bands: int = LSH_BANDS,
                         rows: int = LSH_ROWS, dims: int = 64) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing at least one band bucket; the
-    cached bucket relation (``banded_buckets``) feeds both join sides, so
-    signatures are computed once."""
-    return band_pairs(banded_buckets(emb, bands, rows, dims))
+    """Distinct (id_a < id_b) pairs sharing at least one band bucket, from
+    one bucket pass (``band_bucket_pairs``) with no scoring."""
+    return band_bucket_pairs(_band_rows(emb, bands, rows, dims))
 
 
 def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                      bands: int = ANN_BANDS, rows: int = ANN_ROWS,
                       dims: int = 64) -> DataFrame:
-    """ANN: candidates share any band bucket with the query; exact re-rank.
+    """ANN: candidates share any band bucket (``ANN_BANDS`` x
+    ``ANN_ROWS`` planes) with the query; exact re-rank.
 
     Recall < 1 by design (bucket misses; see module banding math); the
     bench compares speed and recall against cosine_topk.
 
-    Plan shape (the round-3 constant-factor fix — VERDICT r2 item 3):
-    ONE cached (vec_id, band_key) relation serves both join sides — the
-    corpus signature is computed once, as a real ANN index would be — the
-    candidate distinct shuffles bare int pairs (round 2 carried two
-    64-double arrays per row through that exchange), and the exact re-rank
-    joins the small pair set back to the embedding arrays and scores them
-    with ``_cosine_e6_udf``."""
-    keys = banded_buckets(emb, bands, rows, dims)
-    qk = keys.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), "band_key")
+    Plan shape: the query rows' band keys are computed from the query
+    rows themselves (a handful, broadcast) and probe the corpus band
+    keys, exploded once from one band-key UDF pass, in one equi-join;
+    nothing is cached.  The candidate distinct shuffles bare int pairs
+    (round 2 carried two 64-double arrays per row through that exchange),
+    and the exact re-rank joins the small pair set back to the embedding
+    arrays and scores them with ``_cosine_e6_udf``."""
+    band_keys = _band_keys_udf(ANN_BANDS, ANN_ROWS, dims)
+    queries = emb.where(F.col("vec_id").isin(query_ids))
+    qk = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.explode(band_keys(F.col("embedding"))).alias("band_key"))
+    keys = emb.select(
+        "vec_id", F.explode(band_keys(F.col("embedding"))).alias("band_key"))
     pairs = (
         F.broadcast(qk).join(keys, on="band_key")  # queries: a handful of rows
         .where(F.col("query_id") != F.col("vec_id"))
@@ -350,7 +425,7 @@ def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     )
     nb = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nv"))
-    qb = emb.where(F.col("vec_id").isin(query_ids)).select(
+    qb = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
     scored = (
         pairs.join(nb, on="neighbor_id")      # pairs are small: AQE broadcasts
@@ -442,73 +517,6 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     )
 
 
-def _near_dup_kernel(threshold_e6: int, bands: int, rows: int, dims: int):
-    """``mapInArrow`` kernel of ``embedding_near_dups``: reads
-    ``(vec_id, embedding, band_key, keys)`` rows sorted by
-    ``(band_key, vec_id)`` within the partition and yields
-    ``(id_a, id_b, score_e6)`` batches of at most ``PAIR_BLOCK`` pairs.
-
-    Rows of one band_key form a run.  A run may span Arrow batches, so the
-    rows after the last run boundary seen stay open until the next
-    boundary (or the end of the partition); everything before it is a
-    set of complete runs and is scored.  Every ``i < j`` pair of a run is
-    a candidate; it is emitted only in the FIRST band both vectors share
-    (their ``keys`` differ in every earlier band), which is the union
-    over bands without a ``distinct``."""
-
-    def score_runs(ids, E, K, key):
-        n = len(key)
-        ends = np.append(np.flatnonzero(key[1:] != key[:-1]) + 1, n)
-        run_end = np.repeat(ends, np.diff(ends, prepend=0))
-        partners = run_end - np.arange(n) - 1   # j > i in i's run
-        last = np.cumsum(partners)              # row i's pair numbers end
-        band = key >> rows
-        earlier = np.arange(bands)[None, :]
-        for p0 in range(0, int(last[-1]), PAIR_BLOCK):
-            p = np.arange(p0, min(p0 + PAIR_BLOCK, int(last[-1])))
-            i = np.searchsorted(last, p, side="right")
-            j = i + 1 + p - (last[i] - partners[i])
-            shared_before = ((K[i] == K[j]) & (earlier < band[i][:, None]))
-            own = ~shared_before.any(axis=1) & (ids[i] < ids[j])
-            i, j = i[own], j[own]
-            e6, ok = _cosine_e6(E[i], E[j])
-            keep = ok & (e6 >= threshold_e6)
-            if keep.any():
-                yield pa.RecordBatch.from_arrays(
-                    [ids[i[keep]], ids[j[keep]], e6[keep]],
-                    names=["id_a", "id_b", "score_e6"])
-
-    def concat(pieces):
-        return [np.concatenate(c) for c in zip(*pieces)]
-
-    def near_dup_pairs(batches):
-        open_rows = []  # pieces of the run the last batch ended in
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            key = batch.column("band_key").to_numpy()
-            piece = (batch.column("vec_id").to_numpy(),
-                     _embedding_matrix(batch.column("embedding"), dims),
-                     batch.column("keys").flatten().to_numpy()
-                     .reshape(-1, bands),
-                     key)
-            cuts = np.flatnonzero(key[1:] != key[:-1]) + 1
-            if cuts.size:
-                cut = cuts[-1]
-            elif open_rows and open_rows[-1][3][-1] != key[0]:
-                cut = 0
-            else:
-                open_rows.append(piece)
-                continue
-            yield from score_runs(*concat(
-                open_rows + [tuple(c[:cut] for c in piece)]))
-            open_rows = [tuple(c[cut:] for c in piece)]
-        if open_rows:
-            yield from score_runs(*concat(open_rows))
-
-    return near_dup_pairs
-
-
 def embedding_near_dups(emb: DataFrame, threshold_e6: int = 999_000,
                         bands: int = LSH_BANDS, rows: int = LSH_ROWS,
                         dims: int = 64) -> DataFrame:
@@ -518,28 +526,19 @@ def embedding_near_dups(emb: DataFrame, threshold_e6: int = 999_000,
     Exact duplicates always collide in every band; pairs at cosine >= 0.99
     are candidates with ~0.93 probability at the defaults (module math).
 
-    One shuffle and one Arrow kernel: one band-key UDF call per vector
-    returns all ``bands`` keys, the rows are exploded to
-    ``(vec_id, embedding, band_key, keys)``, hash-partitioned by band_key
-    and sorted by ``(band_key, vec_id)``, and ``_near_dup_kernel`` scores
-    each bucket's pairs where they land.  Nothing is cached, joined or
-    broadcast; a kernel holds one Arrow batch, the bucket run still open
-    and one pair block (``PAIR_BLOCK``).
+    One bucket pass (``band_bucket_pairs``) over ``_band_rows`` carrying
+    the embedding: each bucket's pairs are scored with ``_cosine_e6``
+    where they land, and a pair is kept when its score is defined and
+    ``>= threshold_e6``.  Nothing is cached, joined or broadcast; a kernel
+    holds one Arrow batch, the bucket run still open and one pair block
+    (``PAIR_BLOCK``)."""
 
-    The band-key UDF instance is non-deterministic on purpose: the explode
-    keeps ``keys`` beside ``band_key``, and for a deterministic UDF
-    Catalyst infers ``size(keys) > 0 AND isnotnull(keys)`` under the
-    Generate and copies the UDF beneath that filter (two band-key passes
-    per input branch).  Nothing downstream caches this relation, so the
-    flag costs no cache reuse."""
-    band_keys = _band_keys_udf(bands, rows, dims).asNondeterministic()
-    return (
-        emb.select("vec_id", "embedding",
-                   band_keys(F.col("embedding")).alias("keys"))
-        .select("vec_id", "embedding", F.explode("keys").alias("band_key"),
-                "keys")
-        .repartition("band_key")
-        .sortWithinPartitions("band_key", "vec_id")
-        .mapInArrow(_near_dup_kernel(threshold_e6, bands, rows, dims),
-                    "id_a long, id_b long, score_e6 long")
-    )
+    def read(batch):
+        return _embedding_matrix(batch.column("embedding"), dims)
+
+    def score(A, B):
+        e6, ok = _cosine_e6(A, B)
+        return ok & (e6 >= threshold_e6), e6
+
+    return band_bucket_pairs(
+        _band_rows(emb, bands, rows, dims, "embedding"), read, score)

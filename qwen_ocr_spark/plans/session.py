@@ -99,8 +99,8 @@ def get_spark(
     return b.getOrCreate()
 
 
-# Every relation a library operator persists (dedup.lsh_candidate_pairs,
-# simhash_near_pairs, ngram_jaccard_pairs, similarity.banded_buckets, …)
+# Every relation a library operator persists (dedup.simhash_near_pairs,
+# ngram_jaccard_pairs, lsh_jaccard_pairs, similarity.ivf_topk, …)
 # is registered here.  A one-shot job never needs to touch this — the
 # process exit releases the cache — but a long-lived driver (streaming
 # micro-batches, a query service) must call release_cached() between

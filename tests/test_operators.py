@@ -44,6 +44,73 @@ def test_lsh_finds_exact_and_near_dups(docs):
     assert (1, 4) not in pairs       # unrelated docs don't collide on all bands
 
 
+def _ref_minhash_band_keys(text):
+    """Plain-Python MinHash band keys of a text whose words are separated
+    by single spaces: slot i = min md5 hex of ``i|shingle`` over its word
+    3-grams; band b = its index byte + the raw bytes of its slots."""
+    import hashlib
+
+    toks = text.split(" ")
+    shingles = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+    slots = [min(hashlib.md5(f"{i}|{s}".encode()).hexdigest()
+                 for s in shingles) for i in range(dedup.MINHASH_SLOTS)]
+    per_band = dedup.MINHASH_SLOTS // dedup.MINHASH_BANDS
+    return [bytes([b]) + b"".join(bytes.fromhex(h) for h in
+                                  slots[b * per_band:(b + 1) * per_band])
+            for b in range(dedup.MINHASH_BANDS)]
+
+
+def test_minhash_lsh_pairs_match_reference(spark):
+    """``dedup.lsh_candidate_pairs`` returns exactly the pairs that share
+    any band key in a plain-Python MinHash reference, each once, with
+    bucket runs split across 7-row Arrow batches.  The corpus holds exact
+    duplicates (all bands shared) and edited copies sharing 1, 2 or 3
+    bands."""
+    import itertools
+    import random
+
+    rnd = random.Random(3)
+    vocab = [f"v{i}" for i in range(40)]
+    base = [rnd.choice(vocab) for _ in range(24)]
+    texts = {i: " ".join(rnd.choice(vocab) for _ in range(24))
+             for i in range(30)}
+    texts.update({100 + i: " ".join(base) for i in range(5)})
+    base_keys = _ref_minhash_band_keys(" ".join(base))
+    shared = {}  # edited copies of ``base`` by number of bands shared
+    for k in range(2000):
+        if all(len(shared.get(n, [])) >= 3 for n in (1, 2, 3)):
+            break
+        words = list(base)
+        for pos in rnd.sample(range(24), 1 + k % 6):
+            words[pos] = rnd.choice(vocab)
+        n = sum(a == b for a, b in
+                zip(base_keys, _ref_minhash_band_keys(" ".join(words))))
+        if n in (1, 2, 3) and len(shared.setdefault(n, [])) < 3:
+            shared[n].append(k)
+            texts[200 + k] = " ".join(words)
+    assert all(len(shared.get(n, [])) == 3 for n in (1, 2, 3)), shared
+
+    keys = {i: set(_ref_minhash_band_keys(t)) for i, t in texts.items()}
+    want = {(a, b) for a, b in itertools.combinations(sorted(keys), 2)
+            if keys[a] & keys[b]}
+    assert any(len(keys[a] & keys[b]) == 2 for a, b in want)
+    assert any(len(keys[a] & keys[b]) == 3 for a, b in want)
+
+    docs = spark.createDataFrame(
+        pd.DataFrame(list(texts.items()), columns=["doc_id", "text"]),
+        "doc_id long, text string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = [(r["id_a"], r["id_b"]) for r in dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(dedup.word_shingles(docs))).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == len(set(got)), "duplicate pairs"
+    assert set(got) == want
+
+
 def test_ngram_jaccard_values(docs):
     pairs = {(r["id_a"], r["id_b"]): r["jaccard_e4"]
              for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()}
@@ -468,40 +535,67 @@ def test_embedding_near_dups_matches_brute_force(spark):
     assert not any(302 in p for p in found)
 
 
-def test_embedding_near_dups_bounded_on_duplicate_flood(spark):
-    """1,500 copies of one vector among random ones: every copy lands in
-    the same bucket of every band, and the kernel returns each of the
-    C(1500, 2) pairs once, at cosine 1, from a plan with one exchange (the
-    band_key repartition) and no join, broadcast or cache."""
+def _embedding_flood(spark, n_dup):
     import random
-    import time
 
     rnd = random.Random(5)
-    n_dup = 1500
     rows = [(i, [0.25] * 16) for i in range(n_dup)]  # norm exactly 1.0
     rows += [(n_dup + i, [rnd.gauss(0, 1) for _ in range(16)])
              for i in range(500)]
     emb = spark.createDataFrame(
         pd.DataFrame(rows, columns=["vec_id", "embedding"]),
         "vec_id long, embedding array<double>")
-    out = similarity.embedding_near_dups(emb, dims=16)
+    return emb, similarity.embedding_near_dups(emb, dims=16)
+
+
+def _minhash_flood(spark, n_dup):
+    import random
+
+    rnd = random.Random(5)
+    text = " ".join(f"w{i}" for i in range(30))
+    rows = [(i, text) for i in range(n_dup)]
+    rows += [(n_dup + i, " ".join(f"r{rnd.randrange(10**9)}"
+                                  for _ in range(30))) for i in range(500)]
+    docs = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "text"]),
+        "doc_id long, text string")
+    sigs = dedup.minhash_signatures(dedup.word_shingles(docs, distinct=False))
+    return sigs, dedup.lsh_candidate_pairs(sigs)
+
+
+@pytest.mark.parametrize("flood", [_embedding_flood, _minhash_flood],
+                         ids=["embedding", "minhash"])
+def test_embedding_near_dups_bounded_on_duplicate_flood(spark, flood):
+    """1,500 identical rows among random ones — embedding copies of one
+    vector, or docs of one text (identical MinHash signatures): every copy
+    lands in the same bucket of every band, and the bucket kernel returns
+    each of the C(1500, 2) pairs once (embeddings at cosine 1), from a
+    plan with one added exchange (the band_key repartition) and no join,
+    broadcast or cache."""
+    import time
+
+    n_dup = 1500
+    base, out = flood(spark, n_dup)
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     for node in ("Join", "BroadcastExchange", "InMemoryRelation"):
         assert node not in plan, node
-    base = emb._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") - base.count("Exchange") == 1
-    assert "Exchange hashpartitioning(band_key" in plan
+    before = base._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") - before.count("Exchange") == 1
+    assert plan.count("Exchange hashpartitioning(band_key") == 1
 
     t0 = time.monotonic()
-    got = out.agg(F.count("*").alias("n"),
-                  F.count_distinct("id_a", "id_b").alias("distinct"),
-                  F.min("score_e6").alias("lo"), F.max("score_e6").alias("hi"),
-                  F.max("id_b").alias("top")).first()
+    aggs = [F.count("*").alias("n"),
+            F.count_distinct("id_a", "id_b").alias("distinct"),
+            F.max("id_b").alias("top")]
+    if "score_e6" in out.columns:
+        aggs += [F.min("score_e6").alias("lo"), F.max("score_e6").alias("hi")]
+    got = out.agg(*aggs).first()
     elapsed = time.monotonic() - t0
     assert got["n"] == got["distinct"] == n_dup * (n_dup - 1) // 2
-    assert got["lo"] == got["hi"] == 1_000_000
-    assert got["top"] == n_dup - 1  # no random vector paired
+    assert got["top"] == n_dup - 1  # no random row paired
+    if "score_e6" in out.columns:
+        assert got["lo"] == got["hi"] == 1_000_000
     assert elapsed < 120, f"flood took {elapsed:.1f} s"
 
 
@@ -530,14 +624,18 @@ def test_banded_lsh_recall_vs_exact(emb):
 
 def test_banded_buckets_shrink(spark):
     """The banding math: per-band bucket population stays far below N for
-    spread-out vectors (the N^2/2^r join-cost claim), while exact
+    spread-out vectors (the N^2/2^r bucket-pair claim), while exact
     duplicates always share all bands."""
     import math
     rows = [(i, [math.sin(0.37 * i * (d + 3)) for d in range(16)])
             for i in range(200)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
-    buckets = similarity.banded_buckets(df, dims=16).groupBy("band_key").count()
+    band_keys = similarity._band_keys_udf(
+        similarity.LSH_BANDS, similarity.LSH_ROWS, 16)
+    buckets = df.select(F.explode(band_keys(F.col("embedding")))
+                        .alias("band_key")).groupBy("band_key").count()
     sizes = [r["count"] for r in buckets.collect()]
+    assert sum(sizes) == 200 * similarity.LSH_BANDS
     assert max(sizes) <= 40, f"a single band bucket holds {max(sizes)}/200 vectors"
     # duplicates collide in every band
     dup = spark.createDataFrame(pd.DataFrame(
@@ -594,36 +692,30 @@ def test_connected_components_chains_and_islands(spark):
     assert 9 not in by_id  # no near-dup partner → not clustered
 
 
-def test_connected_components_nonconvergence_warns(spark):
-    """An adversarial deep chain (diameter > max_iter) must NOT silently
-    return a partially-merged labeling: a RuntimeWarning fires (ADVICE r3),
-    and the same graph converges cleanly when max_iter covers the diameter.
-    Min-label propagation moves the min one hop per round, so a 30-node
-    descending-id path needs 29 rounds."""
+def test_connected_components_deep_chain_one_group(spark):
+    """A chain deeper than the label-propagation rounds (a 40-node
+    descending-id path needs 39 rounds to move the min end to end) is
+    finished by the star algorithm: one group, labelled with its min, and
+    no warning — never a partially merged labeling.  Through
+    ``duplicate_groups`` that means exactly one keeper in the group."""
     import warnings
 
-    chain = [(i + 1, i) for i in range(29)]  # path 29-28-...-1-0, min at one end
+    chain = [(i + 1, i) for i in range(39)]  # path 39-38-...-1-0
     pairs = spark.createDataFrame(pd.DataFrame(chain, columns=["id_a", "id_b"]))
-    with pytest.warns(RuntimeWarning, match="max_iter"):
-        partial = dedup.connected_components(pairs, max_iter=5)
-    # partial is partially merged: not every node reached label 0 yet
-    got = {r["node"]: r["group_id"] for r in partial.collect()}
-    assert got[29] != 0
-    # enough rounds: converges with no warning, all nodes labeled 0
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        full = dedup.connected_components(pairs, max_iter=40)
-        done = {r["node"]: r["group_id"] for r in full.collect()}
-    assert not [w for w in caught if "max_iter" in str(w.message)]
-    assert set(done.values()) == {0}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = {r["node"]: r["group_id"]
+               for r in dedup.connected_components(pairs).collect()}
+    assert len(got) == 40 and set(got.values()) == {0}
 
 
 def test_connected_components_star_deep_chain(spark):
-    """Round-5 large-star/small-star (algorithm='star'): an adversarial
-    1,000-node chain — diameter 999, far beyond any sane label-propagation
-    max_iter — converges in O(log n) alternating rounds with NO
-    RuntimeWarning, and the labeling agrees with label propagation on a
-    branchy graph."""
+    """Large-star/small-star (``_cc_star``, round 5) on an adversarial
+    1,000-node chain — diameter 999, far beyond the label-propagation
+    rounds: ``connected_components`` finishes it with the star algorithm
+    and returns one group with no warning; on a branchy multi-component
+    graph the star labeling agrees with label propagation; the removed
+    ``algorithm`` option is rejected."""
     import warnings
 
     chain = [(i + 1, i) for i in range(999)]
@@ -631,20 +723,21 @@ def test_connected_components_star_deep_chain(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         got = {r["node"]: r["group_id"]
-               for r in dedup.connected_components(
-                   pairs, max_iter=25, algorithm="star").collect()}
+               for r in dedup.connected_components(pairs).collect()}
     assert len(got) == 1000 and set(got.values()) == {0}
-    # agreement with the default algorithm on a multi-component graph
+    # agreement with label propagation on a multi-component graph
     g = [(2, 7), (7, 4), (10, 11), (20, 21), (21, 22), (22, 23), (23, 2),
          (50, 51)]
     pairs2 = spark.createDataFrame(pd.DataFrame(g, columns=["id_a", "id_b"]))
-    a = {r["node"]: r["group_id"] for r in dedup.connected_components(
-        pairs2, algorithm="star").collect()}
+    a = {r["node"]: r["group_id"] for r in dedup._cc_star(
+        pairs2.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+    ).collect()}
     b = {r["node"]: r["group_id"] for r in dedup.connected_components(
         pairs2).collect()}
     assert a == b
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError):
         dedup.connected_components(pairs2, algorithm="banana")
+    release_cached()
 
 
 def test_incremental_dedup_across_runs(spark, tmp_path):
@@ -700,8 +793,6 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
     spark.catalog.clearCache()  # start clean whatever ran before
     release_cached()
     operators = {
-        "dedup.lsh_candidate_pairs": lambda: dedup.lsh_candidate_pairs(
-            dedup.minhash_signatures(dedup.word_shingles(docs))),
         "simhash_near_pairs": lambda: dedup.simhash_near_pairs(docs),
         "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(
             docs, threshold=0.5),
@@ -709,10 +800,6 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
             docs, threshold=0.5),
         "duplicate_groups(lsh)": lambda: dedup.duplicate_groups(
             docs, threshold=0.5, candidates="lsh"),
-        "similarity.lsh_candidate_pairs": lambda:
-            similarity.lsh_candidate_pairs(emb, dims=16),
-        "lsh_bucketed_topk": lambda: similarity.lsh_bucketed_topk(
-            emb, [1], k=3, dims=16),
         "ivf_topk": lambda: similarity.ivf_topk(
             emb, [1], k=3, n_cells=8, dims=16),
     }
@@ -721,10 +808,22 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
         assert not cache.isEmpty(), f"{name} cached nothing"
         assert release_cached() > 0, name
         assert cache.isEmpty(), f"{name} left a relation cached"
-    # scores inside its shuffle: nothing to cache, nothing to release
-    similarity.embedding_near_dups(emb, dims=16).collect()
-    assert cache.isEmpty(), "embedding_near_dups cached a relation"
-    assert release_cached() == 0
+    # the LSH candidate steps pair (and score) inside their one shuffle,
+    # and the ANN probe joins fresh band keys: nothing to cache or release
+    uncached = {
+        "dedup.lsh_candidate_pairs": lambda: dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(dedup.word_shingles(docs))),
+        "similarity.lsh_candidate_pairs": lambda:
+            similarity.lsh_candidate_pairs(emb, dims=16),
+        "lsh_bucketed_topk": lambda: similarity.lsh_bucketed_topk(
+            emb, [1], k=3, dims=16),
+        "embedding_near_dups": lambda: similarity.embedding_near_dups(
+            emb, dims=16),
+    }
+    for name, op in uncached.items():
+        op().collect()
+        assert cache.isEmpty(), f"{name} cached a relation"
+        assert release_cached() == 0, name
 
 
 def test_ngram_jaccard_df_cap_drops_stop_shingles(spark):
@@ -832,8 +931,10 @@ def test_dedup_and_ann_plans_are_equi_joins(spark):
     """Locks the 100 TB shapes: every dedup/ANN candidate join is an
     equi-join (band key / chunk key / shingle key) — a CartesianProduct or
     non-broadcast nested loop anywhere means the sub-quadratic claim
-    silently broke.  IVF's centroid assignment is the ONE sanctioned
-    nested loop and must be broadcast-bounded."""
+    silently broke.  The banded-LSH candidate steps join nothing: each is
+    one band_key exchange into the bucket kernel, with no cache.  IVF's
+    centroid assignment is the ONE sanctioned nested loop and must be
+    broadcast-bounded."""
     import __spark_entry__ as em
     sf = "/root/testdata/sf0.001"
     docs = _t_docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
@@ -848,9 +949,34 @@ def test_dedup_and_ann_plans_are_equi_joins(spark):
         p = _plan(df)
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
-    # embedding near-dups score inside their band bucket: no join at all
-    p = _plan(similarity.embedding_near_dups(emb))
-    assert "Join" not in p and "BroadcastExchange" not in p
+    release_cached()
+
+    def executed(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # every banded-LSH candidate step is one bucket pass: no join, no
+    # cache, and exactly one band_key exchange
+    sigs = dedup.minhash_signatures(dedup.word_shingles(docs))
+    for name, df in [
+        ("lsh_pairs", dedup.lsh_candidate_pairs(sigs)),
+        ("similarity.lsh_candidate_pairs",
+         similarity.lsh_candidate_pairs(emb)),
+        ("embedding_near_dups", similarity.embedding_near_dups(emb)),
+    ]:
+        p = executed(df)
+        assert "Join" not in p and "BroadcastExchange" not in p, name
+        assert "InMemoryRelation" not in p, name
+        assert p.count("Exchange hashpartitioning(band_key") == 1, name
+        assert release_cached() == 0, name
+    # the ANN probe joins fresh band keys; the MinHash verify (the
+    # jaccard_verified query) caches only the per-doc shingle sets its two
+    # joins read, and its candidates are the same one bucket pass
+    assert "InMemoryRelation" not in executed(
+        similarity.lsh_bucketed_topk(emb, [0, 1], k=3))
+    assert release_cached() == 0
+    p = executed(dedup.lsh_jaccard_pairs(docs))
+    assert p.count("Exchange hashpartitioning(band_key") == 1
+    assert release_cached() == 1
     # IVF: without the index persist, the N x n_cells broadcast assignment
     # would appear under BOTH consumers of `ranked`; with it the plan reads
     # the materialized assignment and the one nested loop is broadcast
