@@ -12,10 +12,12 @@ Scale-first shapes (the 100 TB rationale, per operator):
                sub-quadratic at corpus scale.
 * simhash    — 32-bit signature from per-token md5 high bits;
                ``simhash_near_pairs`` finds pairs within hamming radius d
-               via a chunk-bucket join: split the signature into d+1
-               chunks — pigeonhole guarantees a pair at distance <= d
-               matches exactly on at least one chunk — join on (chunk_idx,
-               chunk_value), verify the full distance with bit_count(xor).
+               over the distinct signatures via a chunk-bucket join: split
+               the signature into ceil((d+1)/2) chunks — pigeonhole
+               guarantees a pair at distance <= d is within distance 1 on
+               at least one chunk — join each chunk against the other
+               side's 1-bit expansion of it (the chunk and every one-bit
+               flip), verify the full distance with bit_count(xor).
 * ngram      — exact Jaccard on distinct word 3-grams computed via a
                shingle-key equi-join (co-shingle counting), never a cross
                join.  Shingles whose document frequency exceeds ``max_df``
@@ -53,7 +55,8 @@ MINHASH_SLOTS = 8
 MINHASH_BANDS = 4  # 2 slots per band
 SHINGLE_N = 3
 MAX_SHINGLE_DF = 256  # default document-frequency cap for the jaccard join
-SIMHASH_RADIUS = 3    # default hamming radius; 4 chunks of 8 bits
+SIMHASH_RADIUS = 3    # default hamming radius; 2 chunks of 16 bits,
+                      # each joined through its 1-bit expansion
 _LABEL_ROUNDS = 25    # connected_components: label-propagation rounds
                       # before a deeper component is finished by _cc_star
 _BITMAP_WORDS = 4     # 4 x 64 = 256-bit hashed doc bitmaps (jaccard
@@ -400,10 +403,10 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     past ~25 rounds even though execution is cached.  The checkpoint
     truncates lineage to one level per round; the pinned label RDDs are
     tiny (two ints per node) and freed by GC + ContextCleaner after the
-    call (the streaming-accumulation caveat in sinks/manifest.py does
-    not apply to a bounded batch loop).  The symmetric edge relation every
-    round (and the star fallback) reads is cached through
-    ``track_cached``."""
+    call (``unpersist`` cannot release a localCheckpoint, so one per
+    streaming micro-batch would accumulate; a bounded batch loop does
+    not).  The symmetric edge relation every round (and the star fallback)
+    reads is cached through ``track_cached``."""
     e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     edges = track_cached(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist())

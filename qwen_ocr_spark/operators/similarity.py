@@ -1,10 +1,11 @@
 """Similarity search over an embedding relation.
 
 Input schema: every operator reads ``vec_id`` (bigint) and ``embedding``
-(array<double>, at most ``dims`` elements, all finite); pair relations are
-``(id_a, id_b, ...)`` with ``id_a < id_b``.  Every relation an operator
-persists is registered with ``plans.session.track_cached`` and released by
-``release_cached()``.
+(array<double>, at most ``EMB_DIMS`` = 64 elements, all finite; a shorter
+vector reads as zero-padded, which changes neither a cosine nor a band
+key); pair relations are ``(id_a, id_b, ...)`` with ``id_a < id_b``.
+Every relation an operator persists is registered with
+``plans.session.track_cached`` and released by ``release_cached()``.
 
 * ``cosine_topk``   — brute-force exact top-k: the correctness baseline.
   Scores are floored at 1e6 scale before ranking so rank order is
@@ -46,9 +47,9 @@ enumerates) is N^2 / 2^r per band — r=16 shrinks each band's pairs 256x
 vs the old flat 8-plane signature (N^2/256 was quadratic-with-a-constant
 at 10^9+ rows).  Recall for a pair at angle theta: p = 1 - theta/pi per
 plane, so P(candidate) = 1 - (1 - p^r)^b.  At near-dup thresholds
-(cosine >= 0.99, p ~ 0.955) the defaults r=16, b=4 give ~0.93 recall;
-exact duplicates (cosine 1.0) are always candidates.  For looser
-thresholds lower ``rows`` and raise ``bands`` — the knobs trade
+(cosine >= 0.99, p ~ 0.955) ``LSH_ROWS`` = 16, ``LSH_BANDS`` = 4 give
+~0.93 recall; exact duplicates (cosine 1.0) are always candidates.  Looser
+thresholds want fewer rows and more bands — the constants trade
 bucket-pair cost against recall explicitly.
 """
 
@@ -61,7 +62,8 @@ from pyspark.sql import functions as F
 
 from qwen_ocr_spark.plans.session import track_cached
 
-LSH_BANDS = 4      # near-dup defaults: 4 bands x 16 planes = 64 planes total
+EMB_DIMS = 64      # embedding width every operator reads
+LSH_BANDS = 4      # near-dup bands: 4 bands x 16 planes = 64 planes total
 LSH_ROWS = 16
 ANN_BANDS = 4      # top-k ANN bands: looser buckets (2^8 per band) —
 ANN_ROWS = 8       # generic neighbors sit at wide angles, so near-dup-tight
@@ -71,29 +73,29 @@ PAIR_BLOCK = 16_384  # bucket kernel: candidate pairs tested per block,
                      # and the most pairs one output RecordBatch carries
 
 
-def _embedding_matrix(vectors: pa.Array, dims: int) -> np.ndarray:
-    """Zero-padded float64 ``(rows, dims)`` matrix of an embedding column as
-    an Arrow UDF or a ``mapInArrow`` kernel receives it (a ``ListArray`` of
-    doubles).  A NULL vector becomes a zero row.
+def _embedding_matrix(vectors: pa.Array) -> np.ndarray:
+    """Zero-padded float64 ``(rows, EMB_DIMS)`` matrix of an embedding
+    column as an Arrow UDF or a ``mapInArrow`` kernel receives it (a
+    ``ListArray`` of doubles).  A NULL vector becomes a zero row.
 
-    When every row has exactly ``dims`` elements the flat value buffer is
-    reshaped in place (``flatten().to_numpy().reshape``: no per-row Python
-    work); otherwise the rows are scattered into a zero matrix, so a short
-    vector reads as padded with ``0.0`` elements.
+    When every row has exactly ``EMB_DIMS`` elements the flat value buffer
+    is reshaped in place (``flatten().to_numpy().reshape``: no per-row
+    Python work); otherwise the rows are scattered into a zero matrix, so a
+    short vector reads as padded with ``0.0`` elements.
 
-    Raises ``ValueError`` on a vector longer than ``dims`` and on any NaN,
-    ±Inf or NULL element: a non-finite element has no meaningful cosine
+    Raises ``ValueError`` on a vector longer than ``EMB_DIMS`` and on any
+    NaN, ±Inf or NULL element: a non-finite element has no meaningful cosine
     or hyperplane side, and zeroing or clamping it would rank or bucket a
     corrupt vector among real neighbours.  NULL elements are counted from
     Arrow validity, apart from NaN payloads, and raise the same error.
     """
-    n = len(vectors)
+    n, dims = len(vectors), EMB_DIMS
     flat = vectors.flatten()  # honours slice offsets, skips NULL vectors
     lengths = vectors.value_lengths().fill_null(0).to_numpy()
     longest = int(lengths.max()) if n else 0
     if longest > dims:
         raise ValueError(f"a {longest}-element embedding exceeds "
-                         f"dims={dims}")
+                         f"EMB_DIMS={dims}")
     nulls = flat.null_count
     vals = np.asarray((flat.fill_null(0.0) if nulls else flat).to_numpy(),
                       dtype=np.float64)
@@ -136,12 +138,12 @@ def _cosine_e6(A: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, ok
 
 
-def _cosine_e6_udf(dims: int):
+def _cosine_e6_udf():
     """Vectorized Arrow UDF: (vec_a, vec_b) → floor(cosine * 1e6) bigint,
     NULL when either norm is zero (``_cosine_e6``).
 
     A NULL vector scores NULL; a non-finite element or a vector longer
-    than ``dims`` raises ``ValueError`` (``_embedding_matrix``).
+    than ``EMB_DIMS`` raises ``ValueError`` (``_embedding_matrix``).
 
     WHY a Python UDF replaced whole-stage-codegen'd SQL (round 6, late):
     the unrolled form needs 2 x 64 pre-extracted element columns plus a
@@ -155,8 +157,7 @@ def _cosine_e6_udf(dims: int):
     column folds)."""
 
     def score(va: pa.Array, vb: pa.Array) -> pa.Array:
-        e6, ok = _cosine_e6(_embedding_matrix(va, dims),
-                            _embedding_matrix(vb, dims))
+        e6, ok = _cosine_e6(_embedding_matrix(va), _embedding_matrix(vb))
         return pa.array(e6, mask=~ok)
 
     # asNondeterministic: the ``score_e6 IS NOT NULL`` consumer filter
@@ -168,8 +169,7 @@ def _cosine_e6_udf(dims: int):
     return F.arrow_udf(score, "long").asNondeterministic()
 
 
-def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                dims: int = 64) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (excluding self).
 
     Output: (query_id, neighbor_id, score_e6 bigint, rank int) — the score
@@ -188,7 +188,7 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
-            _cosine_e6_udf(dims)(F.col("_qv"), F.col("_nv")).alias("score_e6"),
+            _cosine_e6_udf()(F.col("_qv"), F.col("_nv")).alias("score_e6"),
         )
         .where(F.col("score_e6").isNotNull())
     )
@@ -241,17 +241,17 @@ def _band_key_matrix(E: np.ndarray, planes: np.ndarray,
     return out
 
 
-def _band_keys_udf(bands: int, rows: int, dims: int):
+def _band_keys_udf(bands: int, rows: int):
     """Arrow UDF: embedding → array of its ``bands`` packed band keys
     (``_band_key_matrix``).  A NULL vector hashes as the zero vector; a
-    non-finite element or a vector longer than ``dims`` raises
+    non-finite element or a vector longer than ``EMB_DIMS`` raises
     ``ValueError``, exactly as in the cosine scorer
     (``_embedding_matrix``)."""
-    planes = np.asarray([_plane(p, dims) for p in range(bands * rows)],
+    planes = np.asarray([_plane(p, EMB_DIMS) for p in range(bands * rows)],
                         dtype=np.float64)
 
     def _band_keys(vs: pa.Array) -> pa.Array:
-        K = _band_key_matrix(_embedding_matrix(vs, dims), planes, rows)
+        K = _band_key_matrix(_embedding_matrix(vs), planes, rows)
         offsets = np.arange(0, K.size + 1, bands, dtype=np.int32)
         return pa.ListArray.from_arrays(offsets, K.ravel())
 
@@ -368,10 +368,10 @@ def band_bucket_pairs(buckets: DataFrame, read=None,
     )
 
 
-def _band_rows(emb: DataFrame, bands: int, rows: int, dims: int,
-               *carry: str) -> DataFrame:
+def _band_rows(emb: DataFrame, *carry: str) -> DataFrame:
     """``(vec_id, band_key, keys, *carry)`` rows — one per (vector, band)
-    — from ONE band-key UDF call per vector returning all ``bands`` keys.
+    — from ONE band-key UDF call per vector returning all ``LSH_BANDS``
+    keys.
 
     The UDF instance is non-deterministic on purpose: the explode keeps
     ``keys`` beside ``band_key``, and for a deterministic UDF Catalyst
@@ -379,7 +379,7 @@ def _band_rows(emb: DataFrame, bands: int, rows: int, dims: int,
     copies the UDF beneath that filter (two band-key passes per input
     branch).  Nothing downstream caches this relation, so the flag costs
     no cache reuse."""
-    band_keys = _band_keys_udf(bands, rows, dims).asNondeterministic()
+    band_keys = _band_keys_udf(LSH_BANDS, LSH_ROWS).asNondeterministic()
     return (
         emb.select("vec_id", band_keys(F.col("embedding")).alias("keys"),
                    *carry)
@@ -388,15 +388,14 @@ def _band_rows(emb: DataFrame, bands: int, rows: int, dims: int,
     )
 
 
-def lsh_candidate_pairs(emb: DataFrame, bands: int = LSH_BANDS,
-                        rows: int = LSH_ROWS, dims: int = 64) -> DataFrame:
+def lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing at least one band bucket, from
     one bucket pass (``band_bucket_pairs``) with no scoring."""
-    return band_bucket_pairs(_band_rows(emb, bands, rows, dims))
+    return band_bucket_pairs(_band_rows(emb))
 
 
-def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                      dims: int = 64) -> DataFrame:
+def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int],
+                      k: int = 5) -> DataFrame:
     """ANN: candidates share any band bucket (``ANN_BANDS`` x
     ``ANN_ROWS`` planes) with the query; exact re-rank.
 
@@ -410,7 +409,7 @@ def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     (round 2 carried two 64-double arrays per row through that exchange),
     and the exact re-rank joins the small pair set back to the embedding
     arrays and scores them with ``_cosine_e6_udf``."""
-    band_keys = _band_keys_udf(ANN_BANDS, ANN_ROWS, dims)
+    band_keys = _band_keys_udf(ANN_BANDS, ANN_ROWS)
     queries = emb.where(F.col("vec_id").isin(query_ids))
     qk = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -431,7 +430,7 @@ def lsh_bucketed_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
         pairs.join(nb, on="neighbor_id")      # pairs are small: AQE broadcasts
         .join(F.broadcast(qb), on="query_id")
         .select("query_id", "neighbor_id",
-                _cosine_e6_udf(dims)(F.col("_qv"), F.col("_nv")).alias("score_e6"))
+                _cosine_e6_udf()(F.col("_qv"), F.col("_nv")).alias("score_e6"))
         .where(F.col("score_e6").isNotNull())
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score_e6"), F.asc("neighbor_id"))
@@ -465,8 +464,7 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16) -> DataFrame:
 
 
 def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-             n_cells: int = 16, nprobe: int = 2,
-             dims: int = 64) -> DataFrame:
+             n_cells: int = 16, nprobe: int = 2) -> DataFrame:
     """IVF (inverted-file) ANN: the other classic scale path beside LSH.
 
     Coarse-quantize every vector to its nearest centroid cell (centroids =
@@ -479,7 +477,7 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     standard IVF trade.  Ties (equal scores) break on cell id, so
     assignment is total and engine-reproducible.  Both the assignment and
     the re-rank score through ``_cosine_e6_udf``."""
-    score = _cosine_e6_udf(dims)
+    score = _cosine_e6_udf()
     cent = F.broadcast(ivf_centroids(emb, n_cells))
     scored = (
         emb.select(F.col("vec_id"), F.col("embedding").alias("_v"))
@@ -517,14 +515,13 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     )
 
 
-def embedding_near_dups(emb: DataFrame, threshold_e6: int = 999_000,
-                        bands: int = LSH_BANDS, rows: int = LSH_ROWS,
-                        dims: int = 64) -> DataFrame:
+def embedding_near_dups(emb: DataFrame,
+                        threshold_e6: int = 999_000) -> DataFrame:
     """Near-duplicate pairs ``(id_a, id_b, score_e6)``, ``id_a < id_b``,
     ``score_e6 >= threshold_e6``, among vectors sharing a band bucket.
 
     Exact duplicates always collide in every band; pairs at cosine >= 0.99
-    are candidates with ~0.93 probability at the defaults (module math).
+    are candidates with ~0.93 probability (module banding math).
 
     One bucket pass (``band_bucket_pairs``) over ``_band_rows`` carrying
     the embedding: each bucket's pairs are scored with ``_cosine_e6``
@@ -534,11 +531,11 @@ def embedding_near_dups(emb: DataFrame, threshold_e6: int = 999_000,
     (``PAIR_BLOCK``)."""
 
     def read(batch):
-        return _embedding_matrix(batch.column("embedding"), dims)
+        return _embedding_matrix(batch.column("embedding"))
 
     def score(A, B):
         e6, ok = _cosine_e6(A, B)
         return ok & (e6 >= threshold_e6), e6
 
     return band_bucket_pairs(
-        _band_rows(emb, bands, rows, dims, "embedding"), read, score)
+        _band_rows(emb, "embedding"), read, score)

@@ -3,18 +3,19 @@
 The reference is strictly batch-per-document (SURVEY.md §2.8 — no
 watermarks, no event-time state), so streaming is an INGEST mode, not new
 semantics: ``readStream`` over the pages table directory → the exact same
-``extract_pages`` transformation inside ``foreachBatch`` → append output +
-manifest per micro-batch.  ``foreachBatch`` keeps batch semantics unchanged
-(one deterministic function of the rows) and the manifest keeps row lineage
-as in batch mode.
+``extract_pages`` transformation inside ``foreachBatch`` → one
+``commit_run`` per micro-batch.  ``foreachBatch`` keeps batch semantics
+unchanged (one deterministic function of the rows) and the manifest keeps
+row lineage as in batch mode.
 
 Exactly-once table contents from an at-least-once sink: ``foreachBatch``
 replays a micro-batch if the job dies after the write but before the
-checkpoint commit, so ``process`` anti-joins the batch against the already
-committed urls (the same ``resume_filter`` the batch CLI uses) before
-extracting — a replayed batch finds all its urls committed and appends
-nothing.  The checkpoint handles already-SEEN files; the anti-join handles
-the replay window between write and checkpoint.
+checkpoint commit.  The micro-batch's run_id is deterministic
+(``stream-{token}-{batch_id}``), so a replay after the output commit finds
+its run directory and ``commit_run`` only backfills missing lineage, with
+no read or extraction; a replay before it rewrites the run whole.  The
+batch is still anti-joined against the committed urls (the same
+``resume_filter`` the batch CLI uses), for urls other runs committed.
 
 ``events_hourly_stream`` is the watermarked event-time aggregation analog
 of __spark_entry__'s ``events_hourly`` — late data beyond 2 hours dropped.
@@ -27,11 +28,8 @@ from pyspark.sql import functions as F
 
 from qwen_ocr_spark.operators.extract import extract_pages
 from qwen_ocr_spark.plans.session import release_cached
-from qwen_ocr_spark.sinks.manifest import (
-    resume_filter,
-    write_figures,
-    write_output,
-)
+from qwen_ocr_spark.sinks.manifest import (commit_run, reconcile_manifest,
+                                           resume_filter)
 from qwen_ocr_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -68,9 +66,12 @@ def stream_extract(spark: SparkSession, input_dir: str, out_path: str,
     Returns the started StreamingQuery; with ``available_now`` the query
     drains everything currently available and stops (test/batch-catchup
     mode) — in production the same call runs continuously.  With
-    ``figures_path`` the figures side-output is appended per micro-batch,
-    before the output commit, same ordering + idempotence as batch mode.
+    ``figures_path`` the figures side-output is written per micro-batch,
+    before the output commit, as in batch mode.  Like the batch CLI it
+    starts with ``reconcile_manifest`` (two directory listings), which
+    also refuses a manifest in the layout before run directories.
     """
+    reconcile_manifest(spark, out_path, manifest_path)
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", "64")
@@ -81,7 +82,8 @@ def stream_extract(spark: SparkSession, input_dir: str, out_path: str,
     # (replay idempotence keys on them) but unique across lineages: a
     # wiped/replaced checkpoint restarts batch ids at 0, and a bare
     # "stream-{batch_id}" would collide with the previous lineage's run_id,
-    # silently skipping manifest lineage for genuinely new rows.  A token
+    # whose committed directory would make commit_run skip genuinely new
+    # rows as a replay.  A token
     # minted once per checkpoint directory gives exactly that scope — and
     # it must live IN the checkpoint's own filesystem (hdfs://, s3a://,
     # file://), not on driver-local disk, or a wiped DFS checkpoint would
@@ -89,17 +91,9 @@ def stream_extract(spark: SparkSession, input_dir: str, out_path: str,
     token = _checkpoint_token(spark, checkpoint)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # idempotence vs foreachBatch replay: drop urls already committed
-        todo = resume_filter(batch_df, out_path)
-        out = extract_pages(todo)
-        run_id = f"stream-{token}-{batch_id}"
-        if figures_path is not None:
-            out = out.cache()
-            write_figures(out, figures_path, run_id)
-        write_output(out, out_path, manifest_path,
-                     run_id=run_id, replayable=True)
-        if figures_path is not None:
-            out.unpersist()
+        out = extract_pages(resume_filter(batch_df, out_path))
+        commit_run(out, out_path, manifest_path, f"stream-{token}-{batch_id}",
+                   figures_path)
         # any library-persisted intermediates created inside this batch
         # (dedup/similarity band relations) must not accumulate executor
         # storage across micro-batches — drain the session registry

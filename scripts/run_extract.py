@@ -2,9 +2,10 @@
     scripts/run_extract.py --pages <in> --out <out> --manifest <m> [...]
 
 Reads the pages table, drops already-committed urls (anti-join resume),
-runs the extraction, appends output + figures + per-partition manifest.
-Kill it at any point and re-run with the same arguments: committed work is
-never reprocessed (north_rule resumability).
+runs the extraction and commits it as one run: figures, output, then the
+per-partition manifest (``sinks.manifest.commit_run``).  Kill it at any
+point and re-run with the same arguments: committed work is never
+reprocessed (north_rule resumability).
 """
 
 from __future__ import annotations
@@ -52,10 +53,9 @@ def main() -> None:
     from qwen_ocr_spark.operators.extract import extract_pages
     from qwen_ocr_spark.plans.session import get_spark
     from qwen_ocr_spark.sinks.manifest import (
+        commit_run,
         reconcile_manifest,
         resume_filter,
-        write_figures,
-        write_output,
     )
 
     spark = get_spark(master=args.master, app_name="qwen-ocr-spark-extract")
@@ -73,27 +73,19 @@ def main() -> None:
         spark.stop()
         return
 
-    # startup reconcile: backfill manifest lineage for any run whose crash
-    # landed between its output commit and its manifest append (otherwise a
-    # batch run's fresh uuid would orphan those rows' lineage forever)
+    # startup reconcile: backfill the manifest of any run whose crash
+    # landed between its output commit and its manifest write
     backfilled = reconcile_manifest(spark, args.out, args.manifest)
     if backfilled:
         print(f"reconciled: backfilled lineage for {backfilled} rows")
 
     pages = spark.read.parquet(args.pages)
-    todo = resume_filter(pages, args.out)
     out = extract_pages(
-        todo, salt=args.salt, partitions=args.partitions, lang=args.lang,
+        resume_filter(pages, args.out), salt=args.salt,
+        partitions=args.partitions, lang=args.lang,
         repartition=not args.no_repartition,
     )
-    if args.figures:
-        out = out.cache()
-        # figures go FIRST: the output commit drives resume, so a crash
-        # between the two must leave the url *uncommitted* (its figures sit
-        # in an orphaned run_id dir invisible to read_figures; the
-        # re-extraction under the next run's id provides the visible copy).
-        write_figures(out, args.figures, run_id)
-    new_rows = write_output(out, args.out, args.manifest, run_id)
+    new_rows = commit_run(out, args.out, args.manifest, run_id, args.figures)
 
     # report from the manifest (tiny), never by rescanning the output table
     total = _manifest_total(spark, args.manifest)

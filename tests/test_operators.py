@@ -355,15 +355,12 @@ def test_cosine_topk_exact(emb):
 # candidate generator, each built so the bad vector (ids 500 and 501,
 # identical, so LSH always pairs them) is scored or bucketed
 _SCORER_CONSUMERS = {
-    "cosine_topk": lambda e: similarity.cosine_topk(e, [500], k=3, dims=16),
+    "cosine_topk": lambda e: similarity.cosine_topk(e, [500], k=3),
     "lsh_bucketed_topk": lambda e: similarity.lsh_bucketed_topk(
-        e, [500], k=3, dims=16),
-    "ivf_topk": lambda e: similarity.ivf_topk(
-        e, [500], k=3, n_cells=8, dims=16),
-    "embedding_near_dups": lambda e: similarity.embedding_near_dups(
-        e, dims=16),
-    "lsh_candidate_pairs": lambda e: similarity.lsh_candidate_pairs(
-        e, dims=16),
+        e, [500], k=3),
+    "ivf_topk": lambda e: similarity.ivf_topk(e, [500], k=3, n_cells=8),
+    "embedding_near_dups": lambda e: similarity.embedding_near_dups(e),
+    "lsh_candidate_pairs": lambda e: similarity.lsh_candidate_pairs(e),
 }
 
 
@@ -392,12 +389,13 @@ def test_cosine_scorer_rejects_non_finite(spark, emb, value):
 
 
 def test_cosine_scorer_rejects_over_long_vector(spark, emb):
-    """A vector longer than ``dims`` fails instead of being scored or
-    bucketed on its first ``dims`` elements."""
+    """A vector longer than ``EMB_DIMS`` fails instead of being scored or
+    bucketed on its first ``EMB_DIMS`` elements."""
+    n = similarity.EMB_DIMS + 1
     long_vec = spark.createDataFrame(pd.DataFrame(
-        [(i, [0.5] * 17) for i in (500, 501)],
+        [(i, [0.5] * n) for i in (500, 501)],
         columns=["vec_id", "embedding"]))
-    _assert_every_consumer_rejects(emb, long_vec, "17-element embedding")
+    _assert_every_consumer_rejects(emb, long_vec, f"{n}-element embedding")
 
 
 def _scorer_nodes(df, args: str = "") -> int:
@@ -425,7 +423,7 @@ def test_ann_scorer_runs_once_per_row(emb):
     # IVF's re-rank; its centroid assignment sits under the cached index,
     # which the plan string prints once per scan of it
     assert _scorer_nodes(similarity.ivf_topk(
-        emb, [1, 2], k=3, n_cells=8, dims=16), "_qv") == 1
+        emb, [1, 2], k=3, n_cells=8), "_qv") == 1
 
 
 def test_lsh_topk_recall_on_near_dups(emb):
@@ -468,17 +466,49 @@ def _ref_cosine_e6(a, b):
     return None if den == 0.0 else math.floor((dot / den) * 1e6)
 
 
+def _crowded_near_dups(emb, bands, rows, threshold_e6):
+    """``embedding_near_dups`` with ``bands`` x ``rows`` planes instead of
+    the module constants: the same band rows, read and score, handed to
+    ``band_bucket_pairs``."""
+    band_keys = similarity._band_keys_udf(bands, rows).asNondeterministic()
+    buckets = (
+        emb.select("vec_id", band_keys(F.col("embedding")).alias("keys"),
+                   "embedding")
+        .select("vec_id", F.explode("keys").alias("band_key"), "keys",
+                "embedding"))
+
+    def read(batch):
+        return similarity._embedding_matrix(batch.column("embedding"))
+
+    def score(A, B):
+        e6, ok = similarity._cosine_e6(A, B)
+        return ok & (e6 >= threshold_e6), e6
+
+    return similarity.band_bucket_pairs(buckets, read, score)
+
+
 def test_embedding_near_dups_matches_brute_force(spark):
     """The in-bucket kernel returns exactly the pairs of a brute-force
-    reference (share any band key, score with the same fold, keep
-    ``score_e6 >= threshold``) at several thresholds, with bucket runs
+    reference, with the module's planes (``embedding_near_dups``) and with
+    4 x 4 planes, whose 16 buckets per band crowd unrelated vectors into
+    shared runs, so the kernel's pairing of long runs and its filtering of
+    low and negative scores are checked too."""
+    _check_near_dups_brute_force(spark, similarity.LSH_BANDS,
+                                 similarity.LSH_ROWS)
+    _check_near_dups_brute_force(spark, 4, 4)
+
+
+def _check_near_dups_brute_force(spark, bands, rows):
+    """Share any band key, score with the same fold, keep ``score_e6 >=
+    threshold``: the reference at several thresholds, with bucket runs
     split across 7-row Arrow batches.  The inputs hold exact duplicates
-    (all 4 bands shared, emitted once), near-dups sharing 2 or 3 bands, a
+    (all bands shared, emitted once), near-dups sharing 2 or 3 bands, a
     short vector with its zero-padded twin, and a NULL vector."""
     import itertools
     import random
 
-    dims, bands, rows = 16, 4, 4  # 16 buckets per band: crowded runs
+    # 16-element vectors: the kernel reads them zero-padded to EMB_DIMS
+    dims = 16
     rnd = random.Random(11)
     base = [rnd.uniform(-1, 1) for _ in range(dims)]
     vecs = {i: [rnd.uniform(-1, 1) for _ in range(dims)] for i in range(40)}
@@ -514,6 +544,12 @@ def test_embedding_near_dups_matches_brute_force(spark):
             if s is not None:
                 scores[(a, b)] = s
     assert scores[(300, 301)] >= 999_999
+    if (bands, rows) == (4, 4):
+        # the crowded case must really hold unrelated and anti-correlated
+        # candidates, or its lower thresholds check nothing extra
+        assert min(scores.values()) < 0
+        assert len(scores) > 2 * len([s for s in scores.values()
+                                      if s >= 900_000])
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
@@ -521,10 +557,12 @@ def test_embedding_near_dups_matches_brute_force(spark):
     try:
         for t in (-1_000_000, 0, 900_000, 999_000):
             want = {(a, b, s) for (a, b), s in scores.items() if s >= t}
-            got = [(r["id_a"], r["id_b"], r["score_e6"]) for r in
-                   similarity.embedding_near_dups(
-                       emb, threshold_e6=t, bands=bands, rows=rows,
-                       dims=dims).collect()]
+            if (bands, rows) == (similarity.LSH_BANDS, similarity.LSH_ROWS):
+                pairs = similarity.embedding_near_dups(emb, threshold_e6=t)
+            else:
+                pairs = _crowded_near_dups(emb, bands, rows, t)
+            got = [(r["id_a"], r["id_b"], r["score_e6"])
+                   for r in pairs.collect()]
             assert len(got) == len(set(got)), f"duplicate pairs at t={t}"
             assert set(got) == want, f"pair set diverged at t={t}"
     finally:
@@ -545,7 +583,7 @@ def _embedding_flood(spark, n_dup):
     emb = spark.createDataFrame(
         pd.DataFrame(rows, columns=["vec_id", "embedding"]),
         "vec_id long, embedding array<double>")
-    return emb, similarity.embedding_near_dups(emb, dims=16)
+    return emb, similarity.embedding_near_dups(emb)
 
 
 def _minhash_flood(spark, n_dup):
@@ -631,7 +669,7 @@ def test_banded_buckets_shrink(spark):
             for i in range(200)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
     band_keys = similarity._band_keys_udf(
-        similarity.LSH_BANDS, similarity.LSH_ROWS, 16)
+        similarity.LSH_BANDS, similarity.LSH_ROWS)
     buckets = df.select(F.explode(band_keys(F.col("embedding")))
                         .alias("band_key")).groupBy("band_key").count()
     sizes = [r["count"] for r in buckets.collect()]
@@ -640,7 +678,7 @@ def test_banded_buckets_shrink(spark):
     # duplicates collide in every band
     dup = spark.createDataFrame(pd.DataFrame(
         [(1, rows[7][1]), (2, rows[7][1])], columns=["vec_id", "embedding"]))
-    pairs = similarity.lsh_candidate_pairs(dup, dims=16).collect()
+    pairs = similarity.lsh_candidate_pairs(dup).collect()
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
 
 
@@ -801,7 +839,7 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
         "duplicate_groups(lsh)": lambda: dedup.duplicate_groups(
             docs, threshold=0.5, candidates="lsh"),
         "ivf_topk": lambda: similarity.ivf_topk(
-            emb, [1], k=3, n_cells=8, dims=16),
+            emb, [1], k=3, n_cells=8),
     }
     for name, op in operators.items():
         op().collect()
@@ -814,11 +852,10 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
         "dedup.lsh_candidate_pairs": lambda: dedup.lsh_candidate_pairs(
             dedup.minhash_signatures(dedup.word_shingles(docs))),
         "similarity.lsh_candidate_pairs": lambda:
-            similarity.lsh_candidate_pairs(emb, dims=16),
+            similarity.lsh_candidate_pairs(emb),
         "lsh_bucketed_topk": lambda: similarity.lsh_bucketed_topk(
-            emb, [1], k=3, dims=16),
-        "embedding_near_dups": lambda: similarity.embedding_near_dups(
-            emb, dims=16),
+            emb, [1], k=3),
+        "embedding_near_dups": lambda: similarity.embedding_near_dups(emb),
     }
     for name, op in uncached.items():
         op().collect()
@@ -892,7 +929,7 @@ def test_ngram_jaccard_matches_exact_reference(spark):
 def test_ivf_topk_finds_near_dups(emb):
     """IVF probing: near-identical vectors share a nearest-centroid cell,
     so the scale path must find them; scores are exact cosine."""
-    res = similarity.ivf_topk(emb, [1], k=3, n_cells=8, nprobe=2, dims=16)
+    res = similarity.ivf_topk(emb, [1], k=3, n_cells=8, nprobe=2)
     rows = sorted(res.collect(), key=lambda r: r["rank"])
     ids = [r["neighbor_id"] for r in rows]
     assert 101 in ids and 100 in ids

@@ -160,11 +160,12 @@ def test_write_manifest_and_resume(spark, pages, out, tmp_path):
 
 
 def test_write_figures_run_scoped_and_crash_invisible(spark, pages, out, tmp_path):
-    """Figures appends are O(this append) — a blind run_id-partitioned write
-    that never reads the table — and exactly-once CONTENTS hold on the read
-    side: ``read_figures`` shows only runs with manifest lineage, so a
-    crashed attempt's orphan directory never surfaces and its replay under
-    a fresh committed run provides the single visible copy."""
+    """Figures writes are O(this run) — a run_id-partitioned write that
+    never reads the table — and exactly-once CONTENTS hold on the read
+    side: ``read_figures`` shows only runs the output has committed, so a
+    crashed attempt's orphan directory (figures written, no output) never
+    surfaces and its replay under a fresh committed run provides the
+    single visible copy."""
     from qwen_ocr_spark.sinks.manifest import read_figures, write_figures
     figs_path = str(tmp_path / "figs")
     out_path = str(tmp_path / "out")
@@ -173,15 +174,15 @@ def test_write_figures_run_scoped_and_crash_invisible(spark, pages, out, tmp_pat
     # committed run: figures first, then output+manifest (CLI ordering)
     write_figures(out, figs_path, "run1")
     write_output(out, out_path, man_path, "run1")
-    vis1 = read_figures(spark, figs_path, man_path)
+    vis1 = read_figures(spark, figs_path, out_path)
     n1 = vis1.count()
     assert n1 > 0 and "run_id" not in vis1.columns
 
     # crashed attempt: figures land under run2 but run2 never reaches the
-    # manifest (job died before its output commit) — invisible to readers
+    # output (job died before its output commit) — invisible to readers
     write_figures(out, figs_path, "run2")
     assert spark.read.parquet(figs_path).count() > n1  # physically appended
-    assert read_figures(spark, figs_path, man_path).count() == n1
+    assert read_figures(spark, figs_path, out_path).count() == n1
 
     # the replayed extraction commits under run3: each (url, page, fig)
     # visible exactly once, from a committed run only
@@ -189,13 +190,13 @@ def test_write_figures_run_scoped_and_crash_invisible(spark, pages, out, tmp_pat
     out3 = extract_pages(extra, partitions=2)
     write_figures(out3, figs_path, "run3")
     write_output(out3, out_path, man_path, "run3")
-    vis = read_figures(spark, figs_path, man_path)
+    vis = read_figures(spark, figs_path, out_path)
     keys = vis.select("url", "page_number", "fig_number")
     assert keys.count() == keys.distinct().count()
     assert vis.count() >= n1
 
     # empty figures dir: readers get None, not an exception
-    assert read_figures(spark, str(tmp_path / "nope"), man_path) is None
+    assert read_figures(spark, str(tmp_path / "nope"), out_path) is None
 
 
 def test_read_output_split_brain_dedup(spark, out, tmp_path):
@@ -219,12 +220,14 @@ def test_read_output_split_brain_dedup(spark, out, tmp_path):
 
 
 def test_clean_orphan_figures_janitor(spark, out, tmp_path):
-    """Round-5 janitor: orphan figure run_id directories (no manifest
-    lineage) older than the age threshold are deleted; committed
-    directories and YOUNG orphans (in-flight runs) are untouched; the
-    read_figures view is unchanged (orphans were never visible)."""
+    """Orphan figure run_id directories (figures written, no output run
+    directory: the job died before its output commit) are deleted once
+    older than ``ORPHAN_MIN_AGE_SEC``; committed directories and YOUNG
+    orphans (in-flight runs) are untouched; the read_figures view is
+    unchanged (orphans were never visible)."""
     import os
-    from qwen_ocr_spark.sinks.manifest import (clean_orphan_figures,
+    from qwen_ocr_spark.sinks.manifest import (ORPHAN_MIN_AGE_SEC,
+                                               clean_orphan_figures,
                                                read_figures, write_figures)
     figs_path = str(tmp_path / "figs")
     out_path = str(tmp_path / "out")
@@ -234,29 +237,29 @@ def test_clean_orphan_figures_janitor(spark, out, tmp_path):
     write_output(out, out_path, man_path, "committed1")
     write_figures(out, figs_path, "orphan-old")
     write_figures(out, figs_path, "orphan-young")
-    # age the old orphan past the threshold
-    old_dir = os.path.join(figs_path, "run_id=orphan-old")
-    os.utime(old_dir, (1, 1))
 
+    def age(run_id):  # push the directory's mtime past the threshold
+        d = os.path.join(figs_path, f"run_id={run_id}")
+        t = os.path.getmtime(d) - ORPHAN_MIN_AGE_SEC - 60
+        os.utime(d, (t, t))
+
+    age("orphan-old")
+    age("committed1")
     before = sorted(r["url"] for r in
-                    read_figures(spark, figs_path, man_path).collect())
-    deleted = clean_orphan_figures(spark, figs_path, man_path,
-                                   min_age_sec=3600)
-    assert deleted == ["orphan-old"]
-    assert not os.path.exists(old_dir)
+                    read_figures(spark, figs_path, out_path).collect())
+    assert clean_orphan_figures(spark, figs_path, out_path) == ["orphan-old"]
+    assert not os.path.exists(os.path.join(figs_path, "run_id=orphan-old"))
     assert os.path.isdir(os.path.join(figs_path, "run_id=committed1"))
     assert os.path.isdir(os.path.join(figs_path, "run_id=orphan-young"))
     after = sorted(r["url"] for r in
-                   read_figures(spark, figs_path, man_path).collect())
+                   read_figures(spark, figs_path, out_path).collect())
     assert after == before
-    # min_age_sec=0 reaps the young orphan too; committed stays
-    assert clean_orphan_figures(spark, figs_path, man_path,
-                                min_age_sec=0) == ["orphan-young"]
+    # once aged, the young orphan is reaped too; committed stays
+    age("orphan-young")
+    assert clean_orphan_figures(spark, figs_path, out_path) == ["orphan-young"]
     assert os.path.isdir(os.path.join(figs_path, "run_id=committed1"))
-    # missing figures dir and missing manifest are both no-ops
-    assert clean_orphan_figures(spark, str(tmp_path / "nope"), man_path) == []
-    assert clean_orphan_figures(spark, figs_path,
-                                str(tmp_path / "noman"), min_age_sec=1e12) == []
+    # a missing figures dir is a no-op
+    assert clean_orphan_figures(spark, str(tmp_path / "nope"), out_path) == []
 
 
 def test_write_figures_replay_same_run_id_exactly_once(spark, out, tmp_path):
@@ -264,8 +267,10 @@ def test_write_figures_replay_same_run_id_exactly_once(spark, out, tmp_path):
     (stream-{token}-{batch}); the figures write must be idempotent per
     run_id (dynamic partition overwrite), or a crash between the figures
     write and the output commit would surface TWO byte-identical copies
-    once the manifest commits that run_id (ADVICE r3)."""
-    from qwen_ocr_spark.sinks.manifest import read_figures, write_figures
+    once the output commits that run_id; a replay after the commit is a
+    no-op."""
+    from qwen_ocr_spark.sinks.manifest import (commit_run, read_figures,
+                                               write_figures)
     figs_path = str(tmp_path / "figs")
     out_path = str(tmp_path / "out")
     man_path = str(tmp_path / "manifest")
@@ -276,29 +281,27 @@ def test_write_figures_replay_same_run_id_exactly_once(spark, out, tmp_path):
     # same run_id, then output+manifest commit
     partial = out.limit(3)
     write_figures(partial, figs_path, rid)
-    write_figures(out, figs_path, rid)  # replay: full attempt
-    write_output(out, out_path, man_path, rid, replayable=True)
+    assert commit_run(out, out_path, man_path, rid, figs_path) > 0  # replay
 
-    vis = read_figures(spark, figs_path, man_path)
+    vis = read_figures(spark, figs_path, out_path)
     keys = vis.select("url", "page_number", "fig_number")
     n = keys.count()
     assert n == keys.distinct().count()  # single copy per figure
 
     # a further full replay after the commit changes nothing
-    write_figures(out, figs_path, rid)
-    write_output(out, out_path, man_path, rid, replayable=True)
-    assert read_figures(spark, figs_path, man_path).count() == n
+    assert commit_run(out, out_path, man_path, rid, figs_path) == 0
+    assert read_figures(spark, figs_path, out_path).count() == n
 
     # an EMPTY replayed batch (resume drained it) must be a no-op, not a
     # truncate of the run directory
     write_figures(out.limit(0), figs_path, rid)
-    assert read_figures(spark, figs_path, man_path).count() == n
+    assert read_figures(spark, figs_path, out_path).count() == n
 
 
 def test_reconcile_manifest_backfills_crash_window(spark, pages, tmp_path):
-    """A crash between output commit and manifest append must not undercount
+    """A crash between output commit and manifest write must not undercount
     manifest totals forever: startup reconciliation backfills the orphaned
-    run's lineage from the run-dir read-back (ADVICE r2)."""
+    run's lineage from the run-dir read-back."""
     import shutil
     from qwen_ocr_spark.sinks.manifest import reconcile_manifest
     out_path = str(tmp_path / "out")
@@ -355,24 +358,32 @@ def test_reconcile_all_digit_run_id_backfilled_once(spark, tmp_path):
 
 
 def test_commit_path_launches_no_metadata_jobs(spark, pages, tmp_path):
-    """The commit path reads only tables it writes itself, with declared
-    schemas, and lists run directories instead of scanning them: building
-    the resume anti-join launches no job, and reconciling a consistent
-    table costs only the manifest's run_id distinct, however many runs the
-    output holds (a schema-less read is one footer-inference job)."""
-    from qwen_ocr_spark.sinks.manifest import reconcile_manifest
+    """Every "is this run committed?" question is a directory listing:
+    reconciling a consistent table, building the resume anti-join and the
+    committed figures view, and committing an already-committed run_id
+    (a replayed micro-batch, with a lazily built extraction) launch no
+    Spark job, however many runs the output holds."""
+    from qwen_ocr_spark.sinks.manifest import (commit_run, read_figures,
+                                               reconcile_manifest)
     out_path = str(tmp_path / "out")
     man_path = str(tmp_path / "manifest")
+    figs_path = str(tmp_path / "figs")
     for k in range(4):
         quarter = pages.filter(F.crc32(F.col("url")) % 4 == k)
-        write_output(extract_pages(quarter, partitions=2),
-                     out_path, man_path, f"run{k}")
+        commit_run(extract_pages(quarter, partitions=2),
+                   out_path, man_path, f"run{k}", figs_path)
         if k in (0, 3):  # one committed run, then four
             assert _count_jobs(
                 spark, lambda: resume_filter(pages, out_path))[1] == 0
-            backfilled, jobs = _count_jobs(
-                spark, lambda: reconcile_manifest(spark, out_path, man_path))
-            assert backfilled == 0 and jobs <= 2, (k, jobs)
+            assert _count_jobs(
+                spark, lambda: read_figures(spark, figs_path, out_path))[1] == 0
+            assert _count_jobs(
+                spark, lambda: reconcile_manifest(spark, out_path, man_path)) \
+                == (0, 0), k
+            replay = extract_pages(resume_filter(quarter, out_path), partitions=2)
+            assert _count_jobs(
+                spark, lambda: commit_run(replay, out_path, man_path,
+                                          f"run{k}", figs_path)) == (0, 0), k
 
 
 def test_declared_schemas_match_written_tables(spark, out, tmp_path):
@@ -406,7 +417,7 @@ def test_reconcile_lists_only_run_directories(spark, pages, tmp_path):
     manifest row."""
     import os
     import shutil
-    from qwen_ocr_spark.sinks.manifest import reconcile_manifest
+    from qwen_ocr_spark.sinks.manifest import _has_run, reconcile_manifest
     out_path = str(tmp_path / "out")
     man_path = str(tmp_path / "manifest")
     half = pages.filter(F.crc32(F.col("url")) % 2 == 0)
@@ -415,11 +426,14 @@ def test_reconcile_lists_only_run_directories(spark, pages, tmp_path):
     # a run_id the partitioned write escapes on disk (run_id=run%3AB)
     n2 = write_output(extract_pages(rest, partitions=2), out_path, man_path, "run:B")
     assert os.path.isdir(os.path.join(out_path, "run_id=run%3AB"))
+    assert _has_run(spark, out_path, "run:B")
+    assert not _has_run(spark, out_path, "run:C")
     shutil.rmtree(man_path)  # the crash window: both runs lose lineage
     os.makedirs(os.path.join(out_path, "_temporary", "0"))
     open(os.path.join(out_path, "_temporary", "0", "part-0.parquet"), "w").close()
+    os.makedirs(os.path.join(out_path, ".spark-staging-1", "run_id=runC"))
     open(os.path.join(out_path, ".hidden"), "w").close()
-    assert os.path.exists(os.path.join(out_path, "_SUCCESS"))
+    open(os.path.join(out_path, "_SUCCESS"), "w").close()
     os.makedirs(os.path.join(out_path, "not_a_run"))
     os.makedirs(os.path.join(out_path, "run_id=ghost"))
     assert reconcile_manifest(spark, out_path, man_path) == n1 + n2
@@ -427,6 +441,79 @@ def test_reconcile_lists_only_run_directories(spark, pages, tmp_path):
                .groupBy("run_id").agg(F.sum("row_count").alias("s")).collect()}
     assert per_run == {"runA": n1, "run:B": n2}
     assert reconcile_manifest(spark, out_path, man_path) == 0
+
+
+def test_reconcile_refuses_flat_manifest(spark, out, tmp_path):
+    """A manifest appended before the manifest was partitioned by run_id
+    keeps its files at the table root, where Spark reads them and ignores
+    ``run_id=`` directories beside them: reconcile refuses such a root
+    instead of writing lineage nobody would read, and once it is moved
+    aside re-derives the manifest whole from the output."""
+    import shutil
+    from qwen_ocr_spark.sinks.manifest import reconcile_manifest
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    n = write_output(out, out_path, str(tmp_path / "lost"), "run1")
+    spark.createDataFrame(
+        [(0, n, "digest", "run1")],
+        "partition_id int, row_count bigint, content_digest string, "
+        "run_id string").write.parquet(man_path)
+    with pytest.raises(ValueError, match="outside any run_id= directory"):
+        reconcile_manifest(spark, out_path, man_path)
+    shutil.move(man_path, str(tmp_path / "old_manifest"))
+    assert reconcile_manifest(spark, out_path, man_path) == n
+    assert spark.read.parquet(man_path).agg(
+        F.sum("row_count")).collect()[0][0] == n
+
+
+def test_uncommitted_staging_run_is_invisible(spark, pages, tmp_path):
+    """A write killed before its job commit leaves its part files under the
+    hidden ``.spark-staging-*`` directory and no run directory: none of
+    its rows is visible to the raw read or to ``read_output``, resume keeps
+    every one of its urls, and reconcile records no lineage for it."""
+    import os
+    import shutil
+    from qwen_ocr_spark.sinks.manifest import (read_output, reconcile_manifest,
+                                               run_dir_path)
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    half = pages.filter(F.crc32(F.col("url")) % 2 == 0)
+    rest = pages.filter(F.crc32(F.col("url")) % 2 != 0)
+    n1 = write_output(extract_pages(half, partitions=2), out_path, man_path, "runA")
+    # runB's task output, as the kill left it: staged, never renamed
+    scratch = str(tmp_path / "scratch")
+    write_output(extract_pages(rest, partitions=2), scratch,
+                 str(tmp_path / "scratch_man"), "runB")
+    staged = os.path.join(out_path, ".spark-staging-0", "run_id=runB")
+    os.makedirs(os.path.dirname(staged))
+    shutil.move(run_dir_path(spark, scratch, "runB"), staged)
+    assert any(f.endswith(".parquet") for f in os.listdir(staged))
+
+    assert spark.read.parquet(out_path).count() == n1
+    assert read_output(spark, out_path).count() == n1
+    assert read_output(spark, out_path, dedup=True).count() == n1
+    rest_urls = {r["url"] for r in rest.select("url").collect()}
+    kept = {r["url"] for r in resume_filter(pages, out_path).collect()}
+    assert kept == rest_urls
+    assert reconcile_manifest(spark, out_path, man_path) == 0
+
+
+def test_write_output_same_run_id_replaces_attempt(spark, pages, tmp_path):
+    """Writing a run_id again replaces its earlier attempt, output and
+    manifest alike, instead of appending beside it."""
+    from qwen_ocr_spark.sinks.manifest import read_output
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    first = pages.filter(F.crc32(F.col("url")) % 3 == 0)
+    second = pages.filter(F.crc32(F.col("url")) % 3 != 0)
+    n1 = write_output(extract_pages(first, partitions=2), out_path, man_path, "r")
+    n2 = write_output(extract_pages(second, partitions=2), out_path, man_path, "r")
+    assert 0 < n1 and 0 < n2 and n1 + n2 == N_DOCS
+    urls = {r["url"] for r in read_output(spark, out_path).collect()}
+    assert urls == {r["url"] for r in second.select("url").collect()}
+    man = spark.read.parquet(man_path)
+    assert man.agg(F.sum("row_count")).collect()[0][0] == n2
+    assert man.count() == man.select("partition_id").distinct().count()
 
 
 def test_extract_documents_narrowed_columns_identical(spark):
