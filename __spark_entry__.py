@@ -38,8 +38,39 @@ from qwen_ocr_spark.operators.extract import (
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
+# The schema of every table ``_t`` reads, declared so that building a query
+# launches no Spark job: a schema-less ``spark.read.parquet`` runs one to
+# read a Parquet footer.  The types are the ones Parquet inference gives
+# these files: pyarrow writes its timestamps without the UTC-adjusted flag,
+# so they read as ``timestamp_ntz``, never ``timestamp``.
+TABLE_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": ("c_custkey bigint, c_name string, c_nationkey int, "
+                 "c_acctbal double, c_mktsegment string"),
+    "supplier": ("s_suppkey bigint, s_name string, s_nationkey int, "
+                 "s_acctbal double"),
+    "part": ("p_partkey bigint, p_name string, p_brand string, p_type string, "
+             "p_size int, p_retailprice double"),
+    "orders": ("o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+               "o_totalprice double, o_orderdate timestamp_ntz, "
+               "o_orderpriority string"),
+    "lineitem": ("l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+                 "l_linenumber int, l_quantity double, "
+                 "l_extendedprice double, l_discount double, l_tax double, "
+                 "l_returnflag string, l_linestatus string, "
+                 "l_shipdate timestamp_ntz"),
+    "events": ("event_id bigint, ts timestamp_ntz, user_id bigint, "
+               "event_type string, value double, props string"),
+    "documents": ("doc_id bigint, text string, lang string, source string, "
+                  "n_chars bigint"),
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet")
 
 
 def _e(col, k: int = 4):
@@ -794,7 +825,7 @@ def q_events_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction over pages derived from sf0.001 documents."""
-    docs = spark.read.parquet(f"{SF_DEFAULT}/documents.parquet")
+    docs = _t(spark, SF_DEFAULT, "documents")
     out = extract_documents(docs)  # fused bridge, see q_extract_docs
     return out.select(
         "url", "warc_ts", "doc_kind", "markdown", "extracted_text", "digest",

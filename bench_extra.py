@@ -11,6 +11,7 @@ Usage::
     python bench_extra.py plan  <sf_dir> <out_dir> <suffix> <query> [...]
     python bench_extra.py noop  <sf_dir> <query> [query ...]
     python bench_extra.py fresh <sf_dir> <query> [query ...]
+    python bench_extra.py jobs  <sf_dir> [query ...]
 
 ``time`` prints one JSON line {"queries": {name: best_sec}, "sf": dir}.
 ``fresh`` follows the per-pass protocol of ``perfbench``'s near-dup
@@ -22,6 +23,11 @@ label rounds of ``dedup_groups_scalable``).  It prints the median of 5
 reps after 1 warm-up rep in the same JSON shape.  ``time`` reuses one
 DataFrame for its warm and timed passes, so a query that persists an
 intermediate is timed reading that cache.
+``jobs`` counts, for each named query (all of ``queries()`` when none is
+named), the Spark jobs launched while building its DataFrame and those
+its ``toArrow()`` launches: one line ``<query> <build> <run>`` each, then
+a ``total`` line.  A query should launch none before its action runs; a
+schema-less read or an eager intermediate shows up in the build column.
 ``noop`` times a full-materialization noop write instead of count()
 (count() is what bench.py measures; noop shows whether column pruning
 was hiding work).
@@ -55,7 +61,8 @@ def main() -> None:
     mode = sys.argv[1]
     sf_dir = sys.argv[2]
     import __spark_entry__ as entry_mod
-    from qwen_ocr_spark.plans.session import gc_hint, get_spark, release_cached
+    from qwen_ocr_spark.plans.session import (count_jobs, gc_hint, get_spark,
+                                              release_cached)
 
     spark = get_spark(app_name=f"bench-extra-{mode}")
     queries = entry_mod.queries()
@@ -71,6 +78,19 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted")))
             print(f"wrote {path}")
             spark.catalog.clearCache()
+        spark.stop()
+        return
+
+    if mode == "jobs":
+        totals = [0, 0]
+        for name in sys.argv[3:] or list(queries):
+            query = _get(queries, name)
+            df, build = count_jobs(spark, lambda: query(spark, sf_dir))
+            run = count_jobs(spark, df.toArrow)[1]
+            release_cached()
+            totals = [totals[0] + build, totals[1] + run]
+            print(f"{name:28s} {build:5d} {run:5d}", flush=True)
+        print(f"{'total':28s} {totals[0]:5d} {totals[1]:5d}")
         spark.stop()
         return
 

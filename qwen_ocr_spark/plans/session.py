@@ -141,3 +141,19 @@ def gc_hint(spark: SparkSession) -> None:
     does; a long-running service would do this on a timer).  Root cause
     documented in BENCH/BASELINE.md."""
     spark.sparkContext._jvm.System.gc()
+
+
+def count_jobs(spark: SparkSession, fn):
+    """(fn's result, the number of Spark jobs fn launched): a fresh job
+    group per call, counted once the listener bus has caught up (the status
+    store is fed asynchronously)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -8,11 +8,11 @@
 ``.spark-staging-<job>`` directory, and the job commit moves the run's
 directory into place with one rename.  So a run directory appears whole
 or not at all — a kill mid-write leaves only the hidden staging directory,
-which readers and the listing below ignore — and writing a run_id again
-replaces its earlier attempt instead of appending beside it.  Every "is
-this run committed?" question is therefore answered by the output table's
-directories, never by a Spark query: ``_has_run`` (one
-``FileSystem.exists``) for one run, ``_run_dirs`` (one
+which readers and the listing below ignore and ``clean_staging`` reaps —
+and writing a run_id again replaces its earlier attempt instead of
+appending beside it.  Every "is this run committed?" question is therefore
+answered by the output table's directories, never by a Spark query:
+``_has_run`` (one ``FileSystem.exists``) for one run, ``_run_dirs`` (one
 ``FileSystem.listStatus``) for all of them.
 
 ``commit_run`` is the one commit sequence (the CLI and the stream both
@@ -59,7 +59,7 @@ import time
 
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
@@ -80,9 +80,9 @@ MANIFEST_SCHEMA = ("partition_id int, row_count bigint, content_digest string, "
                    "committed_at timestamp, run_id string")
 FIGURES_SCHEMA = f"url string, {FIGURE_FIELDS}, run_id string"
 
-# a figures run directory without an output run directory is reaped once
-# older than this, so an in-flight run (figures written, output not yet)
-# is never touched
+# a figures run directory without an output run directory, and a
+# ``.spark-staging-`` directory, is reaped once older than this, so an
+# in-flight run (figures written, output not yet) or write is never touched
 ORPHAN_MIN_AGE_SEC = 24 * 3600
 
 
@@ -129,12 +129,14 @@ def write_output(out_df: DataFrame, out_path: str, manifest_path: str,
     the run's manifest.  Returns the number of rows now under lineage (0
     for an empty batch, which commits no run directory).
 
-    ``spark_partition_id`` is captured as a column during the write, which
-    is the extraction's only evaluation, so the manifest describes exactly
-    the partitions that hit disk.  The manifest is aggregated from a
-    read-back of the committed run directory, not from ``out_df``: the
-    write invalidates any cache of a plan that anti-joins against
-    ``out_path``, which would re-evaluate to zero rows."""
+    Two writes, so two Spark queries, and no other: the output write, which
+    is the extraction's only evaluation, and the manifest write.
+    ``spark_partition_id`` is captured as a column during the output
+    write, so the manifest describes exactly the partitions that hit disk.
+    The manifest is aggregated from a read-back of the committed run
+    directory, not from ``out_df``: the write invalidates any cache of a
+    plan that anti-joins against ``out_path``, which would re-evaluate to
+    zero rows."""
     _overwrite_run(
         out_df.withColumn("partition_id", F.spark_partition_id())
         .withColumn("run_id", F.lit(run_id)),
@@ -145,15 +147,20 @@ def write_output(out_df: DataFrame, out_path: str, manifest_path: str,
 
 def _write_manifest(spark: SparkSession, out_path: str, manifest_path: str,
                     run_id: str) -> int:
-    """Derive ``run_id``'s manifest rows from a read-back of ONLY its output
-    directory and write them as the run's manifest directory; returns the
-    row count now under lineage."""
+    """Write ``run_id``'s manifest directory, aggregated from a read-back of
+    ONLY its output directory; returns the row count now under lineage.
+
+    One write, so one Spark query: the aggregate goes straight from the
+    Parquet scan to the manifest file (``coalesce(1)``: one file per run),
+    and the row count it returns is an ``Observation`` of that same write.
+    No row crosses to Python and back."""
     try:
         written = spark.read.schema(RUN_DIR_SCHEMA).parquet(
             run_dir_path(spark, out_path, run_id))
     except AnalysisException:
         return 0  # empty batch: the partitioned write created no run dir
-    manifest_rows = (
+    rows = Observation()
+    manifest = (
         written
         .groupBy("partition_id")
         .agg(
@@ -164,12 +171,10 @@ def _write_manifest(spark: SparkSession, out_path: str, manifest_path: str,
         )
         .withColumn("committed_at", F.current_timestamp())
         .withColumn("run_id", F.lit(run_id))
-        .collect()
+        .observe(rows, F.sum("row_count").alias("rows"))
     )
-    if manifest_rows:
-        _overwrite_run(spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
-                       .coalesce(1), manifest_path)
-    return sum(r["row_count"] for r in manifest_rows)
+    _overwrite_run(manifest.coalesce(1), manifest_path)
+    return rows.get["rows"] or 0
 
 
 def reconcile_manifest(spark: SparkSession, out_path: str,
@@ -202,6 +207,21 @@ def _has_run(spark: SparkSession, table_path: str, run_id: str) -> bool:
     return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
 
 
+def _listing(spark: SparkSession, table_path: str) -> list:
+    """Hadoop ``FileStatus`` of every entry directly under ``table_path``,
+    from one ``FileSystem.listStatus``; empty when the path does not exist
+    yet."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(table_path)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        return list(fs.listStatus(path))
+    except Py4JJavaError as e:
+        if is_instance_of(spark.sparkContext._gateway, e.java_exception,
+                          "java.io.FileNotFoundException"):
+            return []
+        raise
+
+
 def _run_dirs(spark: SparkSession, table_path: str) -> dict:
     """``{run_id: Hadoop FileStatus}`` of a run_id-partitioned table's
     ``run_id=`` directories, from one ``FileSystem.listStatus`` — the
@@ -212,20 +232,10 @@ def _run_dirs(spark: SparkSession, table_path: str) -> dict:
     table root: that is a manifest appended before the manifest was
     partitioned by run_id, and Spark reads such a root's own files and
     ignores the ``run_id=`` directories beside them."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        statuses = fs.listStatus(path)
-    except Py4JJavaError as e:
-        if is_instance_of(spark.sparkContext._gateway, e.java_exception,
-                          "java.io.FileNotFoundException"):
-            return {}
-        raise
-    unescape = jvm.org.apache.spark.sql.catalyst.catalog \
+    unescape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
         .ExternalCatalogUtils.unescapePathName
     dirs = {}
-    for st in statuses:
+    for st in _listing(spark, table_path):
         name = st.getPath().getName()
         if name.startswith("run_id=") and st.isDirectory():
             dirs[unescape(name[len("run_id="):])] = st
@@ -276,17 +286,33 @@ def clean_orphan_figures(spark: SparkSession, figures_path: str,
     construction (orphans were already invisible).  Returns the deleted
     run_ids.  Two directory listings and the deletes; no data scan."""
     committed = _run_dirs(spark, out_path)
-    deleted: list[str] = []
-    now_ms = time.time() * 1000
-    for run_id, st in sorted(_run_dirs(spark, figures_path).items()):
-        if run_id in committed:
-            continue
-        if now_ms - st.getModificationTime() < ORPHAN_MIN_AGE_SEC * 1000:
-            continue
-        path = st.getPath()
-        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
-        deleted.append(run_id)
-    return deleted
+    figures = sorted(_run_dirs(spark, figures_path).items())
+    return [run_id for run_id, st in figures
+            if run_id not in committed and _delete_if_aged(spark, st)]
+
+
+def clean_staging(spark: SparkSession, table_path: str) -> list[str]:
+    """Delete the ``.spark-staging-<job>`` directories that killed writes
+    left under a table root (output, figures or manifest) once older than
+    ``ORPHAN_MIN_AGE_SEC``, so a write still in flight keeps its own.
+    Readers never saw them (hidden names), so every read is unchanged.
+    Returns the deleted directory names.  One directory listing and the
+    deletes; no data scan."""
+    return [st.getPath().getName() for st in _listing(spark, table_path)
+            if st.isDirectory()
+            and st.getPath().getName().startswith(".spark-staging-")
+            and _delete_if_aged(spark, st)]
+
+
+def _delete_if_aged(spark: SparkSession, st) -> bool:
+    """Recursively delete the entry of FileStatus ``st`` if it was last
+    modified at least ``ORPHAN_MIN_AGE_SEC`` ago; whether it was."""
+    age_ms = time.time() * 1000 - st.getModificationTime()
+    if age_ms < ORPHAN_MIN_AGE_SEC * 1000:
+        return False
+    path = st.getPath()
+    path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
+    return True
 
 
 def read_output(spark: SparkSession, out_path: str,

@@ -15,11 +15,16 @@ the window's marker appears:
 * ``stream-batch``    — ``out/run_id=stream-*`` of a ``--stream`` run (a
   micro-batch committed, its checkpoint not yet)
 
-It then re-runs the same command to completion and checks that every url
-appears once in ``read_output``, the digests equal the clean run's, the
-manifest ``row_count`` sum equals the rows, and the ``read_figures`` keys
-are unique.  One line per window says which state the kill hit and
-whether the checks held; the exit status is 1 if any check failed.
+It then ages what the kill left for the janitor (``.spark-staging-*``
+directories under the three roots, figure run directories) past
+``ORPHAN_MIN_AGE_SEC``, re-runs the same command to completion and checks
+that every url appears once in ``read_output``, the digests equal the
+clean run's, the manifest ``row_count`` sum equals the rows, and the
+``read_figures`` keys are unique; after a batch re-run, whose start-up
+janitor reaps them, no staging directory and no figure run without an
+output run may be left.  One line per window says which state the kill
+hit and whether the checks held; the exit status is 1 if any check
+failed.
 Killing only a ``spark-submit`` wrapper is not enough: the orphaned JVM
 finishes the job and races the retry.
 """
@@ -99,10 +104,37 @@ def _kill_at(cmd: list[str], marker: str, log: str,
 def _state(base: str) -> str:
     def count(table, pattern):
         return len(glob.glob(f"{base}/{table}/{pattern}"))
-    return (f"out staging={count('out', '.spark-staging-*')} "
-            f"runs={count('out', 'run_id=*')}, "
-            f"figs runs={count('figs', 'run_id=*')}, "
-            f"man runs={count('man', 'run_id=*')}")
+    return ", ".join(f"{t} staging={count(t, '.spark-staging-*')} "
+                     f"runs={count(t, 'run_id=*')}"
+                     for t in ("out", "figs", "man"))
+
+
+def _reapable(base: str) -> list[str]:
+    """What a killed run can leave for the janitor: staging directories
+    under the three roots, and figure run directories."""
+    return [p for t in ("out", "figs", "man")
+            for p in glob.glob(f"{base}/{t}/.spark-staging-*")] + \
+        glob.glob(f"{base}/figs/run_id=*")
+
+
+def _age(paths: list[str]) -> None:
+    """Push the modification time of ``paths`` past the janitor's age
+    guard, as if the killed run were a day old."""
+    from qwen_ocr_spark.sinks.manifest import ORPHAN_MIN_AGE_SEC
+    for p in paths:
+        t = os.path.getmtime(p) - ORPHAN_MIN_AGE_SEC - 60
+        os.utime(p, (t, t))
+
+
+def _leftovers(base: str) -> list[str]:
+    """Staging directories and orphan figure runs still present."""
+    def runs(table):
+        return {os.path.basename(p)
+                for p in glob.glob(f"{base}/{table}/run_id=*")}
+    staged = [os.path.relpath(p, base) for p in _reapable(base)
+              if ".spark-staging-" in p]
+    orphans = [f"figs/{r}" for r in sorted(runs("figs") - runs("out"))]
+    return [f"left {p}" for p in staged + orphans]
 
 
 def _check(spark, base: str, ref: dict[str, str]) -> list[str]:
@@ -157,8 +189,11 @@ def main() -> int:
         cmd = _job(base, pages, stream=name.startswith("stream"))
         hit = _kill_at(cmd, f"{base}/{table}/{pattern}", log)
         state = _state(base) if hit else "marker not seen, job finished"
+        _age(_reapable(base))
         _run(cmd, log)
         problems = _check(spark, base, ref)
+        if not name.startswith("stream"):
+            problems += _leftovers(base)
         failed |= bool(problems)
         print(f"{name}: killed at [{state}] -> rerun "
               f"{'ok' if not problems else '; '.join(problems)}", flush=True)

@@ -3,7 +3,9 @@
 
 Reads the pages table, drops already-committed urls (anti-join resume),
 runs the extraction and commits it as one run: figures, output, then the
-per-partition manifest (``sinks.manifest.commit_run``).  Kill it at any
+per-partition manifest (``sinks.manifest.commit_run``).  At start-up it
+backfills missing manifests and reaps what killed runs left behind once
+it is a day old (staging directories, orphan figure runs).  Kill it at any
 point and re-run with the same arguments: committed work is never
 reprocessed (north_rule resumability).
 """
@@ -53,10 +55,13 @@ def main() -> None:
     from qwen_ocr_spark.operators.extract import extract_pages
     from qwen_ocr_spark.plans.session import get_spark
     from qwen_ocr_spark.sinks.manifest import (
+        clean_orphan_figures,
+        clean_staging,
         commit_run,
         reconcile_manifest,
         resume_filter,
     )
+    from qwen_ocr_spark.sources.pages import PAGES_SCHEMA
 
     spark = get_spark(master=args.master, app_name="qwen-ocr-spark-extract")
     run_id = f"run-{uuid.uuid4().hex[:12]}"
@@ -78,8 +83,17 @@ def main() -> None:
     backfilled = reconcile_manifest(spark, args.out, args.manifest)
     if backfilled:
         print(f"reconciled: backfilled lineage for {backfilled} rows")
+    # janitor: what killed runs left behind, once old enough that no live
+    # job can still own it
+    reaped = [d for root in (args.out, args.manifest, args.figures) if root
+              for d in clean_staging(spark, root)]
+    if args.figures:
+        reaped += clean_orphan_figures(spark, args.figures, args.out)
+    if reaped:
+        print(f"cleaned: {' '.join(reaped)}")
 
-    pages = spark.read.parquet(args.pages)
+    # declared schema: an inferred one costs a footer-reading Spark job
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(args.pages)
     out = extract_pages(
         resume_filter(pages, args.out), salt=args.salt,
         partitions=args.partitions, lang=args.lang,

@@ -12,8 +12,9 @@ from qwen_ocr_spark.operators.extract import (
     figures_table,
     job_totals,
 )
+from qwen_ocr_spark.plans.session import count_jobs
 from qwen_ocr_spark.sinks.manifest import resume_filter, write_output
-from qwen_ocr_spark.sources.pages import gen_page, synth_pages
+from qwen_ocr_spark.sources.pages import PAGES_SCHEMA, gen_page, synth_pages
 
 N_DOCS = 60
 
@@ -262,6 +263,47 @@ def test_clean_orphan_figures_janitor(spark, out, tmp_path):
     assert clean_orphan_figures(spark, str(tmp_path / "nope"), out_path) == []
 
 
+def test_clean_staging_janitor(spark, out, tmp_path):
+    """``.spark-staging-*`` directories that killed writes left under the
+    output, figures and manifest roots are deleted once older than
+    ``ORPHAN_MIN_AGE_SEC``; a young one (a write in flight) is kept, and
+    what ``read_output`` and ``read_figures`` show is unchanged."""
+    import os
+    import shutil
+    from qwen_ocr_spark.sinks.manifest import (ORPHAN_MIN_AGE_SEC,
+                                               clean_staging, read_figures,
+                                               read_output, run_dir_path,
+                                               write_figures)
+    roots = {t: str(tmp_path / t) for t in ("out", "figs", "man")}
+    write_figures(out, roots["figs"], "run1")
+    write_output(out, roots["out"], roots["man"], "run1")
+
+    def view():
+        return (sorted(tuple(r) for r in read_output(spark, roots["out"])
+                       .select("url", "digest", "run_id").collect()),
+                sorted(tuple(r) for r in
+                       read_figures(spark, roots["figs"], roots["out"])
+                       .select("url", "page_number", "fig_number").collect()))
+
+    before = view()
+    for root in roots.values():  # a killed run2's part files, staged
+        for job in ("old", "young"):
+            staged = os.path.join(root, f".spark-staging-{job}")
+            shutil.copytree(run_dir_path(spark, root, "run1"),
+                            os.path.join(staged, "run_id=run2"))
+        old = os.path.join(root, ".spark-staging-old")
+        t = os.path.getmtime(old) - ORPHAN_MIN_AGE_SEC - 60
+        os.utime(old, (t, t))
+    assert view() == before
+    for root in roots.values():
+        assert clean_staging(spark, root) == [".spark-staging-old"]
+        assert sorted(d for d in os.listdir(root) if d.startswith(
+            (".spark-staging-", "run_id="))) == [".spark-staging-young",
+                                                 "run_id=run1"]
+    assert view() == before
+    assert clean_staging(spark, str(tmp_path / "nope")) == []
+
+
 def test_write_figures_replay_same_run_id_exactly_once(spark, out, tmp_path):
     """Streaming replays re-deliver the SAME deterministic run_id
     (stream-{token}-{batch}); the figures write must be idempotent per
@@ -324,21 +366,6 @@ def test_reconcile_manifest_backfills_crash_window(spark, pages, tmp_path):
     assert reconcile_manifest(spark, str(tmp_path / "missing"), man_path) == 0
 
 
-def _count_jobs(spark, fn):
-    """(fn's result, the number of Spark jobs fn launched): a fresh job
-    group per call, counted once the listener bus has caught up."""
-    import uuid
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        result = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_reconcile_all_digit_run_id_backfilled_once(spark, tmp_path):
     """Partition inference types a ``run_id=20261017`` directory as int
     while the manifest stores the run_id as a string: the run must still
@@ -373,17 +400,82 @@ def test_commit_path_launches_no_metadata_jobs(spark, pages, tmp_path):
         commit_run(extract_pages(quarter, partitions=2),
                    out_path, man_path, f"run{k}", figs_path)
         if k in (0, 3):  # one committed run, then four
-            assert _count_jobs(
+            assert count_jobs(
                 spark, lambda: resume_filter(pages, out_path))[1] == 0
-            assert _count_jobs(
+            assert count_jobs(
                 spark, lambda: read_figures(spark, figs_path, out_path))[1] == 0
-            assert _count_jobs(
+            assert count_jobs(
                 spark, lambda: reconcile_manifest(spark, out_path, man_path)) \
                 == (0, 0), k
             replay = extract_pages(resume_filter(quarter, out_path), partitions=2)
-            assert _count_jobs(
+            assert count_jobs(
                 spark, lambda: commit_run(replay, out_path, man_path,
                                           f"run{k}", figs_path)) == (0, 0), k
+
+
+def _collected_manifest(spark, out_path, man_path, run_id):
+    """The manifest write as the sink did it before its one-job write:
+    collect the aggregate, rebuild it with ``createDataFrame`` and write
+    that; returns the summed row count."""
+    from qwen_ocr_spark.sinks.manifest import (MANIFEST_SCHEMA,
+                                               RUN_DIR_SCHEMA, _overwrite_run,
+                                               run_dir_path)
+    rows = (
+        spark.read.schema(RUN_DIR_SCHEMA)
+        .parquet(run_dir_path(spark, out_path, run_id))
+        .groupBy("partition_id")
+        .agg(F.count("*").alias("row_count"),
+             F.sha2(F.concat_ws(",", F.sort_array(F.collect_list("digest"))),
+                    256).alias("content_digest"))
+        .withColumn("committed_at", F.current_timestamp())
+        .withColumn("run_id", F.lit(run_id))
+        .collect())
+    _overwrite_run(spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1),
+                   man_path)
+    return sum(r["row_count"] for r in rows)
+
+
+def test_write_manifest_one_query_same_rows(spark, pages, tmp_path):
+    """The manifest is written straight from the aggregate of the run
+    directory, with its row count observed on that write: the same count
+    and the same rows (``committed_at`` aside) as collecting the aggregate
+    and rebuilding it, in one SQL execution that scans no local RDD."""
+    import pathlib
+    from qwen_ocr_spark.sinks.manifest import MANIFEST_SCHEMA, _write_manifest
+    out_path = str(tmp_path / "out")
+    pages3 = pages.filter(F.crc32(F.col("url")) % 3 == 0)
+    n = write_output(extract_pages(pages3, partitions=3), out_path,
+                     str(tmp_path / "m0"), "run:1")
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return {e.executionId(): e for e in
+                conv.asJava(store.executionsList())}
+
+    seen = executions().keys()
+    assert _write_manifest(spark, out_path, str(tmp_path / "new"),
+                           "run:1") == n
+    new = [e for i, e in executions().items() if i not in seen]
+    assert len(new) == 1
+    plan = new[0].physicalPlanDescription() + " ".join(
+        node.name() for node in
+        conv.asJava(store.planGraph(new[0].executionId()).allNodes()))
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    assert _collected_manifest(spark, out_path, str(tmp_path / "old"),
+                               "run:1") == n
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.schema(MANIFEST_SCHEMA)
+                      .parquet(path).drop("committed_at").collect())
+
+    assert rows(str(tmp_path / "new")) == rows(str(tmp_path / "old"))
+    assert len(rows(str(tmp_path / "new"))) == 3
+    sinks = pathlib.Path(__file__).parent.parent / "qwen_ocr_spark" / "sinks"
+    assert not [p for p in sinks.glob("*.py")
+                if "createDataFrame" in p.read_text()]
 
 
 def test_declared_schemas_match_written_tables(spark, out, tmp_path):
@@ -616,12 +708,14 @@ def test_plan_pruning_and_pushdown(spark, tmp_path):
     column never read, exactly one exchange (the salted repartition)."""
     path = str(tmp_path / "pp")
     synth_pages(spark, 20, seed=42, partitions=2).write.parquet(path)
-    df = spark.read.parquet(path)
-    plan = _formatted_plan(extract_pages(df, lang="en"))
-    assert "EqualTo(lang,en)" in plan          # predicate pushdown
-    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "text" not in read_schema           # column pruning
-    assert plan.count("Exchange") == 2         # one exchange node + its detail line
+    # inferred, and declared as scripts/run_extract.py reads it
+    for df in (spark.read.parquet(path),
+               spark.read.schema(PAGES_SCHEMA).parquet(path)):
+        plan = _formatted_plan(extract_pages(df, lang="en"))
+        assert "EqualTo(lang,en)" in plan      # predicate pushdown
+        read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
+        assert "text" not in read_schema       # column pruning
+        assert plan.count("Exchange") == 2     # one exchange node + its detail line
 
 
 def test_salted_repartition_balances_hot_domain(spark, pages):
