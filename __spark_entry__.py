@@ -1343,7 +1343,7 @@ WHERE floor(inter * 10000.0 / (sa.n_shingles + sb.n_shingles - inter)) >= 8000
 
     # near-dup clustering: the SAME capped-jaccard pair CTEs feed a
     # recursive transitive closure; group_id = min reachable id (exactly
-    # the Spark min-label-propagation fixpoint)
+    # the component minimum dedup.connected_components labels with)
     q["dedup_groups"] = f"""
 WITH RECURSIVE {_DOCS2},
 {_shingles_sql('docs2')},

@@ -18,9 +18,9 @@ Usage::
 workload instead: every rep rebuilds the query's DataFrame, runs its
 ``toArrow()`` and then calls ``release_cached()``, so no rep reads a
 relation an earlier rep persisted; the timed span is the build plus
-``toArrow()`` (building runs jobs for some queries, e.g. the eager
-label rounds of ``dedup_groups_scalable``).  It prints the median of 5
-reps after 1 warm-up rep in the same JSON shape.  ``time`` reuses one
+``toArrow()`` (building runs jobs for some queries, e.g. the one edge
+count of ``connected_components`` behind ``dedup_groups_scalable``).  It
+prints the median of 5 reps after 1 warm-up rep in the same JSON shape.  ``time`` reuses one
 DataFrame for its warm and timed passes, so a query that persists an
 intermediate is timed reading that cache.
 ``jobs`` counts, for each named query (all of ``queries()`` when none is

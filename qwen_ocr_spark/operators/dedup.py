@@ -35,16 +35,19 @@ id_b, ...)`` with ``id_a < id_b``, which is also what
 registered with ``plans.session.track_cached`` and released by
 ``release_cached()``.
 
-Most of it is built-in-function SQL (md5/least/greatest/window).  Two
+Most of it is built-in-function SQL (md5/least/greatest/window).  Three
 steps are Python: the word shingles (one vectorized pandas_udf,
-``_shingle_array_udf``) and the LSH bucket kernel behind
-``lsh_candidate_pairs`` (one ``mapInArrow`` pass).  Every operator has
-an exact DuckDB oracle in __spark_entry__.py because md5 is
+``_shingle_array_udf``), the LSH bucket kernel behind
+``lsh_candidate_pairs`` and the union-find kernel behind
+``connected_components`` (one ``mapInArrow`` pass each).  Every operator
+has an exact DuckDB oracle in __spark_entry__.py because md5 is
 engine-independent.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -57,8 +60,9 @@ SHINGLE_N = 3
 MAX_SHINGLE_DF = 256  # default document-frequency cap for the jaccard join
 SIMHASH_RADIUS = 3    # default hamming radius; 2 chunks of 16 bits,
                       # each joined through its 1-bit expansion
-_LABEL_ROUNDS = 25    # connected_components: label-propagation rounds
-                      # before a deeper component is finished by _cc_star
+CC_LOCAL_EDGES = 1_000_000  # edges labelled in ONE task; the kernel grows
+                            # RSS ~105 B/edge over its Arrow input (2M
+                            # edges: ~205 MB), so that task stays near 105 MB
 _BITMAP_WORDS = 4     # 4 x 64 = 256-bit hashed doc bitmaps (jaccard
                       # pre-filter; exactness does not depend on the width,
                       # only pruning power does).  Round-6 A/B at sf1: the
@@ -250,9 +254,9 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 
 def _cc_star(e: DataFrame) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond") — O(log n)
-    rounds even on adversarially deep components, where min-label
-    propagation needs O(diameter).
+    al., "Connected Components in MapReduce and Beyond"): the path of
+    ``connected_components`` above ``CC_LOCAL_EDGES`` edges, O(log n)
+    Spark rounds whatever the component depth.
 
     Edges live canonically as (a, b) with a > b, deduped.  Per round:
 
@@ -370,72 +374,63 @@ def lsh_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     )
 
 
+def _cc_label_kernel(batches):
+    """``mapInArrow`` kernel of ``connected_components``: reads all the
+    ``(a, b)`` edge batches of its one partition and yields ``(node,
+    group_id)``, group_id = the component's minimum id (nothing for no
+    edges).  One numpy hook-and-pointer-jump pass (Shiloach-Vishkin
+    style) over ids compressed to sorted indices by ``np.unique``, with
+    ``parent[x] <= x`` throughout.  Per round the larger root of each
+    live edge hooks onto the smallest root it has an edge to, pointer
+    jumping flattens every tree onto its root, and edges inside one tree
+    drop out.  A root that neither hooks nor is hooked onto in a round
+    hooks in the next, so the live roots halve every two rounds."""
+    a, b = [], []
+    for batch in batches:
+        a.append(batch.column(0).to_numpy())
+        b.append(batch.column(1).to_numpy())
+    m = sum(map(len, a))
+    if not m:
+        return
+    ids, idx = np.unique(np.concatenate(a + b), return_inverse=True)
+    u, v = idx[:m], idx[m:]
+    parent = np.arange(len(ids))
+    while len(u):
+        np.minimum.at(parent, np.maximum(u, v), np.minimum(u, v))
+        while True:
+            up = parent[parent]
+            if (up == parent).all():
+                break
+            parent = up
+        u, v = parent[u], parent[v]
+        live = u != v
+        u, v = u[live], v[live]
+    yield pa.RecordBatch.from_arrays([pa.array(ids), pa.array(ids[parent])],
+                                     names=["node", "group_id"])
+
+
 def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-group clustering: connected components over a near-dup
-    pair relation → ``(node, group_id)`` with group_id = the component's
-    minimum id (the canonical "keep" representative).  The step every
-    dedup pipeline needs after pair generation: near-duplication is
-    transitive in effect (A~B, B~C ⇒ one cluster) even when A~C scored
+    pair relation → ``(node bigint, group_id bigint)`` with group_id = the
+    component's minimum id (the canonical "keep" representative).  The
+    step every dedup pipeline needs after pair generation: near-duplication
+    is transitive in effect (A~B, B~C ⇒ one cluster) even when A~C scored
     below threshold, and exactly one representative per cluster survives.
 
-    Algorithm: iterative min-label propagation — label(v) starts at v and
-    each round takes the min over neighbors' labels; converges in
-    O(component diameter) rounds.  The fixpoint check counts CHANGED
-    labels per round (a bigint row count — a sum over the labels
-    themselves could overflow and THROW under this repo's default ANSI
-    mode at large-id/corpus scale).  Near-dup clusters are shallow
-    (dozens of docs, diameter ~ a few hops), so this beats the
-    constant-factor overhead of the alternating large-star/small-star
-    construction.  Each round is one int-pair equi-join + min-aggregate —
-    the only state shuffled is (node, label).
-
-    A component deeper than ``_LABEL_ROUNDS`` hops (an adversarially long
-    chain) leaves labels still moving after the last round; then the
-    labeling is discarded and the graph is finished by ``_cc_star``
-    (alternating large-star/small-star, round 5), which converges in
-    O(log n) rounds whatever the depth.  A partially merged labeling is
-    never returned.
-
-    Each round materializes via ``localCheckpoint(eager=True)``, not
-    persist: the logical plan references the previous round's labels
-    TWICE (neighbor min + the left join), so under plain persist the
-    ANALYZED plan doubles per round and the driver OOMs re-walking it
-    past ~25 rounds even though execution is cached.  The checkpoint
-    truncates lineage to one level per round; the pinned label RDDs are
-    tiny (two ints per node) and freed by GC + ContextCleaner after the
-    call (``unpersist`` cannot release a localCheckpoint, so one per
-    streaming micro-batch would accumulate; a bounded batch loop does
-    not).  The symmetric edge relation every round (and the star fallback)
-    reads is cached through ``track_cached``."""
-    e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    edges = track_cached(
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist())
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=True))
-    for _ in range(_LABEL_ROUNDS):
-        nbr = (
-            edges.join(labels.select(F.col("node").alias("b"),
-                                     F.col("label").alias("nlabel")), on="b")
-            .groupBy("a").agg(F.min("nlabel").alias("min_nbr"))
-        )
-        labels = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(labels["node"],
-                    F.least(labels["label"],
-                            F.coalesce(F.col("min_nbr"), labels["label"])
-                            ).alias("label"),
-                    (F.col("min_nbr") < labels["label"])
-                    .alias("_changed"))
-            .localCheckpoint(eager=True)
-        )
-        # one scalar per round: how many labels still moved (0 = fixpoint).
-        # A row count cannot overflow — a sum over bigint labels could
-        # THROW under this repo's default ANSI mode at large-id scale.
-        if labels.where("_changed").count() == 0:
-            return labels.select(F.col("node"),
-                                 F.col("label").alias("group_id"))
-    return _cc_star(edges)
+    The edges are persisted (``track_cached``) and counted once, the only
+    job run before the caller's action.  Up to ``CC_LOCAL_EDGES`` edges
+    are labelled in ONE task by ``_cc_label_kernel``, whatever the
+    component depth; more go to ``_cc_star``.  Like a broadcast
+    threshold, the choice reads an observed size, so that task's memory
+    is bounded by the constant, never by the corpus (PAPERS.md "Hyper
+    Dimension Shuffle": bounded work per task)."""
+    edges = track_cached(pairs.select(
+        F.col("id_a").cast("long").alias("a"),
+        F.col("id_b").cast("long").alias("b")).persist())
+    if edges.count() > CC_LOCAL_EDGES:
+        return _cc_star(edges)
+    return edges.coalesce(1).mapInArrow(_cc_label_kernel,
+                                        "node long, group_id long")
 
 
 def duplicate_groups(df: DataFrame, threshold: float = 0.8,

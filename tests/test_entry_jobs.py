@@ -15,7 +15,8 @@ from qwen_ocr_spark.plans.session import count_jobs, release_cached
 
 SF_DIRS = sorted(glob.glob(
     os.path.join(os.path.dirname(entry_mod.SF_DEFAULT), "sf*")))
-# their connected-components label rounds run eagerly, at build time
+# connected_components counts its edges at build time, which runs the
+# pair pipeline's jobs
 EAGER = {"dedup_groups", "dedup_groups_scalable"}
 
 

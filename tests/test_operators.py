@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from qwen_ocr_spark.operators import dedup, similarity, textstats
-from qwen_ocr_spark.plans.session import release_cached
+from qwen_ocr_spark.plans.session import count_jobs, release_cached
 
 
 @pytest.fixture(scope="module")
@@ -731,11 +731,10 @@ def test_connected_components_chains_and_islands(spark):
 
 
 def test_connected_components_deep_chain_one_group(spark):
-    """A chain deeper than the label-propagation rounds (a 40-node
-    descending-id path needs 39 rounds to move the min end to end) is
-    finished by the star algorithm: one group, labelled with its min, and
-    no warning — never a partially merged labeling.  Through
-    ``duplicate_groups`` that means exactly one keeper in the group."""
+    """A 40-node descending-id path (39 hops from the max end to the min)
+    is one group, labelled with its min, and no warning — never a
+    partially merged labeling.  Through ``duplicate_groups`` that means
+    exactly one keeper in the group."""
     import warnings
 
     chain = [(i + 1, i) for i in range(39)]  # path 39-38-...-1-0
@@ -747,35 +746,67 @@ def test_connected_components_deep_chain_one_group(spark):
     assert len(got) == 40 and set(got.values()) == {0}
 
 
-def test_connected_components_star_deep_chain(spark):
-    """Large-star/small-star (``_cc_star``, round 5) on an adversarial
-    1,000-node chain — diameter 999, far beyond the label-propagation
-    rounds: ``connected_components`` finishes it with the star algorithm
-    and returns one group with no warning; on a branchy multi-component
-    graph the star labeling agrees with label propagation; the removed
-    ``algorithm`` option is rejected."""
+def _cc_labels(pairs):
+    return {r["node"]: r["group_id"]
+            for r in dedup.connected_components(pairs).collect()}
+
+
+def test_connected_components_star_deep_chain(spark, monkeypatch):
+    """Both sides of ``CC_LOCAL_EDGES``: with the bound at 0 every graph
+    takes ``_cc_star`` (large-star/small-star), which gives an adversarial
+    1,000-node chain (diameter 999) one group; on a branchy
+    multi-component graph the star labels equal the one-task kernel's;
+    an empty pair relation gives zero bigint rows on both paths; the
+    removed ``algorithm`` option is rejected."""
     import warnings
 
     chain = [(i + 1, i) for i in range(999)]
     pairs = spark.createDataFrame(pd.DataFrame(chain, columns=["id_a", "id_b"]))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        got = {r["node"]: r["group_id"]
-               for r in dedup.connected_components(pairs).collect()}
-    assert len(got) == 1000 and set(got.values()) == {0}
-    # agreement with label propagation on a multi-component graph
     g = [(2, 7), (7, 4), (10, 11), (20, 21), (21, 22), (22, 23), (23, 2),
          (50, 51)]
     pairs2 = spark.createDataFrame(pd.DataFrame(g, columns=["id_a", "id_b"]))
-    a = {r["node"]: r["group_id"] for r in dedup._cc_star(
-        pairs2.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    ).collect()}
-    b = {r["node"]: r["group_id"] for r in dedup.connected_components(
-        pairs2).collect()}
-    assert a == b
+    empty = spark.createDataFrame([], "id_a bigint, id_b bigint")
+
+    def assert_empty():
+        out = dedup.connected_components(empty)
+        assert out.schema.simpleString() == \
+            "struct<node:bigint,group_id:bigint>"
+        assert out.count() == 0
+
+    kernel = _cc_labels(pairs2)
+    assert set(kernel.values()) == {2, 10, 50}
+    assert_empty()
+    star_calls = []
+    star = dedup._cc_star
+    monkeypatch.setattr(dedup, "_cc_star",
+                        lambda e: star_calls.append(1) or star(e))
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGES", 0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = _cc_labels(pairs)
+    assert len(got) == 1000 and set(got.values()) == {0}
+    assert _cc_labels(pairs2) == kernel
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGES", -1)  # 0 edges > -1
+    assert_empty()
+    assert len(star_calls) == 3
     with pytest.raises(TypeError):
         dedup.connected_components(pairs2, algorithm="banana")
     release_cached()
+
+
+def test_connected_components_build_jobs(spark):
+    """Building ``connected_components`` below ``CC_LOCAL_EDGES`` runs
+    only the one edge count, however deep the graph: a 1,000-node chain
+    launches at most 3 Spark jobs before the action (round-by-round
+    label propagation launched hundreds)."""
+    chain = [(i + 1, i) for i in range(999)]
+    pairs = spark.createDataFrame(pd.DataFrame(chain, columns=["id_a", "id_b"]))
+    try:
+        cc, jobs = count_jobs(spark, lambda: dedup.connected_components(pairs))
+        assert jobs <= 3
+        assert cc.count() == 1000
+    finally:
+        release_cached()
 
 
 def test_incremental_dedup_across_runs(spark, tmp_path):

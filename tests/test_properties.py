@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the deterministic kernels —
 invariants that hold for ALL inputs, not just the golden cases."""
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,6 +14,7 @@ from qwen_ocr_spark.functions.markdown import (
     num_batches,
     update_header_stack,
 )
+from qwen_ocr_spark.operators.dedup import _cc_label_kernel
 
 headers = st.lists(
     st.tuples(st.integers(1, 6), st.text(min_size=1, max_size=10)), max_size=30
@@ -87,3 +89,73 @@ def test_extract_html_total_and_deterministic(payload):
     assert a.markdown == b.markdown
     assert a.extracted_text == b.extracted_text
     assert "\n\n\n" not in a.markdown
+
+
+@st.composite
+def edge_batches(draw):
+    """(edges, Arrow batches holding them): a random graph over a sparse id
+    pool, or a descending or shuffled chain, plus repeats of its own edges,
+    cut into several (possibly empty) ``RecordBatch``es."""
+    pool = draw(st.lists(st.integers(-1000, 100_000), min_size=1,
+                         max_size=40, unique=True))
+    kind = draw(st.sampled_from(["random", "descending", "shuffled"]))
+    if kind == "random":
+        edges = draw(st.lists(st.tuples(st.sampled_from(pool),
+                                        st.sampled_from(pool)), max_size=80))
+    else:
+        path = (sorted(pool, reverse=True) if kind == "descending"
+                else draw(st.permutations(pool)))
+        edges = list(zip(path, path[1:]))
+        if kind == "shuffled":
+            edges = draw(st.permutations(edges))
+    if edges:
+        edges += draw(st.lists(st.sampled_from(edges), max_size=10))
+    cuts = sorted(draw(st.lists(st.integers(0, len(edges)), max_size=4)))
+    bounds = [0, *cuts, len(edges)]
+    batches = [pa.RecordBatch.from_arrays(
+        [pa.array([a for a, _ in edges[i:j]], pa.int64()),
+         pa.array([b for _, b in edges[i:j]], pa.int64())], names=["a", "b"])
+        for i, j in zip(bounds, bounds[1:])]
+    return edges, batches
+
+
+def _min_id_components(edges):
+    """Plain-Python union-find: node -> its component's minimum id."""
+    root = {}
+
+    def find(x):
+        while root[x] != x:
+            root[x] = root[root[x]]
+            x = root[x]
+        return x
+
+    for a, b in edges:
+        root.setdefault(a, a)
+        root.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        root[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in root}
+
+
+@given(edge_batches())
+@settings(max_examples=300, deadline=None)
+def test_cc_label_kernel_matches_union_find(case):
+    """The connected-components kernel labels every node of its edge
+    batches with the component minimum, once per node, whatever the graph
+    shape, repeats or batch split; no edges yield no batch."""
+    edges, batches = case
+    out = list(_cc_label_kernel(iter(batches)))
+    if not edges:
+        assert out == []
+        return
+    nodes = [n for rb in out for n in rb.column("node").to_pylist()]
+    groups = [g for rb in out for g in rb.column("group_id").to_pylist()]
+    assert len(nodes) == len(set(nodes))
+    assert dict(zip(nodes, groups)) == _min_id_components(edges)
+
+
+def test_cc_label_kernel_empty_input():
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64()), pa.array([], pa.int64())], names=["a", "b"])
+    assert list(_cc_label_kernel(iter([]))) == []
+    assert list(_cc_label_kernel(iter([empty, empty]))) == []
