@@ -463,28 +463,31 @@ def q_orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup family
 # ---------------------------------------------------------------------------
 
+def _with_mirrors(df: DataFrame, key: str, value: str) -> DataFrame:
+    """``df``'s (key, value) rows plus a mirrored copy, keyed key+1000000,
+    of every row whose key % 10 == 0.  ONE scan (round 6): a
+    ``unionAll(df, df.where(...))`` reads the input twice per action; the
+    inline explode emits the mirror row next to its original from the same
+    scan — identical row multiset."""
+    k, v = F.col(key), F.col(value)
+    return df.select(
+        F.explode(
+            F.when(
+                k % 10 == 0,
+                F.array(F.struct(k, v),
+                        F.struct((k + 1000000).alias(key), v)),
+            ).otherwise(F.array(F.struct(k, v)))
+        ).alias("_r")
+    ).select(f"_r.{key}", f"_r.{value}")
+
+
 def _docs2(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
     """documents plus mirrored duplicates (doc_id+1000000 for doc_id%10==0)
     so dedup joins have guaranteed positives.  ``spread`` repartitions up
     front for CPU-heavy consumers (shingle explode over a single-file
     parquet would otherwise serialize); pure hash-aggregate consumers pass
     spread=False — map-side partial agg needs no pre-shuffle."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # ONE scan (round 6): the old unionAll(docs, docs.where(...)) read the
-    # parquet twice per action; an inline explode emits the mirror row
-    # next to its original from the same scan — identical row multiset
-    both = docs.select(
-        F.explode(
-            F.when(
-                F.col("doc_id") % 10 == 0,
-                F.array(
-                    F.struct(F.col("doc_id"), F.col("text")),
-                    F.struct((F.col("doc_id") + 1000000).alias("doc_id"),
-                             F.col("text")),
-                ),
-            ).otherwise(F.array(F.struct(F.col("doc_id"), F.col("text"))))
-        ).alias("_r")
-    ).select("_r.doc_id", "_r.text")
+    both = _with_mirrors(_t(spark, sf_dir, "documents"), "doc_id", "text")
     if spread:
         both = both.repartition(spark.sparkContext.defaultParallelism)
     return both
@@ -604,12 +607,9 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct pairs and joins the vectors back, so it checks the kernel's
     first-shared-band ownership against a plain union).  Mirrored copies
     (vec_id+1000000) guarantee positives (cosine = 1)."""
-    e = _emb_double(spark, sf_dir)
-    mirror = e.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-    )
-    return similarity.embedding_near_dups(e.unionAll(mirror),
-                                          threshold_e6=950_000)
+    return similarity.embedding_near_dups(
+        _with_mirrors(_emb_double(spark, sf_dir), "vec_id", "embedding"),
+        threshold_e6=950_000)
 
 
 # ---------------------------------------------------------------------------

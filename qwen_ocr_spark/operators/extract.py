@@ -14,7 +14,12 @@ Design notes for the 10^12-row target:
 * **Salted repartition**: Common-Crawl inputs arrive clustered by host with
   correlated document sizes; ``repartition(xxhash64(url, salt))`` breaks
   that clustering so every task gets a mixed diet of cheap/expensive
-  documents.  AQE handles residual skew.
+  documents.  AQE handles residual skew.  The shuffle is sized by its
+  input: one task per ``EXTRACT_TASK_BYTES`` of the planner's size
+  estimate of the pruned input, at least 1 and at most
+  ``defaultParallelism`` (an input with no size statistic gets the
+  maximum), so a small resume increment commits one output file, not one
+  per core.
 * **One UDF pass computes text AND figures** — the reference ran two model
   calls per batch concurrently (src/models/document_job.py:338-362); here
   one shared parse produces both output columns, figures nested as an
@@ -69,6 +74,16 @@ _PT_PER_IN = 72.0
 # extract_documents' bridge: every PDF_EVERY-th doc_id becomes a PDF page,
 # the others HTML (the extract_docs oracle assumes 7)
 PDF_EVERY = 7
+
+# Input bytes (the planner's estimate of the pruned pages) per extraction
+# task when ``extract_pages`` sizes its own shuffle.  Every partition costs
+# about 0.2 CPU-s across a commit's stages (task deserialization, a Python
+# worker round trip, one Parquet writer per output and figure file, the
+# manifest read-back): a traced perfbench append_resume commit of 40 pages
+# on 4 cores took 1.92 CPU-s in 4 tasks and 1.22 in 1.  128 KiB is about 110
+# seeded pages, about 0.15 CPU-s of ``_extract_rows`` work, so below it a
+# second task would cost more CPU than the extraction it moves.
+EXTRACT_TASK_BYTES = 128 * 1024
 
 
 def _extract_one(url: str, payload: bytes) -> dict:
@@ -232,15 +247,30 @@ def extract_pages(pages_df: DataFrame, *, salt: int = 0,
     salted repartition by url-hash before the UDF (skew strategy per
     SURVEY.md §4).  Pass ``repartition=False`` when the input is already
     well balanced (e.g. a freshly bucketed/synthesized corpus) to skip the
-    payload shuffle entirely — scan partitions feed the UDF directly."""
+    payload shuffle entirely — scan partitions feed the UDF directly.
+
+    Without ``partitions`` the shuffle has
+    ``max(1, min(defaultParallelism, ceil(est / EXTRACT_TASK_BYTES)))``
+    partitions, ``est`` being the optimized plan's ``sizeInBytes`` of the
+    filtered, pruned input: a planner statistic, so sizing launches no
+    Spark job.  An input without a statistic (a ``LogicalRDD``) estimates
+    at the maximum and keeps ``defaultParallelism``."""
     df = pages_df
     if lang is not None:
         df = df.filter(F.col("lang") == lang)  # pushed to the scan
     df = df.select("url", "warc_ts", "html")   # column pruning: never read text
     if repartition:
-        n = partitions or df.sparkSession.sparkContext.defaultParallelism
+        n = partitions or _shuffle_width(df)
         df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(salt)))
     return df.mapInPandas(_extract_iter, schema=OUT_SCHEMA)
+
+
+def _shuffle_width(df: DataFrame) -> int:
+    """Extraction tasks for ``df``: one per ``EXTRACT_TASK_BYTES`` of its
+    size estimate, between 1 and ``defaultParallelism``."""
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(cap, -(-est // EXTRACT_TASK_BYTES)))
 
 
 def figures_table(out_df: DataFrame) -> DataFrame:

@@ -38,7 +38,9 @@ def main() -> None:
     ap.add_argument("--manifest", required=True, help="manifest table dir")
     ap.add_argument("--lang", default=None, help="optional lang pushdown filter")
     ap.add_argument("--salt", type=int, default=0)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="extraction tasks (default: one per 128 KiB of the "
+                         "input's size estimate, at most one per core)")
     ap.add_argument("--no-repartition", action="store_true",
                     help="input already balanced; skip the salted shuffle")
     ap.add_argument("--master", default=None)

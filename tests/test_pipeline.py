@@ -6,8 +6,10 @@ determinism across parallelism, manifest lineage, anti-join resume."""
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from qwen_ocr_spark.operators.extract import (
+    OUT_SCHEMA,
     extract_pages,
     figures_table,
     job_totals,
@@ -716,6 +718,107 @@ def test_plan_pruning_and_pushdown(spark, tmp_path):
         read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
         assert "text" not in read_schema       # column pruning
         assert plan.count("Exchange") == 2     # one exchange node + its detail line
+
+
+def _extract_width(df):
+    """The partition count of the extraction shuffle in ``df``'s plan (a
+    one-partition repartition plans as ``SinglePartition``)."""
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    line = [l for l in plan.splitlines()
+            if "Exchange" in l and "REPARTITION_BY_NUM" in l][0]
+    if "SinglePartition" in line:
+        return 1
+    return int(re.search(r"hashpartitioning\(xxhash64\(url#\d+, \d+, 42\), "
+                         r"(\d+)\)", line).group(1))
+
+
+@pytest.fixture(scope="module")
+def pages40(spark, tmp_path_factory):
+    """A 40-page increment as the CLI reads it: four parquet files, read
+    with the declared schema (estimate ~60 KB)."""
+    path = str(tmp_path_factory.mktemp("pages40") / "pages")
+    synth_pages(spark, 40, seed=11, partitions=4).write.parquet(path)
+    return spark.read.schema(PAGES_SCHEMA).parquet(path)
+
+
+def test_extract_width_small_input_one_task(spark, tmp_path):
+    """A 20-page input estimates far below ``EXTRACT_TASK_BYTES``: the
+    salted shuffle has one partition, not one per core."""
+    path = str(tmp_path / "p20")
+    synth_pages(spark, 20, seed=42, partitions=2).write.parquet(path)
+    df = spark.read.schema(PAGES_SCHEMA).parquet(path)
+    assert spark.sparkContext.defaultParallelism == 4
+    assert _extract_width(extract_pages(df)) == 1
+    assert _extract_width(extract_pages(df, lang="en", salt=7)) == 1
+
+
+@pytest.mark.parametrize("per_task_div,want", [(3, 3), (4, 4), (100, 4)])
+def test_extract_width_from_estimate(spark, pages40, monkeypatch,
+                                     per_task_div, want):
+    """One task per ``EXTRACT_TASK_BYTES`` of the pruned input's size
+    estimate, rounded up and capped at ``defaultParallelism``."""
+    from qwen_ocr_spark.operators import extract
+    pruned = pages40.select("url", "warc_ts", "html")
+    est = pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    monkeypatch.setattr(extract, "EXTRACT_TASK_BYTES", -(-est // per_task_div))
+    assert _extract_width(extract_pages(pages40)) == want
+    if per_task_div > 4:
+        assert est > 4 * extract.EXTRACT_TASK_BYTES
+
+
+def test_extract_width_explicit_partitions_win(spark, pages40):
+    assert _extract_width(extract_pages(pages40, partitions=3)) == 3
+    assert _extract_width(extract_pages(pages40, partitions=3, salt=5)) == 3
+
+
+def test_extract_width_no_statistic_keeps_default_parallelism(spark):
+    """An RDD-backed input (``LogicalRDD``) has no size statistic: it
+    estimates at the maximum and keeps ``defaultParallelism``."""
+    rows = [gen_page(42, i) for i in range(4)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows),
+                               PAGES_SCHEMA)
+    assert "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert _extract_width(extract_pages(df)) == 4
+
+
+def test_extract_width_launches_no_job(spark, pages40, tmp_path):
+    """Sizing reads a planner statistic: building the extraction over the
+    resume anti-join of a committed table launches no Spark job."""
+    out_path = str(tmp_path / "out")
+    half = pages40.filter(F.crc32(F.col("url")) % 2 == 0)
+    write_output(extract_pages(half), out_path, str(tmp_path / "man"), "run1")
+    _, jobs = count_jobs(
+        spark, lambda: extract_pages(resume_filter(pages40, out_path)))
+    assert jobs == 0
+
+
+def test_extract_default_width_same_rows(spark, pages40):
+    """The input-sized default (one task for the 40-page increment) yields
+    the rows of a 4-partition run on every ``OUT_SCHEMA`` column."""
+    default = extract_pages(pages40)
+    out = extract_pages(pages40, partitions=4)
+    assert _extract_width(default) == 1
+    assert default.schema == out.schema == StructType.fromDDL(OUT_SCHEMA)
+
+    def by_url(df):
+        return sorted((tuple(r) for r in df.collect()), key=lambda r: r[0])
+    assert by_url(default) == by_url(out)
+
+
+def test_small_increment_commits_one_file_per_table(spark, pages40, tmp_path):
+    """A 40-page increment commits one output, one figures and one
+    manifest file into its ``run_id=`` directories."""
+    import os
+    from qwen_ocr_spark.sinks.manifest import commit_run
+    paths = {k: str(tmp_path / k) for k in ("out", "figs", "man")}
+    assert commit_run(extract_pages(pages40), paths["out"], paths["man"],
+                      "run-small", paths["figs"]) == 40
+    for k, path in paths.items():
+        run_dir = os.path.join(path, "run_id=run-small")
+        files = [n for n in os.listdir(run_dir)
+                 if not n.startswith((".", "_"))]
+        assert len(files) == 1, (k, files)
 
 
 def test_salted_repartition_balances_hot_domain(spark, pages):
