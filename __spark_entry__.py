@@ -34,6 +34,7 @@ from qwen_ocr_spark.operators.extract import (
     extract_pages,
     figures_table,
 )
+from qwen_ocr_spark.plans.session import task_count
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -68,9 +69,39 @@ TABLE_SCHEMAS = {
 }
 
 
+# Table bytes (the planner's estimate of its files) per scan task of a
+# ``_t`` read.  A task costs a pass about 0.02-0.06 CPU-s however little it
+# reads: reading a 4-file table in 1 task instead of 4 saved, per task
+# removed, 0.02 CPU-s in dedup_exact, 0.055 in embedding_near_dups and 0.02
+# in gopher_signals (perfbench near-dup corpus, 4 cores).  The heaviest
+# scan-side work, gopher_signals' splits and regexes over ``documents``,
+# costs about 0.64 CPU-s per MB of table, so 256 KiB is ~0.16 CPU-s of
+# work, 3-8 times a task's fixed cost.  Larger tasks lose wall time on
+# mid-size tables: over 1.49 MB of documents, gopher_signals took 0.49 s in
+# 4 tasks, 0.56 s in 3 and 1.06 s in 1.
+SCAN_TASK_BYTES = 256 * 1024
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+    """Table ``name`` of ``sf_dir``, read with its declared schema.
+
+    Parquet file packing charges ``openCostInBytes`` (4 MiB) per file and
+    spreads a small table's files one per core, so a 100 KB table of 4
+    files would run as 4 scan tasks.  The read is coalesced to
+    ``plans.session.task_count(read, SCAN_TASK_BYTES)`` partitions: one
+    per ``SCAN_TASK_BYTES`` of the table's estimated size, a planner
+    statistic, so sizing launches no Spark job.  A table that estimates at
+    ``defaultParallelism × SCAN_TASK_BYTES`` or more is returned as read.
+    The ``Coalesce`` lets column pruning through to the scan, and a
+    one-partition read satisfies any distribution, so an aggregate right
+    above it needs no ``Exchange``; a ``repartition`` over a projection of
+    the read replaces the ``Coalesce``."""
+    read = spark.read.schema(TABLE_SCHEMAS[name]).parquet(
         f"{sf_dir}/{name}.parquet")
+    n = task_count(read, SCAN_TASK_BYTES)
+    if n < spark.sparkContext.defaultParallelism:
+        return read.coalesce(n)
+    return read
 
 
 def _e(col, k: int = 4):

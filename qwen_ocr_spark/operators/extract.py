@@ -45,6 +45,7 @@ from qwen_ocr_spark.functions import blocks as bk
 from qwen_ocr_spark.functions import htmlx, pdfx
 from qwen_ocr_spark.functions.figures import image_tokens
 from qwen_ocr_spark.functions.markdown import build_context
+from qwen_ocr_spark.plans.session import task_count
 
 # one figure: an element of the ``figures`` column, a row of the figures table
 FIGURE_FIELDS = ("page_number int, fig_number int, bbox array<int>, "
@@ -250,27 +251,18 @@ def extract_pages(pages_df: DataFrame, *, salt: int = 0,
     payload shuffle entirely — scan partitions feed the UDF directly.
 
     Without ``partitions`` the shuffle has
-    ``max(1, min(defaultParallelism, ceil(est / EXTRACT_TASK_BYTES)))``
-    partitions, ``est`` being the optimized plan's ``sizeInBytes`` of the
-    filtered, pruned input: a planner statistic, so sizing launches no
-    Spark job.  An input without a statistic (a ``LogicalRDD``) estimates
-    at the maximum and keeps ``defaultParallelism``."""
+    ``plans.session.task_count(input, EXTRACT_TASK_BYTES)`` partitions:
+    one per ``EXTRACT_TASK_BYTES`` of the filtered, pruned input's size
+    estimate, between 1 and ``defaultParallelism``, read from the plan
+    without launching a Spark job."""
     df = pages_df
     if lang is not None:
         df = df.filter(F.col("lang") == lang)  # pushed to the scan
     df = df.select("url", "warc_ts", "html")   # column pruning: never read text
     if repartition:
-        n = partitions or _shuffle_width(df)
+        n = partitions or task_count(df, EXTRACT_TASK_BYTES)
         df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(salt)))
     return df.mapInPandas(_extract_iter, schema=OUT_SCHEMA)
-
-
-def _shuffle_width(df: DataFrame) -> int:
-    """Extraction tasks for ``df``: one per ``EXTRACT_TASK_BYTES`` of its
-    size estimate, between 1 and ``defaultParallelism``."""
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    cap = df.sparkSession.sparkContext.defaultParallelism
-    return max(1, min(cap, -(-est // EXTRACT_TASK_BYTES)))
 
 
 def figures_table(out_df: DataFrame) -> DataFrame:

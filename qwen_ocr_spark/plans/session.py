@@ -33,11 +33,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """``local[SPARK_GRAFT_CPUS]``, else one task slot per CPU this process
+    may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     return f"local[{cpus}]"
 
 
@@ -97,6 +99,22 @@ def get_spark(
     for k, v in {**python_daemon_conf(master), **(extra_conf or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def task_count(df: DataFrame, task_bytes: int) -> int:
+    """Tasks for ``df`` at one per ``task_bytes`` of its size estimate:
+    ``max(1, min(defaultParallelism, ceil(estimate / task_bytes)))``.
+
+    The estimate is the analyzed plan's ``sizeInBytes``, a planner
+    statistic, so sizing launches no Spark job.  It is read before cached
+    data is substituted into the plan: the optimized plan of a query over a
+    filled cache reports the in-memory size instead, and the same call
+    would plan differently depending on which earlier action touched the
+    cache.  A plan without a statistic (a ``LogicalRDD``) estimates at
+    ``Long.MaxValue`` and gets ``defaultParallelism``."""
+    est = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(cap, -(-est // task_bytes)))
 
 
 # Every relation a library operator persists (dedup.simhash_near_pairs,

@@ -782,6 +782,41 @@ def test_extract_width_no_statistic_keeps_default_parallelism(spark):
     assert _extract_width(extract_pages(df)) == 4
 
 
+def test_default_master_one_slot_per_usable_cpu(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the local master gets one task slot per
+    CPU the process may run on, which is also the extraction width cap."""
+    import os
+    from qwen_ocr_spark.plans.session import default_master
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_master() == f"local[{len(os.sched_getaffinity(0))}]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_master() == "local[3]"
+
+
+def test_extract_width_ignores_cache_state(spark):
+    """The width is sized from the plan before cached data is substituted
+    into it: a cached input (the ``pages`` fixture's shape) gets the same
+    width before and after its cache is filled, although the optimized
+    plan's estimate jumps to the in-memory size."""
+    from qwen_ocr_spark.operators.extract import EXTRACT_TASK_BYTES
+    from qwen_ocr_spark.plans.session import task_count
+    cached = synth_pages(spark, N_DOCS, seed=43, partitions=4).cache()
+    try:
+        def sizes():  # a fresh plan each time: a plan is optimized once
+            pruned = cached.select("url", "warc_ts", "html")
+            return (task_count(pruned, EXTRACT_TASK_BYTES),
+                    _extract_width(extract_pages(cached)),
+                    int(pruned._jdf.queryExecution().optimizedPlan().stats()
+                        .sizeInBytes()))
+        before = sizes()
+        assert cached.count() == N_DOCS  # fills the cache
+        after = sizes()
+        assert after[2] > EXTRACT_TASK_BYTES > before[2]
+        assert before[:2] == after[:2] == (1, 1)
+    finally:
+        cached.unpersist()
+
+
 def test_extract_width_launches_no_job(spark, pages40, tmp_path):
     """Sizing reads a planner statistic: building the extraction over the
     resume anti-join of a committed table launches no Spark job."""
