@@ -29,12 +29,9 @@ from qwen_ocr_spark.operators import (
     textstats,
     timeseries,
 )
-from qwen_ocr_spark.operators.extract import (
-    extract_documents,
-    extract_pages,
-    figures_table,
-)
+from qwen_ocr_spark.operators.extract import extract_pages, figures_table
 from qwen_ocr_spark.plans.session import task_count
+from qwen_ocr_spark.sources.pages import extract_documents
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -581,20 +578,20 @@ def q_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_groups_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """duplicate_groups in its corpus-scale mode (round 5): MinHash-LSH
-    candidates -> exact Jaccard verify -> connected components.  Same
-    exact recursive-closure oracle shape as dedup_groups, over the
-    verified pair set."""
-    return dedup.duplicate_groups(_docs2(spark, sf_dir), threshold=0.8,
-                                  candidates="lsh")
+    """duplicate_groups over the corpus-scale pair relation (round 5):
+    MinHash-LSH candidates -> exact Jaccard verify -> connected
+    components.  Same exact recursive-closure oracle shape as
+    dedup_groups, over the verified pair set."""
+    return dedup.duplicate_groups(
+        dedup.lsh_jaccard_pairs(_docs2(spark, sf_dir), threshold=0.8))
 
 
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: capped-jaccard pairs → connected components →
     min-id representative per group (is_keep).  Exactly oracled via a
     recursive transitive-closure CTE over the same pair SQL."""
-    return dedup.duplicate_groups(_docs2(spark, sf_dir), threshold=0.8,
-                                  max_df=dedup.MAX_SHINGLE_DF)
+    return dedup.duplicate_groups(dedup.ngram_jaccard_pairs(
+        _docs2(spark, sf_dir), threshold=0.8, max_df=dedup.MAX_SHINGLE_DF))
 
 
 # ---------------------------------------------------------------------------

@@ -17,9 +17,12 @@ Package map
                 scoring, PDF tokenizer + XY-cut, figure bbox filters.
 ``operators/``  Spark DataFrame operators: the extraction pipeline
                 (mapInPandas), dedup family, similarity search, text stats.
-``sources/``    synthetic ``pages`` table generator + the documents bridge.
+``sources/``    synthetic ``pages`` generator, its PDF writer (``pdfgen``) and
+                the documents bridge.
 ``sinks/``      output writer + per-partition checkpoint manifest + resume.
 ``plans/``      SparkSession builder with scale-oriented conf (AQE etc.).
+Imports point one way: ``functions`` ← ``operators``, ``plans`` ← ``sources``,
+``sinks``, ``streaming`` (checked by ``tests/test_layers.py``).
 """
 
 __version__ = "0.1.0"

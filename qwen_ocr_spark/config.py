@@ -34,7 +34,6 @@ IMAGE_TOKEN_SIZE = 28
 # north_star — Readability/boilerpipe-style text-density + link-density
 # block scoring; no reference analog, the VLM did this implicitly).
 LINK_DENSITY_MAX = 0.33        # blocks with more link chars than this are chrome
-CHROME_LINK_DENSITY_MAX = 0.0  # inside nav/aside/footer/header, any link kills it
 MIN_CONTENT_WORDS = 3          # shorter text blocks are boilerplate unless heading
 LONG_TEXT_WORDS = 10           # long low-link blocks are content even in chrome
 

@@ -20,7 +20,6 @@ from collections.abc import Iterator
 Header = tuple[int, str]  # (level 1-6, original line including '#'s)
 
 BREADCRUMB_TITLE = "### DOCUMENT LOCATION BREADCRUMB\n"
-START_OF_DOCUMENT = "[Start of Document]"
 
 
 def extract_headers(markdown: str) -> list[Header]:

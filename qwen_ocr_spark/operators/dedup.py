@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from qwen_ocr_spark.operators.similarity import band_bucket_pairs
-from qwen_ocr_spark.plans.session import track_cached
+from qwen_ocr_spark.plans.session import run_dir_path, track_cached
 
 MINHASH_SLOTS = 8
 MINHASH_BANDS = 4  # 2 slots per band
@@ -111,7 +111,6 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
     import uuid
     from pyspark.sql.utils import AnalysisException
 
-    from qwen_ocr_spark.sinks.manifest import run_dir_path
     spark = new_df.sparkSession
     batch = new_df.withColumn(
         "text_md5", F.md5(F.col("text").cast("binary")))
@@ -433,35 +432,21 @@ def connected_components(pairs: DataFrame) -> DataFrame:
                                         "node long, group_id long")
 
 
-def duplicate_groups(df: DataFrame, threshold: float = 0.8,
-                     max_df: int | None = MAX_SHINGLE_DF,
-                     candidates: str = "all-pairs") -> DataFrame:
-    """End-to-end near-dup clustering: n-gram Jaccard pairs above
-    ``threshold`` → connected components → one row per clustered document
-    ``(doc_id, group_id, is_keep)`` with the min-id representative marked.
-    Documents with no near-dup partner don't appear (they are all keeps).
+def duplicate_groups(pairs: DataFrame) -> DataFrame:
+    """End-to-end near-dup clustering over a near-duplicate pair relation
+    ``(id_a, id_b, …)``: connected components → one row per clustered
+    document ``(doc_id, group_id, is_keep)`` with the min-id
+    representative marked.  Documents with no near-dup partner don't
+    appear (they are all keeps).
 
-    ``candidates="lsh"`` (round 5) swaps the all-pairs co-shingle join
-    (``ngram_jaccard_pairs``) for the corpus-scale composition
-    ``lsh_jaccard_pairs``: MinHash-LSH proposes candidate pairs
-    sub-quadratically, exact Jaccard verifies only those (linear in
-    candidates, independent of shingle document frequencies; the sf1
-    scale check measured the all-pairs join's quadratic df-densification
-    regime).  On the bench corpus both modes return the identical pair set
-    and therefore the identical clustering.
-
-    Mode caveats (ADVICE r5): the lsh mode computes UNCAPPED exact
-    Jaccard (``max_df`` is ignored — LSH already bounds the join, so no
-    df cap is needed or applied) and its pair set is subject to MinHash
-    LSH candidate recall; the two modes coincide exactly when the cap
-    never binds and recall is 1 — true on the bench corpus, not a
-    general identity."""
-    if candidates == "lsh":
-        pairs = lsh_jaccard_pairs(df, threshold=threshold)
-    elif candidates == "all-pairs":
-        pairs = ngram_jaccard_pairs(df, threshold=threshold, max_df=max_df)
-    else:
-        raise ValueError(f"unknown candidates mode {candidates!r}")
+    The caller picks the pair relation: ``ngram_jaccard_pairs`` (the
+    exact all-pairs co-shingle join under a shingle-df cap) or
+    ``lsh_jaccard_pairs`` (round 5: MinHash-LSH candidates, exact
+    uncapped Jaccard verify — linear in candidates, independent of
+    shingle document frequencies; the sf1 scale check measured the
+    all-pairs join's quadratic df-densification regime).  The two
+    relations coincide exactly when the cap never binds and LSH recall is
+    1 — true on the bench corpus, not a general identity (ADVICE r5)."""
     cc = connected_components(pairs)
     return cc.select(
         F.col("node").alias("doc_id"),

@@ -30,6 +30,10 @@ Design notes for the 10^12-row target:
 * **Error channel**: a document that fails to parse yields a row with
   ``error`` set and null markdown — one bad document never fails the job
   (reference semantics, src/models/document_job.py:229-239).
+
+The row loop, ``extract_rows``, is public: ``sources.pages.extract_documents``
+runs it over bridge payloads it synthesizes in the same task.  This module
+imports only ``functions/`` and ``plans/``; it knows no source or sink.
 """
 
 from __future__ import annotations
@@ -63,18 +67,11 @@ _OUT_FIELDS = [
 OUT_SCHEMA = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS)
 _ALL_COLUMNS = [c for c, _ in _OUT_FIELDS]
 
-FIGURES_COLUMNS = ["url", "page_number", "fig_number", "bbox", "caption",
-                   "element_type", "img_format", "png"]
-
 # 130 DPI page-image token cost (reference cost model A1 —
 # src/processing.py:100-102 at src/pdf_handler.py:11's DPI): tokens are
 # computed from the page's MediaBox rendered at 130 DPI.
 _DPI = 130.0
 _PT_PER_IN = 72.0
-
-# extract_documents' bridge: every PDF_EVERY-th doc_id becomes a PDF page,
-# the others HTML (the extract_docs oracle assumes 7)
-PDF_EVERY = 7
 
 # Input bytes (the planner's estimate of the pruned pages) per extraction
 # task when ``extract_pages`` sizes its own shuffle.  Every partition costs
@@ -82,7 +79,7 @@ PDF_EVERY = 7
 # worker round trip, one Parquet writer per output and figure file, the
 # manifest read-back): a traced perfbench append_resume commit of 40 pages
 # on 4 cores took 1.92 CPU-s in 4 tasks and 1.22 in 1.  128 KiB is about 110
-# seeded pages, about 0.15 CPU-s of ``_extract_rows`` work, so below it a
+# seeded pages, about 0.15 CPU-s of ``extract_rows`` work, so below it a
 # second task would cost more CPU than the extraction it moves.
 EXTRACT_TASK_BYTES = 128 * 1024
 
@@ -133,10 +130,29 @@ def _error_record(exc: Exception) -> dict:
     }
 
 
-def _extract_rows(rows: Iterable[tuple], columns: list[str]) -> pd.DataFrame:
+def output_fields(columns: list[str] | None) -> tuple[list[str], str]:
+    """The ``OUT_SCHEMA`` fields named by ``columns`` (any order) in schema
+    order, and their DDL schema; ``None`` names every field.  An empty or
+    unknown name list raises ``ValueError``."""
+    if columns is None:
+        return _ALL_COLUMNS, OUT_SCHEMA
+    if not columns:
+        raise ValueError("columns=[] selects no output column; "
+                         "pass None for the full schema")
+    unknown = set(columns) - set(_ALL_COLUMNS)
+    if unknown:
+        raise ValueError(f"unknown output columns: {sorted(unknown)}")
+    keep = set(columns)
+    return ([c for c in _ALL_COLUMNS if c in keep],
+            ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS if c in keep))
+
+
+def extract_rows(rows: Iterable[tuple], columns: list[str]) -> pd.DataFrame:
     """Extract each ``(url, warc_ts, payload)`` row into a frame of the
     named ``OUT_SCHEMA`` fields; a row whose extraction raises becomes an
-    error record (never fails the task)."""
+    error record (never fails the task).  ``extract_pages`` runs it over
+    real pages, ``sources.pages.extract_documents`` over bridge payloads
+    it synthesizes in the same task."""
     cols: dict[str, list] = {c: [] for c in columns}
     for url, ts, payload in rows:
         try:
@@ -152,92 +168,8 @@ def _extract_rows(rows: Iterable[tuple], columns: list[str]) -> pd.DataFrame:
 
 def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for b in batches:
-        yield _extract_rows(zip(b["url"], b["warc_ts"], b["html"]),
-                            _ALL_COLUMNS)
-
-
-def extract_documents(docs_df: DataFrame, *, figured: bool = False,
-                      columns: list[str] | None = None) -> DataFrame:
-    """documents → out in ONE Python pass: the bridge payload is
-    synthesized and extracted inside the same ``mapInPandas`` task, so the
-    payload bytes never cross the JVM↔Python boundary at all (round 6).
-
-    Row-identical to ``extract_pages`` over pages built from the same
-    bridge payloads, urls and timestamps (pinned by
-    ``tests/test_pipeline.py::test_extract_documents_equals_extract_pages_over_bridge``),
-    same error channel — but that composition ships every generated payload
-    Python→JVM (Arrow), projects it, and ships it JVM→Python again for
-    extraction: two full serializations of the corpus bytes plus an extra
-    pandas materialization, for zero computational benefit (guide §4 —
-    eliminate boundary crossings; the noop-isolated generation pass alone
-    cost as much as the whole fused pipeline).  ``extract_pages`` remains
-    the production operator for pages that exist as REAL data; this is the
-    fused path for the synthesized documents bridge, where generation is
-    itself Python and fusing is free.
-
-    Without ``figured`` a doc_id divisible by ``PDF_EVERY`` is bridged as
-    a PDF, every other one as HTML.  ``figured=True`` uses the
-    figured-HTML bridge (one closed-form figure per document, all-HTML) —
-    the extract_figures recipe.
-
-    ``columns`` narrows the UDF's OUTPUT to the named ``OUT_SCHEMA``
-    fields (any order; emitted in schema order).  A map node is opaque to
-    Catalyst, so a downstream ``.select()`` cannot prune what the Python
-    side serializes — every row would ship its full markdown, extracted
-    text and figures through Arrow just to be dropped by the projection
-    (guide §4.1, applied to the output side of the boundary).  The same
-    parse still runs per document; only the emitted columns change, so a
-    consumer selecting exactly ``columns`` gets rows identical to the
-    full-schema path.  An empty list raises ``ValueError``."""
-    import datetime as _dt
-
-    from qwen_ocr_spark.sources.pages import (
-        EPOCH,
-        _bridge_html,
-        _bridge_html_figured,
-        _bridge_pdf,
-    )
-
-    n = docs_df.sparkSession.sparkContext.defaultParallelism
-    df = docs_df.select("doc_id", "text")
-    # spread only when the scan under-parallelizes (the driver testdata is
-    # a single-partition parquet; a multi-file corpus already spreads) —
-    # guide §2.4: don't pay an exchange the layout already provides
-    if df.rdd.getNumPartitions() < n:
-        df = df.repartition(n)
-    if columns is None:
-        out_columns = _ALL_COLUMNS
-        schema = OUT_SCHEMA
-    else:
-        if not columns:
-            raise ValueError("columns=[] selects no output column; "
-                             "pass None for the full schema")
-        unknown = set(columns) - set(_ALL_COLUMNS)
-        if unknown:
-            raise ValueError(f"unknown output columns: {sorted(unknown)}")
-        keep = set(columns)
-        out_columns = [c for c in _ALL_COLUMNS if c in keep]
-        schema = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS if c in keep)
-
-    def bridge_rows(b: pd.DataFrame) -> Iterator[tuple]:
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            doc_id = int(doc_id)
-            ts = EPOCH + _dt.timedelta(seconds=doc_id)
-            if figured:
-                yield (f"https://docs.example.com/fig/{doc_id}", ts,
-                       _bridge_html_figured(doc_id, text))
-            elif doc_id % PDF_EVERY == 0:
-                yield (f"https://docs.example.com/{doc_id}.pdf", ts,
-                       _bridge_pdf(doc_id, text))
-            else:
-                yield (f"https://docs.example.com/{doc_id}", ts,
-                       _bridge_html(doc_id, text))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield _extract_rows(bridge_rows(b), out_columns)
-
-    return df.mapInPandas(gen, schema=schema)
+        yield extract_rows(zip(b["url"], b["warc_ts"], b["html"]),
+                           _ALL_COLUMNS)
 
 
 def extract_pages(pages_df: DataFrame, *, salt: int = 0,

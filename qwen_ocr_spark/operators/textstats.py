@@ -84,8 +84,6 @@ SCRIPT_LANGS: list[tuple[str, str]] = [
     ("th", "[\\u0e01-\\u0e5b]"),             # thai
 ]
 
-EN_STOPWORDS = ["the", "and", "of", "a", "to", "in", "is", "it", "that", "for"]
-
 # Per-language stopword NEEDLES for quality scoring (round 5 — closes the
 # "anglocentric quality score" defect in VERDICT r4).  Each entry is the
 # literal substring counted in ' ' || lower(text) || ' ':

@@ -117,6 +117,16 @@ def task_count(df: DataFrame, task_bytes: int) -> int:
     return max(1, min(cap, -(-est // task_bytes)))
 
 
+def run_dir_path(spark: SparkSession, table_path: str, run_id: str) -> str:
+    """The directory ``partitionBy("run_id")`` writes ``run_id``'s rows to:
+    the value escaped as Spark escapes partition values
+    (``run:A`` -> ``run_id=run%3AA``).  The sinks' run directories and
+    ``dedup.incremental_dedup``'s digest runs are all read at this path."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils.escapePathName
+    return f"{table_path}/run_id={escape(run_id)}"
+
+
 # Every relation a library operator persists (dedup.simhash_near_pairs,
 # ngram_jaccard_pairs, lsh_jaccard_pairs, similarity.ivf_topk, …)
 # is registered here.  A one-shot job never needs to touch this — the

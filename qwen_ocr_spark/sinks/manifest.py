@@ -68,6 +68,7 @@ from qwen_ocr_spark.operators.extract import (
     OUT_SCHEMA,
     figures_table,
 )
+from qwen_ocr_spark.plans.session import run_dir_path
 
 # Every table this module reads is one it writes, so its schema is declared
 # here, never inferred: a schema-less ``spark.read.parquet`` launches a job
@@ -187,15 +188,6 @@ def reconcile_manifest(spark: SparkSession, out_path: str,
                - _run_dirs(spark, manifest_path).keys())
     return sum(_write_manifest(spark, out_path, manifest_path, rid)
                for rid in sorted(missing))
-
-
-def run_dir_path(spark: SparkSession, table_path: str, run_id: str) -> str:
-    """The directory ``partitionBy("run_id")`` writes ``run_id``'s rows to:
-    the value escaped as Spark escapes partition values
-    (``run:A`` -> ``run_id=run%3AA``)."""
-    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
-        .ExternalCatalogUtils.escapePathName
-    return f"{table_path}/run_id={escape(run_id)}"
 
 
 def _has_run(spark: SparkSession, table_path: str, run_id: str) -> bool:

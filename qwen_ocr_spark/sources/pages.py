@@ -14,8 +14,14 @@ domain holds ≈30% of documents — this is what the salted repartition in the
 extraction pipeline exists to break.  ~85% of payloads are HTML built from
 templates exercising every extractor rule (nav/header/footer chrome, link
 farms, figures with bboxes, HTML tables, ordered lists, LaTeX, unicode);
-~15% are PDFs produced by :func:`qwen_ocr_spark.functions.pdfx.make_pdf`
+~15% are PDFs produced by :func:`qwen_ocr_spark.sources.pdfgen.make_pdf`
 (multi-page, headings, running headers, lists, figures, two-column).
+
+The module also owns the documents → pages bridge behind the entry
+module's extraction queries: ``_bridge_row`` gives each ``(doc_id, text)`` its
+url, timestamp and closed-form HTML or PDF page, and ``extract_documents``
+synthesizes and extracts those pages in one Python pass.  How the corpus
+is encoded is decided here and in ``pdfgen`` only.
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from qwen_ocr_spark.functions.pdfx import ImageSpec, PageSpec, TextSpec, make_pdf
+from qwen_ocr_spark.sources.pdfgen import ImageSpec, PageSpec, TextSpec, make_pdf
 
 EPOCH = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -338,3 +344,75 @@ def _bridge_html_figured(doc_id: int, text: str) -> bytes:
         '<footer><p>Copyright 2026 <a href="/t">Terms</a></p></footer>'
         "</body></html>"
     ).encode("utf-8")
+
+
+# every PDF_EVERY-th doc_id is bridged as a PDF page, the others as HTML
+# (the extract_docs oracle assumes 7)
+PDF_EVERY = 7
+
+
+def _bridge_row(doc_id: int, text: str,
+                figured: bool) -> tuple[str, dt.datetime, bytes]:
+    """One document's bridge page as ``(url, warc_ts, payload)``: the
+    figured HTML page when ``figured``, else a PDF for every
+    ``PDF_EVERY``-th doc_id and HTML for the rest."""
+    ts = EPOCH + dt.timedelta(seconds=doc_id)
+    if figured:
+        return (f"https://docs.example.com/fig/{doc_id}", ts,
+                _bridge_html_figured(doc_id, text))
+    if doc_id % PDF_EVERY == 0:
+        return (f"https://docs.example.com/{doc_id}.pdf", ts,
+                _bridge_pdf(doc_id, text))
+    return (f"https://docs.example.com/{doc_id}", ts,
+            _bridge_html(doc_id, text))
+
+
+def extract_documents(docs_df, *, figured: bool = False,
+                      columns: list[str] | None = None):
+    """documents → out in ONE Python pass: the bridge payload is
+    synthesized and extracted inside the same ``mapInPandas`` task, so the
+    payload bytes never cross the JVM↔Python boundary at all (round 6).
+
+    Row-identical to ``operators.extract.extract_pages`` over pages built
+    from the same bridge rows (pinned by
+    ``tests/test_pipeline.py::test_extract_documents_equals_extract_pages_over_bridge``):
+    both run ``extract_rows``.  That composition ships every generated
+    payload Python→JVM (Arrow), projects it, and ships it JVM→Python again
+    for extraction: two full serializations of the corpus bytes plus an
+    extra pandas materialization, for zero computational benefit (the
+    noop-isolated generation pass alone cost as much as the whole fused
+    pipeline).  ``extract_pages`` remains the operator for pages
+    that exist as REAL data.  ``figured=True`` uses the figured-HTML
+    bridge (one closed-form figure per document) — the extract_figures
+    recipe.
+
+    ``columns`` narrows the UDF's OUTPUT to the named ``OUT_SCHEMA``
+    fields (any order; emitted in schema order).  A map node is opaque to
+    Catalyst, so a downstream ``.select()`` cannot prune what the Python
+    side serializes — every row would ship its full markdown, extracted
+    text and figures through Arrow just to be dropped by the projection
+    (column pruning, applied to the output side of the boundary).  The same
+    parse still runs per document; only the emitted columns change, so a
+    consumer selecting exactly ``columns`` gets rows identical to the
+    full-schema path.  An empty list raises ``ValueError``."""
+    # imported here, not at module level: the workers that only synthesize
+    # pages (``synth_pages``) then never load the extraction kernels
+    from qwen_ocr_spark.operators.extract import extract_rows, output_fields
+
+    n = docs_df.sparkSession.sparkContext.defaultParallelism
+    df = docs_df.select("doc_id", "text")
+    # spread only when the scan under-parallelizes (the query testdata is
+    # a single-partition parquet; a multi-file corpus already spreads):
+    # don't pay an exchange the layout already provides
+    if df.rdd.getNumPartitions() < n:
+        df = df.repartition(n)
+    out_columns, schema = output_fields(columns)
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield extract_rows(
+                (_bridge_row(int(doc_id), text, figured)
+                 for doc_id, text in zip(b["doc_id"], b["text"])),
+                out_columns)
+
+    return df.mapInPandas(gen, schema=schema)

@@ -19,8 +19,9 @@ from qwen_ocr_spark.functions.htmlx import (                     # noqa: E402
     decode_html_bytes,
     extract_html,
 )
-from qwen_ocr_spark.functions.pdfx import (                      # noqa: E402
-    ImageSpec, PageSpec, TextSpec, extract_pdf, make_pdf,
+from qwen_ocr_spark.functions.pdfx import extract_pdf            # noqa: E402
+from qwen_ocr_spark.sources.pdfgen import (                      # noqa: E402
+    ImageSpec, PageSpec, TextSpec, make_pdf,
 )
 
 FIX = Path(__file__).resolve().parent / "fixtures"

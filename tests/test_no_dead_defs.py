@@ -1,13 +1,18 @@
-"""Every top-level function and class in the package is referenced.
+"""Every top-level function, class and UPPER_CASE constant in the
+package is referenced, and by more than tests.
 
 A pure source scan (``ast`` for the definitions, ``tokenize`` for the
 references; no Spark): a definition counts as live when its name occurs
-as a ``NAME`` token somewhere outside its own ``def``/``class`` body, in
-the package, the entry module, the bench scripts, ``scripts/``,
-``perfbench/`` or ``tests/``.  Comments and docstrings are ``COMMENT`` /
-``STRING`` tokens, so a name mentioned only there is still dead; the
-replacement fields of an f-string count (before Python 3.12 the whole
-f-string is one ``STRING`` token, so its fields are parsed out here)."""
+as a ``NAME`` token somewhere outside its own ``def``/``class`` body (or
+assignment statement), in the package, the entry module, the bench
+scripts, ``scripts/``, ``perfbench/`` or ``tests/``.  Comments and
+docstrings are ``COMMENT`` / ``STRING`` tokens, so a name mentioned only
+there is still dead; the replacement fields of an f-string count (before
+Python 3.12 the whole f-string is one ``STRING`` token, so its fields
+are parsed out here).
+
+A function or class that only test files reference is flagged too,
+unless ``TEST_ONLY_ALLOWED`` names it with the reason it stays."""
 
 import ast
 import tokenize
@@ -16,6 +21,20 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "qwen_ocr_spark"
+
+# Top-level defs that only tests call, each kept for the contract it
+# reproduces: a SURVEY.md row, the goldens' entry point, or a COVERAGE.md
+# "beyond the reference" row.
+TEST_ONLY_ALLOWED = {
+    "clean_markdown_output": "SURVEY P6: the reference's code-fence strip",
+    "num_batches": "SURVEY A4: the reference's batch count",
+    "job_totals": "SURVEY A3/A6/A7: job totals, images extracted, total_cost",
+    "scale_bbox_to_pixels": "reference pdf_handler.py:85-91 bbox scaling",
+    "extract_pdf": "the goldens' entry point (tests/make_goldens.py)",
+    "sessionize_stream": "COVERAGE beyond the reference: streaming twin",
+    "events_hourly_stream": "COVERAGE beyond the reference: streaming twin",
+    "incremental_dedup": "COVERAGE beyond the reference: incremental dedup",
+}
 
 
 def _search_files():
@@ -60,15 +79,64 @@ def _top_level_defs(path):
             yield node.name, node.lineno, node.end_lineno
 
 
-def test_every_top_level_def_is_referenced():
+def _top_level_constants(path):
+    """Module-level assignments to UPPER_CASE names."""
+    tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+    for node in tree.body:
+        targets = (node.targets if isinstance(node, ast.Assign)
+                   else [node.target] if isinstance(node, ast.AnnAssign)
+                   else [])
+        for tgt in targets:
+            for name in ast.walk(tgt):
+                if isinstance(name, ast.Name) and name.id.isupper():
+                    yield name.id, node.lineno, node.end_lineno
+
+
+def _refs():
     refs = defaultdict(list)  # name -> [(file, line)]
     for f in _search_files():
         for name, lines in _name_tokens(f).items():
             refs[name].extend((f, ln) for ln in lines)
-    dead = []
+    return refs
+
+
+def _outside(refs, name, f, start, end):
+    """Files referencing ``name`` outside lines start..end of ``f``."""
+    return {rf for rf, ln in refs[name] if rf != f or not start <= ln <= end}
+
+
+def _is_test(path):
+    return "tests" in path.relative_to(ROOT).parts
+
+
+def _unreferenced(defs):
+    refs = _refs()
+    return [f"{f.relative_to(ROOT)}:{start} {name}"
+            for f in sorted(PACKAGE.rglob("*.py"))
+            for name, start, end in defs(f)
+            if not _outside(refs, name, f, start, end)]
+
+
+def test_every_top_level_def_is_referenced():
+    dead = _unreferenced(_top_level_defs)
+    assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)
+
+
+def test_every_module_constant_is_referenced():
+    dead = _unreferenced(_top_level_constants)
+    assert not dead, "unreferenced module constants:\n" + "\n".join(dead)
+
+
+def test_no_top_level_def_is_referenced_only_by_tests():
+    refs = _refs()
+    test_only = {}
     for f in sorted(PACKAGE.rglob("*.py")):
         for name, start, end in _top_level_defs(f):
-            if not any(rf != f or not start <= ln <= end
-                       for rf, ln in refs[name]):
-                dead.append(f"{f.relative_to(ROOT)}:{start} {name}")
-    assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)
+            users = _outside(refs, name, f, start, end)
+            if users and all(_is_test(u) for u in users):
+                test_only[name] = f"{f.relative_to(ROOT)}:{start} {name}"
+    flagged = [w for n, w in test_only.items() if n not in TEST_ONLY_ALLOWED]
+    assert not flagged, ("top-level definitions only tests reference:\n"
+                         + "\n".join(flagged))
+    stale = sorted(TEST_ONLY_ALLOWED.keys() - test_only.keys())
+    assert not stale, f"allow-listed but not test-only: {stale}"

@@ -723,7 +723,8 @@ def test_connected_components_chains_and_islands(spark):
          (3, "alpha beta gamma delta epsilon eta"),   # near dup of 1/2
          (9, "completely different words entirely here now")],
         columns=["doc_id", "text"]))
-    groups = dedup.duplicate_groups(docs, threshold=0.5).collect()
+    groups = dedup.duplicate_groups(dedup.ngram_jaccard_pairs(
+        docs, threshold=0.5, max_df=dedup.MAX_SHINGLE_DF)).collect()
     by_id = {r["doc_id"]: r for r in groups}
     assert {r["group_id"] for r in groups} == {1}
     assert by_id[1]["is_keep"] and not by_id[2]["is_keep"]
@@ -866,9 +867,10 @@ def test_release_cached_empties_the_cache(spark, docs, emb):
         "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(
             docs, threshold=0.5),
         "duplicate_groups": lambda: dedup.duplicate_groups(
-            docs, threshold=0.5),
+            dedup.ngram_jaccard_pairs(docs, threshold=0.5,
+                                      max_df=dedup.MAX_SHINGLE_DF)),
         "duplicate_groups(lsh)": lambda: dedup.duplicate_groups(
-            docs, threshold=0.5, candidates="lsh"),
+            dedup.lsh_jaccard_pairs(docs, threshold=0.5)),
         "ivf_topk": lambda: similarity.ivf_topk(
             emb, [1], k=3, n_cells=8),
     }

@@ -10,13 +10,12 @@ import re
 
 import pytest
 
-from qwen_ocr_spark.functions.pdfx import (
+from qwen_ocr_spark.functions.pdfx import extract_pdf, parse_pdf
+from qwen_ocr_spark.sources.pdfgen import (
     ImageSpec,
     PageSpec,
     TextSpec,
-    extract_pdf,
     make_pdf,
-    parse_pdf,
 )
 
 
@@ -435,7 +434,8 @@ def test_literal_string_balanced_parens_and_backslash():
 def test_lzw_roundtrip_and_known_widths():
     """LZW codec: identity round-trips across the 9→10→11→12-bit width
     boundaries and a table clear; decoder tolerates truncation."""
-    from qwen_ocr_spark.functions.pdfx import _lzw_decode, _lzw_encode
+    from qwen_ocr_spark.functions.pdfx import _lzw_decode
+    from qwen_ocr_spark.sources.pdfgen import _lzw_encode
     import random
     rng = random.Random(7)
     for n in (0, 1, 257, 5000, 60000):
@@ -631,8 +631,8 @@ def test_cff_charset_formats_and_standard_strings():
     """_cff_gid_to_name on hand-built CFFs: format-1 range charsets and
     standard-string SIDs (1..95 = ASCII glyph-name order) resolve; a
     CID-keyed font (Top DICT /ROS) honestly returns {}."""
-    from qwen_ocr_spark.functions.pdfx import (_cff_gid_to_name,
-                                               _cff_make_index, _make_cff)
+    from qwen_ocr_spark.functions.pdfx import _cff_gid_to_name
+    from qwen_ocr_spark.sources.pdfgen import _cff_make_index, _make_cff
 
     def build(charset: bytes, n_glyphs: int, extra_top: bytes = b"") -> bytes:
         header = b"\x01\x00\x04\x04"
@@ -681,8 +681,9 @@ def test_ttf_cmap_subtable_formats():
     ship: format 4 via idRangeOffset/glyphIdArray (not just the idDelta
     arithmetic _make_ttf emits), format 6 trimmed arrays, and format 12
     segmented coverage."""
-    from qwen_ocr_spark.functions.pdfx import (_ttf_unicode_to_gid, _u16,
-                                               _u32, _ttf_table_checksum)
+    from qwen_ocr_spark.functions.pdfx import _ttf_unicode_to_gid
+    from qwen_ocr_spark.sources.pdfgen import (_ttf_table_checksum, _u16,
+                                               _u32)
 
     def wrap(subtable: bytes, pid: int = 3, eid: int = 1) -> bytes:
         cmap = _u16(0) + _u16(1) + _u16(pid) + _u16(eid) + _u32(12) + subtable
@@ -777,8 +778,8 @@ def test_aes_core_matches_fips197():
     """The pure-python AES-128 cipher (generated S-box) must match the
     FIPS-197 Appendix C.1 test vector exactly — conformance, not just
     self-round-trip."""
-    from qwen_ocr_spark.functions.pdfx import (_aes_cbc_decrypt,
-                                               _aes_cbc_encrypt)
+    from qwen_ocr_spark.functions.pdfx import _aes_cbc_decrypt
+    from qwen_ocr_spark.sources.pdfgen import _aes_cbc_encrypt
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")

@@ -614,7 +614,7 @@ def test_extract_documents_narrowed_columns_identical(spark):
     """columns= must change only which fields cross the Arrow boundary:
     the emitted rows equal the full-schema output projected to the same
     columns (both payload routes: html and every-7th pdf)."""
-    from qwen_ocr_spark.operators.extract import extract_documents
+    from qwen_ocr_spark.sources.pages import extract_documents
 
     docs = spark.createDataFrame(pd.DataFrame(
         [(i, f"body text number {i} with words") for i in range(1, 16)],
@@ -641,13 +641,13 @@ def test_extract_documents_equals_extract_pages_over_bridge(spark, figured):
     the plain html route and the pdf route's encoding variants."""
     import datetime as dt
 
-    from qwen_ocr_spark.operators.extract import extract_documents
     from qwen_ocr_spark.sources.pages import (
         EPOCH,
         PAGES_SCHEMA,
         _bridge_html,
         _bridge_html_figured,
         _bridge_pdf,
+        extract_documents,
     )
 
     ids = list(range(1, 16)) + [35, 42, 70, 105, 154, 182, 231, 266, 322, 406]
@@ -685,7 +685,7 @@ def test_extract_documents_equals_extract_pages_over_bridge(spark, figured):
 def test_extract_documents_empty_columns_raises(spark):
     """columns=[] would build a map node with an empty output schema;
     it is a caller error, reported as such (None means all columns)."""
-    from qwen_ocr_spark.operators.extract import extract_documents
+    from qwen_ocr_spark.sources.pages import extract_documents
 
     docs = spark.createDataFrame(pd.DataFrame([(1, "body")],
                                               columns=["doc_id", "text"]))
