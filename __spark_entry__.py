@@ -13,6 +13,12 @@ Engine-exactness conventions (so order-insensitive value hashes match):
 * hashes: md5/sha256 of utf-8 text — identical in both engines;
 * ranks: ``row_number`` with a total ordering (explicit tie-breaks);
 * timestamps rendered as strings via date_format/strftime.
+
+Build cost: every ``pyspark.sql.functions`` call and ``Column`` operator
+sends about a dozen py4j commands (PySpark's call-site capture), so the
+plans the near-dup benchmark times (``_with_mirrors``, ``_emb_double`` and
+the operators under them) are written as SQL text, one DataFrame call per
+relational step; ``python bench_extra.py build <sf>`` counts the commands.
 """
 
 from __future__ import annotations
@@ -30,7 +36,7 @@ from qwen_ocr_spark.operators import (
     timeseries,
 )
 from qwen_ocr_spark.operators.extract import extract_pages, figures_table
-from qwen_ocr_spark.plans.session import task_count
+from qwen_ocr_spark.plans.session import SCAN_TASK_BYTES, coalesce_by_size
 from qwen_ocr_spark.sources.pages import extract_documents
 
 SF_DEFAULT = "/root/testdata/sf0.001"
@@ -66,39 +72,17 @@ TABLE_SCHEMAS = {
 }
 
 
-# Table bytes (the planner's estimate of its files) per scan task of a
-# ``_t`` read.  A task costs a pass about 0.02-0.06 CPU-s however little it
-# reads: reading a 4-file table in 1 task instead of 4 saved, per task
-# removed, 0.02 CPU-s in dedup_exact, 0.055 in embedding_near_dups and 0.02
-# in gopher_signals (perfbench near-dup corpus, 4 cores).  The heaviest
-# scan-side work, gopher_signals' splits and regexes over ``documents``,
-# costs about 0.64 CPU-s per MB of table, so 256 KiB is ~0.16 CPU-s of
-# work, 3-8 times a task's fixed cost.  Larger tasks lose wall time on
-# mid-size tables: over 1.49 MB of documents, gopher_signals took 0.49 s in
-# 4 tasks, 0.56 s in 3 and 1.06 s in 1.
-SCAN_TASK_BYTES = 256 * 1024
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Table ``name`` of ``sf_dir``, read with its declared schema.
-
-    Parquet file packing charges ``openCostInBytes`` (4 MiB) per file and
-    spreads a small table's files one per core, so a 100 KB table of 4
-    files would run as 4 scan tasks.  The read is coalesced to
-    ``plans.session.task_count(read, SCAN_TASK_BYTES)`` partitions: one
-    per ``SCAN_TASK_BYTES`` of the table's estimated size, a planner
-    statistic, so sizing launches no Spark job.  A table that estimates at
-    ``defaultParallelism × SCAN_TASK_BYTES`` or more is returned as read.
-    The ``Coalesce`` lets column pruning through to the scan, and a
-    one-partition read satisfies any distribution, so an aggregate right
-    above it needs no ``Exchange``; a ``repartition`` over a projection of
-    the read replaces the ``Coalesce``."""
-    read = spark.read.schema(TABLE_SCHEMAS[name]).parquet(
-        f"{sf_dir}/{name}.parquet")
-    n = task_count(read, SCAN_TASK_BYTES)
-    if n < spark.sparkContext.defaultParallelism:
-        return read.coalesce(n)
-    return read
+    """Table ``name`` of ``sf_dir``, read with its declared schema and
+    coalesced to one task per ``SCAN_TASK_BYTES`` of its size estimate
+    (``plans.session.coalesce_by_size``: a planner statistic, so sizing
+    launches no Spark job).  A table that estimates at
+    ``defaultParallelism × SCAN_TASK_BYTES`` or more is returned as
+    read."""
+    return coalesce_by_size(
+        spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+            f"{sf_dir}/{name}.parquet"),
+        SCAN_TASK_BYTES)
 
 
 def _e(col, k: int = 4):
@@ -495,18 +479,14 @@ def _with_mirrors(df: DataFrame, key: str, value: str) -> DataFrame:
     """``df``'s (key, value) rows plus a mirrored copy, keyed key+1000000,
     of every row whose key % 10 == 0.  ONE scan (round 6): a
     ``unionAll(df, df.where(...))`` reads the input twice per action; the
-    inline explode emits the mirror row next to its original from the same
-    scan — identical row multiset."""
-    k, v = F.col(key), F.col(value)
-    return df.select(
-        F.explode(
-            F.when(
-                k % 10 == 0,
-                F.array(F.struct(k, v),
-                        F.struct((k + 1000000).alias(key), v)),
-            ).otherwise(F.array(F.struct(k, v)))
-        ).alias("_r")
-    ).select(f"_r.{key}", f"_r.{value}")
+    ``inline`` emits the mirror row next to its original from the same
+    scan — identical row multiset.  One SQL-text projection (module
+    docstring: build cost)."""
+    row = f"named_struct('{key}', `{key}`, '{value}', `{value}`)"
+    mirror = f"named_struct('{key}', `{key}` + 1000000, '{value}', `{value}`)"
+    return df.selectExpr(
+        f"inline(CASE WHEN `{key}` % 10 = 0 THEN array({row}, {mirror}) "
+        f"ELSE array({row}) END)")
 
 
 def _docs2(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
@@ -599,13 +579,12 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _emb_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
     # container-level cast, NOT transform(x -> cast(x)): higher-order
     # lambdas are interpreted per element (round-2 gotcha) and this cast
     # runs under every ANN consumer; float->double widening is exact
     # either way (round 6)
-    return e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    return _t(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "CAST(embedding AS array<double>) AS embedding")
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,7 @@ Usage::
     python bench_extra.py noop  <sf_dir> <query> [query ...]
     python bench_extra.py fresh <sf_dir> <query> [query ...]
     python bench_extra.py jobs  <sf_dir> [query ...]
+    python bench_extra.py build <sf_dir> [query ...]
 
 ``time`` prints one JSON line {"queries": {name: best_sec}, "sf": dir}.
 ``fresh`` follows the per-pass protocol of ``perfbench``'s near-dup
@@ -28,6 +29,13 @@ named), the Spark jobs launched while building its DataFrame and those
 its ``toArrow()`` launches: one line ``<query> <build> <run>`` each, then
 a ``total`` line.  A query should launch none before its action runs; a
 schema-less read or an eager intermediate shows up in the build column.
+``build`` measures building a query's DataFrame on the driver, before any
+action: for each named query (all of ``queries()`` when none is named)
+it builds the DataFrame once to warm up, then ``BUILD_REPS`` more times,
+and prints one line ``<query> <wall_ms> <cpu_ms> <py4j>`` with the
+medians of the driver's wall and process CPU milliseconds and of the py4j
+commands it sent (``plans.session.count_py4j``: memory-release commands
+are not counted), then a ``total`` line of the per-query medians.
 ``noop`` times a full-materialization noop write instead of count()
 (count() is what bench.py measures; noop shows whether column pruning
 was hiding work).
@@ -48,6 +56,8 @@ import statistics
 import sys
 import time
 
+BUILD_REPS = 10  # timed builds per query after one warm-up build
+
 _SESSION_IDS = re.compile(r"(#|plan_id=)\d+L?")
 
 
@@ -61,7 +71,8 @@ def main() -> None:
     mode = sys.argv[1]
     sf_dir = sys.argv[2]
     import __spark_entry__ as entry_mod
-    from qwen_ocr_spark.plans.session import (count_jobs, gc_hint, get_spark,
+    from qwen_ocr_spark.plans.session import (count_jobs, count_py4j,
+                                              gc_hint, get_spark,
                                               release_cached)
 
     spark = get_spark(app_name=f"bench-extra-{mode}")
@@ -91,6 +102,28 @@ def main() -> None:
             totals = [totals[0] + build, totals[1] + run]
             print(f"{name:28s} {build:5d} {run:5d}", flush=True)
         print(f"{'total':28s} {totals[0]:5d} {totals[1]:5d}")
+        spark.stop()
+        return
+
+    if mode == "build":
+        totals = [0.0, 0.0, 0]
+        for name in sys.argv[3:] or list(queries):
+            query = _get(queries, name)
+            query(spark, sf_dir)
+            release_cached()
+            reps = []
+            for _ in range(BUILD_REPS):
+                t0, c0 = time.perf_counter(), time.process_time()
+                _, sent = count_py4j(spark, lambda: query(spark, sf_dir))
+                reps.append(((time.perf_counter() - t0) * 1e3,
+                             (time.process_time() - c0) * 1e3, sent))
+                release_cached()
+            wall, cpu, sent = (statistics.median(r[i] for r in reps)
+                               for i in range(3))
+            totals = [totals[0] + wall, totals[1] + cpu, totals[2] + sent]
+            print(f"{name:28s} {wall:8.1f} {cpu:8.1f} {sent:6.0f}", flush=True)
+        print(f"{'total':28s} {totals[0]:8.1f} {totals[1]:8.1f} "
+              f"{totals[2]:6.0f}")
         spark.stop()
         return
 

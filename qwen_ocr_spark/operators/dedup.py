@@ -4,6 +4,9 @@ Scale-first shapes (the 100 TB rationale, per operator):
 
 * exact      — one hash-aggregate on md5(text): a single shuffle keyed by a
                16-byte digest, map-side partial agg; no text moves twice.
+               Written as SQL text (``selectExpr`` / ``F.expr``), so its
+               plan is built in a few JVM calls, not one py4j-wrapped
+               ``Column`` call per expression node.
 * minhash    — shingle explode → per-doc min-aggregate per hash slot (k
                independent permutations approximated by seeded md5) → one
                LSH bucket pass (``similarity.band_bucket_pairs``).
@@ -79,11 +82,13 @@ _BITMAP_WORDS = 4     # 4 x 64 = 256-bit hashed doc bitmaps (jaccard
 
 
 def exact_dups(df: DataFrame) -> DataFrame:
-    """Hash-groupBy exact dedup: one representative (min id) per distinct text."""
+    """Hash-groupBy exact dedup: one representative (min id) per distinct
+    text.  SQL-text projection and aggregates (module docstring)."""
     return (
-        df.select(F.md5(F.col("text").cast("binary")).alias("text_md5"), F.col("doc_id"))
+        df.selectExpr("md5(CAST(text AS BINARY)) AS text_md5", "doc_id")
           .groupBy("text_md5")
-          .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
+          .agg(F.expr("min(doc_id) AS keep_id"),
+               F.expr("count(*) AS dup_count"))
     )
 
 

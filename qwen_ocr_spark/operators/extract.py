@@ -19,7 +19,8 @@ Design notes for the 10^12-row target:
   estimate of the pruned input, at least 1 and at most
   ``defaultParallelism`` (an input with no size statistic gets the
   maximum), so a small resume increment commits one output file, not one
-  per core.
+  per core.  A one-task width is a ``coalesce(1)``, not a shuffle: one
+  partition has no skew to break.
 * **One UDF pass computes text AND figures** — the reference ran two model
   calls per batch concurrently (src/models/document_job.py:338-362); here
   one shared parse produces both output columns, figures nested as an
@@ -186,28 +187,28 @@ def extract_pages(pages_df: DataFrame, *, salt: int = 0,
     ``plans.session.task_count(input, EXTRACT_TASK_BYTES)`` partitions:
     one per ``EXTRACT_TASK_BYTES`` of the filtered, pruned input's size
     estimate, between 1 and ``defaultParallelism``, read from the plan
-    without launching a Spark job."""
+    without launching a Spark job.  A width of 1 plans ``coalesce(1)``
+    instead: no exchange, the scan feeds the one extraction task."""
     df = pages_df
     if lang is not None:
         df = df.filter(F.col("lang") == lang)  # pushed to the scan
     df = df.select("url", "warc_ts", "html")   # column pruning: never read text
     if repartition:
         n = partitions or task_count(df, EXTRACT_TASK_BYTES)
-        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(salt)))
+        if n == 1:  # one task: a salted shuffle would only move the html
+            df = df.coalesce(1)
+        else:
+            df = df.repartition(n, F.xxhash64("url", F.lit(salt)))
     return df.mapInPandas(_extract_iter, schema=OUT_SCHEMA)
 
 
 def figures_table(out_df: DataFrame) -> DataFrame:
     """Explode the nested figures into the side-output table
-    figures(url, page_number, fig_number, bbox, caption, element_type, png)
-    — the Spark analog of images/{page}_fig{n}.png
-    (/root/reference/src/models/extracted_image.py:34-43)."""
-    return (
-        out_df
-        .select("url", F.explode("figures").alias("f"))
-        .select("url", "f.page_number", "f.fig_number", "f.bbox",
-                "f.caption", "f.element_type", "f.img_format", "f.png")
-    )
+    figures(url, page_number, fig_number, bbox, caption, element_type,
+    img_format, png) — the Spark analog of images/{page}_fig{n}.png
+    (the reference's src/models/extracted_image.py:34-43).  ``inline``
+    yields the ``FIGURE_FIELDS`` columns in their order."""
+    return out_df.selectExpr("url", "inline(figures)")
 
 
 def job_totals(out_df: DataFrame) -> DataFrame:

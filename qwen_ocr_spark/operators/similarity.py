@@ -55,6 +55,8 @@ bucket-pair cost against recall explicitly.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
@@ -214,6 +216,18 @@ def _plane(plane: int, dims: int) -> list[float]:
     ]
 
 
+@functools.cache
+def _planes(n: int) -> np.ndarray:
+    """The first ``n`` hyperplanes (``_plane``) as a read-only ``(n,
+    EMB_DIMS)`` float64 matrix, hashed once per process: every band-key
+    UDF reads them, and a plan built per query would otherwise hash
+    ``n × EMB_DIMS`` md5s each time."""
+    planes = np.asarray([_plane(p, EMB_DIMS) for p in range(n)],
+                        dtype=np.float64)
+    planes.setflags(write=False)
+    return planes
+
+
 def _band_key_matrix(E: np.ndarray, planes: np.ndarray,
                      rows: int) -> np.ndarray:
     """``(n, bands)`` packed int64 band keys of an ``(n, dims)`` embedding
@@ -247,8 +261,7 @@ def _band_keys_udf(bands: int, rows: int):
     non-finite element or a vector longer than ``EMB_DIMS`` raises
     ``ValueError``, exactly as in the cosine scorer
     (``_embedding_matrix``)."""
-    planes = np.asarray([_plane(p, EMB_DIMS) for p in range(bands * rows)],
-                        dtype=np.float64)
+    planes = _planes(bands * rows)
 
     def _band_keys(vs: pa.Array) -> pa.Array:
         K = _band_key_matrix(_embedding_matrix(vs), planes, rows)
@@ -371,7 +384,8 @@ def band_bucket_pairs(buckets: DataFrame, read=None,
 def _band_rows(emb: DataFrame, *carry: str) -> DataFrame:
     """``(vec_id, band_key, keys, *carry)`` rows — one per (vector, band)
     — from ONE band-key UDF call per vector returning all ``LSH_BANDS``
-    keys.
+    keys.  The explode is SQL text: each ``Column`` call costs about a
+    dozen py4j commands to build.
 
     The UDF instance is non-deterministic on purpose: the explode keeps
     ``keys`` beside ``band_key``, and for a deterministic UDF Catalyst
@@ -381,10 +395,8 @@ def _band_rows(emb: DataFrame, *carry: str) -> DataFrame:
     no cache reuse."""
     band_keys = _band_keys_udf(LSH_BANDS, LSH_ROWS).asNondeterministic()
     return (
-        emb.select("vec_id", band_keys(F.col("embedding")).alias("keys"),
-                   *carry)
-        .select("vec_id", F.explode("keys").alias("band_key"), "keys",
-                *carry)
+        emb.select("vec_id", band_keys("embedding").alias("keys"), *carry)
+        .selectExpr("vec_id", "explode(keys) AS band_key", "keys", *carry)
     )
 
 

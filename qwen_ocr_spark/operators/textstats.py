@@ -10,6 +10,15 @@ These extend the reference's scope (it processes one PDF at a time); they
 are the operations the same engine needs when the corpus is 10^12 rows of
 crawl text (BASELINE.json category: extraction / webtext).
 
+``gopher_signals``, a pass the near-dup benchmark times, is written as SQL
+text (one ``selectExpr``): each ``pyspark.sql.functions`` call and
+``Column`` operator captures its Python call site through a dozen py4j
+round trips, so a plan of a few hundred expression nodes costs the driver
+more to build than to run.  Conventions: raw Python strings with doubled
+regex backslashes, ``D``-suffixed double literals (a bare ``10000.0`` is
+DECIMAL and changes the floored values), and data values through
+``F.lit``, never pasted into the text.
+
 Input schema: every operator reads the document relation's ``text``
 (string) column; the per-document ones (``repetition_stats``,
 ``gopher_signals``) also key their output by ``doc_id`` (bigint).
@@ -303,6 +312,22 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     )
 
 
+def _frac_e4(num: str, den: str) -> str:
+    """SQL text of ``floor(num * 10000 / den)`` as bigint, 0 when ``den``
+    is 0 (``10000.0D``: a bare ``10000.0`` is a DECIMAL literal)."""
+    return (f"CAST(CASE WHEN {den} = 0 THEN 0 "
+            f"ELSE floor({num} * 10000.0D / {den}) END AS BIGINT)")
+
+
+# gopher_signals' SQL-text pieces.  Raw strings: the SQL parser unescapes
+# string literals, so a regex backslash is written doubled ('\\s' reaches
+# the regex engine as \s; a single '\s' would reach it as a plain 's').
+_TOKS = (r"CASE WHEN length(trim(text)) = 0 THEN CAST(array() AS array<string>)"
+         r" ELSE split(trim(text), '\\s+') END")
+_TOK_CHARS = r"length(regexp_replace(trim(text), '\\s', ''))"
+_LINES = r"filter(split(text, '\n'), x -> length(trim(x)) > 0)"
+
+
 def gopher_signals(df: DataFrame) -> DataFrame:
     """The remaining Gopher-style document-quality signals (round 5;
     complements repetition_stats and with_quality_score):
@@ -316,37 +341,28 @@ def gopher_signals(df: DataFrame) -> DataFrame:
     Gopher's corresponding filters: mean word length in [3,10], symbol
     ratio < 0.1, bullet lines < 90%, ellipsis lines < 30%.  All pure
     column expressions, e4-floored for exact oracle hashing; empty
-    documents emit zeros."""
-    t = F.col("text")
-    toks = F.when(F.length(F.trim(t)) == 0,
-                  F.array().cast("array<string>")) \
-            .otherwise(F.split(F.trim(t), r"\s+"))
-    n_toks = F.size(toks)
-    # sum of token lengths == chars of trim(text) with every \s removed:
-    # tokens are exactly the maximal non-\s runs of trim(text).  Pure
-    # length arithmetic stays in codegen where the round-5 aggregate/
-    # transform lambda fold was interpreted per element (round-2 gotcha).
-    tok_chars = F.length(F.regexp_replace(F.trim(t), r"\s", ""))
-    sym = F.size(F.filter(
-        toks, lambda x: x.contains("#") | x.contains("...")
-        | x.contains("…")))
-    lines = F.filter(F.split(t, "\n"), lambda x: F.length(F.trim(x)) > 0)
-    n_lines = F.size(lines)
-    bullet = F.size(F.filter(
-        lines, lambda x: F.trim(x).rlike(r"^[-*•]")))
-    ellipsis = F.size(F.filter(
-        lines, lambda x: F.trim(x).rlike(r"(\.\.\.|…)$")))
+    documents emit zeros.
 
-    def frac_e4(num, den):
-        return F.when(den == 0, F.lit(0)).otherwise(
-            F.floor(num * 10000.0 / den)).cast("bigint")
-
-    return df.select(
-        F.col("doc_id"),
-        frac_e4(tok_chars, n_toks).alias("mean_word_len_e4"),
-        frac_e4(sym, n_toks).alias("symbol_word_frac_e4"),
-        frac_e4(bullet, n_lines).alias("bullet_line_frac_e4"),
-        frac_e4(ellipsis, n_lines).alias("ellipsis_line_frac_e4"),
+    One SQL-text projection (module docstring): built from
+    ``pyspark.sql.functions``, the ``gopher_signals`` query sent 637 py4j
+    commands to build, as SQL text 31.  The sum of token lengths is the
+    chars of trim(text) with every \\s removed (tokens are exactly the
+    maximal non-\\s runs of trim(text)): pure length arithmetic stays in
+    codegen where an aggregate/transform lambda fold is interpreted per
+    element (round-2 gotcha)."""
+    n_toks = f"size({_TOKS})"
+    sym = (f"size(filter({_TOKS}, x -> contains(x, '#') "
+           "OR contains(x, '...') OR contains(x, '…')))")
+    n_lines = f"size({_LINES})"
+    bullet = f"size(filter({_LINES}, x -> trim(x) RLIKE '^[-*•]'))"
+    ellipsis = (f"size(filter({_LINES}, "
+                r"x -> trim(x) RLIKE '(\\.\\.\\.|…)$'))")
+    return df.selectExpr(
+        "doc_id",
+        f"{_frac_e4(_TOK_CHARS, n_toks)} AS mean_word_len_e4",
+        f"{_frac_e4(sym, n_toks)} AS symbol_word_frac_e4",
+        f"{_frac_e4(bullet, n_lines)} AS bullet_line_frac_e4",
+        f"{_frac_e4(ellipsis, n_lines)} AS ellipsis_line_frac_e4",
     )
 
 

@@ -117,6 +117,37 @@ def task_count(df: DataFrame, task_bytes: int) -> int:
     return max(1, min(cap, -(-est // task_bytes)))
 
 
+# Table bytes (the planner's estimate of its files) per scan task of a
+# small read: ``__spark_entry__._t``'s tables and the sinks' read-backs of
+# the output table.  A task costs a pass about 0.02-0.06 CPU-s however
+# little it reads: reading a 4-file table in 1 task instead of 4 saved, per
+# task removed, 0.02 CPU-s in dedup_exact, 0.055 in embedding_near_dups and
+# 0.02 in gopher_signals (perfbench near-dup corpus, 4 cores).  The
+# heaviest scan-side work, gopher_signals' splits and regexes over
+# ``documents``, costs about 0.64 CPU-s per MB of table, so 256 KiB is
+# ~0.16 CPU-s of work, 3-8 times a task's fixed cost.  Larger tasks lose
+# wall time on mid-size tables: over 1.49 MB of documents, gopher_signals
+# took 0.49 s in 4 tasks, 0.56 s in 3 and 1.06 s in 1.
+SCAN_TASK_BYTES = 256 * 1024
+
+
+def coalesce_by_size(df: DataFrame, task_bytes: int) -> DataFrame:
+    """``df`` coalesced to ``task_count(df, task_bytes)`` partitions when
+    that is fewer than ``defaultParallelism``, else ``df`` as it is.
+
+    Parquet file packing charges ``openCostInBytes`` (4 MiB) per file and
+    spreads a small table's files one per core, so a 100 KB read of 4 files
+    would run as 4 scan tasks.  A ``Coalesce`` is no shuffle and lets column
+    pruning through to the scan, and a one-partition input satisfies any
+    distribution, so an aggregate right above it needs no ``Exchange``; a
+    ``repartition`` over a projection of the read replaces the
+    ``Coalesce``."""
+    n = task_count(df, task_bytes)
+    if n < df.sparkSession.sparkContext.defaultParallelism:
+        return df.coalesce(n)
+    return df
+
+
 def run_dir_path(spark: SparkSession, table_path: str, run_id: str) -> str:
     """The directory ``partitionBy("run_id")`` writes ``run_id``'s rows to:
     the value escaped as Spark escapes partition values
@@ -185,3 +216,26 @@ def count_jobs(spark: SparkSession, fn):
         sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_py4j(spark: SparkSession, fn):
+    """(fn's result, the py4j commands the driver sent while fn ran),
+    memory-release (``m``) commands excepted: Python sends one whenever it
+    frees a JVM object handle, so their count depends on when the garbage
+    collector runs, not on what ``fn`` asked the JVM."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(command, *args, **kw):
+        if not command.startswith("m\n"):
+            sent[0] += 1
+        return send(command, *args, **kw)
+
+    client.send_command = counting
+    try:
+        result = fn()
+    finally:
+        del client.send_command
+    return result, sent[0]
+

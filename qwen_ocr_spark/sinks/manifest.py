@@ -68,7 +68,11 @@ from qwen_ocr_spark.operators.extract import (
     OUT_SCHEMA,
     figures_table,
 )
-from qwen_ocr_spark.plans.session import run_dir_path
+from qwen_ocr_spark.plans.session import (
+    SCAN_TASK_BYTES,
+    coalesce_by_size,
+    run_dir_path,
+)
 
 # Every table this module reads is one it writes, so its schema is declared
 # here, never inferred: a schema-less ``spark.read.parquet`` launches a job
@@ -139,7 +143,7 @@ def write_output(out_df: DataFrame, out_path: str, manifest_path: str,
     plan that anti-joins against ``out_path``, which would re-evaluate to
     zero rows."""
     _overwrite_run(
-        out_df.withColumn("partition_id", F.spark_partition_id())
+        out_df.selectExpr("*", "spark_partition_id() AS partition_id")
         .withColumn("run_id", F.lit(run_id)),
         out_path)
     return _write_manifest(out_df.sparkSession, out_path, manifest_path,
@@ -154,7 +158,9 @@ def _write_manifest(spark: SparkSession, out_path: str, manifest_path: str,
     One write, so one Spark query: the aggregate goes straight from the
     Parquet scan to the manifest file (``coalesce(1)``: one file per run),
     and the row count it returns is an ``Observation`` of that same write.
-    No row crosses to Python and back."""
+    No row crosses to Python and back.  The read-back is coalesced by its
+    size (``plans.session.coalesce_by_size``), so a small run is aggregated
+    in one task with no ``Exchange``."""
     try:
         written = spark.read.schema(RUN_DIR_SCHEMA).parquet(
             run_dir_path(spark, out_path, run_id))
@@ -162,17 +168,16 @@ def _write_manifest(spark: SparkSession, out_path: str, manifest_path: str,
         return 0  # empty batch: the partitioned write created no run dir
     rows = Observation()
     manifest = (
-        written
+        coalesce_by_size(written, SCAN_TASK_BYTES)
         .groupBy("partition_id")
         .agg(
-            F.count("*").alias("row_count"),
-            F.sha2(
-                F.concat_ws(",", F.sort_array(F.collect_list("digest"))), 256
-            ).alias("content_digest"),
+            F.expr("count(*) AS row_count"),
+            F.expr("sha2(concat_ws(',', sort_array(collect_list(digest))), "
+                   "256) AS content_digest"),
         )
-        .withColumn("committed_at", F.current_timestamp())
+        .selectExpr("*", "current_timestamp() AS committed_at")
         .withColumn("run_id", F.lit(run_id))
-        .observe(rows, F.sum("row_count").alias("rows"))
+        .observe(rows, F.expr("sum(row_count) AS rows"))
     )
     _overwrite_run(manifest.coalesce(1), manifest_path)
     return rows.get["rows"] or 0
@@ -332,8 +337,11 @@ def read_output(spark: SparkSession, out_path: str,
 
 
 def resume_filter(pages_df: DataFrame, out_path: str) -> DataFrame:
-    """Drop input rows whose url is already committed (anti-join resume)."""
+    """Drop input rows whose url is already committed (anti-join resume).
+    The committed urls are read in one task per ``SCAN_TASK_BYTES``
+    (``plans.session.coalesce_by_size``), not one per output file."""
     done = read_output(pages_df.sparkSession, out_path)
     if done is None:
         return pages_df
-    return pages_df.join(done.select("url"), on="url", how="left_anti")
+    committed = coalesce_by_size(done.select("url"), SCAN_TASK_BYTES)
+    return pages_df.join(committed, on="url", how="left_anti")

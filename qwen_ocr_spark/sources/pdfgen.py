@@ -517,8 +517,6 @@ def make_pdf(pages: list[PageSpec], compress: bool = False,
     else:
         font_num = add(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
 
-    page_obj_nums: list[int] = []
-    pages_node_num = len(pages) * 0 + 0  # placeholder, patched below
     # reserve object numbers: we build pages after knowing the /Pages number,
     # so simply collect bodies and fix references in a second pass using
     # sequential numbering: font=1, then per page (image objs, content, page),

@@ -310,6 +310,59 @@ def test_gopher_signals_known_values(spark):
                                       ellipsis_line_frac_e4=0)
 
 
+# Java regex ``\s`` (Spark's split / regexp_replace), ASCII only: Python's
+# ``\s`` on ``str`` would also match unicode spaces
+_JAVA_WS = "[ \t\n\x0b\f\r]"
+
+
+def _gopher_reference(text: str) -> tuple[int, int, int, int]:
+    """gopher_signals of one text, written in plain Python with Spark's
+    semantics spelled out: ``trim`` strips spaces only, ``split`` keeps
+    empty leading/trailing tokens, and Java's ``$`` also matches before
+    one final line terminator (so a CRLF line ``a...\\r`` ends with an
+    ellipsis)."""
+    import math
+    import re
+
+    def frac(num, den):
+        return 0 if den == 0 else math.floor(num * 10000.0 / den)
+
+    trimmed = text.strip(" ")
+    toks = re.split(_JAVA_WS + "+", trimmed) if trimmed else []
+    tok_chars = len(re.sub(_JAVA_WS, "", trimmed))
+    sym = sum("#" in t or "..." in t or "…" in t for t in toks)
+    lines = [ln.strip(" ") for ln in text.split("\n") if ln.strip(" ")]
+    bullet = sum(ln[0] in "-*•" for ln in lines)
+    ends = [ln[:-1] if ln[-1] in "\r\u0085\u2028\u2029" else ln
+            for ln in lines]
+    ellipsis = sum(e.endswith(("...", "…")) for e in ends)
+    return (frac(tok_chars, len(toks)), frac(sym, len(toks)),
+            frac(bullet, len(lines)), frac(ellipsis, len(lines)))
+
+
+def test_gopher_signals_edge_cases_match_reference(spark):
+    """Whitespace, bullet and ellipsis edge cases against the plain-Python
+    reference.  Words with an ``s`` catch a regex escape that reaches the
+    engine as a plain letter (``'\\s'`` in SQL text is ``s``)."""
+    texts = [
+        "first line...\r\nsecond line\r\n- bullets start here\r\n",
+        "\nleading newline, then words\nstill words…",
+        "   ",
+        "",
+        "\t",
+        "mid...dle tokens… and ...lead and trail... plus #hash tags",
+        "  • spaced bullet\n   - dash bullet\n\t* tab then star\n *star",
+        "sss ss s\nsis\ttabs  spaces",
+        "line ends with dots ...\n  trailing spaces...   \nnot … here x",
+        "\u2026\n...\n-\n•",
+    ]
+    rows = list(enumerate(texts))
+    got = {r[0]: tuple(r[1:]) for r in textstats.gopher_signals(
+        spark.createDataFrame(rows, "doc_id bigint, text string")).collect()}
+    for i, text in rows:
+        assert got[i] == _gopher_reference(text), (i, text)
+
+
 def test_token_count_edges(docs):
     t = {r["doc_id"]: (r["n_tokens"], r["n_subtokens_est"])
          for r in textstats.with_token_count(docs).collect()}

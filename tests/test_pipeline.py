@@ -707,7 +707,9 @@ def _formatted_plan(df):
 
 def test_plan_pruning_and_pushdown(spark, tmp_path):
     """Locks the scale claims: lang filter reaches the scan, crawl `text`
-    column never read, exactly one exchange (the salted repartition)."""
+    column never read; a one-task input plans ``Coalesce 1`` and no
+    exchange, an explicit width exactly one exchange (the salted
+    repartition)."""
     path = str(tmp_path / "pp")
     synth_pages(spark, 20, seed=42, partitions=2).write.parquet(path)
     # inferred, and declared as scripts/run_extract.py reads it
@@ -717,20 +719,27 @@ def test_plan_pruning_and_pushdown(spark, tmp_path):
         assert "EqualTo(lang,en)" in plan      # predicate pushdown
         read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
         assert "text" not in read_schema       # column pruning
+        assert "Exchange" not in plan
+        assert _extract_width(extract_pages(df, lang="en")) == 1
+        plan = _formatted_plan(extract_pages(df, lang="en", partitions=3))
         assert plan.count("Exchange") == 2     # one exchange node + its detail line
+        assert "xxhash64(url" in plan
+        assert "Coalesce" not in plan
 
 
 def _extract_width(df):
-    """The partition count of the extraction shuffle in ``df``'s plan (a
-    one-partition repartition plans as ``SinglePartition``)."""
+    """The partition count the extraction runs in: the width of the salted
+    shuffle in ``df``'s plan, or 1 when the plan coalesces its input to
+    one partition instead (and has no exchange)."""
     import re
     plan = df._jdf.queryExecution().executedPlan().toString()
-    line = [l for l in plan.splitlines()
-            if "Exchange" in l and "REPARTITION_BY_NUM" in l][0]
-    if "SinglePartition" in line:
+    lines = [l for l in plan.splitlines()
+             if "Exchange" in l and "REPARTITION_BY_NUM" in l]
+    if not lines:
+        assert "Coalesce 1" in plan and "Exchange" not in plan, plan
         return 1
     return int(re.search(r"hashpartitioning\(xxhash64\(url#\d+, \d+, 42\), "
-                         r"(\d+)\)", line).group(1))
+                         r"(\d+)\)", lines[0]).group(1))
 
 
 @pytest.fixture(scope="module")
@@ -743,8 +752,8 @@ def pages40(spark, tmp_path_factory):
 
 
 def test_extract_width_small_input_one_task(spark, tmp_path):
-    """A 20-page input estimates far below ``EXTRACT_TASK_BYTES``: the
-    salted shuffle has one partition, not one per core."""
+    """A 20-page input estimates far below ``EXTRACT_TASK_BYTES``: it is
+    extracted in one task, coalesced without a shuffle, not one per core."""
     path = str(tmp_path / "p20")
     synth_pages(spark, 20, seed=42, partitions=2).write.parquet(path)
     df = spark.read.schema(PAGES_SCHEMA).parquet(path)
@@ -826,6 +835,26 @@ def test_extract_width_launches_no_job(spark, pages40, tmp_path):
     _, jobs = count_jobs(
         spark, lambda: extract_pages(resume_filter(pages40, out_path)))
     assert jobs == 0
+
+
+def test_small_increment_commits_without_shuffle(spark, pages40, tmp_path):
+    """A one-task increment over a committed table: the extraction input
+    and the committed-url side of the resume anti-join are each coalesced
+    to one task, so the only exchange is the url broadcast; the manifest
+    of the committed run aggregates its read-back in one job (one task,
+    no ``Exchange`` below the ``groupBy``)."""
+    from qwen_ocr_spark.sinks.manifest import _write_manifest
+    out_path = str(tmp_path / "out")
+    half = pages40.filter(F.crc32(F.col("url")) % 2 == 0)
+    write_output(extract_pages(half), out_path, str(tmp_path / "man"), "run1")
+    plan = extract_pages(resume_filter(pages40, out_path)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Coalesce 1") == 2
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "BroadcastExchange" in exchanges[0]
+    rows, jobs = count_jobs(spark, lambda: _write_manifest(
+        spark, out_path, str(tmp_path / "man2"), "run1"))
+    assert rows == half.count() and jobs == 1
 
 
 def test_extract_default_width_same_rows(spark, pages40):
