@@ -523,8 +523,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct=False (min-agg ignores duplicates) drops the widest shuffle;
-    # lsh_candidate_pairs pairs each band bucket in one Arrow pass (one
-    # band_key exchange, no join, no cache)
+    # lsh_candidate_pairs pairs each band bucket in one Arrow pass (at
+    # most one band_key exchange, no join, no cache)
     sh = dedup.word_shingles(_docs2(spark, sf_dir), distinct=False)
     return dedup.lsh_candidate_pairs(dedup.minhash_signatures(sh))
 
@@ -608,8 +608,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs over banded LSH candidates, scored
-    inside their band bucket (one band_key shuffle, one mapInArrow kernel;
-    no join, distinct or cache) — exact oracle (same literal hyperplanes
+    inside their band bucket (one mapInArrow kernel, behind a band_key
+    shuffle only above one task's worth of band rows; no join, distinct or
+    cache) — exact oracle (same literal hyperplanes
     as ann_lsh_topk; the oracle still self-joins the bands, takes the
     distinct pairs and joins the vectors back, so it checks the kernel's
     first-shared-band ownership against a plain union).  Mirrored copies

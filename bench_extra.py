@@ -13,6 +13,7 @@ Usage::
     python bench_extra.py fresh <sf_dir> <query> [query ...]
     python bench_extra.py jobs  <sf_dir> [query ...]
     python bench_extra.py build <sf_dir> [query ...]
+    python bench_extra.py alloc <sf_dir> [query ...]
 
 ``time`` prints one JSON line {"queries": {name: best_sec}, "sf": dir}.
 ``fresh`` follows the per-pass protocol of ``perfbench``'s near-dup
@@ -36,6 +37,16 @@ and prints one line ``<query> <wall_ms> <cpu_ms> <py4j>`` with the
 medians of the driver's wall and process CPU milliseconds and of the py4j
 commands it sent (``plans.session.count_py4j``: memory-release commands
 are not counted), then a ``total`` line of the per-query medians.
+``alloc`` measures what running a query costs the driver JVM: for each
+named query (all of ``queries()`` when none is named) it runs one warm-up
+rep and ``ALLOC_REPS`` more, each a fresh build, ``toArrow()`` and
+``release_cached()`` as in ``fresh``, and prints one line
+``<query> <alloc_mb> <compiles>`` with the medians of the heap the
+driver JVM allocated (``ThreadMXBean.getTotalThreadAllocatedBytes``, the
+source of perfbench's ``heap_alloc_mb``) and of the generated classes it
+compiled (``CodegenMetrics``), then a ``total`` line of the medians.  A
+query whose steady state still compiles code has a value in its
+generated code (a literal codegen inlines).
 ``noop`` times a full-materialization noop write instead of count()
 (count() is what bench.py measures; noop shows whether column pruning
 was hiding work).
@@ -57,6 +68,7 @@ import sys
 import time
 
 BUILD_REPS = 10  # timed builds per query after one warm-up build
+ALLOC_REPS = 5   # measured runs per query after one warm-up run
 
 _SESSION_IDS = re.compile(r"(#|plan_id=)\d+L?")
 
@@ -124,6 +136,29 @@ def main() -> None:
             print(f"{name:28s} {wall:8.1f} {cpu:8.1f} {sent:6.0f}", flush=True)
         print(f"{'total':28s} {totals[0]:8.1f} {totals[1]:8.1f} "
               f"{totals[2]:6.0f}")
+        spark.stop()
+        return
+
+    if mode == "alloc":
+        mx = spark._jvm.java.lang.management.ManagementFactory \
+            .getThreadMXBean()
+        compiles = spark._jvm.org.apache.spark.metrics.source \
+            .CodegenMetrics.METRIC_COMPILATION_TIME()
+        totals = [0.0, 0]
+        for name in sys.argv[3:] or list(queries):
+            query = _get(queries, name)
+            reps = []
+            for _ in range(1 + ALLOC_REPS):
+                a0, c0 = mx.getTotalThreadAllocatedBytes(), compiles.getCount()
+                query(spark, sf_dir).toArrow()
+                release_cached()
+                reps.append(((mx.getTotalThreadAllocatedBytes() - a0) / 2**20,
+                             compiles.getCount() - c0))
+            mb, n = (statistics.median(r[i] for r in reps[1:])
+                     for i in range(2))
+            totals = [totals[0] + mb, totals[1] + n]
+            print(f"{name:28s} {mb:8.1f} {n:6.0f}", flush=True)
+        print(f"{'total':28s} {totals[0]:8.1f} {totals[1]:6.0f}")
         spark.stop()
         return
 

@@ -236,7 +236,7 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     ``MINHASH_SLOTS // MINHASH_BANDS`` slots) and emit the distinct
     (a < b) pairs sharing a band, from one bucket pass
     (``similarity.band_bucket_pairs``, the step the embedding LSH uses):
-    one band_key exchange, no join, no cache, no ``distinct``.
+    at most one band_key exchange, no join, no cache, no ``distinct``.
 
     Band keys are BINARY — one band-index byte plus ``unhex`` of each
     md5-hex slot (fixed 1+16n bytes; 33 at the constants) — instead of

@@ -50,7 +50,7 @@ from qwen_ocr_spark.functions import blocks as bk
 from qwen_ocr_spark.functions import htmlx, pdfx
 from qwen_ocr_spark.functions.figures import image_tokens
 from qwen_ocr_spark.functions.markdown import build_context
-from qwen_ocr_spark.plans.session import task_count
+from qwen_ocr_spark.plans.session import repartition_or_coalesce, task_count
 
 # one figure: an element of the ``figures`` column, a row of the figures table
 FIGURE_FIELDS = ("page_number int, fig_number int, bbox array<int>, "
@@ -188,17 +188,15 @@ def extract_pages(pages_df: DataFrame, *, salt: int = 0,
     one per ``EXTRACT_TASK_BYTES`` of the filtered, pruned input's size
     estimate, between 1 and ``defaultParallelism``, read from the plan
     without launching a Spark job.  A width of 1 plans ``coalesce(1)``
-    instead: no exchange, the scan feeds the one extraction task."""
+    instead (``plans.session.repartition_or_coalesce``): no exchange, the
+    scan feeds the one extraction task."""
     df = pages_df
     if lang is not None:
         df = df.filter(F.col("lang") == lang)  # pushed to the scan
     df = df.select("url", "warc_ts", "html")   # column pruning: never read text
     if repartition:
         n = partitions or task_count(df, EXTRACT_TASK_BYTES)
-        if n == 1:  # one task: a salted shuffle would only move the html
-            df = df.coalesce(1)
-        else:
-            df = df.repartition(n, F.xxhash64("url", F.lit(salt)))
+        df = repartition_or_coalesce(df, n, n, F.xxhash64("url", F.lit(salt)))
     return df.mapInPandas(_extract_iter, schema=OUT_SCHEMA)
 
 

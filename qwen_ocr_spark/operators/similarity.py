@@ -21,8 +21,9 @@ Every relation an operator persists is registered with
 Every banded-LSH candidate step (``lsh_candidate_pairs``,
 ``embedding_near_dups`` and MinHash's ``dedup.lsh_candidate_pairs``) is
 one bucket pass, ``band_bucket_pairs``: the (id, band) rows are
-hash-partitioned by band key, sorted by (band key, id), and one
-``mapInArrow`` kernel walks each bucket run.  A pair is emitted only in
+hash-partitioned by band key (one exchange, or none when their size
+estimate fits one task), sorted by (band key, id), and one ``mapInArrow``
+kernel walks each bucket run.  A pair is emitted only in
 the first band its two rows share, so the union over bands needs no
 ``distinct``; nothing is cached, joined or broadcast, and a kernel holds
 one Arrow batch, the bucket run still open and one pair block.  Scoring
@@ -62,7 +63,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from qwen_ocr_spark.plans.session import track_cached
+from qwen_ocr_spark.plans.session import (
+    SCAN_TASK_BYTES,
+    repartition_or_coalesce,
+    task_count,
+    track_cached,
+)
 
 EMB_DIMS = 64      # embedding width every operator reads
 LSH_BANDS = 4      # near-dup bands: 4 bands x 16 planes = 64 planes total
@@ -363,11 +369,14 @@ def band_bucket_pairs(buckets: DataFrame, read=None,
     """``(id_a < id_b)`` pairs of rows sharing at least one band key, each
     once: the one banded-LSH candidate step.  ``buckets`` holds one row
     per (id, band) — ``(id, band_key, keys, ...)`` with the id column
-    first and ``keys`` the row's keys of every band — and is
-    hash-partitioned by band_key (one exchange), sorted by
+    first and ``keys`` the row's keys of every band — and is sorted by
     ``(band_key, id)`` and paired by ``_bucket_run_kernel``, which also
     applies the caller's ``read``/``score`` (output gains ``score_e6``).
 
+    Rows whose size estimate needs more than one task of
+    ``SCAN_TASK_BYTES`` are hash-partitioned by band_key first (one
+    exchange); below that they are coalesced into the one task that reads
+    them (``plans.session.repartition_or_coalesce``), with no exchange.
     Nothing is cached, joined or broadcast.  A bucket lands whole in one
     task (hash partitioning cannot split it): the banding bounds bucket
     sizes for spread-out rows, and the kernel bounds memory by one
@@ -375,7 +384,8 @@ def band_bucket_pairs(buckets: DataFrame, read=None,
     length."""
     schema = "id_a long, id_b long" + (", score_e6 long" if score else "")
     return (
-        buckets.repartition("band_key")
+        repartition_or_coalesce(
+            buckets, task_count(buckets, SCAN_TASK_BYTES), "band_key")
         .sortWithinPartitions("band_key", buckets.columns[0])
         .mapInArrow(_bucket_run_kernel(read, score), schema)
     )

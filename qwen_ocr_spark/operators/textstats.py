@@ -11,7 +11,7 @@ are the operations the same engine needs when the corpus is 10^12 rows of
 crawl text (BASELINE.json category: extraction / webtext).
 
 ``gopher_signals``, a pass the near-dup benchmark times, is written as SQL
-text (one ``selectExpr``): each ``pyspark.sql.functions`` call and
+text (two ``selectExpr`` levels): each ``pyspark.sql.functions`` call and
 ``Column`` operator captures its Python call site through a dozen py4j
 round trips, so a plan of a few hundred expression nodes costs the driver
 more to build than to run.  Conventions: raw Python strings with doubled
@@ -320,12 +320,10 @@ def _frac_e4(num: str, den: str) -> str:
 
 
 # gopher_signals' SQL-text pieces.  Raw strings: the SQL parser unescapes
-# string literals, so a regex backslash is written doubled ('\\s' reaches
-# the regex engine as \s; a single '\s' would reach it as a plain 's').
-_TOKS = (r"CASE WHEN length(trim(text)) = 0 THEN CAST(array() AS array<string>)"
-         r" ELSE split(trim(text), '\\s+') END")
-_TOK_CHARS = r"length(regexp_replace(trim(text), '\\s', ''))"
-_LINES = r"filter(split(text, '\n'), x -> length(trim(x)) > 0)"
+# string literals, so a regex backslash is written doubled ('\\z' reaches
+# the regex engine as \z; a single '\z' would reach it as a plain 'z').
+# Whitespace is RE2's \s, written out: Java's \s also matches \x0B.
+_WS = r"[\\t\\n\\f\\r ]"
 
 
 def gopher_signals(df: DataFrame) -> DataFrame:
@@ -341,28 +339,39 @@ def gopher_signals(df: DataFrame) -> DataFrame:
     Gopher's corresponding filters: mean word length in [3,10], symbol
     ratio < 0.1, bullet lines < 90%, ellipsis lines < 30%.  All pure
     column expressions, e4-floored for exact oracle hashing; empty
-    documents emit zeros.
+    documents emit zeros.  Whitespace and line ends follow the DuckDB
+    oracle's RE2: tokens split on ``_WS`` and an ellipsis must end the
+    line (``\\z``; Java's ``$`` also matches before a final ``\\r``).
 
-    One SQL-text projection (module docstring): built from
-    ``pyspark.sql.functions``, the ``gopher_signals`` query sent 637 py4j
-    commands to build, as SQL text 31.  The sum of token lengths is the
-    chars of trim(text) with every \\s removed (tokens are exactly the
-    maximal non-\\s runs of trim(text)): pure length arithmetic stays in
-    codegen where an aggregate/transform lambda fold is interpreted per
-    element (round-2 gotcha)."""
-    n_toks = f"size({_TOKS})"
-    sym = (f"size(filter({_TOKS}, x -> contains(x, '#') "
+    Two SQL-text projections (module docstring).  The lower one splits
+    each document once into ``toks`` and ``lines`` and sums the token
+    lengths; the upper one computes the four fractions from them.  In one
+    projection every use of a split re-ran it: a higher-order function
+    (each ``x -> ...`` lambda) is evaluated interpreted, and
+    common-subexpression elimination does not look inside one.
+    CollapseProject keeps the two levels apart because
+    ``toks`` and ``lines`` are not cheap and the upper level reads each
+    more than once.  The sum of token lengths is the chars of trim(text)
+    with every ``_WS`` removed (tokens are exactly the maximal non-``_WS``
+    runs of trim(text)): pure length arithmetic stays in codegen where an
+    aggregate/transform lambda fold is interpreted per element (round-2
+    gotcha)."""
+    sym = ("size(filter(toks, x -> contains(x, '#') "
            "OR contains(x, '...') OR contains(x, '…')))")
-    n_lines = f"size({_LINES})"
-    bullet = f"size(filter({_LINES}, x -> trim(x) RLIKE '^[-*•]'))"
-    ellipsis = (f"size(filter({_LINES}, "
-                r"x -> trim(x) RLIKE '(\\.\\.\\.|…)$'))")
+    bullet = "size(filter(lines, x -> trim(x) RLIKE '^[-*•]'))"
+    ellipsis = r"size(filter(lines, x -> trim(x) RLIKE '(\\.\\.\\.|…)\\z'))"
     return df.selectExpr(
         "doc_id",
-        f"{_frac_e4(_TOK_CHARS, n_toks)} AS mean_word_len_e4",
-        f"{_frac_e4(sym, n_toks)} AS symbol_word_frac_e4",
-        f"{_frac_e4(bullet, n_lines)} AS bullet_line_frac_e4",
-        f"{_frac_e4(ellipsis, n_lines)} AS ellipsis_line_frac_e4",
+        "CASE WHEN length(trim(text)) = 0 THEN CAST(array() AS array<string>)"
+        f" ELSE split(trim(text), '{_WS}+') END AS toks",
+        r"filter(split(text, '\n'), x -> length(trim(x)) > 0) AS lines",
+        f"length(regexp_replace(trim(text), '{_WS}', '')) AS tok_chars",
+    ).selectExpr(
+        "doc_id",
+        f"{_frac_e4('tok_chars', 'size(toks)')} AS mean_word_len_e4",
+        f"{_frac_e4(sym, 'size(toks)')} AS symbol_word_frac_e4",
+        f"{_frac_e4(bullet, 'size(lines)')} AS bullet_line_frac_e4",
+        f"{_frac_e4(ellipsis, 'size(lines)')} AS ellipsis_line_frac_e4",
     )
 
 

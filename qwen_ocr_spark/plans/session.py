@@ -148,6 +148,19 @@ def coalesce_by_size(df: DataFrame, task_bytes: int) -> DataFrame:
     return df
 
 
+def repartition_or_coalesce(df: DataFrame, n: int, *args) -> DataFrame:
+    """``df.repartition(*args)`` for a pass ``n`` tasks wide, except that a
+    width of 1 is ``df.coalesce(1)``.  A shuffle into one partition spreads
+    no work: it only adds a stage that writes and reads every row, where a
+    ``Coalesce`` runs the pass in the task that reads its input (and lets
+    column pruning through to the scan).  ``extract_pages`` and
+    ``similarity.band_bucket_pairs`` both plan their shuffle through this
+    rule."""
+    if n == 1:
+        return df.coalesce(1)
+    return df.repartition(*args)
+
+
 def run_dir_path(spark: SparkSession, table_path: str, run_id: str) -> str:
     """The directory ``partitionBy("run_id")`` writes ``run_id``'s rows to:
     the value escaped as Spark escapes partition values

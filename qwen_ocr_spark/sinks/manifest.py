@@ -30,10 +30,11 @@ call it): figures, then output (the commit), then the manifest.
   one row per physical partition of the writing stage, with
   ``content_digest = sha256(concat(sorted per-row digests))`` — a pure
   function of the partition's rows (the byte-identity invariant makes
-  this sound).  Deriving it again is idempotent, so a crash between the
-  output commit and the manifest write is repaired by writing it again:
-  ``reconcile_manifest`` backfills the run_ids in the output listing
-  minus the manifest listing.  A manifest written before this layout
+  this sound) — and ``committed_at`` the modification time of the
+  partition's output files.  Deriving it again is idempotent, so a crash
+  between the output commit and the manifest write is repaired by writing
+  it again: ``reconcile_manifest`` backfills the run_ids in the output
+  listing minus the manifest listing.  A manifest written before this layout
   (flat files appended at its root, ``run_id`` not last) is refused by
   that listing rather than mixed with run directories, which Spark would
   not read; moved aside, it is re-derived whole from the output on the
@@ -160,7 +161,14 @@ def _write_manifest(spark: SparkSession, out_path: str, manifest_path: str,
     and the row count it returns is an ``Observation`` of that same write.
     No row crosses to Python and back.  The read-back is coalesced by its
     size (``plans.session.coalesce_by_size``), so a small run is aggregated
-    in one task with no ``Exchange``."""
+    in one task with no ``Exchange``.
+
+    ``committed_at`` is the modification time of the partition's output
+    files, read from the scan's ``_metadata``: the time the output was
+    written, so a manifest derived again (``reconcile_manifest``) has the
+    same rows.  It is not ``current_timestamp()``: the optimizer folds that
+    to a literal, and a timestamp literal is pasted into the generated
+    code, so every commit would compile one new class."""
     try:
         written = spark.read.schema(RUN_DIR_SCHEMA).parquet(
             run_dir_path(spark, out_path, run_id))
@@ -174,8 +182,8 @@ def _write_manifest(spark: SparkSession, out_path: str, manifest_path: str,
             F.expr("count(*) AS row_count"),
             F.expr("sha2(concat_ws(',', sort_array(collect_list(digest))), "
                    "256) AS content_digest"),
+            F.expr("max(_metadata.file_modification_time) AS committed_at"),
         )
-        .selectExpr("*", "current_timestamp() AS committed_at")
         .withColumn("run_id", F.lit(run_id))
         .observe(rows, F.expr("sum(row_count) AS rows"))
     )

@@ -71,9 +71,24 @@ def test_dedup_exact_aggregates_without_exchange(spark, corpus):
     assert "Exchange" not in plan
 
 
-def test_embedding_near_dups_keeps_one_band_key_exchange(spark, corpus):
-    """The explicit band-key repartition still shuffles once, whatever
-    the width of the read below it."""
+def test_embedding_near_dups_pairs_one_task_without_exchange(spark, corpus):
+    """Band rows that fit one task of ``SCAN_TASK_BYTES`` are coalesced
+    into it: the bucket sort reads a ``Coalesce 1`` and the pass plans no
+    ``Exchange``."""
+    plan = _plan(entry_mod.queries()["embedding_near_dups"](spark, corpus))
+    assert "Exchange" not in plan
+    sort_input = plan.splitlines()[
+        next(i for i, line in enumerate(plan.splitlines())
+             if "Sort [band_key#" in line) + 1]
+    assert sort_input.endswith("+- Coalesce 1")
+
+
+def test_embedding_near_dups_keeps_one_band_key_exchange(
+        spark, corpus, monkeypatch):
+    """Band rows above one task's worth (a tiny ``SCAN_TASK_BYTES``) are
+    shuffled by band key once, whatever the width of the read below."""
+    from qwen_ocr_spark.operators import similarity
+    monkeypatch.setattr(similarity, "SCAN_TASK_BYTES", 16)
     plan = _plan(entry_mod.queries()["embedding_near_dups"](spark, corpus))
     assert plan.count("Exchange") == 1
     assert plan.count("hashpartitioning(band_key") == 1

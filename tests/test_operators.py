@@ -310,40 +310,20 @@ def test_gopher_signals_known_values(spark):
                                       ellipsis_line_frac_e4=0)
 
 
-# Java regex ``\s`` (Spark's split / regexp_replace), ASCII only: Python's
-# ``\s`` on ``str`` would also match unicode spaces
-_JAVA_WS = "[ \t\n\x0b\f\r]"
-
-
-def _gopher_reference(text: str) -> tuple[int, int, int, int]:
-    """gopher_signals of one text, written in plain Python with Spark's
-    semantics spelled out: ``trim`` strips spaces only, ``split`` keeps
-    empty leading/trailing tokens, and Java's ``$`` also matches before
-    one final line terminator (so a CRLF line ``a...\\r`` ends with an
-    ellipsis)."""
-    import math
-    import re
-
-    def frac(num, den):
-        return 0 if den == 0 else math.floor(num * 10000.0 / den)
-
-    trimmed = text.strip(" ")
-    toks = re.split(_JAVA_WS + "+", trimmed) if trimmed else []
-    tok_chars = len(re.sub(_JAVA_WS, "", trimmed))
-    sym = sum("#" in t or "..." in t or "…" in t for t in toks)
-    lines = [ln.strip(" ") for ln in text.split("\n") if ln.strip(" ")]
-    bullet = sum(ln[0] in "-*•" for ln in lines)
-    ends = [ln[:-1] if ln[-1] in "\r\u0085\u2028\u2029" else ln
-            for ln in lines]
-    ellipsis = sum(e.endswith(("...", "…")) for e in ends)
-    return (frac(tok_chars, len(toks)), frac(sym, len(toks)),
-            frac(bullet, len(lines)), frac(ellipsis, len(lines)))
-
-
 def test_gopher_signals_edge_cases_match_reference(spark):
-    """Whitespace, bullet and ellipsis edge cases against the plain-Python
-    reference.  Words with an ``s`` catch a regex escape that reaches the
-    engine as a plain letter (``'\\s'`` in SQL text is ``s``)."""
+    """Whitespace, line-end, bullet and ellipsis edge cases against the
+    query's DuckDB oracle (``oracle_sql()["gopher_signals"]``), run on the
+    same texts.  DuckDB's RE2 differs from Spark's Java regex where a text
+    reaches a CR, a VT or U+2028/9: Java's ``\\s`` also matches ``\\x0B``
+    and its ``$`` also matches before a final line terminator.  Lines
+    ending in ``...`` catch a regex escape that reaches the engine
+    unescaped (``'\\z'`` in SQL text is a plain ``z``, ``'\\.'`` any
+    character)."""
+    import duckdb
+    import pyarrow as pa
+
+    import __spark_entry__ as entry_mod
+
     texts = [
         "first line...\r\nsecond line\r\n- bullets start here\r\n",
         "\nleading newline, then words\nstill words…",
@@ -355,12 +335,39 @@ def test_gopher_signals_edge_cases_match_reference(spark):
         "sss ss s\nsis\ttabs  spaces",
         "line ends with dots ...\n  trailing spaces...   \nnot … here x",
         "\u2026\n...\n-\n•",
+        "a...\r\nb\r\n",
+        "vt\x0bsplit words\x0b here",
+        "cr\ronly...\r",
+        "x\u2028y...\u2029",
     ]
     rows = list(enumerate(texts))
     got = {r[0]: tuple(r[1:]) for r in textstats.gopher_signals(
         spark.createDataFrame(rows, "doc_id bigint, text string")).collect()}
+    documents = pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()),
+                          "text": texts})
+    con = duckdb.connect()
+    try:
+        con.register("documents", documents)
+        want = {r[0]: tuple(r[1:]) for r in con.execute(
+            entry_mod.oracle_sql()["gopher_signals"]).fetchall()}
+    finally:
+        con.close()
     for i, text in rows:
-        assert got[i] == _gopher_reference(text), (i, text)
+        assert got[i] == want[i], (i, text)
+
+
+def test_gopher_signals_splits_each_document_once(spark):
+    """Each document is split once into lines and once into tokens: every
+    signal reads the lower projection's ``toks`` and ``lines``, so the
+    executed plan holds one split of each kind (one per use when a single
+    projection repeated the SQL-text lambdas)."""
+    import re
+
+    df = textstats.gopher_signals(spark.createDataFrame(
+        [(1, "a b\nc")], "doc_id bigint, text string"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"split\(text#\d+, \n, -1\)", plan)) == 1
+    assert len(re.findall(r"split\(trim\(text#\d+, None\), ", plan)) == 1
 
 
 def test_token_count_edges(docs):
@@ -654,40 +661,59 @@ def _minhash_flood(spark, n_dup):
     return sigs, dedup.lsh_candidate_pairs(sigs)
 
 
+def _band_sort_input(plan: str) -> str:
+    """The node under a bucket pass's ``(band_key, id)`` sort in an
+    executed plan string: ``Coalesce 1`` when the band rows fit one task,
+    else their band_key ``Exchange``."""
+    lines = plan.splitlines()
+    i = next(i for i, line in enumerate(lines) if "Sort [band_key#" in line)
+    return lines[i + 1].split("+- ", 1)[1]
+
+
 @pytest.mark.parametrize("flood", [_embedding_flood, _minhash_flood],
                          ids=["embedding", "minhash"])
-def test_embedding_near_dups_bounded_on_duplicate_flood(spark, flood):
+def test_embedding_near_dups_bounded_on_duplicate_flood(
+        spark, flood, monkeypatch):
     """1,500 identical rows among random ones — embedding copies of one
     vector, or docs of one text (identical MinHash signatures): every copy
     lands in the same bucket of every band, and the bucket kernel returns
-    each of the C(1500, 2) pairs once (embeddings at cosine 1), from a
-    plan with one added exchange (the band_key repartition) and no join,
-    broadcast or cache."""
+    each of the C(1500, 2) pairs once (embeddings at cosine 1), with no
+    join, broadcast or cache.  The band rows fit one task, so the pass
+    adds no exchange (``Coalesce 1``); with a tiny ``SCAN_TASK_BYTES`` it
+    adds one, the band_key repartition, and returns the same pairs."""
     import time
 
     n_dup = 1500
-    base, out = flood(spark, n_dup)
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    for node in ("Join", "BroadcastExchange", "InMemoryRelation"):
-        assert node not in plan, node
-    before = base._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") - before.count("Exchange") == 1
-    assert plan.count("Exchange hashpartitioning(band_key") == 1
+    def run(out):
+        t0 = time.monotonic()
+        aggs = [F.count("*").alias("n"),
+                F.count_distinct("id_a", "id_b").alias("distinct"),
+                F.max("id_b").alias("top")]
+        if "score_e6" in out.columns:
+            aggs += [F.min("score_e6").alias("lo"),
+                     F.max("score_e6").alias("hi")]
+        got = out.agg(*aggs).first()
+        elapsed = time.monotonic() - t0
+        assert got["n"] == got["distinct"] == n_dup * (n_dup - 1) // 2
+        assert got["top"] == n_dup - 1  # no random row paired
+        if "score_e6" in out.columns:
+            assert got["lo"] == got["hi"] == 1_000_000
+        assert elapsed < 120, f"flood took {elapsed:.1f} s"
 
-    t0 = time.monotonic()
-    aggs = [F.count("*").alias("n"),
-            F.count_distinct("id_a", "id_b").alias("distinct"),
-            F.max("id_b").alias("top")]
-    if "score_e6" in out.columns:
-        aggs += [F.min("score_e6").alias("lo"), F.max("score_e6").alias("hi")]
-    got = out.agg(*aggs).first()
-    elapsed = time.monotonic() - t0
-    assert got["n"] == got["distinct"] == n_dup * (n_dup - 1) // 2
-    assert got["top"] == n_dup - 1  # no random row paired
-    if "score_e6" in out.columns:
-        assert got["lo"] == got["hi"] == 1_000_000
-    assert elapsed < 120, f"flood took {elapsed:.1f} s"
+    for added, sort_input in [(0, "Coalesce 1"),
+                              (1, "Exchange hashpartitioning(band_key")]:
+        if added:
+            monkeypatch.setattr(similarity, "SCAN_TASK_BYTES", 16)
+        base, out = flood(spark, n_dup)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        for node in ("Join", "BroadcastExchange", "InMemoryRelation"):
+            assert node not in plan, node
+        before = base._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") - before.count("Exchange") == added
+        assert plan.count("Exchange hashpartitioning(band_key") == added
+        assert _band_sort_input(plan).startswith(sort_input)
+        run(out)
 
 
 def test_banded_lsh_recall_vs_exact(emb):
@@ -1050,12 +1076,13 @@ def _plan(df) -> str:
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
 
-def test_dedup_and_ann_plans_are_equi_joins(spark):
+def test_dedup_and_ann_plans_are_equi_joins(spark, monkeypatch):
     """Locks the 100 TB shapes: every dedup/ANN candidate join is an
     equi-join (band key / chunk key / shingle key) — a CartesianProduct or
     non-broadcast nested loop anywhere means the sub-quadratic claim
     silently broke.  The banded-LSH candidate steps join nothing: each is
-    one band_key exchange into the bucket kernel, with no cache.  IVF's
+    one bucket kernel with no cache, fed by a ``Coalesce 1`` while its
+    band rows fit one task and by one band_key exchange above that.  IVF's
     centroid assignment is the ONE sanctioned nested loop and must be
     broadcast-bounded."""
     import __spark_entry__ as em
@@ -1078,28 +1105,38 @@ def test_dedup_and_ann_plans_are_equi_joins(spark):
         return df._jdf.queryExecution().executedPlan().toString()
 
     # every banded-LSH candidate step is one bucket pass: no join, no
-    # cache, and exactly one band_key exchange
+    # cache, and no band_key exchange while its band rows fit one task
+    # (sf0.001), exactly one above that (a tiny SCAN_TASK_BYTES)
     sigs = dedup.minhash_signatures(dedup.word_shingles(docs))
-    for name, df in [
-        ("lsh_pairs", dedup.lsh_candidate_pairs(sigs)),
-        ("similarity.lsh_candidate_pairs",
-         similarity.lsh_candidate_pairs(emb)),
-        ("embedding_near_dups", similarity.embedding_near_dups(emb)),
-    ]:
-        p = executed(df)
-        assert "Join" not in p and "BroadcastExchange" not in p, name
-        assert "InMemoryRelation" not in p, name
-        assert p.count("Exchange hashpartitioning(band_key") == 1, name
-        assert release_cached() == 0, name
-    # the ANN probe joins fresh band keys; the MinHash verify (the
-    # jaccard_verified query) caches only the per-doc shingle sets its two
-    # joins read, and its candidates are the same one bucket pass
+    for shuffles, sort_input in [(0, "Coalesce 1"),
+                                 (1, "Exchange hashpartitioning(band_key")]:
+        if shuffles:
+            monkeypatch.setattr(similarity, "SCAN_TASK_BYTES", 16)
+        for name, df in [
+            ("lsh_pairs", dedup.lsh_candidate_pairs(sigs)),
+            ("similarity.lsh_candidate_pairs",
+             similarity.lsh_candidate_pairs(emb)),
+            ("embedding_near_dups", similarity.embedding_near_dups(emb)),
+        ]:
+            p = executed(df)
+            assert "Join" not in p and "BroadcastExchange" not in p, name
+            assert "InMemoryRelation" not in p, name
+            assert p.count("Exchange hashpartitioning(band_key") == \
+                shuffles, name
+            assert _band_sort_input(p).startswith(sort_input), name
+            assert release_cached() == 0, name
+        # the MinHash verify (the jaccard_verified query) caches only the
+        # per-doc shingle sets its two joins read, and its candidates are
+        # the same one bucket pass
+        p = executed(dedup.lsh_jaccard_pairs(docs))
+        assert p.count("Exchange hashpartitioning(band_key") == shuffles
+        assert _band_sort_input(p).startswith(sort_input)
+        assert release_cached() == 1
+    monkeypatch.undo()
+    # the ANN probe joins fresh band keys
     assert "InMemoryRelation" not in executed(
         similarity.lsh_bucketed_topk(emb, [0, 1], k=3))
     assert release_cached() == 0
-    p = executed(dedup.lsh_jaccard_pairs(docs))
-    assert p.count("Exchange hashpartitioning(band_key") == 1
-    assert release_cached() == 1
     # IVF: without the index persist, the N x n_cells broadcast assignment
     # would appear under BOTH consumers of `ranked`; with it the plan reads
     # the materialized assignment and the one nested loop is broadcast

@@ -354,14 +354,17 @@ def test_reconcile_manifest_backfills_crash_window(spark, pages, tmp_path):
     rest = pages.filter(F.crc32(F.col("url")) % 2 != 0)
     n1 = write_output(extract_pages(half, partitions=2), out_path, man_path, "runA")
     n2 = write_output(extract_pages(rest, partitions=2), out_path, man_path, "runB")
-    baseline = {(r["run_id"], r["partition_id"]): (r["row_count"], r["content_digest"])
+    baseline = {(r["run_id"], r["partition_id"]):
+                (r["row_count"], r["content_digest"], r["committed_at"])
                 for r in spark.read.parquet(man_path).collect()}
     # simulate the crash window: output committed, manifest rows lost
     shutil.rmtree(man_path)
     assert reconcile_manifest(spark, out_path, man_path) == n1 + n2
-    rebuilt = {(r["run_id"], r["partition_id"]): (r["row_count"], r["content_digest"])
+    rebuilt = {(r["run_id"], r["partition_id"]):
+               (r["row_count"], r["content_digest"], r["committed_at"])
                for r in spark.read.parquet(man_path).collect()}
-    assert rebuilt == baseline  # same lineage, digest-for-digest
+    # same lineage, digest-for-digest, committed at the output's write time
+    assert rebuilt == baseline
     # idempotent: nothing left to backfill
     assert reconcile_manifest(spark, out_path, man_path) == 0
     # no output yet: a fresh pipeline reconciles to zero, no exception
@@ -413,6 +416,30 @@ def test_commit_path_launches_no_metadata_jobs(spark, pages, tmp_path):
             assert count_jobs(
                 spark, lambda: commit_run(replay, out_path, man_path,
                                           f"run{k}", figs_path)) == (0, 0), k
+
+
+def test_steady_state_commits_compile_no_code(spark, tmp_path):
+    """Once a commit's plans have been compiled, the next commits compile
+    no generated class: their plans differ only in data values, and none
+    of those is pasted into generated code.  (``committed_at`` as
+    ``current_timestamp()`` was: the optimizer folds it to a timestamp
+    literal, which codegen inlines, so each commit compiled one class.)"""
+    from qwen_ocr_spark.sinks.manifest import commit_run
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+
+    def commit(k):
+        batch = synth_pages(spark, 8, seed=k, partitions=2)
+        commit_run(extract_pages(resume_filter(batch, out_path), partitions=1),
+                   out_path, man_path, f"run{k}", str(tmp_path / "figs"))
+
+    for k in range(2):
+        commit(k)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    for k in range(2, 4):
+        commit(k)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
 
 
 def _collected_manifest(spark, out_path, man_path, run_id):
