@@ -673,7 +673,7 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test assignment by md5 bucket."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return sampling.hash_split(docs, train_pct=80.0, val_pct=10.0)
+    return sampling.hash_split(docs)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,14 +713,16 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30 min) via lag + running sum."""
+    """Gap-based sessionization (``SESSION_GAP_SEC``, 30 min) via lag +
+    running sum."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ: hop through TIMESTAMP (session tz = UTC) to get
     # epoch seconds as double, matching DuckDB's epoch(ts) on naive values
     sec = F.col("ts").cast("timestamp").cast("double")
     gap = sec - F.lag(sec).over(w)
-    is_new = F.when(gap.isNull() | (gap <= 1800.0), 0).otherwise(1)
+    is_new = F.when(gap.isNull() | (gap <= float(timeseries.SESSION_GAP_SEC)),
+                    0).otherwise(1)
     return ev.select(
         "event_id", "user_id",
         F.sum(is_new).over(
@@ -798,8 +800,7 @@ def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "ts")
     clicks = ev.where(F.col("event_type") == "click") \
         .select("event_id", "user_id", "ts", "value")
-    out = timeseries.asof_join(purchases, clicks,
-                               right_cols=("event_id", "value"))
+    out = timeseries.asof_join(purchases, clicks)
     return out.select(
         "event_id", "user_id",
         F.col("asof_event_id").alias("click_id"),
@@ -1666,7 +1667,7 @@ SELECT doc_id,
 FROM documents
 """
 
-    from qwen_ocr_spark.operators.sampling import _bucket_hex
+    from qwen_ocr_spark.operators.sampling import TRAIN_PCT, VAL_PCT, _bucket_hex
     _b = "substring(md5('0|' || CAST(doc_id AS VARCHAR)), 1, 4)"
     q["hash_sample"] = f"""
 SELECT doc_id, lang FROM documents
@@ -1675,8 +1676,8 @@ WHERE {_b} < '{_bucket_hex(0.10)}'
 
     q["hash_split"] = f"""
 SELECT doc_id,
-       CASE WHEN {_b} < '{_bucket_hex(0.80)}' THEN 'train'
-            WHEN {_b} < '{_bucket_hex(0.90)}' THEN 'val'
+       CASE WHEN {_b} < '{_bucket_hex(TRAIN_PCT / 100.0)}' THEN 'train'
+            WHEN {_b} < '{_bucket_hex((TRAIN_PCT + VAL_PCT) / 100.0)}' THEN 'val'
             ELSE 'test' END AS split
 FROM documents
 """
@@ -1730,7 +1731,7 @@ SELECT event_type, value_e4 AS median_e4, n
 FROM r WHERE rn = CAST(floor((n + 1) / 2) AS BIGINT)
 """
 
-    q["events_sessionize"] = """
+    q["events_sessionize"] = f"""
 WITH g AS (
   SELECT event_id, user_id, ts,
          epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1738,7 +1739,7 @@ WITH g AS (
   FROM events
 )
 SELECT event_id, user_id,
-       CAST(sum(CASE WHEN gap IS NULL OR gap <= 1800.0 THEN 0 ELSE 1 END)
+       CAST(sum(CASE WHEN gap IS NULL OR gap <= {float(timeseries.SESSION_GAP_SEC)} THEN 0 ELSE 1 END)
             OVER (PARTITION BY user_id ORDER BY ts, event_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
          AS session_num

@@ -14,6 +14,7 @@ Usage::
     python bench_extra.py jobs  <sf_dir> [query ...]
     python bench_extra.py build <sf_dir> [query ...]
     python bench_extra.py alloc <sf_dir> [query ...]
+    python bench_extra.py commit [--seed N]
 
 ``time`` prints one JSON line {"queries": {name: best_sec}, "sf": dir}.
 ``fresh`` follows the per-pass protocol of ``perfbench``'s near-dup
@@ -47,6 +48,23 @@ source of perfbench's ``heap_alloc_mb``) and of the generated classes it
 compiled (``CodegenMetrics``), then a ``total`` line of the medians.  A
 query whose steady state still compiles code has a value in its
 generated code (a literal codegen inlines).
+``commit`` replays perfbench's append_resume commits at its sizes (same
+seeded pages): ``COMMIT_HISTORY_RUNS`` history runs of
+``COMMIT_HISTORY_DOCS`` pages in all, committed unmeasured, then
+``COMMIT_INCREMENTS`` increments of ``COMMIT_NEW`` new and
+``COMMIT_REPLAYED`` already-committed pages, each committed through the
+calls ``scripts/run_extract.py --figures`` makes, in its order.  It prints
+one line per call, ``<call> <wall_ms> <driver_ms> <jvm_ms> <workers_ms>
+<heap_mb> <jobs> <py4j>``, with the medians over the increments of: wall
+milliseconds; CPU milliseconds of the driver process, of the JVM (its JIT
+and GC threads included) and of the Python workers (every process under
+the JVM, with the reaped children of each), read from ``/proc``; the heap
+the driver JVM allocated (the source of perfbench's ``heap_alloc_mb``);
+the Spark jobs the call launched; and the py4j commands it sent.  A
+``total`` line sums the medians.  ``read_pages`` is the workload's own
+schema-less read of the increment, ``extract_pages`` only builds the
+extraction plan (its work runs in ``write_figures``, which fills the
+cache the output write reads).
 ``noop`` times a full-materialization noop write instead of count()
 (count() is what bench.py measures; noop shows whether column pruning
 was hiding work).
@@ -69,6 +87,14 @@ import time
 
 BUILD_REPS = 10  # timed builds per query after one warm-up build
 ALLOC_REPS = 5   # measured runs per query after one warm-up run
+# ``commit``: perfbench append_resume's sizes (``workloads.Sizes``)
+COMMIT_HISTORY_DOCS = 150
+COMMIT_HISTORY_RUNS = 3
+COMMIT_INCREMENTS = 8
+COMMIT_NEW = 32
+COMMIT_REPLAYED = 8
+COMMIT_CALLS = ("reconcile_manifest", "read_pages", "resume_filter",
+                "extract_pages", "write_figures", "write_output")
 
 _SESSION_IDS = re.compile(r"(#|plan_id=)\d+L?")
 
@@ -79,8 +105,113 @@ def _get(queries, name):
     return queries[name]
 
 
+def _cpu_ms(jvm_pid: int) -> list[float]:
+    """[driver, JVM, Python workers] CPU milliseconds used so far, from the
+    ``/proc/<pid>/stat`` fields [11:13] (a process's own user + system
+    time) and [13:15] (its reaped children's)."""
+    from perfbench.probes import _TICK_S, _stat_ticks, _tree_pids
+
+    def ticks(pid, fields):
+        return _stat_ticks(f"/proc/{pid}/stat", fields)
+
+    workers = ticks(jvm_pid, slice(13, 15))
+    for p in _tree_pids(jvm_pid)[1:]:
+        try:
+            workers += ticks(p, slice(11, 15))
+        except OSError:
+            continue  # exited since the listing; its parent counts it
+    own = [ticks(os.getpid(), slice(11, 13)), ticks(jvm_pid, slice(11, 13))]
+    return [t * _TICK_S * 1e3 for t in own + [workers]]
+
+
+def commit(seed: int) -> None:
+    """``commit`` mode (module docstring)."""
+    import shutil
+    import tempfile
+
+    import numpy as np
+
+    from perfbench import inputs
+    from qwen_ocr_spark.operators.extract import extract_pages
+    from qwen_ocr_spark.plans.session import count_jobs, count_py4j, get_spark
+    from qwen_ocr_spark.sinks.manifest import (reconcile_manifest,
+                                               resume_filter, write_figures,
+                                               write_output)
+
+    spark = get_spark(app_name="bench-extra-commit")
+    mx = spark._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
+    work = tempfile.mkdtemp(prefix="bench-extra-commit-")
+    out, figs, man = (os.path.join(work, d) for d in ("out", "figs", "man"))
+    reps: dict[str, list[list[float]]] = {c: [] for c in COMMIT_CALLS}
+
+    def measure(rec, name, fn, *args):
+        def probed():
+            a0, c0 = mx.getTotalThreadAllocatedBytes(), _cpu_ms(jvm_pid)
+            t0 = time.perf_counter()
+            result, sent = count_py4j(spark, lambda: fn(*args))
+            wall = (time.perf_counter() - t0) * 1e3
+            c1, a1 = _cpu_ms(jvm_pid), mx.getTotalThreadAllocatedBytes()
+            cpu = [b - a for a, b in zip(c0, c1)]
+            return result, [wall, *cpu, (a1 - a0) / 2**20], sent
+        (result, row, sent), jobs = count_jobs(spark, probed)
+        if rec:
+            reps[name].append(row + [jobs, sent])
+        return result
+
+    def run(pages_path, run_id, rec):
+        measure(rec, "reconcile_manifest", reconcile_manifest, spark, out, man)
+        pages = measure(rec, "read_pages", spark.read.parquet, pages_path)
+        todo = measure(rec, "resume_filter", resume_filter, pages, out)
+        out_df = measure(rec, "extract_pages", extract_pages, todo).cache()
+        try:
+            measure(rec, "write_figures", write_figures, out_df, figs, run_id)
+            return measure(rec, "write_output", write_output, out_df, out,
+                           man, run_id)
+        finally:
+            out_df.unpersist()
+
+    try:
+        plan = inputs.append_plan(seed, COMMIT_HISTORY_DOCS, COMMIT_INCREMENTS,
+                                  COMMIT_NEW, COMMIT_REPLAYED)
+        history, pool = (os.path.join(work, d) for d in ("history", "pool"))
+        inputs.write_increments(
+            spark, history,
+            np.array_split(plan.history_ids, COMMIT_HISTORY_RUNS), seed)
+        inputs.write_increments(spark, pool, [n + r for n, r in plan.increments],
+                                seed)
+        for k in range(COMMIT_HISTORY_RUNS):
+            run(os.path.join(history, f"inc={k}"), f"run-history-{k:03d}", False)
+        for i in range(COMMIT_INCREMENTS):
+            n = run(os.path.join(pool, f"inc={i}"), f"run-inc-{i:03d}", True)
+            if n != COMMIT_NEW:
+                print(f"increment {i}: committed {n} rows, "
+                      f"expected {COMMIT_NEW}", file=sys.stderr)
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+    print(f"{'call':20s} {'wall_ms':>8s} {'driver_ms':>9s} {'jvm_ms':>8s} "
+          f"{'workers_ms':>10s} {'heap_mb':>8s} {'jobs':>5s} {'py4j':>6s}")
+    total = [0.0] * 7
+    for name in COMMIT_CALLS:
+        med = [statistics.median(r[j] for r in reps[name]) for j in range(7)]
+        total = [t + m for t, m in zip(total, med)]
+        print(_commit_line(name, med))
+    print(_commit_line("total", total))
+
+
+def _commit_line(name: str, v: list[float]) -> str:
+    return (f"{name:20s} {v[0]:8.1f} {v[1]:9.1f} {v[2]:8.1f} {v[3]:10.1f} "
+            f"{v[4]:8.1f} {v[5]:5.0f} {v[6]:6.0f}")
+
+
 def main() -> None:
     mode = sys.argv[1]
+    if mode == "commit":
+        args = sys.argv[2:]
+        seed = int(args[args.index("--seed") + 1]) if "--seed" in args else 1
+        commit(seed)
+        return
     sf_dir = sys.argv[2]
     import __spark_entry__ as entry_mod
     from qwen_ocr_spark.plans.session import (count_jobs, count_py4j,

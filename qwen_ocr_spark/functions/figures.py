@@ -40,14 +40,15 @@ class Figure:
     png: bytes = field(default=b"", repr=False)
 
 
-def bbox_valid(bbox: BBox, scale: int = config.BBOX_SCALE) -> bool:
+def bbox_valid(bbox: BBox) -> bool:
     x1, y1, x2, y2 = bbox
-    return 0 <= x1 < x2 <= scale and 0 <= y1 < y2 <= scale
+    s = config.BBOX_SCALE
+    return 0 <= x1 < x2 <= s and 0 <= y1 < y2 <= s
 
 
-def bbox_area_fraction(bbox: BBox, scale: int = config.BBOX_SCALE) -> float:
+def bbox_area_fraction(bbox: BBox) -> float:
     x1, y1, x2, y2 = bbox
-    return ((x2 - x1) * (y2 - y1)) / float(scale * scale)
+    return ((x2 - x1) * (y2 - y1)) / float(config.BBOX_SCALE ** 2)
 
 
 def area_in_bounds(bbox: BBox) -> bool:
@@ -113,7 +114,8 @@ def scale_bbox_to_pixels(bbox: BBox, width: int, height: int) -> tuple[int, int,
     )
 
 
-def image_tokens(width: int, height: int, tile: int = config.IMAGE_TOKEN_SIZE) -> int:
+def image_tokens(width: int, height: int) -> int:
     """Cost-model metric: (w // 28) * (h // 28) per page image
     (/root/reference/src/processing.py:100-102)."""
+    tile = config.IMAGE_TOKEN_SIZE
     return (width // tile) * (height // tile)

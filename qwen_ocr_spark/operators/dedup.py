@@ -55,11 +55,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from qwen_ocr_spark.operators.similarity import band_bucket_pairs
+from qwen_ocr_spark.operators.textstats import WS
 from qwen_ocr_spark.plans.session import run_dir_path, track_cached
 
 MINHASH_SLOTS = 8
 MINHASH_BANDS = 4  # 2 slots per band
-SHINGLE_N = 3
+SHINGLE_N = 3         # the one shingle width: word 3-grams
 MAX_SHINGLE_DF = 256  # default document-frequency cap for the jaccard join
 SIMHASH_RADIUS = 3    # default hamming radius; 2 chunks of 16 bits,
                       # each joined through its 1-bit expansion
@@ -143,9 +144,9 @@ def incremental_dedup(new_df: DataFrame, digest_path: str,
     return batch.join(mine, on="text_md5", how="left_semi").drop("text_md5")
 
 
-def word_shingles(df: DataFrame, n: int = SHINGLE_N,
-                  distinct: bool = True) -> DataFrame:
-    """Word n-gram shingles per document (one vectorized Python pass).
+def word_shingles(df: DataFrame, distinct: bool = True) -> DataFrame:
+    """Word ``SHINGLE_N``-gram shingles per document (one vectorized
+    Python pass).
 
     ``distinct=True`` (the default) dedups (doc, shingle) — required by
     set semantics (n-gram Jaccard).  The dedup is PER DOCUMENT (first
@@ -161,26 +162,30 @@ def word_shingles(df: DataFrame, n: int = SHINGLE_N,
     CPython's C-level ``str.split``/``' '.join`` do the same work in
     ~0.1 s; the JVM boundary only carries (text in, shingle array out).
     The Python tokenizer reproduces the SQL semantics exactly:
-    ``trim()`` strips 0x20 only, the split regex is ASCII ``\\s+``
-    (Java's default), trailing empty tokens survive (Spark split keeps
-    them at limit -1), and NULL text yields a NULL array."""
+    ``trim()`` strips 0x20 only, tokens split on runs of ``WS`` (the
+    whitespace of every tokenizer here and of the DuckDB oracles' RE2
+    ``\\s``), trailing empty tokens survive (Spark split keeps them at
+    limit -1), and NULL text yields a NULL array."""
     return df.select(
         F.col("doc_id"),
-        F.explode(_shingle_array_udf(n, distinct)(F.col("text"))).alias("shingle"),
+        F.explode(_shingle_array_udf(distinct)(F.col("text"))).alias("shingle"),
     )
 
 
-def _shingle_array_udf(n: int = SHINGLE_N, distinct: bool = False):
-    """Vectorized pandas_udf: text → word n-gram shingle array (order
-    preserved; ``distinct`` keeps first occurrences, like array_distinct).
+def _shingle_array_udf(distinct: bool):
+    """Vectorized pandas_udf: text → word ``SHINGLE_N``-gram shingle array
+    (order preserved; ``distinct`` keeps first occurrences, like
+    array_distinct).
     Deterministic (default), so persisted downstream relations are
     cache-reusable under joins — unlike mapInArrow/mapInPandas nodes."""
     import pandas as pd
 
+    n = SHINGLE_N
+
     @F.pandas_udf("array<string>")
     def shingle(texts):
         import re
-        ws = re.compile(r"\s+", re.ASCII)  # Java \s is ASCII-only
+        ws = re.compile(WS + "+")
         out = []
         for t in texts:
             if t is None:
@@ -199,7 +204,7 @@ def _shingle_array_udf(n: int = SHINGLE_N, distinct: bool = False):
     return shingle
 
 
-def doc_shingle_sets(df: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+def doc_shingle_sets(df: DataFrame) -> DataFrame:
     """Per-document distinct-shingle ARRAY — ``(doc_id, _set)`` — built
     entirely from deterministic row-local expressions (split → transform →
     array_distinct): no explode, no shuffle, no aggregate.
@@ -215,7 +220,7 @@ def doc_shingle_sets(df: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     relation caches and reuses cleanly."""
     return df.select(
         F.col("doc_id"),
-        _shingle_array_udf(n, distinct=True)(F.col("text")).alias("_set"))
+        _shingle_array_udf(distinct=True)(F.col("text")).alias("_set"))
 
 
 def minhash_signatures(shingles: DataFrame) -> DataFrame:
@@ -468,7 +473,7 @@ def simhash32(df: DataFrame) -> DataFrame:
     token frequency.  String-domain trick keeps it engine-portable."""
     toks = df.select(
         F.col("doc_id"),
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+        F.explode(F.split(F.trim(F.col("text")), WS + "+")).alias("tok"),
     ).where(F.col("tok") != "")
     h = F.md5(F.col("tok").cast("binary"))
     votes = [
@@ -484,13 +489,13 @@ def simhash32(df: DataFrame) -> DataFrame:
     return agg.select(F.col("doc_id"), bits.alias("simhash"))
 
 
-def simhash_chunk_bounds(radius: int, sig_bits: int = 32) -> list[tuple[int, int]]:
-    """1-based (start, width) of each pigeonhole chunk, covering ALL bits:
-    the remainder of ``sig_bits / (radius + 1)`` is spread one extra bit per
+def simhash_chunk_bounds(radius: int) -> list[tuple[int, int]]:
+    """1-based (start, width) of each pigeonhole chunk, covering ALL 32
+    bits: the remainder of ``32 / (radius + 1)`` is spread one extra bit per
     leading chunk so no trailing bits fall outside every bucket key (which
     would silently coarsen the buckets when radius+1 doesn't divide 32)."""
     chunks = radius + 1
-    base, rem = divmod(sig_bits, chunks)
+    base, rem = divmod(32, chunks)
     bounds, start = [], 1
     for c in range(chunks):
         width = base + (1 if c < rem else 0)
@@ -592,8 +597,7 @@ def simhash_near_pairs(df: DataFrame,
     return inter.unionAll(intra)
 
 
-def ngram_jaccard_pairs(df: DataFrame, n: int = SHINGLE_N,
-                        threshold: float = 0.8,
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8,
                         max_df: int | None = MAX_SHINGLE_DF) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs above threshold.
 
@@ -638,7 +642,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = SHINGLE_N,
     relation is already int pairs, so either side of that join is
     cheap)."""
     t_e4 = int(threshold * 10000)
-    sh = word_shingles(df, n)
+    sh = word_shingles(df)
     dft = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
     if max_df is not None:
         dft = dft.where(F.col("_df") <= max_df)

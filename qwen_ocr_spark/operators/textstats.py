@@ -29,6 +29,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The whitespace of every tokenizer (these operators, the shingles and the
+# simhash of ``dedup``): RE2's ``\s``, which the DuckDB oracles split on,
+# written out.  Java's ``\s`` also matches ``\x0B``: split on it, a text
+# holding one tokenizes differently from its oracle.
+WS = r"[\t\n\f\r ]"
+
 # Character-trigram profiles per language (round 4; replaces the round-3
 # stopword-marker table).  Trigrams are matched as literal substrings of
 # ' ' || lower(text) || ' ', so a leading/trailing space inside a trigram
@@ -193,7 +199,7 @@ def with_token_count(df: DataFrame) -> DataFrame:
     (words + ceil(chars/4) averaged) — both pure column expressions."""
     trimmed = F.trim(F.col("text"))
     words = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
+        F.size(F.split(trimmed, WS + "+"))
     )
     subword_est = F.ceil(F.length(trimmed) / F.lit(4.0)).cast("bigint")
     return (
@@ -229,7 +235,7 @@ def with_quality_score(df: DataFrame) -> DataFrame:
     padded = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
     trimmed = F.trim(t)
     words = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
+        F.size(F.split(trimmed, WS + "+"))
     )
     base = df if "pred_lang" in df.columns else with_lang_id(df)
     pred = F.col("pred_lang")
@@ -286,7 +292,7 @@ def repetition_stats(df: DataFrame) -> DataFrame:
             F.floor((n_lines - n_dist) * 10000.0 / n_lines)
         ).cast("bigint").alias("dup_line_frac_e4"),
     )
-    toks = F.split(F.trim(t), r"\s+")
+    toks = F.split(F.trim(t), WS + "+")
     idx = F.when(F.size(toks) >= 2,
                  F.sequence(F.lit(0), F.size(toks) - 2)
                  ).otherwise(F.array().cast("array<int>"))
@@ -321,9 +327,9 @@ def _frac_e4(num: str, den: str) -> str:
 
 # gopher_signals' SQL-text pieces.  Raw strings: the SQL parser unescapes
 # string literals, so a regex backslash is written doubled ('\\z' reaches
-# the regex engine as \z; a single '\z' would reach it as a plain 'z').
-# Whitespace is RE2's \s, written out: Java's \s also matches \x0B.
-_WS = r"[\\t\\n\\f\\r ]"
+# the regex engine as \z; a single '\z' would reach it as a plain 'z'),
+# and ``_WS`` is ``WS`` so written.
+_WS = WS.replace("\\", "\\\\")
 
 
 def gopher_signals(df: DataFrame) -> DataFrame:
@@ -378,5 +384,5 @@ def gopher_signals(df: DataFrame) -> DataFrame:
 def with_fingerprint(df: DataFrame) -> DataFrame:
     """Normalization fingerprint: md5 of lower(collapse_ws(trim(text))) —
     the exact-dup key that survives whitespace/case jitter."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
+    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), WS + "+", " ")))
     return df.withColumn("fingerprint", F.md5(norm.cast("binary")))

@@ -8,8 +8,8 @@ Defaults are chosen for the 100 TB design point and scaled down by env:
 * Arrow on with a bounded records-per-batch: rows carry whole documents
   (tens of KB each), so the default 10k rows/batch would make multi-hundred
   MB Arrow batches; 512 keeps executor memory flat.
-* shuffle partitions default to the core count locally; on a real cluster
-  AQE coalesces from a deliberately high initial number.
+* shuffle partitions are the core count locally (at least 8); on a real
+  cluster AQE coalesces from a deliberately high initial number (32).
 * Python workers start from ``plans/pydaemon.py``
   (``spark.python.daemon.module``) when the program runs from a source
   directory on a local master.  Every Python task calls
@@ -67,15 +67,13 @@ def python_daemon_conf(master: str) -> dict[str, str]:
 def get_spark(
     master: str | None = None,
     app_name: str = "qwen-ocr-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     master = master or default_master()
-    if shuffle_partitions is None:
-        if master.startswith("local[") and master[6:-1].isdigit():
-            shuffle_partitions = max(int(master[6:-1]), 8)
-        else:
-            shuffle_partitions = 32
+    if master.startswith("local[") and master[6:-1].isdigit():
+        shuffle_partitions = max(int(master[6:-1]), 8)
+    else:
+        shuffle_partitions = 32
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

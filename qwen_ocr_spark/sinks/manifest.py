@@ -41,9 +41,13 @@ call it): figures, then output (the commit), then the manifest.
   next ``reconcile_manifest`` (the CLI calls it at start-up).
 
 Resume = **left-anti join** of the input against the committed output's
-``url`` set: already-extracted documents are never reprocessed.  At 10^12
-rows that anti-join is a shuffle of (url) only — ~50 bytes/row — and AQE
-turns it into a broadcast when the committed side is still small.
+``url`` set: already-extracted documents are never reprocessed.  While the
+committed table's file-size estimate is under the broadcast threshold,
+the plan is a static ``BroadcastHashJoin LeftAnti`` that broadcasts the
+committed urls.  Above it, the join is a sort-merge join, and that is not
+a shuffle of (url) only: the input's ``url, warc_ts, html`` rows are
+shuffled by url, and when extraction runs in more than one task,
+``extract_pages`` shuffles the same rows again by ``xxhash64(url, salt)``.
 
 Parquet is the table format (no Iceberg or Delta runtime jar ships here);
 this module is the TableIO seam.  The invariant needs an atomic directory

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qwen_ocr_spark.operators.extract import extract_pages
+from qwen_ocr_spark.operators.timeseries import SESSION_GAP_SEC
 from qwen_ocr_spark.plans.session import release_cached
 from qwen_ocr_spark.sinks.manifest import (commit_run, reconcile_manifest,
                                            resume_filter)
@@ -112,15 +113,15 @@ SESSION_OUT_SCHEMA = ("user_id bigint, session_start string, "
 SESSION_STATE_SCHEMA = "start_sec double, last_sec double, n bigint"
 
 
-def sessionize_stream(events_stream: DataFrame, gap_sec: int = 1800):
+def sessionize_stream(events_stream: DataFrame):
     """Custom stateful operator: gap-based sessionization over a stream via
     ``applyInPandasWithState`` — per-user state is (session_start, last_ts,
-    count); a new event more than ``gap_sec`` after the last CLOSES the
-    open session (emitted) and starts a new one.
+    count); a new event more than ``SESSION_GAP_SEC`` after the last CLOSES
+    the open session (emitted) and starts a new one.
 
     Idle users flush via **event-time timeout** (round 3 — NoTimeout leaked
     O(all-users-ever) state): every update arms a timeout at
-    ``last_ts + gap_sec``; once the watermark (same ``gap_sec`` delay)
+    ``last_ts + SESSION_GAP_SEC``; once the watermark (the same delay)
     passes it, the open session is emitted and the key's state REMOVED, so
     state stays O(concurrently-active users).  The watermark also bounds
     event-time disorder across micro-batches: events later than the armed
@@ -134,6 +135,8 @@ def sessionize_stream(events_stream: DataFrame, gap_sec: int = 1800):
     from typing import Any, Iterator, Tuple
 
     import pandas as pd
+
+    gap_sec = SESSION_GAP_SEC
 
     def fmt(sec: float) -> str:
         return dt.datetime.fromtimestamp(

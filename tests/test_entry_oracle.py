@@ -114,6 +114,40 @@ def test_query_matches_oracle_on_multi_file_tables(spark, multi_file_sf, name):
     _assert_matches_oracle(con, QUERIES[name](spark, sf_dir), name)
 
 
+# every query whose operator splits text into words
+WHITESPACE_QUERIES = ("token_count", "quality_score", "repetition_stats",
+                      "doc_fingerprint", "gopher_signals", "pack_sequences",
+                      "simhash", "minhash_signatures")
+
+
+@pytest.fixture(scope="module")
+def vtab_sf(tmp_path_factory):
+    """(sf_dir, DuckDB connection): a two-row ``documents`` table, one text
+    holding vertical tabs (``\\x0B``), which Java's ``\\s`` matches and the
+    oracles' RE2 ``\\s`` does not."""
+    import pyarrow as pa
+    sf = tmp_path_factory.mktemp("sf_vtab")
+    texts = ["vt\x0bsplit words\x0b here", "a b c"]
+    pq.write_table(pa.table({
+        "doc_id": pa.array([1, 2], pa.int64()),
+        "text": texts,
+        "lang": ["en", "en"],
+        "source": ["web", "web"],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }), sf / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{sf}/documents.parquet'")
+    yield str(sf), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", WHITESPACE_QUERIES)
+def test_tokenizers_split_on_the_oracles_whitespace(spark, vtab_sf, name):
+    sf_dir, con = vtab_sf
+    _assert_matches_oracle(con, QUERIES[name](spark, sf_dir), name)
+
+
 def _assert_matches_oracle(con, sdf, name):
     s_cols = sdf.columns
     s_arrow = sdf.toArrow()

@@ -12,7 +12,11 @@ Python 3.12 the whole f-string is one ``STRING`` token, so its fields
 are parsed out here).
 
 A function or class that only test files reference is flagged too,
-unless ``TEST_ONLY_ALLOWED`` names it with the reason it stays."""
+unless ``TEST_ONLY_ALLOWED`` names it with the reason it stays.  So is a
+defaulted parameter of a top-level function that no call outside tests
+passes (an option only one value reaches), unless ``NEVER_PASSED_ALLOWED``
+names it with its reason; that scan is ``ast`` too, matching a call to
+the function by its bare or attribute name."""
 
 import ast
 import tokenize
@@ -34,6 +38,19 @@ TEST_ONLY_ALLOWED = {
     "sessionize_stream": "COVERAGE beyond the reference: streaming twin",
     "events_hourly_stream": "COVERAGE beyond the reference: streaming twin",
     "incremental_dedup": "COVERAGE beyond the reference: incremental dedup",
+}
+
+# (function, parameter): defaulted parameters no call outside tests passes,
+# each kept for the reason given.
+NEVER_PASSED_ALLOWED = {
+    ("simhash_near_pairs", "radius"): "tests sweep the hamming radius",
+    ("parse_html", "fast"): "fast=False is the tests' reference parser",
+    ("read_output", "dedup"): "racing writers' duplicate urls; leaves with "
+                              "the commit log (ROADMAP direction 7)",
+    ("incremental_dedup", "commit"): "test-only operator (TEST_ONLY_ALLOWED)",
+    ("incremental_dedup", "run_id"): "test-only operator (TEST_ONLY_ALLOWED)",
+    ("synth_pages", "start"): "test-data generator: a second id range",
+    ("make_pdf", "cid_cff"): "test-data generator: a PDF feature flag",
 }
 
 
@@ -140,3 +157,59 @@ def test_no_top_level_def_is_referenced_only_by_tests():
                          + "\n".join(flagged))
     stale = sorted(TEST_ONLY_ALLOWED.keys() - test_only.keys())
     assert not stale, f"allow-listed but not test-only: {stale}"
+
+
+def _defaulted_params(fn):
+    """(name, positional index or None) of each parameter of ``fn`` that
+    has a default."""
+    pos = fn.args.posonlyargs + fn.args.args
+    first = len(pos) - len(fn.args.defaults)
+    out = [(a.arg, i) for i, a in enumerate(pos) if i >= first]
+    out += [(a.arg, None) for a, d in zip(fn.args.kwonlyargs,
+                                          fn.args.kw_defaults)
+            if d is not None]
+    return out
+
+
+def _passed_params():
+    """{(called name, parameter name or positional index)} over every call
+    outside tests; a call with ``*args`` or ``**kwargs`` passes "*"."""
+    passed = set()
+    for f in _search_files():
+        if _is_test(f):
+            continue
+        tree = ast.parse(f.read_text(encoding="utf-8"), filename=str(f))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = (fn.id if isinstance(fn, ast.Name)
+                    else fn.attr if isinstance(fn, ast.Attribute) else None)
+            if name is None:
+                continue
+            passed.update((name, i) for i in range(len(node.args)))
+            passed.update((name, k.arg or "*") for k in node.keywords)
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                passed.add((name, "*"))
+    return passed
+
+
+def test_every_defaulted_parameter_is_passed_outside_tests():
+    passed = _passed_params()
+    never = {}
+    for f in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(f.read_text(encoding="utf-8"), filename=str(f))
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for param, i in _defaulted_params(node):
+                if not {(node.name, param), (node.name, i),
+                        (node.name, "*")} & passed:
+                    never[(node.name, param)] = (
+                        f"{f.relative_to(ROOT)}:{node.lineno} "
+                        f"{node.name}({param})")
+    flagged = [w for k, w in never.items() if k not in NEVER_PASSED_ALLOWED]
+    assert not flagged, ("defaulted parameters no call outside tests "
+                         "passes:\n" + "\n".join(flagged))
+    stale = sorted(NEVER_PASSED_ALLOWED.keys() - never.keys())
+    assert not stale, f"allow-listed but passed outside tests: {stale}"

@@ -1177,14 +1177,14 @@ def test_hash_split_disjoint_exhaustive_and_stable(spark):
     from qwen_ocr_spark.operators import sampling
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .select("doc_id")
-    split = sampling.hash_split(docs, 80, 10)
+    split = sampling.hash_split(docs)
     counts = {r["split"]: r["count"] for r in split.groupBy("split").count().collect()}
     n = docs.count()
     assert sum(counts.values()) == n                       # exhaustive
     assert 0.7 * n < counts["train"] < 0.9 * n             # ~80%
     assert counts["val"] > 0 and counts["test"] > 0
     # stability: repartitioning must not change any assignment
-    again = sampling.hash_split(docs.repartition(7), 80, 10)
+    again = sampling.hash_split(docs.repartition(7))
     a = {r["doc_id"]: r["split"] for r in split.collect()}
     b = {r["doc_id"]: r["split"] for r in again.collect()}
     assert a == b

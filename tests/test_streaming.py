@@ -117,7 +117,7 @@ def test_sessionize_stream_stateful(spark, tmp_path):
     def drain():
         schema = spark.read.parquet(src).schema
         stream = spark.readStream.schema(schema).parquet(src)
-        q = (sessionize_stream(stream, gap_sec=1800)
+        q = (sessionize_stream(stream)
              .writeStream.outputMode("append")
              .format("parquet").option("path", outdir)
              .option("checkpointLocation", ckpt)
